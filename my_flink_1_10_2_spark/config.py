@@ -136,12 +136,3 @@ class TableConfig:
                     spark.conf.set(k, v)
                 except Exception:
                     pass  # static conf — ignore, same policy as tune_session
-
-
-class SqlDialect:
-    """ref: pyflink/table/sql_dialect.py — DEFAULT (Flink SQL, handled
-    by the dialect rewriter) and HIVE (handled by Spark's native Hive
-    support when the Hive catalog is active)."""
-
-    DEFAULT = "default"
-    HIVE = "hive"

@@ -23,7 +23,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 class CatalogException(Exception):
@@ -296,12 +296,3 @@ class GenericInMemoryCatalog:
     def get_table_statistics(self, db: str, table: str) -> dict[str, int]:
         self.get_table(db, table)
         return dict(self._stats.get((db, table), {}))
-
-
-def resolve_table(
-    spark: SparkSession, catalog: GenericInMemoryCatalog, db: str, table: str
-) -> DataFrame:
-    """ObjectPath → DataFrame (ref: ObjectPath.java:1 + the planner's
-    CatalogSourceTable).  Stays lazy: the thunk builds the read plan, no
-    action runs here."""
-    return catalog.get_table(db, table).reader()

@@ -113,12 +113,6 @@ def _pad_plane(plane: np.ndarray, ph: int, pw: int) -> np.ndarray:
     return out
 
 
-def _fdct_block(block: np.ndarray, q: np.ndarray) -> list[int]:
-    m = _dct_matrix()
-    qc = np.round((m @ (block - 128.0) @ m.T) / q).astype(np.int64)
-    return qc[_ZIG_R, _ZIG_C].tolist()  # vectorized zigzag gather
-
-
 def _idct_block(zz: list[int], q: np.ndarray) -> np.ndarray:
     m = _dct_matrix()
     coeffs = np.zeros((8, 8), dtype=np.float64)

@@ -51,14 +51,6 @@ def _is_any(w: Column, values: list[str]) -> Column:
     return cond
 
 
-def stopword_ratio(text_col, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang``."""
-    words = tokens(text_col)
-    sw = STOPWORDS[lang]
-    hits = F.size(F.filter(words, lambda w: _is_any(w, sw)))
-    return hits / F.greatest(F.size(words), F.lit(1))
-
-
 def avg_word_len(text_col) -> Column:
     words = tokens(text_col)
     total = F.aggregate(

@@ -405,9 +405,9 @@ def q_hbase_rest_roundtrip(spark, sf_dir):
     from my_flink_1_10_2_spark.sources.hbase_rest import (
         HBaseSchema,
         HBaseTypedRestSink,
-        InMemoryHBaseRestServer,
         hbase_rest_source,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryHBaseRestServer
 
     schema = HBaseSchema(
         "n_nationkey",
@@ -463,9 +463,9 @@ def q_cassandra_cql_roundtrip(spark, sf_dir):
     per-partition connection discipline end-to-end."""
     from my_flink_1_10_2_spark.sources.cassandra_cql import (
         CassandraCqlSink,
-        InMemoryCqlServer,
         parse_insert,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryCqlServer
 
     server = InMemoryCqlServer()
     try:
@@ -527,9 +527,9 @@ def q_kinesis_putrecords_roundtrip(spark, sf_dir):
     import json as _json
 
     from my_flink_1_10_2_spark.sources.connectors import (
-        InMemoryJsonHttpServer,
         KinesisPutRecordsSink,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryJsonHttpServer
 
     server = InMemoryJsonHttpServer(
         response=b'{"FailedRecordCount": 0, "Records": []}'
@@ -586,8 +586,8 @@ def q_elasticsearch_bulk_roundtrip(spark, sf_dir):
 
     from my_flink_1_10_2_spark.sources.connectors import (
         ElasticsearchBulkSink,
-        InMemoryJsonHttpServer,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryJsonHttpServer
 
     server = InMemoryJsonHttpServer(response=b'{"errors": false, "items": []}')
     try:
@@ -652,10 +652,10 @@ def q_rabbitmq_amqp_roundtrip(spark, sf_dir):
     import json as _json
 
     from my_flink_1_10_2_spark.sources.amqp_py import (
-        InMemoryAmqpBroker,
         RMQSink,
         rmq_drain_source,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryAmqpBroker
 
     broker = InMemoryAmqpBroker()
     try:
@@ -721,10 +721,10 @@ def q_pubsub_rest_roundtrip(spark, sf_dir):
     import json as _json
 
     from my_flink_1_10_2_spark.sources.pubsub_rest import (
-        InMemoryPubSubServer,
         PubSubRestSink,
         pubsub_pull_source,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryPubSubServer
 
     server = InMemoryPubSubServer()
     try:
@@ -801,12 +801,12 @@ def q_nifi_s2s_roundtrip(spark, sf_dir):
     rollup must equal the parquet source — nothing lost to the crash,
     nothing double-committed."""
     from my_flink_1_10_2_spark.sources.nifi_s2s import (
-        InMemoryNiFiS2SServer,
         NiFiS2SSink,
         nifi_s2s_source,
         _create_transaction,
         _http,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryNiFiS2SServer
 
     server = InMemoryNiFiS2SServer(batch_packets=6)
     try:
@@ -874,9 +874,7 @@ def q_twitter_stream_roundtrip(spark, sf_dir):
     collect is the 25-row nation dim (control-table bounded)."""
     import json as _json
 
-    from my_flink_1_10_2_spark.sources.http_stream import (
-        InMemoryLineStreamServer,
-    )
+    from my_flink_1_10_2_spark.testing import InMemoryLineStreamServer
     from my_flink_1_10_2_spark.sources.connectors import twitter_source
 
     seed = [
@@ -936,10 +934,10 @@ def q_confluent_avro_roundtrip(spark, sf_dir):
     back through registry-fetched writer schemas (one cached GET per
     partition), and the rollup must equal the parquet source."""
     from my_flink_1_10_2_spark.sources.avro_registry import (
-        InMemorySchemaRegistry,
         confluent_avro_decode_df,
         confluent_avro_encode_df,
     )
+    from my_flink_1_10_2_spark.testing import InMemorySchemaRegistry
 
     reg = InMemorySchemaRegistry()
     try:
@@ -989,10 +987,10 @@ def q_rabbitmq_crash_redelivery(spark, sf_dir):
     the parquet source exactly — the reference's exactly-once
     correlation-id state, exercised through a real redelivery."""
     from my_flink_1_10_2_spark.sources.amqp_py import (
-        InMemoryAmqpBroker,
         RMQSink,
         rmq_drain_source,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryAmqpBroker
 
     broker = InMemoryAmqpBroker()
     try:
@@ -1063,10 +1061,10 @@ def q_pubsub_crash_redelivery(spark, sf_dir):
     documented at-least-once-plus-id-dedup contract under a total
     consumer loss, not just a partial lease lapse."""
     from my_flink_1_10_2_spark.sources.pubsub_rest import (
-        InMemoryPubSubServer,
         PubSubRestSink,
         pubsub_pull_source,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryPubSubServer
 
     server = InMemoryPubSubServer()
     try:
@@ -1136,12 +1134,12 @@ def q_nifi_crash_redelivery(spark, sf_dir):
     third, healthy 3-consumer drain must equal the parquet source
     exactly: nothing lost to either crash, nothing double-committed."""
     from my_flink_1_10_2_spark.sources.nifi_s2s import (
-        InMemoryNiFiS2SServer,
         NiFiS2SSink,
         nifi_s2s_source,
         _create_transaction,
         _http,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryNiFiS2SServer
 
     server = InMemoryNiFiS2SServer(batch_packets=6)
     try:
@@ -1220,9 +1218,9 @@ def q_wikiedits_irc_rollup(spark, sf_dir):
         IS_BOT_EDIT,
         IS_MINOR,
         IS_TALK,
-        InMemoryIrcServer,
         wikipedia_edits_source,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryIrcServer
 
     FLAGSETS = ["M", "N", "!", "MB"]  # fidx 0..3: minor / new / unpatrolled / minor+bot
     rows = (
@@ -1301,9 +1299,9 @@ def q_kinesis_throttle_retry(spark, sf_dir):
     import json as _json
 
     from my_flink_1_10_2_spark.sources.connectors import (
-        InMemoryKinesisServer,
         KinesisPutRecordsSink,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryKinesisServer
 
     server = InMemoryKinesisServer(throttle_mod=3, throttle_rem=1)
     try:
@@ -1371,8 +1369,8 @@ def q_elasticsearch_rejected_retry(spark, sf_dir):
     id-addressed indexing would mask it in the final doc store."""
     from my_flink_1_10_2_spark.sources.connectors import (
         ElasticsearchBulkSink,
-        InMemoryElasticsearchBulkServer,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryElasticsearchBulkServer
 
     server = InMemoryElasticsearchBulkServer(reject_mod=3, reject_rem=2)
     try:
@@ -1563,8 +1561,8 @@ def q_cassandra_write_timeout_retry(spark, sf_dir):
     happened."""
     from my_flink_1_10_2_spark.sources.cassandra_cql import (
         CassandraCqlSink,
-        InMemoryCqlServer,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryCqlServer
 
     server = InMemoryCqlServer(fail_each_batch_once=True)
     try:
@@ -1636,9 +1634,9 @@ def q_hbase_region_busy_retry(spark, sf_dir):
     from my_flink_1_10_2_spark.sources.hbase_rest import (
         HBaseSchema,
         HBaseTypedRestSink,
-        InMemoryHBaseRestServer,
         hbase_rest_source,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryHBaseRestServer
 
     schema = HBaseSchema(
         "n_nationkey",

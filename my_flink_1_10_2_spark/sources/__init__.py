@@ -1,7 +1,11 @@
 """Sources & sinks — the engine's connector surface (SURVEY §2.1).
 
 Batch formats + bounded sources in :mod:`batch`; streaming sources,
-sinks and the exactly-once file-sink analog in :mod:`streaming`.
+sinks and the exactly-once file-sink analog in :mod:`streaming`.  Every
+connector sink runs on the one delivery loop in :mod:`sink_core`
+(partition loop, retry, HTTP call, committed-batch manifest); the
+in-process service emulators the connector tests and registry
+roundtrips run against live in :mod:`my_flink_1_10_2_spark.testing`.
 """
 
 from my_flink_1_10_2_spark.sources.batch import (  # noqa: F401
@@ -30,9 +34,8 @@ from my_flink_1_10_2_spark.sources.streaming import (  # noqa: F401
     streaming_file_sink,
 )
 
-# Jar-free public-protocol connectors (round 6): each module carries the
-# protocol client, the Spark glue, and the in-process emulator its
-# graded roundtrip runs against.
+# Jar-free public-protocol connectors: each module carries the protocol
+# client and the Spark glue.
 from my_flink_1_10_2_spark.sources.amqp_py import (  # noqa: F401
     RMQConnectionConfig,
     RMQSink,

@@ -33,8 +33,11 @@ become a DataFrame without collecting).
 
 from __future__ import annotations
 
+import contextlib
 import struct
 from dataclasses import dataclass
+
+from my_flink_1_10_2_spark.sources.sink_core import PartitionSink
 
 FRAME_METHOD = 1
 FRAME_HEADER = 2
@@ -82,11 +85,6 @@ def _longstr(b: bytes) -> bytes:
 def _read_shortstr(buf: bytes, off: int) -> tuple[str, int]:
     n = buf[off]
     return buf[off + 1 : off + 1 + n].decode(), off + 1 + n
-
-
-def _read_longstr(buf: bytes, off: int) -> tuple[bytes, int]:
-    (n,) = struct.unpack_from(">I", buf, off)
-    return buf[off + 4 : off + 4 + n], off + 4 + n
 
 
 def frame(ftype: int, channel: int, payload: bytes) -> bytes:
@@ -354,14 +352,14 @@ class AmqpClient:
             self.sock.close()
 
 
-class RMQSink:
+class RMQSink(PartitionSink):
     """foreachBatch sink publishing rows to a RabbitMQ queue over AMQP
     0-9-1 (ref: RMQSink.java).  Rows serialize to JSON unless
     ``body_field`` names a string/binary column to publish raw (the
     SerializationSchema analog); ``correlation_id_field`` stamps the
     property the reference's exactly-once source dedups on.  One
-    connection per partition; the queue is declared per connection
-    (idempotent, like ``setupQueue``)."""
+    connection per non-empty partition; the queue is declared per
+    connection (idempotent, like ``setupQueue``)."""
 
     def __init__(
         self,
@@ -382,7 +380,16 @@ class RMQSink:
         self.persistent = persistent
         self.connect_factory = connect_factory
 
-    def _serialize(self, row) -> tuple[bytes, str | None]:
+    @contextlib.contextmanager
+    def open(self, batch_id: int, partition: int | None):
+        client = AmqpClient(self.config, connect_factory=self.connect_factory)
+        try:
+            client.queue_declare(self.queue)
+            yield client
+        finally:
+            client.close()
+
+    def encode(self, row) -> tuple[bytes, str | None]:
         import json as _json
 
         doc = row.asDict(recursive=True)
@@ -400,43 +407,15 @@ class RMQSink:
             body = _json.dumps(doc, sort_keys=True, default=str).encode()
         return bytes(body), cid
 
-    def __call__(self, batch_df, batch_id: int) -> None:
-        sink = self
-
-        def send_partition(rows):
-            rows = iter(rows)
-            try:
-                first = next(rows)
-            except StopIteration:
-                return  # empty partition: no connection at all
-            import itertools
-
-            client = AmqpClient(sink.config, connect_factory=sink.connect_factory)
-            try:
-                client.queue_declare(sink.queue)
-                for row in itertools.chain([first], rows):
-                    body, cid = sink._serialize(row)
-                    client.basic_publish(
-                        sink.queue,
-                        body,
-                        correlation_id=cid,
-                        content_type=None if sink.body_field else "application/json",
-                        persistent=sink.persistent,
-                    )
-            finally:
-                client.close()
-
-        batch_df.foreachPartition(send_partition)
-
-
-def rmq_sink(df, checkpoint: str, **kwargs):
-    """Streaming writer using :class:`RMQSink` — attach with
-    ``.start()``.  ``connectors.rabbitmq_source`` documents why no jar
-    path exists; this is the functional one."""
-    sink = RMQSink(**kwargs)
-    return df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
+    def flush(self, messages: list, client) -> None:
+        for body, cid in messages:
+            client.basic_publish(
+                self.queue,
+                body,
+                correlation_id=cid,
+                content_type=None if self.body_field else "application/json",
+                persistent=self.persistent,
+            )
 
 
 def rmq_drain_source(
@@ -510,174 +489,3 @@ def rmq_drain_source(
     if uses_correlation_id:
         df = df.dropDuplicates(["correlation_id"])
     return df
-
-
-# -- in-process emulator -------------------------------------------------------
-
-
-class InMemoryAmqpBroker:
-    """In-process AMQP 0-9-1 broker emulator: PLAIN handshake, channel
-    open, queue.declare, default-exchange basic.publish routing (routing
-    key == queue), basic.get/ack with unacked redelivery tracking.
-    Development/testing utility (the InMemoryCqlServer precedent) —
-    lets the RabbitMQ sink AND source be oracle-graded over a REAL TCP
-    socket without a broker install."""
-
-    def __init__(self):
-        import socket as _socket
-        import threading as _threading
-
-        self.queues: dict[str, list[tuple[dict, bytes]]] = {}
-        self.acked = 0
-        self.published = 0
-        self._lock = _threading.Lock()
-        self._srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-        self._srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-        self._srv.bind(("127.0.0.1", 0))
-        self._srv.listen(64)
-        self.port = self._srv.getsockname()[1]
-        self._stop = False
-        _threading.Thread(target=self._serve, daemon=True).start()
-
-    def config(self, **kw) -> RMQConnectionConfig:
-        return RMQConnectionConfig(host="127.0.0.1", port=self.port, **kw)
-
-    def publish(self, queue: str, body: bytes, **props) -> None:
-        """Seed a message broker-side (test convenience)."""
-        with self._lock:
-            self.queues.setdefault(queue, []).append((props, body))
-
-    def _serve(self):
-        import threading as _threading
-
-        while not self._stop:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return
-            _threading.Thread(target=self._handle, args=(conn,), daemon=True).start()
-
-    def _handle(self, conn):
-        try:
-            if _recv_exact(conn, 8) != b"AMQP\x00\x00\x09\x01":
-                conn.close()
-                return
-            start = (
-                b"\x00\x09"
-                + struct.pack(">I", 0)
-                + _longstr(b"PLAIN")
-                + _longstr(b"en_US")
-            )
-            conn.sendall(method_frame(0, CONNECTION_START, start))
-            self._expect(conn, CONNECTION_START_OK)
-            conn.sendall(
-                method_frame(0, CONNECTION_TUNE, struct.pack(">HIH", 0, 131072, 0))
-            )
-            self._expect(conn, CONNECTION_TUNE_OK)
-            self._expect(conn, CONNECTION_OPEN)
-            conn.sendall(method_frame(0, CONNECTION_OPEN_OK, _shortstr("")))
-            unacked: dict[int, tuple[str, dict, bytes]] = {}
-            next_tag = 1
-            while True:
-                ftype, ch, payload = read_frame(conn)
-                if ftype == FRAME_HEARTBEAT:
-                    continue
-                cm = struct.unpack_from(">HH", payload, 0)
-                args = payload[4:]
-                if cm == CHANNEL_OPEN:
-                    conn.sendall(
-                        method_frame(ch, CHANNEL_OPEN_OK, struct.pack(">I", 0))
-                    )
-                elif cm == QUEUE_DECLARE:
-                    qname, off = _read_shortstr(args, 2)
-                    with self._lock:
-                        msgs = self.queues.setdefault(qname, [])
-                        n = len(msgs)
-                    conn.sendall(
-                        method_frame(
-                            ch,
-                            QUEUE_DECLARE_OK,
-                            _shortstr(qname) + struct.pack(">II", n, 0),
-                        )
-                    )
-                elif cm == BASIC_PUBLISH:
-                    _ex, off = _read_shortstr(args, 2)
-                    rkey, off = _read_shortstr(args, off)
-                    htype, _hch, hdr = read_frame(conn)
-                    if htype != FRAME_HEADER:
-                        raise ConnectionError("publish without content header")
-                    _cls, _w, size = struct.unpack_from(">HHQ", hdr, 0)
-                    props = decode_properties(hdr[12:])
-                    body = b""
-                    while len(body) < size:
-                        btype, _bch, part = read_frame(conn)
-                        if btype != FRAME_BODY:
-                            raise ConnectionError("publish missing body frame")
-                        body += part
-                    with self._lock:
-                        self.queues.setdefault(rkey, []).append((props, body))
-                        self.published += 1
-                elif cm == BASIC_GET:
-                    qname, off = _read_shortstr(args, 2)
-                    no_ack = bool(args[off])
-                    with self._lock:
-                        msgs = self.queues.setdefault(qname, [])
-                        item = msgs.pop(0) if msgs else None
-                        remaining = len(msgs)
-                    if item is None:
-                        conn.sendall(
-                            method_frame(ch, BASIC_GET_EMPTY, _shortstr(""))
-                        )
-                        continue
-                    props, body = item
-                    tag = next_tag
-                    next_tag += 1
-                    if not no_ack:
-                        unacked[tag] = (qname, props, body)
-                    ok = (
-                        struct.pack(">Q", tag)
-                        + b"\x00"
-                        + _shortstr("")
-                        + _shortstr(qname)
-                        + struct.pack(">I", remaining)
-                    )
-                    reply = method_frame(ch, BASIC_GET_OK, ok) + frame(
-                        FRAME_HEADER,
-                        ch,
-                        struct.pack(">HHQ", 60, 0, len(body))
-                        + encode_properties(**props),
-                    )
-                    if body:  # zero body bytes -> zero body frames
-                        reply += frame(FRAME_BODY, ch, body)
-                    conn.sendall(reply)
-                elif cm == BASIC_ACK:
-                    (tag,) = struct.unpack_from(">Q", args, 0)
-                    unacked.pop(tag, None)
-                    with self._lock:
-                        self.acked += 1
-                elif cm == CONNECTION_CLOSE:
-                    conn.sendall(method_frame(0, CONNECTION_CLOSE_OK))
-                    return
-                else:
-                    raise ConnectionError(f"unsupported method {cm}")
-        except (ConnectionError, OSError, IndexError, struct.error):
-            pass
-        finally:
-            # unacked messages return to their queue on clean close AND
-            # abrupt connection loss (broker redelivery semantics)
-            with self._lock:
-                for qname, props, body in unacked.values():
-                    self.queues.setdefault(qname, []).append((props, body))
-            unacked.clear()
-            conn.close()
-
-    @staticmethod
-    def _expect(conn, cm: tuple[int, int]) -> bytes:
-        ftype, _ch, payload = read_frame(conn)
-        if ftype != FRAME_METHOD or struct.unpack_from(">HH", payload, 0) != cm:
-            raise ConnectionError(f"handshake expected {cm}")
-        return payload[4:]
-
-    def close(self):
-        self._stop = True
-        self._srv.close()

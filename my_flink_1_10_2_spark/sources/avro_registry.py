@@ -29,6 +29,8 @@ import io
 import json
 import struct
 
+from my_flink_1_10_2_spark.sources.sink_core import http_request
+
 MAGIC = 0
 
 
@@ -44,24 +46,19 @@ class SchemaRegistryClient:
         self._by_id: dict[int, dict] = {}
 
     def _call(self, method: str, path: str, doc: dict | None = None) -> dict:
-        import urllib.error
-        import urllib.request
-
         body = json.dumps(doc).encode() if doc is not None else None
-        req = urllib.request.Request(
+        status, _, reply = http_request(
+            method,
             self.base_url + path,
-            data=body,
-            method=method,
-            headers={"Content-Type": "application/vnd.schemaregistry.v1+json"},
+            {"Content-Type": "application/vnd.schemaregistry.v1+json"},
+            body,
+            timeout=30,
         )
-        try:
-            with urllib.request.urlopen(req, timeout=30) as resp:
-                return json.loads(resp.read())
-        except urllib.error.HTTPError as err:
+        if not 200 <= status < 300:
             raise RuntimeError(
-                f"schema registry {method} {path} failed: "
-                f"HTTP {err.code} {err.read()[:200]!r}"
-            ) from err
+                f"schema registry {method} {path} failed: HTTP {status} {reply[:200]!r}"
+            )
+        return json.loads(reply)
 
     def register(self, subject: str, schema: dict) -> int:
         """POST /subjects/{subject}/versions → schema id."""
@@ -167,79 +164,3 @@ def confluent_avro_decode_df(
                 yield pd.DataFrame(rows)
 
     return df.mapInPandas(decode, spark_schema)
-
-
-# -- in-process emulator -------------------------------------------------------
-
-
-class InMemorySchemaRegistry:
-    """In-process Confluent Schema Registry emulator: subject
-    registration with schema-identity dedup (re-registering an
-    identical schema returns the same id, per the real registry) and
-    id lookup.  Development/testing utility (the InMemoryPubSubServer
-    precedent)."""
-
-    def __init__(self):
-        import re
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        self.schemas: dict[int, str] = {}
-        self.subjects: dict[str, list[int]] = {}
-        self._lock = threading.Lock()
-        srv = self
-        post_route = re.compile(r"^/subjects/([^/]+)/versions$")
-        get_route = re.compile(r"^/schemas/ids/(\d+)$")
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def _reply(self, status: int, doc: dict):
-                body = json.dumps(doc).encode()
-                self.send_response(status)
-                self.send_header(
-                    "Content-Type", "application/vnd.schemaregistry.v1+json"
-                )
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def do_POST(self):
-                m = post_route.match(self.path)
-                if not m:
-                    return self._reply(404, {"error_code": 40401})
-                n = int(self.headers.get("Content-Length", 0))
-                doc = json.loads(self.rfile.read(n))
-                schema_str = doc["schema"]
-                with srv._lock:
-                    for sid, s in srv.schemas.items():
-                        if s == schema_str:
-                            break
-                    else:
-                        sid = len(srv.schemas) + 1
-                        srv.schemas[sid] = schema_str
-                    srv.subjects.setdefault(m.group(1), [])
-                    if sid not in srv.subjects[m.group(1)]:
-                        srv.subjects[m.group(1)].append(sid)
-                return self._reply(200, {"id": sid})
-
-            def do_GET(self):
-                m = get_route.match(self.path)
-                if not m:
-                    return self._reply(404, {"error_code": 40401})
-                with srv._lock:
-                    s = srv.schemas.get(int(m.group(1)))
-                if s is None:
-                    return self._reply(
-                        404, {"error_code": 40403, "message": "Schema not found"}
-                    )
-                return self._reply(200, {"schema": s})
-
-        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()

@@ -23,9 +23,10 @@ reference's per-subtask session.
 
 from __future__ import annotations
 
+import contextlib
 import struct
 
-from pyspark.sql import DataFrame
+from my_flink_1_10_2_spark.sources.sink_core import PartitionSink, Rejected
 
 # opcodes (native_protocol_v4.spec §2.4)
 OP_ERROR = 0x00
@@ -152,7 +153,7 @@ def _tcp_connect(host: str, port: int):
     return socket.create_connection((host, port), timeout=30)
 
 
-class CassandraCqlSink:
+class CassandraCqlSink(PartitionSink):
     """foreachBatch sink writing INSERT upserts over CQL native v4.
 
     ``connect_factory(host, port) -> socket-like`` is injectable (tests
@@ -192,7 +193,7 @@ class CassandraCqlSink:
         self.username = username
         self.password = password
         self.consistency = CONSISTENCY[consistency]
-        self.batch_max_statements = batch_max_statements
+        self.max_items = batch_max_statements
         self.connect_factory = connect_factory or _tcp_connect
         self.max_retries = max_retries
         self.retry_delay_s = retry_delay_s
@@ -224,36 +225,6 @@ class CassandraCqlSink:
                 + (_error_text(body) if opcode == OP_ERROR else hex(opcode))
             )
 
-    def _send_batch(self, sock, statements: list[str]) -> None:
-        """Send one UNLOGGED batch; on WriteTimeout, resend the SAME
-        batch up to ``max_retries`` times.  Whole-batch retry is correct
-        here because every statement is a primary-key upsert (idempotent)
-        — the exact condition under which the public DataStax
-        DefaultRetryPolicy#onWriteTimeout retries; re-applying a
-        statement that already landed converges to the same row.
-        Non-timeout errors stay fatal (they are not transient)."""
-        import time as _time
-
-        body = struct.pack(">BH", 0x01, len(statements))  # UNLOGGED batch
-        for stmt in statements:
-            body += b"\x00" + _long_string(stmt) + struct.pack(">H", 0)
-        body += struct.pack(">HB", self.consistency, 0x00)
-        attempt = 0
-        while True:
-            sock.sendall(frame(OP_BATCH, body))
-            opcode, rbody = read_frame(sock)
-            if opcode == OP_RESULT:
-                return
-            code = struct.unpack(">i", rbody[:4])[0] if opcode == OP_ERROR else None
-            if code == ERR_WRITE_TIMEOUT and attempt < self.max_retries:
-                attempt += 1
-                _time.sleep(self.retry_delay_s)
-                continue
-            raise RuntimeError(
-                "cassandra BATCH failed: "
-                + (_error_text(rbody) if opcode == OP_ERROR else hex(opcode))
-            )
-
     def _insert_cql(self, doc: dict) -> str:
         cols = ", ".join(doc)
         vals = ", ".join(cql_literal(v) for v in doc.values())
@@ -261,163 +232,47 @@ class CassandraCqlSink:
             f"INSERT INTO {self.keyspace}.{self.table} ({cols}) VALUES ({vals})"
         )
 
-    # -- spark glue ---------------------------------------------------------
+    # -- sink core hooks ------------------------------------------------------
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        sink = self
+    @contextlib.contextmanager
+    def open(self, batch_id: int, partition: int | None):
+        sock = self.connect_factory(self.host, self.port)
+        try:
+            self._handshake(sock)
+            yield sock
+        finally:
+            sock.close()
 
-        def send_partition(rows):
-            rows = iter(rows)
-            try:
-                first = next(rows)
-            except StopIteration:
-                return  # empty partition: no connection at all
-            import itertools
+    def encode(self, row) -> str:
+        return self._insert_cql(row.asDict(recursive=True))
 
-            sock = sink.connect_factory(sink.host, sink.port)
-            try:
-                sink._handshake(sock)
-                buf: list[str] = []
-                for row in itertools.chain([first], rows):
-                    buf.append(sink._insert_cql(row.asDict(recursive=True)))
-                    if len(buf) >= sink.batch_max_statements:
-                        sink._send_batch(sock, buf)
-                        buf = []
-                if buf:
-                    sink._send_batch(sock, buf)
-            finally:
-                sock.close()
-
-        batch_df.foreachPartition(send_partition)
+    def flush(self, statements: list[str], sock) -> None:
+        """Send one UNLOGGED batch.  A WriteTimeout is retryable: the
+        core resends the SAME batch up to ``max_retries`` times, which
+        is correct here because every statement is a primary-key upsert
+        (idempotent) — the exact condition under which the public
+        DataStax DefaultRetryPolicy#onWriteTimeout retries; re-applying a
+        statement that already landed converges to the same row.
+        Non-timeout errors stay fatal (they are not transient)."""
+        body = struct.pack(">BH", 0x01, len(statements))  # UNLOGGED batch
+        for stmt in statements:
+            body += b"\x00" + _long_string(stmt) + struct.pack(">H", 0)
+        body += struct.pack(">HB", self.consistency, 0x00)
+        sock.sendall(frame(OP_BATCH, body))
+        opcode, rbody = read_frame(sock)
+        if opcode == OP_RESULT:
+            return
+        error = "cassandra BATCH failed: " + (
+            _error_text(rbody) if opcode == OP_ERROR else hex(opcode)
+        )
+        if opcode == OP_ERROR and struct.unpack(">i", rbody[:4])[0] == ERR_WRITE_TIMEOUT:
+            raise Rejected(error, statements)
+        raise RuntimeError(error)
 
 
 def _string_body(body: bytes) -> str:
     (n,) = struct.unpack(">H", body[:2])
     return body[2 : 2 + n].decode(errors="replace")
-
-
-def cassandra_cql_sink(df: DataFrame, checkpoint: str, **kwargs):
-    """Streaming writer using :class:`CassandraCqlSink` — the functional,
-    jar-free Cassandra path (`connectors.cassandra_sink_options` keeps
-    the spark-cassandra-connector jar path for clusters that ship it)."""
-    sink = CassandraCqlSink(**kwargs)
-    return df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-
-
-# -- in-process emulator -------------------------------------------------------
-
-
-class InMemoryCqlServer:
-    """In-process CQL native-protocol v4 server emulator (write path):
-    READY handshake + UNLOGGED BATCH decoding into the statement strings
-    the executors sent over the live socket.  Development/testing
-    utility (the InMemoryHBaseRestServer precedent): lets the sink be
-    oracle-graded over a REAL TCP transport without a Cassandra
-    install."""
-
-    def __init__(self, fail_each_batch_once: bool = False):
-        import socket as _socket
-        import threading as _threading
-
-        self.statements: list[str] = []
-        #: upsert view — last-writer-wins per (table, first-column literal),
-        #: the Cassandra primary-key semantics the sink's retry relies on
-        self.upserts: dict[tuple[str, str], dict[str, str]] = {}
-        #: WriteTimeout errors injected (fail_each_batch_once mode)
-        self.failed_batches = 0
-        self._fail_once = fail_each_batch_once
-        self._seen_batches: set[bytes] = set()
-        self._lock = _threading.Lock()
-        self._srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-        self._srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-        self._srv.bind(("127.0.0.1", 0))
-        self._srv.listen(64)
-        self.port = self._srv.getsockname()[1]
-        self._stop = False
-        _threading.Thread(target=self._serve, daemon=True).start()
-
-    def _serve(self):
-        import threading as _threading
-
-        while not self._stop:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return
-            _threading.Thread(
-                target=self._handle, args=(conn,), daemon=True
-            ).start()
-
-    def _handle(self, conn):
-        def resp(opcode: int, body: bytes) -> bytes:
-            return struct.pack(">BBhBi", 0x84, 0x00, 0, opcode, len(body)) + body
-
-        try:
-            while True:
-                opcode, body = read_frame(conn)
-                if opcode == OP_STARTUP:
-                    conn.sendall(resp(OP_READY, b""))
-                elif opcode == OP_BATCH:
-                    if self._fail_once:
-                        import hashlib as _hashlib
-
-                        sig = _hashlib.md5(body).digest()
-                        with self._lock:
-                            fresh = sig not in self._seen_batches
-                            if fresh:
-                                self._seen_batches.add(sig)
-                                self.failed_batches += 1
-                        if fresh:
-                            # WriteTimeout per native_protocol_v4.spec §9:
-                            # code, message, consistency, received,
-                            # blockfor, writeType
-                            err = struct.pack(">i", ERR_WRITE_TIMEOUT)
-                            err += _string("Operation timed out")
-                            err += struct.pack(">Hii", 0x0001, 0, 1)
-                            err += _string("BATCH")
-                            conn.sendall(resp(OP_ERROR, err))
-                            continue
-                    stmts = self._decode_batch(body)
-                    with self._lock:
-                        self.statements.extend(stmts)
-                        for stmt in stmts:
-                            table, vals = parse_insert(stmt)
-                            pk = next(iter(vals.values()))
-                            self.upserts[(table, pk)] = vals
-                    conn.sendall(resp(OP_RESULT, struct.pack(">i", 1)))
-                else:
-                    err = struct.pack(">i", 0x000A)
-                    err += struct.pack(">H", 0)
-                    conn.sendall(resp(OP_ERROR, err))
-        except (ConnectionError, OSError):
-            pass
-        finally:
-            conn.close()
-
-    @staticmethod
-    def _decode_batch(body: bytes) -> list[str]:
-        btype, n = struct.unpack(">BH", body[:3])
-        if btype != 0x01:
-            raise ValueError(f"expected UNLOGGED batch, got type {btype}")
-        off = 3
-        out = []
-        for _ in range(n):
-            if body[off] != 0:  # CQL string, not a prepared id
-                raise ValueError("unexpected prepared statement in batch")
-            (ln,) = struct.unpack(">i", body[off + 1 : off + 5])
-            out.append(body[off + 5 : off + 5 + ln].decode())
-            off += 5 + ln
-            (n_values,) = struct.unpack(">H", body[off : off + 2])
-            off += 2
-            if n_values:
-                raise ValueError("inline-literal sink should send no values")
-        return out
-
-    def close(self):
-        self._stop = True
-        self._srv.close()
 
 
 def parse_insert(stmt: str) -> tuple[str, dict[str, str]]:

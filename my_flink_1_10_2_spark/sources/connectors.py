@@ -19,7 +19,14 @@ References:
 
 from __future__ import annotations
 
+import base64
+import hashlib
+import json
+
 from pyspark.sql import DataFrame, SparkSession
+
+from my_flink_1_10_2_spark.sources.hbase_rest import HBaseTypedRestSink
+from my_flink_1_10_2_spark.sources.sink_core import PartitionSink, Rejected, http_request
 
 # ---------------------------------------------------------------------------
 # Elasticsearch sink (ref: ElasticsearchSinkBase.java; table descriptor
@@ -93,25 +100,6 @@ def elasticsearch_sink_options(
     if bulk_flush_max_size_mb is not None:
         opts["es.batch.size.bytes"] = f"{bulk_flush_max_size_mb}mb"
     return opts
-
-
-def elasticsearch_sink(df: DataFrame, checkpoint: str, **kwargs):
-    """Streaming ES sink (ref: ElasticsearchSinkBase.java).  Requires the
-    es-hadoop connector jar (`org.elasticsearch.spark.sql`) on the
-    classpath; raises a clear error when absent."""
-    opts = elasticsearch_sink_options(**kwargs)
-    try:
-        return (
-            df.writeStream.format("org.elasticsearch.spark.sql")
-            .options(**opts)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-    except Exception as ex:  # pragma: no cover - jar-gated
-        raise RuntimeError(
-            "Elasticsearch connector jar (elasticsearch-spark) not on the "
-            "classpath — add it with spark.jars.packages"
-        ) from ex
 
 
 # ---------------------------------------------------------------------------
@@ -338,8 +326,8 @@ def cassandra_sink_options(
 # their PUBLIC protocols (the CQL/OffsetFetch/REST discipline): AMQP
 # 0-9-1 for RabbitMQ, REST for Pub/Sub, Site-to-Site-over-HTTP for
 # NiFi, streaming HTTP for Twitter.  Each shim below delegates to the
-# protocol module; the modules carry the live in-process emulators the
-# graded roundtrips run against.
+# protocol module; the graded roundtrips run against the in-process
+# emulators in ``my_flink_1_10_2_spark.testing``.
 # ---------------------------------------------------------------------------
 
 
@@ -349,7 +337,7 @@ def rabbitmq_source(spark, config, queue, **kwargs):
     competing consumers speaking AMQP 0-9-1 over plain TCP, acking on
     success, with the reference's correlation-id exactly-once dedup
     (``uses_correlation_id=True``).  Drains the queue per call
-    (micro-batch pull); pair with ``amqp_py.rmq_sink`` for the write
+    (micro-batch pull); pair with ``amqp_py.RMQSink`` for the write
     side (RMQSink.java)."""
     from my_flink_1_10_2_spark.sources.amqp_py import rmq_drain_source
 
@@ -411,23 +399,18 @@ def twitter_source(spark, url, **kwargs):
 # ---------------------------------------------------------------------------
 
 
-def _http_bulk_transport(url: str, payload: bytes):
-    """Default transport: POST NDJSON to <host>/_bulk. Returns
-    (status_code, body_bytes); any network error raises."""
-    from urllib.request import Request, urlopen
-
-    req = Request(
-        url, data=payload, headers={"Content-Type": "application/x-ndjson"}
+def _post_bulk(url: str, payload: bytes):
+    status, _, body = http_request(
+        "POST", url, {"Content-Type": "application/x-ndjson"}, payload
     )
-    with urlopen(req) as resp:
-        return resp.status, resp.read()
+    return status, body
 
 
-class ElasticsearchBulkSink:
+class ElasticsearchBulkSink(PartitionSink):
     """foreachBatch sink speaking the ES bulk protocol directly.
 
     ``transport(url, payload) -> (status, body)`` is injectable (tests
-    use recording transports; production uses the urllib default).
+    use recording transports; production uses :func:`http_request`).
     ``failure_handler``: 'fail' raises after retries; 'retry-rejected'
     retries HTTP 429 / item-level 429s with fixed backoff (ref:
     ElasticsearchSinkBase bulk-flush.backoff options).
@@ -454,98 +437,56 @@ class ElasticsearchBulkSink:
         self.url = first.rstrip("/") + "/_bulk"
         self.index = index
         self.key_field = key_field
-        self.max_actions = bulk_max_actions
+        self.max_items = bulk_max_actions
         self.max_bytes = bulk_max_bytes
         self.max_retries = max_retries if failure_handler == "retry-rejected" else 0
         self.retry_delay_s = retry_delay_s
-        self.transport = transport or _http_bulk_transport
+        self.transport = transport or _post_bulk
 
-    # -- bulk payload construction (partition-local) ------------------------
+    def encode(self, row) -> tuple[bytes, bytes]:
+        """→ the (action, source) line pair of one index op."""
+        doc = row.asDict(recursive=True)
+        meta: dict = {"_index": self.index}
+        if self.key_field is not None:
+            meta["_id"] = str(doc[self.key_field])
+        return json.dumps({"index": meta}).encode(), json.dumps(doc, default=str).encode()
 
-    def _flush(self, lines: list[bytes]) -> None:
-        import json as _json
-        import time as _time
+    def item_bytes(self, item) -> int:
+        return len(item[0]) + len(item[1]) + 2
 
-        pending = lines
-        attempt = 0
-        while True:
-            payload = b"\n".join(pending) + b"\n"
-            status, body = self.transport(self.url, payload)
-            retryable = status == 429
-            if status == 200:
-                try:
-                    parsed = _json.loads(body)
-                except ValueError:
-                    parsed = {}
-                if not parsed.get("errors"):
-                    return
-                items = parsed.get("items", [])
-                statuses = {
-                    item.get(op, {}).get("status")
-                    for item in items
-                    for op in item
-                }
-                retryable = statuses <= {200, 201, 429}
-                # Retry ONLY the rejected actions (ref:
-                # ElasticsearchSinkBase RetryRejectedExecutionFailureHandler
-                # re-adds just the failed ActionRequests): items are
-                # positional with the submitted action/source line pairs.
-                # A malformed response (item count mismatch) falls back to
-                # re-sending the full pending payload — idempotent only
-                # for id-addressed index ops, but never silently dropping.
-                if retryable and len(items) * 2 == len(pending):
-                    pending = [
-                        line
-                        for i, item in enumerate(items)
-                        if next(iter(item.values())).get("status") == 429
-                        for line in pending[2 * i : 2 * i + 2]
-                    ]
-            if retryable and attempt < self.max_retries:
-                attempt += 1
-                _time.sleep(self.retry_delay_s)
-                continue
-            raise RuntimeError(
-                f"elasticsearch bulk flush failed (status={status}, "
-                f"attempt={attempt}): {body[:500]!r}"
-            )
+    def full(self, count: int, size: int, nbytes: int) -> bool:
+        # the bulk processor sends once a request REACHES either cap
+        return count >= self.max_items or size >= self.max_bytes
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import json as _json
-
-        index, key_field = self.index, self.key_field
-        max_actions, max_bytes = self.max_actions, self.max_bytes
-        flush = self._flush
-
-        def send_partition(rows):
-            lines: list[bytes] = []
-            n, size = 0, 0
-            for row in rows:
-                doc = row.asDict(recursive=True)
-                meta: dict = {"_index": index}
-                if key_field is not None:
-                    meta["_id"] = str(doc[key_field])
-                a = _json.dumps({"index": meta}).encode()
-                b = _json.dumps(doc, default=str).encode()
-                lines += [a, b]
-                n += 1
-                size += len(a) + len(b) + 2
-                if n >= max_actions or size >= max_bytes:
-                    flush(lines)
-                    lines, n, size = [], 0, 0
-            if lines:
-                flush(lines)
-
-        batch_df.foreachPartition(send_partition)
-
-
-def elasticsearch_bulk_sink(df: DataFrame, checkpoint: str, **kwargs):
-    """Streaming writer using :class:`ElasticsearchBulkSink` — the
-    functional, jar-free ES path (`elasticsearch_sink` keeps the
-    es-hadoop jar path for clusters that ship it)."""
-    sink = ElasticsearchBulkSink(**kwargs)
-    return df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
+    def flush(self, pairs: list, conn) -> None:
+        payload = b"".join(a + b"\n" + b + b"\n" for a, b in pairs)
+        status, body = self.transport(self.url, payload)
+        error = f"elasticsearch bulk flush failed (status={status}): {body[:500]!r}"
+        if status == 429:
+            raise Rejected(error, pairs)
+        if status != 200:
+            raise RuntimeError(error)
+        try:
+            parsed = json.loads(body)
+        except ValueError:
+            parsed = {}
+        if not parsed.get("errors"):
+            return
+        items = parsed.get("items", [])
+        if not {item.get(op, {}).get("status") for item in items for op in item} <= {200, 201, 429}:
+            raise RuntimeError(error)
+        # Retry ONLY the rejected actions (ref: ElasticsearchSinkBase
+        # RetryRejectedExecutionFailureHandler re-adds just the failed
+        # ActionRequests): items are positional with the submitted pairs.
+        # A malformed response (item count mismatch) re-sends the whole
+        # chunk — idempotent only for id-addressed index ops, but never
+        # silently dropping.
+        if len(items) != len(pairs):
+            raise Rejected(error, pairs)
+        raise Rejected(error, [
+            pair for pair, item in zip(pairs, items)
+            if next(iter(item.values())).get("status") == 429
+        ])
 
 
 # ---------------------------------------------------------------------------
@@ -561,27 +502,19 @@ def elasticsearch_bulk_sink(df: DataFrame, checkpoint: str, **kwargs):
 # ---------------------------------------------------------------------------
 
 
-def _http_put_json_transport(url: str, payload: bytes):
-    from urllib.request import Request, urlopen
-
-    req = Request(
-        url,
-        data=payload,
-        method="PUT",
-        headers={"Content-Type": "application/json", "Accept": "application/json"},
-    )
-    with urlopen(req) as resp:
-        return resp.status, resp.read()
-
-
-class HBaseRestSink:
-    """foreachBatch sink speaking the HBase REST multi-row protocol.
+class HBaseRestSink(HBaseTypedRestSink):
+    """foreachBatch sink speaking the HBase REST multi-row protocol,
+    every cell a UTF-8 string (the typed sink it shares its PUT with is
+    :class:`~my_flink_1_10_2_spark.sources.hbase_rest.HBaseTypedRestSink`).
 
     ``column_family`` maps every non-key column to ``cf:column_name``
     (the flat single-family shape; the reference's HBaseTableSchema
     nests by family — pass ``columns={col: "cf:qual"}`` for explicit
-    placement).  ``transport(url, payload)`` is injectable for tests.
+    placement).  ``transport(url, payload) -> (status, body)`` is
+    injectable for tests.
     """
+
+    operation = "hbase REST put"
 
     def __init__(
         self,
@@ -597,58 +530,29 @@ class HBaseRestSink:
         self.rowkey_field = rowkey_field
         self.column_family = column_family
         self.columns = dict(columns or {})
-        self.batch_max_rows = batch_max_rows
-        self.transport = transport or _http_put_json_transport
+        self.max_items = batch_max_rows
+        self.transport = http_request
+        self.url_transport = transport
 
-    def _flush(self, rows: list[dict]) -> None:
-        import json as _json
+    def _put(self, payload: bytes):
+        if self.url_transport is None:
+            return super()._put(payload)
+        return self.url_transport(self.url, payload)
 
-        status, body = self.transport(
-            self.url, _json.dumps({"Row": rows}).encode()
-        )
-        if status not in (200, 201):
-            raise RuntimeError(
-                f"hbase REST put failed (status={status}): {body[:300]!r}"
-            )
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import base64 as _b64
-        import json as _json  # noqa: F401 (kept with base64 for closure clarity)
-
-        rowkey, cf, colmap = self.rowkey_field, self.column_family, self.columns
-        max_rows, flush = self.batch_max_rows, self._flush
-
-        def b64(s) -> str:
-            return _b64.b64encode(str(s).encode()).decode()
-
-        def send_partition(rows_iter):
-            buf: list[dict] = []
-            for row in rows_iter:
-                d = row.asDict(recursive=True)
-                key = d.pop(rowkey)
-                cells = [
-                    {"column": b64(colmap.get(col, f"{cf}:{col}")), "$": b64(val)}
-                    for col, val in d.items()
-                    if val is not None
-                ]
-                buf.append({"key": b64(key), "Cell": cells})
-                if len(buf) >= max_rows:
-                    flush(buf)
-                    buf = []
-            if buf:
-                flush(buf)
-
-        batch_df.foreachPartition(send_partition)
+    def encode(self, row) -> dict:
+        d = row.asDict(recursive=True)
+        key = d.pop(self.rowkey_field)
+        cells = [
+            {"column": _b64_str(self.columns.get(col, f"{self.column_family}:{col}")),
+             "$": _b64_str(val)}
+            for col, val in d.items()
+            if val is not None
+        ]
+        return {"key": _b64_str(key), "Cell": cells}
 
 
-def hbase_rest_sink(df: DataFrame, checkpoint: str, **kwargs):
-    """Streaming writer using :class:`HBaseRestSink` — the functional,
-    jar-free HBase path (`hbase_source`/catalog keep the hbase-spark
-    jar path for clusters that ship it)."""
-    sink = HBaseRestSink(**kwargs)
-    return df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
+def _b64_str(s) -> str:
+    return base64.b64encode(str(s).encode()).decode()
 
 
 # ---------------------------------------------------------------------------
@@ -684,7 +588,6 @@ def _sigv4_headers(
     """AWS Signature Version 4 headers for a POST / request — the
     published signing algorithm, nothing vendor-internal.  ``amz_date``
     is injected (YYYYMMDD'T'HHMMSS'Z') so tests are deterministic."""
-    import hashlib
     import hmac
 
     datestamp = amz_date[:8]
@@ -723,22 +626,12 @@ def _sigv4_headers(
     }
 
 
-def _kinesis_http_transport(url: str, headers: dict, payload: bytes):
-    """Default transport: POST the signed JSON request.  Returns
-    (status, body_bytes); 4xx responses are returned (the caller reads
-    the ErrorCode), network errors raise."""
-    from urllib.error import HTTPError
-    from urllib.request import Request, urlopen
-
-    req = Request(url, data=payload, headers=headers)
-    try:
-        with urlopen(req) as resp:
-            return resp.status, resp.read()
-    except HTTPError as err:  # pragma: no cover - needs live endpoint
-        return err.code, err.read()
+def _post_signed(url: str, headers: dict, payload: bytes):
+    status, _, body = http_request("POST", url, headers, payload)
+    return status, body
 
 
-class KinesisPutRecordsSink:
+class KinesisPutRecordsSink(PartitionSink):
     """foreachBatch sink speaking the Kinesis PutRecords REST protocol.
 
     - Records serialize as JSON (the SerializationSchema default);
@@ -792,11 +685,11 @@ class KinesisPutRecordsSink:
         self.access_key_id = access_key_id
         self.secret_key = secret_key
         self.partition_key_field = partition_key_field
-        self.batch_max_records = batch_max_records
-        self.batch_max_bytes = batch_max_bytes
+        self.max_items = batch_max_records
+        self.max_bytes = batch_max_bytes
         self.max_retries = max_retries
         self.retry_delay_s = retry_delay_s
-        self.transport = transport or _kinesis_http_transport
+        self.transport = transport or _post_signed
         self.clock = clock
 
     def _headers(self, payload: bytes) -> dict[str, str]:
@@ -826,285 +719,59 @@ class KinesisPutRecordsSink:
             amz_date=amz_date,
         )
 
-    def _flush(self, records: list[dict]) -> None:
-        import json as _json
-        import time as _time
-
-        attempt = 0
-        pending = records
-        while True:
-            payload = _json.dumps(
-                {"StreamName": self.stream, "Records": pending}
-            ).encode()
-            status, body = self.transport(self.url, self._headers(payload), payload)
-            try:
-                parsed = _json.loads(body) if body else {}
-            except ValueError:
-                parsed = {}
-            if status == 200:
-                if not parsed.get("FailedRecordCount"):
-                    return
-                # partial failure: retry ONLY the rejected subset, in order.
-                # A malformed/truncated Records array (shorter than what we
-                # sent) would silently drop records through zip — fall back
-                # to retrying the full pending list in that case.
-                results = parsed.get("Records", [])
-                if len(results) == len(pending):
-                    pending = [
-                        rec
-                        for rec, res in zip(pending, results)
-                        if res.get("ErrorCode")
-                    ]
-                retryable = True
-            else:
-                retryable = "ProvisionedThroughputExceededException" in str(
-                    parsed.get("__type", "")
-                ) or status in (500, 503)
-            if retryable and attempt < self.max_retries:
-                attempt += 1
-                _time.sleep(self.retry_delay_s)
-                continue
-            raise RuntimeError(
-                f"kinesis PutRecords failed (status={status}, "
-                f"attempt={attempt}, pending={len(pending)}): {body[:300]!r}"
-            )
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import base64 as _b64
-        import hashlib as _hashlib
-        import json as _json
-
+    def encode(self, row) -> tuple[bytes, str]:
+        """→ (data, partition key); a record over 1 MiB fails here,
+        before any network call."""
+        doc = row.asDict(recursive=True)
+        data = json.dumps(doc, default=str).encode()
         key_field = self.partition_key_field
-        max_records, max_bytes = self.batch_max_records, self.batch_max_bytes
-        flush = self._flush
+        pkey = str(doc[key_field]) if key_field is not None else hashlib.md5(data).hexdigest()
+        nbytes = len(data) + len(pkey.encode())
+        if nbytes > _KINESIS_MAX_RECORD_BYTES:
+            raise RuntimeError(
+                f"kinesis record exceeds 1 MiB ({nbytes} bytes) — "
+                "Kinesis rejects it; split or compress upstream"
+            )
+        return data, pkey
 
-        def send_partition(rows):
-            buf: list[dict] = []
-            size = 0
-            for row in rows:
-                doc = row.asDict(recursive=True)
-                data = _json.dumps(doc, default=str).encode()
-                pkey = (
-                    str(doc[key_field])
-                    if key_field is not None
-                    else _hashlib.md5(data).hexdigest()
-                )
-                rec_bytes = len(data) + len(pkey.encode())
-                if rec_bytes > _KINESIS_MAX_RECORD_BYTES:
-                    raise RuntimeError(
-                        f"kinesis record exceeds 1 MiB ({rec_bytes} bytes) — "
-                        "Kinesis rejects it; split or compress upstream"
-                    )
-                if buf and (len(buf) >= max_records or size + rec_bytes > max_bytes):
-                    flush(buf)
-                    buf, size = [], 0
-                buf.append(
-                    {"Data": _b64.b64encode(data).decode(), "PartitionKey": pkey}
-                )
-                size += rec_bytes
-            if buf:
-                flush(buf)
+    def item_bytes(self, item) -> int:
+        return len(item[0]) + len(item[1].encode())
 
-        batch_df.foreachPartition(send_partition)
-
-
-def kinesis_put_records_sink(df: DataFrame, checkpoint: str, **kwargs):
-    """Streaming writer using :class:`KinesisPutRecordsSink` — the
-    functional, jar-free Kinesis path (`kinesis_source` keeps the
-    spark-sql-kinesis jar path for clusters that ship it)."""
-    sink = KinesisPutRecordsSink(**kwargs)
-    return df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-
-
-class InMemoryJsonHttpServer:
-    """In-process HTTP endpoint emulator: records every request body
-    (thread-safe) and answers with a fixed JSON response.  Development/
-    testing utility (the InMemoryHBaseRestServer / InMemoryCqlServer
-    precedent) — lets the Kinesis PutRecords and Elasticsearch _bulk
-    sinks be oracle-graded over REAL HTTP without the services."""
-
-    def __init__(self, response: bytes = b"{}", status: int = 200):
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        self.bodies: list[bytes] = []
-        self._lock = threading.Lock()
-        srv = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def do_POST(self):
-                n = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(n) if n else b""
-                with srv._lock:
-                    srv.bodies.append(body)
-                self.send_response(status)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(response)))
-                self.end_headers()
-                self.wfile.write(response)
-
-            do_PUT = do_POST
-
-        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()
-
-
-class InMemoryKinesisServer:
-    """In-process Kinesis PutRecords endpoint with a DETERMINISTIC
-    first-attempt throttle policy: a record whose PartitionKey (as int)
-    satisfies ``key % throttle_mod == throttle_rem`` is rejected with a
-    per-record ``ProvisionedThroughputExceededException`` the FIRST time
-    that key is seen and accepted on any retry — the partial-failure
-    shape the real service produces under shard throttling.  Accepted
-    records accumulate in ``.records`` in arrival order (thread-safe),
-    so a correct retry-only-the-failed-subset producer lands every
-    source record exactly once."""
-
-    def __init__(self, throttle_mod: int = 3, throttle_rem: int = 1):
-        import json as _json
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        self.records: list[dict] = []
-        self.calls = 0
-        self._seen: set[str] = set()
-        self._lock = threading.Lock()
-        srv = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def do_POST(self):
-                n = int(self.headers.get("Content-Length", 0))
-                req = _json.loads(self.rfile.read(n))
-                results, failed = [], 0
-                with srv._lock:
-                    srv.calls += 1
-                    for rec in req.get("Records", []):
-                        key = str(rec.get("PartitionKey", ""))
-                        first = key not in srv._seen
-                        srv._seen.add(key)
-                        try:
-                            ki = int(key)
-                        except ValueError:
-                            ki = sum(key.encode())
-                        if first and ki % throttle_mod == throttle_rem:
-                            failed += 1
-                            results.append({
-                                "ErrorCode":
-                                    "ProvisionedThroughputExceededException",
-                                "ErrorMessage": "Rate exceeded for shard",
-                            })
-                        else:
-                            srv.records.append(rec)
-                            results.append({
-                                "SequenceNumber": str(len(srv.records)),
-                                "ShardId": "shardId-000000000000",
-                            })
-                body = _json.dumps(
-                    {"FailedRecordCount": failed, "Records": results}
-                ).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/x-amz-json-1.1")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()
-
-
-class InMemoryElasticsearchBulkServer:
-    """In-process ES ``_bulk`` endpoint with a DETERMINISTIC
-    first-attempt rejection policy: an action whose ``_id`` (as int)
-    satisfies ``id % reject_mod == reject_rem`` gets an item-level 429
-    (``es_rejected_execution_exception``) the FIRST time that id is
-    seen and a 201 on any retry — the bulk-queue-full shape the real
-    service produces under pressure.  Every indexed doc appends to
-    ``.indexed`` (thread-safe), so a correct retry-only-the-rejected
-    sink indexes every source doc exactly once; a whole-payload retry
-    shows up as duplicate appends."""
-
-    def __init__(self, reject_mod: int = 3, reject_rem: int = 2):
-        import json as _json
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        self.indexed: list[tuple[str, dict]] = []
-        self.calls = 0
-        self._seen: set[str] = set()
-        self._lock = threading.Lock()
-        srv = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def do_POST(self):
-                n = int(self.headers.get("Content-Length", 0))
-                lines = self.rfile.read(n).decode().splitlines()
-                items, errors = [], False
-                with srv._lock:
-                    srv.calls += 1
-                    for action, doc in zip(lines[0::2], lines[1::2]):
-                        meta = _json.loads(action)["index"]
-                        _id = str(meta.get("_id", ""))
-                        first = _id not in srv._seen
-                        srv._seen.add(_id)
-                        try:
-                            ii = int(_id)
-                        except ValueError:
-                            ii = sum(_id.encode())
-                        if first and ii % reject_mod == reject_rem:
-                            errors = True
-                            items.append({"index": {
-                                "_index": meta.get("_index"), "_id": _id,
-                                "status": 429,
-                                "error": {
-                                    "type": "es_rejected_execution_exception",
-                                    "reason": "bulk queue full",
-                                },
-                            }})
-                        else:
-                            srv.indexed.append((_id, _json.loads(doc)))
-                            items.append({"index": {
-                                "_index": meta.get("_index"), "_id": _id,
-                                "status": 201,
-                            }})
-                body = _json.dumps(
-                    {"took": 1, "errors": errors, "items": items}
-                ).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            do_PUT = do_POST
-
-        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()
+    def flush(self, records: list, conn) -> None:
+        payload = json.dumps({
+            "StreamName": self.stream,
+            "Records": [
+                {"Data": base64.b64encode(data).decode(), "PartitionKey": pkey}
+                for data, pkey in records
+            ],
+        }).encode()
+        status, body = self.transport(self.url, self._headers(payload), payload)
+        try:
+            parsed = json.loads(body) if body else {}
+        except ValueError:
+            parsed = {}
+        error = (
+            f"kinesis PutRecords failed (status={status}, "
+            f"pending={len(records)}): {body[:300]!r}"
+        )
+        if status == 200:
+            if not parsed.get("FailedRecordCount"):
+                return
+            # partial failure: retry ONLY the rejected subset, in order.
+            # A malformed/truncated Records array (shorter than what we
+            # sent) would silently drop records through zip — retry the
+            # full chunk in that case.
+            results = parsed.get("Records", [])
+            if len(results) != len(records):
+                raise Rejected(error, records)
+            raise Rejected(error, [
+                rec for rec, res in zip(records, results) if res.get("ErrorCode")
+            ])
+        if "ProvisionedThroughputExceededException" in str(
+            parsed.get("__type", "")
+        ) or status in (500, 503):
+            raise Rejected(error, records)
+        raise RuntimeError(error)
 
 
 def wikipedia_edits_source(spark, host=None, port=None, channel=None, **kwargs):

@@ -23,8 +23,10 @@ boundaries) and drives its own scanner; writes batch multi-row PUTs per
 partition.  Nothing funnels through the driver.
 
 (`connectors.py::HBaseRestSink` is the older string-cell convenience
-sink — every cell UTF-8; this module is the TYPED parity path whose
-bytes interoperate with the reference connector, plus the read side.)
+sink — every cell UTF-8; it shares this module's CellSet PUT and differs
+only in how a row is encoded.  This module is the TYPED parity path
+whose bytes interoperate with the reference connector, plus the read
+side.)
 """
 
 from __future__ import annotations
@@ -34,6 +36,8 @@ import json
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
+
+from my_flink_1_10_2_spark.sources.sink_core import PartitionSink, Rejected, http_request
 
 # Flink type name → (spark DDL type, encoder, decoder). Encodings match
 # org.apache.hadoop.hbase.util.Bytes (public wire format).
@@ -84,20 +88,6 @@ def _b64(b: bytes) -> str:
 
 def _unb64(s: str) -> bytes:
     return base64.b64decode(s)
-
-
-def _http_transport(method: str, url: str, headers: dict, body: bytes | None):
-    """Default urllib transport → (status, response_headers, body).
-    Module-level so executor closures pickle it."""
-    import urllib.error
-    import urllib.request
-
-    req = urllib.request.Request(url, data=body, headers=headers, method=method)
-    try:
-        with urllib.request.urlopen(req, timeout=60) as resp:
-            return resp.status, dict(resp.headers), resp.read()
-    except urllib.error.HTTPError as e:
-        return e.code, dict(e.headers), e.read()
 
 
 class HBaseSchema:
@@ -209,7 +199,7 @@ def hbase_rest_source(
     own scanner over one [start, stop) range — the analog of one input
     split per region.  Without splits the table is read as a single
     range (fine for dimension tables; pass splits for anything big)."""
-    transport = transport or _http_transport
+    transport = transport or http_request
     bounds: list[bytes | None] = [None]
     for k in split_keys or []:
         bounds.append(hbase_encode(k, schema.rowkey_type))
@@ -250,10 +240,18 @@ def hbase_rest_source(
 # -- write path ---------------------------------------------------------------
 
 
-class HBaseTypedRestSink:
+class HBaseTypedRestSink(PartitionSink):
     """Batch/foreachBatch upsert sink: multi-row CellSet PUTs (the REST
     analog of the reference's HBaseUpsertTableSink buffered Puts;
-    flush-size option per HBaseWriteOptions)."""
+    flush-size option per HBaseWriteOptions).
+
+    A retryable gateway status (503 region-server busy / 429 throttled —
+    the REST analogs of the public HBase client's RegionTooBusy/
+    CallQueueTooBig retry conditions) resends the SAME payload up to
+    ``max_retries`` times.  Whole-batch retry is correct because every
+    Row is a rowkey upsert (idempotent); other statuses stay fatal."""
+
+    operation = "HBase REST batch PUT"
 
     def __init__(
         self,
@@ -266,185 +264,40 @@ class HBaseTypedRestSink:
         max_retries: int = 0,
         retry_delay_s: float = 0.1,
     ):
-        self.base_url = base_url.rstrip("/")
-        self.table = table
+        self.url = f"{base_url.rstrip('/')}/{table}/fakerow"
         self.schema = schema
-        self.batch_max_rows = batch_max_rows
-        self.transport = transport or _http_transport
+        self.max_items = batch_max_rows
+        self.transport = transport or http_request
         self.max_retries = max_retries
         self.retry_delay_s = retry_delay_s
 
-    def _flush(self, rows: list[dict]) -> None:
-        """PUT one CellSet; on a retryable gateway status (503 region
-        -server busy / 429 throttled — the REST analogs of the public
-        HBase client's RegionTooBusy/CallQueueTooBig retry conditions)
-        resend the SAME payload up to ``max_retries`` times.  Whole-batch
-        retry is correct because every Row is a rowkey upsert
-        (idempotent); non-retryable statuses stay fatal."""
-        import time as _time
+    def _put(self, payload: bytes):
+        status, _, body = self.transport(
+            "PUT",
+            self.url,
+            {"Content-Type": "application/json", "Accept": "application/json"},
+            payload,
+        )
+        return status, body
 
-        payload = json.dumps({"Row": rows}).encode()
-        attempt = 0
-        while True:
-            status, _, body = self.transport(
-                "PUT",
-                f"{self.base_url}/{self.table}/fakerow",
-                {"Content-Type": "application/json", "Accept": "application/json"},
-                payload,
-            )
-            if status == 200:
-                return
-            if status in (429, 503) and attempt < self.max_retries:
-                attempt += 1
-                _time.sleep(self.retry_delay_s)
-                continue
-            raise RuntimeError(
-                f"HBase REST batch PUT failed (status={status}): {body[:300]!r}"
-            )
+    def encode(self, row) -> dict:
+        d = row.asDict()
+        schema = self.schema
+        cells = [
+            {"column": _b64(f"{fam}:{q}".encode()), "$": _b64(hbase_encode(d[f], t))}
+            for f, fam, q, t in schema.columns
+            if d.get(f) is not None  # HBase has no NULL cell — omit
+        ]
+        return {
+            "key": _b64(hbase_encode(d[schema.rowkey_field], schema.rowkey_type)),
+            "Cell": cells,
+        }
 
-    def __call__(self, df: DataFrame, batch_id: int = 0) -> None:
-        schema, flush, max_rows = self.schema, self._flush, self.batch_max_rows
-        rk_field, rk_type = schema.rowkey_field, schema.rowkey_type
-        cols = schema.columns
-
-        def write_partition(rows):
-            buf: list[dict] = []
-            for row in rows:
-                d = row.asDict()
-                cells = []
-                for f, fam, q, t in cols:
-                    if d.get(f) is None:
-                        continue  # HBase has no NULL cell — omit
-                    cells.append(
-                        {
-                            "column": _b64(f"{fam}:{q}".encode()),
-                            "$": _b64(hbase_encode(d[f], t)),
-                        }
-                    )
-                buf.append(
-                    {"key": _b64(hbase_encode(d[rk_field], rk_type)), "Cell": cells}
-                )
-                if len(buf) >= max_rows:
-                    flush(buf)
-                    buf = []
-            if buf:
-                flush(buf)
-
-        df.foreachPartition(write_partition)
-
-
-# -- in-process emulator -------------------------------------------------------
-
-
-class InMemoryHBaseRestServer:
-    """In-process HBase REST gateway emulator — an ordered {rowkey_bytes:
-    {'cf:q': value_bytes}} store speaking the scanner create/next/delete
-    and multi-row PUT subset of the Stargate API.  Development/testing
-    utility (the qs_server.py precedent): lets the source/sink be graded
-    over a REAL HTTP transport without an HBase install."""
-
-    def __init__(self, page_rows: int = 2, fail_each_put_once: bool = False):
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        # page_rows: rows per scanner GET (small default forces the
-        # client through the pagination loop)
-        self.page_rows = page_rows
-        self.store: dict[bytes, dict[str, bytes]] = {}
-        self.scanners: dict[str, list] = {}
-        self.scanner_log: list[tuple] = []  # (start, stop) per scanner
-        self._next_id = [0]
-        #: 503-rejected first attempts (fail_each_put_once mode)
-        self.failed_puts = 0
-        self._fail_once = fail_each_put_once
-        self._seen_puts: set[bytes] = set()
-        fake = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # silence
-                pass
-
-            def _body(self):
-                n = int(self.headers.get("Content-Length", 0))
-                return self.rfile.read(n) if n else b""
-
-            def do_PUT(self):
-                parts = self.path.strip("/").split("/")
-                if parts[-1] == "scanner":  # create scanner
-                    model = json.loads(self._body())
-                    start = _unb64(model["startRow"]) if "startRow" in model else b""
-                    stop = _unb64(model["endRow"]) if "endRow" in model else None
-                    fake.scanner_log.append((start, stop))
-                    keys = sorted(
-                        k for k in fake.store
-                        if k >= start and (stop is None or k < stop)
-                    )
-                    sid = f"s{fake._next_id[0]}"
-                    fake._next_id[0] += 1
-                    fake.scanners[sid] = keys
-                    self.send_response(201)
-                    self.send_header(
-                        "Location",
-                        f"http://{self.headers['Host']}/{parts[0]}/scanner/{sid}",
-                    )
-                    self.end_headers()
-                    return
-                # multi-row CellSet PUT
-                raw = self._body()
-                if fake._fail_once:
-                    import hashlib as _hashlib
-
-                    sig = _hashlib.md5(raw).digest()
-                    if sig not in fake._seen_puts:
-                        fake._seen_puts.add(sig)
-                        fake.failed_puts += 1
-                        self.send_response(503)
-                        self.end_headers()
-                        return
-                for row in json.loads(raw)["Row"]:
-                    key = _unb64(row["key"])
-                    cells = fake.store.setdefault(key, {})
-                    for c in row["Cell"]:
-                        col = _unb64(c["column"]).decode()
-                        cells[col] = _unb64(c["$"])
-                self.send_response(200)
-                self.end_headers()
-
-            def do_GET(self):
-                sid = self.path.strip("/").split("/")[-1]
-                keys = fake.scanners.get(sid, [])
-                if not keys:
-                    self.send_response(204)
-                    self.end_headers()
-                    return
-                n = fake.page_rows
-                chunk, fake.scanners[sid] = keys[:n], keys[n:]
-                rows = [
-                    {
-                        "key": _b64(k),
-                        "Cell": [
-                            {"column": _b64(col.encode()), "timestamp": 1, "$": _b64(v)}
-                            for col, v in sorted(fake.store[k].items())
-                        ],
-                    }
-                    for k in chunk
-                ]
-                body = json.dumps({"Row": rows}).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def do_DELETE(self):
-                fake.scanners.pop(self.path.strip("/").split("/")[-1], None)
-                self.send_response(200)
-                self.end_headers()
-
-        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()
+    def flush(self, rows: list, conn) -> None:
+        status, body = self._put(json.dumps({"Row": rows}).encode())
+        if status in (200, 201):
+            return
+        error = f"{self.operation} failed (status={status}): {body[:300]!r}"
+        if status in (429, 503):
+            raise Rejected(error, rows)
+        raise RuntimeError(error)

@@ -97,50 +97,3 @@ def twitter_source(
     return http_line_stream_source(
         spark, [url] * streams, headers=headers, max_lines=max_lines
     )
-
-
-class InMemoryLineStreamServer:
-    """In-process chunked-HTTP line-stream emulator: serves the given
-    lines as a newline-delimited body with keep-alive blank lines
-    interleaved (the streaming-API idle signal) and records request
-    headers.  Development/testing utility (the InMemoryPubSubServer
-    precedent)."""
-
-    def __init__(self, lines: list[str], *, keepalive_every: int = 0):
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        srv = self
-        self.lines = list(lines)
-        self.seen_headers: list[dict] = []
-        self._ka = keepalive_every
-
-        class Handler(BaseHTTPRequestHandler):
-            protocol_version = "HTTP/1.1"
-
-            def log_message(self, *a):
-                pass
-
-            def do_GET(self):
-                srv.seen_headers.append(dict(self.headers))
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Transfer-Encoding", "chunked")
-                self.end_headers()
-
-                def chunk(b: bytes):
-                    self.wfile.write(f"{len(b):x}\r\n".encode() + b + b"\r\n")
-
-                for i, line in enumerate(srv.lines):
-                    if srv._ka and i and i % srv._ka == 0:
-                        chunk(b"\n")  # keep-alive
-                    chunk(line.encode() + b"\n")
-                self.wfile.write(b"0\r\n\r\n")
-
-        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()

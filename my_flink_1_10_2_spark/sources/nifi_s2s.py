@@ -22,15 +22,17 @@ flowfile a big-endian ``int32`` attribute count, then per attribute
 content length and the content bytes — exactly the (attributes,
 content) pair the reference surfaces as ``NiFiDataPacket``.
 
-Scale shape: one transaction per PARTITION on the sink, one consumer
-task per transaction on the source (NiFi distributes across its own
-cluster nodes behind the port); rows never touch the driver.
+Scale shape: one transaction per chunk of a partition on the sink, one
+consumer task per transaction on the source (NiFi distributes across
+its own cluster nodes behind the port); rows never touch the driver.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+
+from my_flink_1_10_2_spark.sources.sink_core import PartitionSink, http_request
 
 
 # -- data-packet codec ----------------------------------------------------------
@@ -79,20 +81,14 @@ CONFIRM_TRANSACTION = 12  # ResponseCode.CONFIRM_TRANSACTION
 
 
 def _http(url: str, method: str, body: bytes | None = None) -> tuple[int, bytes, dict]:
-    import urllib.error
-    import urllib.request
-
-    req = urllib.request.Request(url, data=body, method=method)
-    if body is not None:
-        req.add_header("Content-Type", "application/octet-stream")
-    try:
-        with urllib.request.urlopen(req, timeout=60) as resp:
-            return resp.status, resp.read(), dict(resp.headers)
-    except urllib.error.HTTPError as err:
+    headers = {} if body is None else {"Content-Type": "application/octet-stream"}
+    status, resp_headers, resp_body = http_request(method, url, headers, body)
+    if not 200 <= status < 300:
         raise RuntimeError(
             f"NiFi S2S {method} {url.split('/nifi-api/')[-1]} failed: "
-            f"HTTP {err.code} {err.read()[:200]!r}"
-        ) from err
+            f"HTTP {status} {resp_body[:200]!r}"
+        )
+    return status, resp_body, resp_headers
 
 
 def _create_transaction(base_url: str, port_kind: str, port_id: str) -> str:
@@ -120,14 +116,14 @@ def _confirm(base_url, port_kind, port_id, tx_id, checksum: int) -> None:
         raise RuntimeError(f"NiFi transaction confirm answered HTTP {status}")
 
 
-class NiFiS2SSink:
+class NiFiS2SSink(PartitionSink):
     """foreachBatch sink shipping rows to a NiFi INPUT port as
     data packets over S2S-HTTP (ref: NiFiSink.java + the reference's
     NiFiDataPacketBuilder): content from ``body_field`` (string/binary)
     or the JSON row, attributes from ``attribute_fields``.  One
-    two-phase transaction per partition — create → send → confirm with
-    the server's CRC32 — so a failed partition leaves nothing
-    committed (the reference's transaction.confirm()/complete())."""
+    two-phase transaction per chunk of ``batch_max_packets`` — create →
+    send → confirm with the server's CRC32 — so a failed chunk leaves
+    nothing committed (the reference's transaction.confirm()/complete())."""
 
     def __init__(
         self,
@@ -144,9 +140,9 @@ class NiFiS2SSink:
         self.port_id = port_id
         self.body_field = body_field
         self.attribute_fields = tuple(attribute_fields)
-        self.batch_max_packets = batch_max_packets
+        self.max_items = batch_max_packets
 
-    def _packet(self, row) -> tuple[dict, bytes]:
+    def encode(self, row) -> tuple[dict, bytes]:
         import json as _json
 
         doc = row.asDict(recursive=True)
@@ -158,22 +154,7 @@ class NiFiS2SSink:
             content = _json.dumps(doc, sort_keys=True, default=str).encode()
         return attrs, bytes(content)
 
-    def __call__(self, batch_df, batch_id: int) -> None:
-        sink = self
-
-        def send_partition(rows):
-            buf = []
-            for row in rows:
-                buf.append(sink._packet(row))
-                if len(buf) >= sink.batch_max_packets:
-                    sink._ship(buf)
-                    buf = []
-            if buf:
-                sink._ship(buf)
-
-        batch_df.foreachPartition(send_partition)
-
-    def _ship(self, packets) -> None:
+    def flush(self, packets: list, conn) -> None:
         stream = encode_data_packets(packets)
         tx = _create_transaction(self.base_url, "input-ports", self.port_id)
         _status, body, _h = _http(
@@ -190,14 +171,6 @@ class NiFiS2SSink:
                 f"server saw {server_crc}"
             )
         _confirm(self.base_url, "input-ports", self.port_id, tx, local_crc)
-
-
-def nifi_s2s_sink(df, checkpoint: str, **kwargs):
-    """Streaming writer using :class:`NiFiS2SSink`."""
-    sink = NiFiS2SSink(**kwargs)
-    return df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
 
 
 def nifi_s2s_source(
@@ -217,21 +190,18 @@ def nifi_s2s_source(
     base, pid = base_url, port_id
 
     def drain(_idx_iter):
-        while True:
-            import json as _json
-            import urllib.error
-            import urllib.request
+        import json as _json
 
-            req = urllib.request.Request(
+        while True:
+            status, body, _h = _http(
                 f"{base.rstrip('/')}/nifi-api/data-transfer/output-ports/"
                 f"{pid}/transactions",
-                data=b"",
-                method="POST",
+                "POST",
+                b"",
             )
-            with urllib.request.urlopen(req, timeout=60) as resp:
-                if resp.status == 204:
-                    return  # port empty
-                tx = _json.loads(resp.read())["transactionId"]
+            if status == 204:
+                return  # port empty
+            tx = _json.loads(body)["transactionId"]
             _status, stream, _h = _http(
                 f"{base.rstrip('/')}/nifi-api/data-transfer/output-ports/"
                 f"{pid}/transactions/{tx}/flow-files",
@@ -253,139 +223,3 @@ def nifi_s2s_source(
     return spark.createDataFrame(
         rdd, "attributes map<string,string>, content binary"
     ).localCheckpoint(eager=True)
-
-
-# -- in-process emulator -------------------------------------------------------
-
-
-class InMemoryNiFiS2SServer:
-    """In-process S2S-HTTP emulator: transaction create/send/receive/
-    confirm on one port that is both input (sink target) and output
-    (source origin), with two-phase semantics — received data only
-    dequeues, and sent data only commits, on a checksum-matching
-    confirm.  Development/testing utility (the InMemoryPubSubServer
-    precedent)."""
-
-    def __init__(self, *, batch_packets: int = 100):
-        import re
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        self.queue: list[tuple[dict, bytes]] = []  # the port's flowfiles
-        self.confirmed_sends = 0
-        self.confirmed_receives = 0
-        self._tx: dict[str, dict] = {}
-        self._seq = 0
-        self._lock = threading.Lock()
-        self._batch = batch_packets
-        srv = self
-        tx_route = re.compile(
-            r"^/nifi-api/data-transfer/(input-ports|output-ports)/([^/]+)"
-            r"/transactions(?:/([^/?]+))?(?:/flow-files)?(?:\?(.*))?$"
-        )
-
-        class Handler(BaseHTTPRequestHandler):
-            protocol_version = "HTTP/1.1"
-
-            def log_message(self, *a):
-                pass
-
-            def _reply(self, status: int, body: bytes = b""):
-                self.send_response(status)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                if body:
-                    self.wfile.write(body)
-
-            def do_POST(self):
-                m = tx_route.match(self.path)
-                if not m:
-                    return self._reply(404)
-                kind, _port, tx_id, _qs = m.groups()
-                n = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(n) if n else b""
-                if tx_id is None:  # create
-                    with srv._lock:
-                        if kind == "output-ports" and not srv.queue:
-                            return self._reply(204)
-                        srv._seq += 1
-                        new_id = f"tx-{srv._seq}"
-                        tx = {"kind": kind, "data": b"", "leased": []}
-                        if kind == "output-ports":
-                            take = srv.queue[: srv._batch]
-                            srv.queue = srv.queue[srv._batch :]
-                            tx["leased"] = take
-                            tx["data"] = encode_data_packets(take)
-                        srv._tx[new_id] = tx
-                    return self._reply(
-                        201, b'{"transactionId": "' + new_id.encode() + b'"}'
-                    )
-                # send leg: stream arrives, answer its checksum
-                with srv._lock:
-                    tx = srv._tx.get(tx_id)
-                    if tx is None or tx["kind"] != "input-ports":
-                        return self._reply(404)
-                    tx["data"] = body
-                return self._reply(200, str(zlib.crc32(body)).encode())
-
-            def do_GET(self):
-                m = tx_route.match(self.path)
-                if not m:
-                    return self._reply(404)
-                _kind, _port, tx_id, _qs = m.groups()
-                with srv._lock:
-                    tx = srv._tx.get(tx_id)
-                    if tx is None or tx["kind"] != "output-ports":
-                        return self._reply(404)
-                    data = tx["data"]
-                return self._reply(200, data)
-
-            def do_DELETE(self):
-                from urllib.parse import parse_qs, urlparse
-
-                parsed = urlparse(self.path)
-                m = tx_route.match(parsed.path)
-                if not m:
-                    return self._reply(404)
-                _kind, _port, tx_id, _ = m.groups()
-                qs = parse_qs(parsed.query)
-                code = int(qs.get("responseCode", ["0"])[0])
-                checksum = int(qs.get("checksum", ["-1"])[0])
-                with srv._lock:
-                    tx = srv._tx.pop(tx_id, None)
-                    if tx is None:
-                        return self._reply(404)
-                    ok = code == CONFIRM_TRANSACTION and checksum == zlib.crc32(
-                        tx["data"]
-                    )
-                    if not ok:
-                        # rollback: leased flowfiles return to the port
-                        if tx["kind"] == "output-ports":
-                            srv.queue = tx["leased"] + srv.queue
-                        return self._reply(400, b"checksum mismatch")
-                    if tx["kind"] == "input-ports":
-                        srv.queue.extend(decode_data_packets(tx["data"]))
-                        srv.confirmed_sends += 1
-                    else:
-                        srv.confirmed_receives += 1
-                return self._reply(200)
-
-        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def abandon_open_transactions(self) -> int:
-        """Drop every in-flight transaction WITHOUT confirm (an executor
-        crash): output leases return to the queue, input data is lost
-        uncommitted — the two-phase guarantee under test."""
-        with self._lock:
-            n = len(self._tx)
-            for tx in self._tx.values():
-                if tx["kind"] == "output-ports":
-                    self.queue = tx["leased"] + self.queue
-            self._tx.clear()
-        return n
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()

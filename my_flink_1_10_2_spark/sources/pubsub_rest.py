@@ -38,31 +38,23 @@ from __future__ import annotations
 import base64
 import json
 
+from my_flink_1_10_2_spark.sources.sink_core import PartitionSink, http_request
+
 
 def _http_post_json(url: str, doc: dict, token: str | None = None) -> dict:
-    """One POST, JSON in/out, loud on HTTP errors (stdlib-only so it
-    runs inside executors without extra deps)."""
-    import urllib.error
-    import urllib.request
-
-    payload = json.dumps(doc).encode()
-    req = urllib.request.Request(
-        url, data=payload, headers={"Content-Type": "application/json"}
-    )
+    """One POST, JSON in/out, loud on HTTP errors."""
+    headers = {"Content-Type": "application/json"}
     if token:
-        req.add_header("Authorization", f"Bearer {token}")
-    try:
-        with urllib.request.urlopen(req, timeout=60) as resp:
-            body = resp.read()
-    except urllib.error.HTTPError as err:
+        headers["Authorization"] = f"Bearer {token}"
+    status, _, body = http_request("POST", url, headers, json.dumps(doc).encode())
+    if not 200 <= status < 300:
         raise RuntimeError(
-            f"pubsub call {url.rsplit('/', 1)[-1]} failed: "
-            f"HTTP {err.code} {err.read()[:200]!r}"
-        ) from err
+            f"pubsub call {url.rsplit('/', 1)[-1]} failed: HTTP {status} {body[:200]!r}"
+        )
     return json.loads(body) if body.strip() else {}
 
 
-class PubSubRestSink:
+class PubSubRestSink(PartitionSink):
     """foreachBatch sink publishing rows to a Pub/Sub topic over REST
     (ref: PubSubSink.java).  Rows serialize to JSON unless ``body_field``
     names a string/binary column to publish raw (the SerializationSchema
@@ -94,9 +86,9 @@ class PubSubRestSink:
         self.body_field = body_field
         self.attribute_fields = tuple(attribute_fields)
         self.token = token
-        self.batch_max_messages = batch_max_messages
+        self.max_items = batch_max_messages
 
-    def _message(self, row) -> dict:
+    def encode(self, row) -> dict:
         doc = row.asDict(recursive=True)
         if self.body_field is not None:
             v = doc[self.body_field]
@@ -108,36 +100,13 @@ class PubSubRestSink:
             msg["attributes"] = {f: str(doc[f]) for f in self.attribute_fields}
         return msg
 
-    def __call__(self, batch_df, batch_id: int) -> None:
-        sink = self
-
-        def send_partition(rows):
-            buf = []
-            for row in rows:
-                buf.append(sink._message(row))
-                if len(buf) >= sink.batch_max_messages:
-                    sink._publish(buf)
-                    buf = []
-            if buf:
-                sink._publish(buf)
-
-        batch_df.foreachPartition(send_partition)
-
-    def _publish(self, messages: list[dict]) -> None:
+    def flush(self, messages: list[dict], conn) -> None:
         out = _http_post_json(self.url, {"messages": messages}, self.token)
         ids = out.get("messageIds", [])
         if len(ids) != len(messages):
             raise RuntimeError(
                 f"pubsub publish acked {len(ids)}/{len(messages)} messages"
             )
-
-
-def pubsub_rest_sink(df, checkpoint: str, **kwargs):
-    """Streaming writer using :class:`PubSubRestSink`."""
-    sink = PubSubRestSink(**kwargs)
-    return df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
 
 
 def pubsub_pull_source(
@@ -197,120 +166,3 @@ def pubsub_pull_source(
     if dedup_on_message_id:
         df = df.dropDuplicates(["message_id"])
     return df
-
-
-# -- in-process emulator -------------------------------------------------------
-
-
-class InMemoryPubSubServer:
-    """In-process Pub/Sub REST emulator: topic→subscription fan-out on
-    :publish, lease-tracking :pull, :acknowledge.  Unacked messages
-    return to the queue via :meth:`expire_leases` (the ack-deadline
-    redelivery).  Development/testing utility (the InMemoryAmqpBroker
-    precedent) — lets the sink AND source be oracle-graded over REAL
-    HTTP without gcloud."""
-
-    def __init__(self):
-        import re
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        self.topics: dict[str, list[str]] = {}  # topic -> subscription names
-        self.queues: dict[str, list[dict]] = {}  # subscription -> messages
-        self.leased: dict[str, tuple[str, dict]] = {}  # ackId -> (sub, message)
-        self.acked = 0
-        self.published = 0
-        self._seq = 0
-        self._lock = threading.Lock()
-        srv = self
-        route = re.compile(
-            r"^/v1/projects/([^/]+)/(topics|subscriptions)/([^/:]+):(\w+)$"
-        )
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def do_POST(self):
-                nbytes = int(self.headers.get("Content-Length", 0))
-                doc = json.loads(self.rfile.read(nbytes) or b"{}")
-                m = route.match(self.path)
-                if not m:
-                    return self._reply(404, {"error": "no such resource"})
-                _proj, kind, name, verb = m.groups()
-                if (kind, verb) == ("topics", "publish"):
-                    return self._reply(200, srv._publish(name, doc))
-                if (kind, verb) == ("subscriptions", "pull"):
-                    return self._reply(200, srv._pull(name, doc))
-                if (kind, verb) == ("subscriptions", "acknowledge"):
-                    return self._reply(200, srv._ack(doc))
-                return self._reply(404, {"error": f"unsupported {verb}"})
-
-            def _reply(self, status: int, doc: dict):
-                body = json.dumps(doc).encode()
-                self.send_response(status)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def create_subscription(self, topic: str, subscription: str) -> None:
-        with self._lock:
-            self.topics.setdefault(topic, []).append(subscription)
-            self.queues.setdefault(subscription, [])
-
-    def _publish(self, topic: str, doc: dict) -> dict:
-        ids = []
-        with self._lock:
-            subs = self.topics.get(topic, [])
-            for msg in doc.get("messages", []):
-                self._seq += 1
-                mid = str(self._seq)
-                stored = {
-                    "data": msg.get("data", ""),
-                    "attributes": msg.get("attributes", {}),
-                    "messageId": mid,
-                }
-                for s in subs:
-                    self.queues[s].append(dict(stored))
-                ids.append(mid)
-                self.published += 1
-        return {"messageIds": ids}
-
-    def _pull(self, subscription: str, doc: dict) -> dict:
-        want = int(doc.get("maxMessages", 100))
-        out = []
-        with self._lock:
-            q = self.queues.setdefault(subscription, [])
-            batch, self.queues[subscription] = q[:want], q[want:]
-            for msg in batch:
-                self._seq += 1
-                ack_id = f"ack-{self._seq}"
-                self.leased[ack_id] = (subscription, msg)
-                out.append({"ackId": ack_id, "message": msg})
-        return {"receivedMessages": out}
-
-    def _ack(self, doc: dict) -> dict:
-        with self._lock:
-            for ack_id in doc.get("ackIds", []):
-                if self.leased.pop(ack_id, None) is not None:
-                    self.acked += 1
-        return {}
-
-    def expire_leases(self) -> int:
-        """Return every leased-but-unacked message to its queue (the
-        ack-deadline timeout) — redelivered with the SAME messageId."""
-        with self._lock:
-            n = len(self.leased)
-            for sub, msg in self.leased.values():
-                self.queues[sub].append(msg)
-            self.leased.clear()
-        return n
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()

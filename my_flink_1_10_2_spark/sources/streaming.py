@@ -12,11 +12,14 @@ checkpoint-coordinated commits.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from my_flink_1_10_2_spark.sources.sink_core import BatchManifest, PartitionSink
 
 
 def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
@@ -96,7 +99,7 @@ def streaming_file_sink(
     return writer.start()
 
 
-class TransactionalForeachBatchSink:
+class TransactionalForeachBatchSink(BatchManifest):
     """Two-phase-commit sink on micro-batches (ref:
     TwoPhaseCommitSinkFunction.java:77).
 
@@ -111,23 +114,8 @@ class TransactionalForeachBatchSink:
     """
 
     def __init__(self, write_fn: Callable[[DataFrame, int], None], manifest_dir: str):
+        super().__init__(manifest_dir)
         self.write_fn = write_fn
-        self.manifest = os.path.join(manifest_dir, "committed_batches.json")
-        os.makedirs(manifest_dir, exist_ok=True)
-
-    def _committed(self) -> set[int]:
-        if not os.path.exists(self.manifest):
-            return set()
-        with open(self.manifest) as f:
-            return set(json.load(f))
-
-    def _record(self, batch_id: int) -> None:
-        ids = self._committed()
-        ids.add(batch_id)
-        tmp = self.manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(sorted(ids), f)
-        os.replace(tmp, self.manifest)  # atomic commit point
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self._committed():
@@ -370,7 +358,7 @@ def kafka_sink(df: DataFrame, checkpoint: str, **kwargs):
     )
 
 
-class KafkaExactlyOnceSink:
+class KafkaExactlyOnceSink(BatchManifest, PartitionSink):
     """Transactional Kafka producer sink on micro-batches — the
     counterpart of the reference's two-phase-commit producer (ref:
     flink-connectors/flink-connector-kafka/src/main/java/org/apache/
@@ -449,12 +437,13 @@ class KafkaExactlyOnceSink:
         # committed tracking keys (strings) visible at read_committed.
         self.txn_topic = txn_topic or f"{topic}.graft-txn"
         self.txn_probe = txn_probe if txn_probe is not None else self._default_probe
-        self.manifest = os.path.join(manifest_dir, "committed_batches.json")
-        os.makedirs(manifest_dir, exist_ok=True)
+        BatchManifest.__init__(self, manifest_dir)
         # outcome resolution is only needed for the FIRST unmanifested
         # batch after a (re)start — later batches in this process were
         # fully handled here, so no hidden committed transaction exists
         self._probe_done = False
+        # transaction keys the probe found committed (skipped on replay)
+        self._landed: set = set()
 
     def _default_probe(self) -> set:
         """read_committed scan of the (small) tracking topic → the set
@@ -497,57 +486,6 @@ class KafkaExactlyOnceSink:
             },
         )
 
-    def _committed(self) -> set[int]:
-        if not os.path.exists(self.manifest):
-            return set()
-        with open(self.manifest) as f:
-            return set(json.load(f))
-
-    def _record(self, batch_id: int) -> None:
-        ids = self._committed()
-        ids.add(batch_id)
-        tmp = self.manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(sorted(ids), f)
-        os.replace(tmp, self.manifest)  # atomic commit point
-
-    @staticmethod
-    def _send_rows(
-        producer, topic: str, rows, batch_id: int,
-        txn_topic: str | None = None, txn_key: str | None = None,
-    ) -> None:
-        """One full transaction: fence (aborting any prior incomplete
-        attempt with this transactional.id), send, append the outcome
-        record to the tracking topic, flush (= preCommit), commit; abort
-        on any error."""
-        try:
-            producer.init_transactions()
-            producer.begin_transaction()
-            header = [("graft-batch-id", str(batch_id).encode())]
-            for row in rows:
-                d = row.asDict() if hasattr(row, "asDict") else dict(row)
-                producer.send(
-                    topic, key=d.get("key"), value=d["value"], headers=header
-                )
-            if txn_topic is not None:
-                # committed atomically with the data: its read_committed
-                # visibility IS the transaction outcome
-                producer.send(
-                    txn_topic,
-                    key=txn_key.encode(),
-                    value=b"committed",
-                    headers=header,
-                )
-            producer.flush()
-            producer.commit_transaction()
-        except Exception:
-            try:
-                producer.abort_transaction()
-            finally:
-                producer.close()
-            raise
-        producer.close()
-
     def _resolved(self) -> set:
         """Committed transaction keys per the tracking topic, or an
         empty set when no probe path is available."""
@@ -556,41 +494,60 @@ class KafkaExactlyOnceSink:
         except NotImplementedError:
             return set()
 
+    # -- sink core hooks: one transaction per partition (or per batch on
+    # the driver path, ``partition=None``) ----------------------------------
+
+    @staticmethod
+    def _txn_key(batch_id: int, partition: int | None) -> str:
+        return str(batch_id) if partition is None else f"{batch_id}-p{partition}"
+
+    def landed(self, batch_id: int, partition: int | None) -> bool:
+        return self._txn_key(batch_id, partition) in self._landed
+
+    @contextlib.contextmanager
+    def open(self, batch_id: int, partition: int | None):
+        """One full transaction: fence (aborting any prior incomplete
+        attempt with this transactional.id), yield for the sends, append
+        the outcome record to the tracking topic, flush (= preCommit),
+        commit; abort on any error."""
+        key = self._txn_key(batch_id, partition)
+        producer = self.producer_factory(f"{self.prefix}-{key}")
+        header = [("graft-batch-id", str(batch_id).encode())]
+        try:
+            producer.init_transactions()
+            producer.begin_transaction()
+            yield producer, header
+            # committed atomically with the data: its read_committed
+            # visibility IS the transaction outcome
+            producer.send(
+                self.txn_topic, key=key.encode(), value=b"committed", headers=header
+            )
+            producer.flush()
+            producer.commit_transaction()
+        except BaseException:
+            try:
+                producer.abort_transaction()
+            finally:
+                producer.close()
+            raise
+        producer.close()
+
+    def encode(self, row) -> tuple:
+        d = row.asDict() if hasattr(row, "asDict") else dict(row)
+        return d.get("key"), d["value"]
+
+    def flush(self, records: list, conn) -> None:
+        producer, header = conn
+        for key, value in records:
+            producer.send(self.topic, key=key, value=value, headers=header)
+
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self._committed():
             return  # replayed, already committed — exactly-once skip
-        resolved: set = set()
-        if not self._probe_done:
-            resolved = self._resolved()
-            self._probe_done = True
+        self._landed = set() if self._probe_done else self._resolved()
+        self._probe_done = True
         if self.distributed:
-            topic, prefix, factory = self.topic, self.prefix, self.producer_factory
-            txn_topic = self.txn_topic
-            send = self._send_rows
-
-            def send_partition(rows):
-                from pyspark import TaskContext
-
-                ctx = TaskContext.get()
-                pid = ctx.partitionId() if ctx is not None else 0
-                key = f"{batch_id}-p{pid}"
-                if key in resolved:
-                    return  # this partition's txn committed pre-crash
-                send(
-                    factory(f"{prefix}-{batch_id}-p{pid}"),
-                    topic, rows, batch_id, txn_topic, key,
-                )
-
-            batch_df.foreachPartition(send_partition)
+            PartitionSink.__call__(self, batch_df, batch_id)
         else:
-            key = str(batch_id)
-            if key not in resolved:
-                self._send_rows(
-                    self.producer_factory(f"{self.prefix}-{batch_id}"),
-                    self.topic,
-                    batch_df.toLocalIterator(),
-                    batch_id,
-                    self.txn_topic,
-                    key,
-                )
+            self.write_partition(batch_df.toLocalIterator(), batch_id, None)
         self._record(batch_id)

@@ -214,97 +214,3 @@ def wikipedia_edits_source(
         "user string, byte_diff int, summary string, flags int",
     )
     return df.localCheckpoint(eager=True)
-
-
-# -- in-process emulator -------------------------------------------------------
-
-
-class InMemoryIrcServer:
-    """Minimal IRC server emulator: registration numerics (001), PING
-    mid-stream, JOIN ack, then a canned PRIVMSG feed per joiner, then a
-    clean close.  Lets the wikiedits source be graded over a real TCP
-    IRC conversation (the InMemoryAmqpBroker precedent)."""
-
-    def __init__(self, channel: str, lines: list[str]):
-        import threading
-
-        self.channel = channel
-        self.lines = list(lines)
-        self.joins = 0
-        self.pongs = 0
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind(("127.0.0.1", 0))
-        self._srv.listen(16)
-        self.port = self._srv.getsockname()[1]
-        self._stop = False
-        threading.Thread(target=self._serve, daemon=True).start()
-
-    def _serve(self):
-        import threading
-
-        while not self._stop:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return
-            threading.Thread(target=self._session, args=(conn,), daemon=True).start()
-
-    def _session(self, conn):
-        def send(line):
-            conn.sendall((line + "\r\n").encode())
-
-        buf = b""
-
-        def lines():
-            nonlocal buf
-            while True:
-                while b"\r\n" in buf:
-                    raw, buf = buf.split(b"\r\n", 1)
-                    yield raw.decode(errors="replace")
-                chunk = conn.recv(65536)
-                if not chunk:
-                    return
-                buf += chunk
-
-        with conn:
-            nick = "anon"
-            registered = False
-            for line in lines():
-                parts = line.split()
-                if not parts:
-                    continue
-                cmd = parts[0].upper()
-                if cmd == "NICK" and len(parts) > 1:
-                    nick = parts[1]
-                elif cmd == "USER" and not registered:
-                    registered = True
-                    send(f":server 001 {nick} :Welcome")
-                elif cmd == "PONG":
-                    self.pongs += 1
-                elif cmd == "JOIN" and len(parts) > 1:
-                    self.joins += 1
-                    send(f":{nick}!user@host JOIN {parts[1]}")
-                    # keepalive probe mid-stream: a correct client PONGs
-                    send("PING :keepalive")
-                    feeder = f":rc-pmtpa!rc@wikimedia PRIVMSG {self.channel} :"
-                    for text in self.lines:
-                        send(feeder + text)
-                    # half-close: the client sees EOF and finishes its
-                    # read loop; then drain its PONG/QUIT until its close
-                    conn.shutdown(socket.SHUT_WR)
-                    conn.settimeout(5.0)
-                    try:
-                        for tail in lines():
-                            t = tail.split()
-                            if t and t[0].upper() == "PONG":
-                                self.pongs += 1
-                    except OSError:
-                        pass
-                    return
-                elif cmd == "QUIT":
-                    return
-
-    def close(self):
-        self._stop = True
-        self._srv.close()

@@ -40,13 +40,6 @@ def _dur(n: str, unit: str) -> str:
     return f"{n} {_UNITS[unit.upper()]}"
 
 
-def _ivl_to_dur(sql_fragment: str) -> str:
-    m = re.fullmatch(_IVL, sql_fragment.strip(), flags=re.IGNORECASE)
-    if not m:
-        raise ValueError(f"unsupported interval syntax: {sql_fragment!r}")
-    return _dur(m.group(1), m.group(2))
-
-
 def rewrite_flink_sql(query: str) -> str:
     """Rewrite Flink group-window SQL into Spark SQL. Queries without
     Flink-only constructs pass through byte-identical."""

@@ -195,7 +195,8 @@ class RetractionJoin:
         checkpoint: str | None = None,
     ):
         """Consume both streams to exhaustion (availableNow), feeding the
-        per-batch changelog to ``sink_fn``."""
+        per-batch changelog to ``sink_fn``.  Without a ``checkpoint`` the
+        run gets a temporary one, removed when the run ends."""
         union = self._tagged_union()
         lcols, rcols = self.left.columns, self.right.columns
 
@@ -224,8 +225,12 @@ class RetractionJoin:
             union.writeStream.foreachBatch(handle).trigger(availableNow=True)
         )
         ckpt = checkpoint or tempfile.mkdtemp(prefix="fl_join_ckpt_")
-        q = writer.option("checkpointLocation", ckpt).start()
-        q.awaitTermination()
+        try:
+            q = writer.option("checkpointLocation", ckpt).start()
+            q.awaitTermination()
+        finally:
+            if checkpoint is None:
+                shutil.rmtree(ckpt, ignore_errors=True)
         return q
 
     def cleanup(self) -> None:

@@ -26,6 +26,7 @@ deltas (SURVEY §7.2 step 6).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 from collections.abc import Callable
@@ -289,13 +290,19 @@ class Stream:
 
     def for_each_batch(self, fn: Callable[[DataFrame, int], None], checkpoint: str | None = None):
         """foreachBatch sink (ref: addSink/TwoPhaseCommitSinkFunction —
-        exactly-once via Spark's checkpoint + idempotent batch writes)."""
+        exactly-once via Spark's checkpoint + idempotent batch writes).
+        Without a ``checkpoint`` the run gets a temporary one, removed
+        when the run ends."""
         writer = self.df.writeStream.foreachBatch(fn).trigger(availableNow=True)
-        if checkpoint is None:
+        owned = checkpoint is None
+        if owned:
             checkpoint = tempfile.mkdtemp(prefix="fl_ckpt_")
-        writer = writer.option("checkpointLocation", checkpoint)
-        q = writer.start()
-        q.awaitTermination()
+        try:
+            q = writer.option("checkpointLocation", checkpoint).start()
+            q.awaitTermination()
+        finally:
+            if owned:
+                shutil.rmtree(checkpoint, ignore_errors=True)
         return q
 
     def for_each_batch_with_late_split(
@@ -429,7 +436,6 @@ class Stream:
         is one timestamp (the event-time high-water mark).
         """
         import datetime as _dt
-        import shutil as _sh
 
         delay = _dt.timedelta(seconds=max_out_of_orderness_seconds)
         state_root = tempfile.mkdtemp(prefix="fl_sort_state_")
@@ -467,7 +473,7 @@ class Stream:
             old = st["cur"]
             st["cur"] = nxt
             if old is not None:
-                _sh.rmtree(old, ignore_errors=True)
+                shutil.rmtree(old, ignore_errors=True)
 
         try:
             q = self.for_each_batch(handle, checkpoint)
@@ -483,7 +489,7 @@ class Stream:
                 emit_fn(rem, -1)
             return q
         finally:
-            _sh.rmtree(state_root, ignore_errors=True)
+            shutil.rmtree(state_root, ignore_errors=True)
 
     def with_change_flag(self) -> "Stream":
         """Attach the retraction-convention column for update-mode sinks

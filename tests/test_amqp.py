@@ -11,13 +11,13 @@ from hypothesis import strategies as st
 
 from my_flink_1_10_2_spark.sources.amqp_py import (
     AmqpClient,
-    InMemoryAmqpBroker,
     RMQConnectionConfig,
     RMQSink,
     decode_properties,
     encode_properties,
     rmq_drain_source,
 )
+from my_flink_1_10_2_spark.testing import InMemoryAmqpBroker
 
 
 @pytest.fixture()

@@ -7,13 +7,13 @@ decode — over a live in-process registry."""
 import pytest
 
 from my_flink_1_10_2_spark.sources.avro_registry import (
-    InMemorySchemaRegistry,
     SchemaRegistryClient,
     confluent_avro_decode_df,
     confluent_avro_encode_df,
     decode_confluent,
     encode_confluent,
 )
+from my_flink_1_10_2_spark.testing import InMemorySchemaRegistry
 
 SCHEMA = {
     "type": "record",

@@ -271,7 +271,7 @@ def test_cql_sink_param_validation():
 
 
 def test_cql_sink_retries_whole_batch_on_write_timeout(spark):
-    from my_flink_1_10_2_spark.sources.cassandra_cql import InMemoryCqlServer
+    from my_flink_1_10_2_spark.testing import InMemoryCqlServer
 
     srv = InMemoryCqlServer(fail_each_batch_once=True)
     try:
@@ -293,7 +293,7 @@ def test_cql_sink_retries_whole_batch_on_write_timeout(spark):
 
 
 def test_cql_sink_write_timeout_exhausts_retries(spark):
-    from my_flink_1_10_2_spark.sources.cassandra_cql import InMemoryCqlServer
+    from my_flink_1_10_2_spark.testing import InMemoryCqlServer
 
     class AlwaysTimeout(InMemoryCqlServer):
         def __init__(self):

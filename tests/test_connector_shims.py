@@ -592,8 +592,8 @@ def test_es_bulk_sink_retries_only_rejected_items(spark):
     duplicate the accepted docs."""
     from my_flink_1_10_2_spark.sources.connectors import (
         ElasticsearchBulkSink,
-        InMemoryElasticsearchBulkServer,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryElasticsearchBulkServer
 
     server = InMemoryElasticsearchBulkServer(reject_mod=2, reject_rem=0)
     try:
@@ -612,9 +612,9 @@ def test_es_bulk_sink_retries_only_rejected_items(spark):
 
 def test_kinesis_sink_retries_only_throttled_records(spark):
     from my_flink_1_10_2_spark.sources.connectors import (
-        InMemoryKinesisServer,
         KinesisPutRecordsSink,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryKinesisServer
 
     server = InMemoryKinesisServer(throttle_mod=2, throttle_rem=1)
     try:
@@ -657,8 +657,8 @@ def test_hbase_sink_retries_whole_put_on_503(spark):
     from my_flink_1_10_2_spark.sources.hbase_rest import (
         HBaseSchema,
         HBaseTypedRestSink,
-        InMemoryHBaseRestServer,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryHBaseRestServer
 
     schema = HBaseSchema("id", "BIGINT", [("val", "f", "v", "STRING")])
     server = InMemoryHBaseRestServer(fail_each_put_once=True)
@@ -681,8 +681,8 @@ def test_hbase_sink_503_exhausts_retries(spark):
     from my_flink_1_10_2_spark.sources.hbase_rest import (
         HBaseSchema,
         HBaseTypedRestSink,
-        InMemoryHBaseRestServer,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryHBaseRestServer
 
     class AlwaysBusy(InMemoryHBaseRestServer):
         def __init__(self):

@@ -23,9 +23,7 @@ def _b64(b: bytes) -> str:
     return base64.b64encode(b).decode()
 
 
-from my_flink_1_10_2_spark.sources.hbase_rest import (
-    InMemoryHBaseRestServer as FakeHBaseRest,
-)
+from my_flink_1_10_2_spark.testing import InMemoryHBaseRestServer as FakeHBaseRest
 
 
 SCHEMA = HBaseSchema(

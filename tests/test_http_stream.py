@@ -6,10 +6,10 @@ live in-process chunked HTTP endpoint."""
 import json
 
 from my_flink_1_10_2_spark.sources.http_stream import (
-    InMemoryLineStreamServer,
     http_line_stream_source,
     twitter_source,
 )
+from my_flink_1_10_2_spark.testing import InMemoryLineStreamServer
 
 
 def test_reads_all_lines_and_skips_keepalives(spark):

@@ -11,7 +11,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from my_flink_1_10_2_spark.sources.nifi_s2s import (
-    InMemoryNiFiS2SServer,
     NiFiS2SSink,
     _create_transaction,
     _http,
@@ -19,6 +18,7 @@ from my_flink_1_10_2_spark.sources.nifi_s2s import (
     encode_data_packets,
     nifi_s2s_source,
 )
+from my_flink_1_10_2_spark.testing import InMemoryNiFiS2SServer
 
 
 @pytest.fixture()

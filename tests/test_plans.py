@@ -795,9 +795,9 @@ def test_connector_drain_sources_surface_as_scans(spark):
     operators — one task per consumer, no BatchEvalPython stages in the
     downstream aggregation plans."""
     from my_flink_1_10_2_spark.sources.amqp_py import (
-        InMemoryAmqpBroker,
         rmq_drain_source,
     )
+    from my_flink_1_10_2_spark.testing import InMemoryAmqpBroker
 
     broker = InMemoryAmqpBroker()
     try:

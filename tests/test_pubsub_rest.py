@@ -9,11 +9,11 @@ import json
 import pytest
 
 from my_flink_1_10_2_spark.sources.pubsub_rest import (
-    InMemoryPubSubServer,
     PubSubRestSink,
     _http_post_json,
     pubsub_pull_source,
 )
+from my_flink_1_10_2_spark.testing import InMemoryPubSubServer
 
 
 @pytest.fixture()

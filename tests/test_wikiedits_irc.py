@@ -11,10 +11,10 @@ from my_flink_1_10_2_spark.sources.wikiedits_irc import (
     IS_SPECIAL,
     IS_TALK,
     IS_UNPATROLLED,
-    InMemoryIrcServer,
     parse_edit_event,
     wikipedia_edits_source,
 )
+from my_flink_1_10_2_spark.testing import InMemoryIrcServer
 
 RAW = (
     "[[Foo bar]] MB https://en.wikipedia.org/w/index.php?diff=1 * alice * "
