@@ -54,7 +54,14 @@ class ExecutionEnvironment:
     def set_parallelism(self, parallelism: int) -> None:
         """Default operator parallelism → the shuffle-partition count,
         the knob that controls reduce-side parallelism in Spark (map-side
-        parallelism follows input splits, as in the reference)."""
+        parallelism follows input splits, as in the reference).
+        ``get_spark`` starts it at the session's task slots.
+
+        It also sets the state partition count of a streaming query
+        started afterwards on a new checkpoint. A query restarted from
+        an existing checkpoint keeps the count it was created with
+        (Spark restores it from the offset log): there is no key-group
+        rescale as in the reference."""
         self.spark.conf.set("spark.sql.shuffle.partitions", str(parallelism))
 
     def get_parallelism(self) -> int:

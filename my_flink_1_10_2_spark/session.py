@@ -25,9 +25,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Defaults are sized for the local[32] test harness; on a real cluster the
-# submitter overrides master/shuffle-partitions (AQE coalescing makes the
-# initial shuffle.partitions value a ceiling, not a fixed cost).
+# Without an explicit master the session runs on local[SPARK_GRAFT_CPUS]
+# (32 when unset); on a real cluster the submitter passes the master.
 _LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
@@ -36,7 +35,6 @@ def _apply_engine_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet carries TIMESTAMP(NANOS); Spark has no ns type, so
@@ -51,13 +49,22 @@ def _apply_engine_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
 
 
 def get_spark(app_name: str = "my_flink_1_10_2_spark", master: str | None = None) -> SparkSession:
-    """Create (or fetch) the engine's SparkSession."""
+    """Create (or fetch) the engine's SparkSession.
+
+    Shuffle partitions — and so the state partitions of every streaming
+    query started on a new checkpoint — are sized to the session's task
+    slots (``defaultParallelism``: N for local[N], the executor cores on
+    a cluster), as the reference splits keyed state into the job's
+    parallelism. AQE may still coalesce a small shuffle below it."""
     builder = SparkSession.builder.appName(app_name)
     builder = _apply_engine_conf(builder)
     if master is None:
         master = f"local[{_LOCAL_CPUS}]"
-    builder = builder.master(master)
-    return builder.getOrCreate()
+    spark = builder.master(master).getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    return spark
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

@@ -34,6 +34,15 @@ def test_sources_and_parallelism(spark, tmp_path):
         env.set_parallelism(old)
 
 
+def test_shuffle_partitions_default_to_task_slots(spark):
+    """The session's shuffle (and new-checkpoint state) partition count
+    is its task slot count — N for local[N] — not a fixed constant, as
+    the reference splits keyed state into the job's parallelism."""
+    slots = spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(slots)
+    assert ExecutionEnvironment(spark).get_parallelism() == slots
+
+
 def test_distributed_cache_reaches_executors(spark, tmp_path):
     lookup = tmp_path / "lookup.txt"
     lookup.write_text("ONE\nTWO\nTHREE\n")

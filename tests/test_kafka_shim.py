@@ -361,6 +361,19 @@ def test_exactly_once_distributed_partial_commit_recovery(spark, tmp_path):
             import os as _os
 
             if self.txn_id.endswith("-p1") and not _os.path.exists(self.flag):
+                import pathlib as _pathlib
+                import time as _time
+
+                # die only after p0's outcome record (the last line its
+                # commit writes) has landed: if p1 failed first, the job
+                # abort could kill p0 before it commits, and the crash
+                # would not be partial
+                landed = _pathlib.Path(self.out_file)
+                deadline = _time.monotonic() + 60
+                while _time.monotonic() < deadline and not (
+                    landed.exists() and '"1-p0"' in landed.read_text()
+                ):
+                    _time.sleep(0.05)
                 open(self.flag, "w").close()
                 raise RuntimeError("broker died committing p1")
             with open(self.out_file, "a") as f:

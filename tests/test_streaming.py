@@ -990,6 +990,84 @@ def test_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
     assert persisted == list(range(6)), f"sink not exactly-once: {persisted}"
 
 
+def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
+    """A windowed aggregate checkpointed under 32 shuffle partitions
+    resumes under a different session default: Spark restores the state
+    partition count from the offset log, and the open window's state
+    carries over to the rows of a file added before the restart."""
+    import json
+
+    import duckdb
+
+    from my_flink_1_10_2_spark.environment import ExecutionEnvironment
+
+    src = tmp_path / "src"
+    os.makedirs(src)
+
+    def write(i, minutes, users):
+        path = src / f"part-{i:03d}.parquet"
+        table = pa.table(
+            {
+                "ts": pa.array([m * 60_000_000 for m in minutes], pa.timestamp("us")),
+                "user_id": pa.array(users, pa.int64()),
+                "value": pa.array([(m % 7) * 1.25 for m in minutes], pa.float64()),
+            }
+        )
+        pq.write_table(table, str(path))
+        os.utime(path, (1_600_000_000 + i,) * 2)
+
+    schema = "ts timestamp, user_id long, value double"
+
+    rows: list[tuple] = []
+
+    def sink(batch_df, _batch_id):
+        rows.extend(
+            tuple(r)
+            for r in batch_df.select(
+                F.unix_micros("window_start"), "user_id", "n", "total"
+            ).collect()
+        )
+
+    def run():
+        stream = (
+            _env(spark)
+            .from_files(str(src), schema)
+            .with_watermark("ts", "10 minutes")
+            .key_by("user_id")
+            .tumble("ts", "1 hour")
+            .aggregate(F.count("*").alias("n"), F.sum("value").alias("total"))
+        )
+        return stream.for_each_batch(sink, checkpoint=str(tmp_path / "ckpt"))
+
+    env = ExecutionEnvironment(spark)
+    default = env.get_parallelism()
+    # file 0 ends inside the [2h, 3h) window; file 1 continues it, and
+    # its far-future sentinel (user -1) closes every real window
+    write(0, range(0, 150, 5), [m % 4 for m in range(0, 150, 5)])
+    try:
+        env.set_parallelism(32)
+        run()
+    finally:
+        env.set_parallelism(default)
+    write(1, [*range(150, 300, 5), 60 * 24 * 30], [*(m % 5 for m in range(150, 300, 5)), -1])
+    q = run()
+
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    counts = {op["numShufflePartitions"] for p in progress for op in p["stateOperators"]}
+    assert counts == {32}
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'UTC'")
+    want = con.execute(
+        f"""
+        SELECT epoch_us(date_trunc('hour', ts)) AS ws, user_id, count(*), sum(value)
+        FROM read_parquet('{src}/*.parquet')
+        WHERE user_id >= 0
+        GROUP BY ws, user_id
+        """
+    ).fetchall()
+    assert sorted(rows) == sorted(want)
+
+
 def test_queryable_state_external_server(spark, replay_dir):
     """Out-of-process queryable state (ref: flink-queryable-state
     KvStateServerImpl/QueryableStateClient): a separate client process

@@ -1,7 +1,8 @@
-"""Determinism harness: run every registry query twice — with different
-spark.sql.shuffle.partitions so partial-aggregation and merge orders
-differ — and compare results bitwise. Catches the two hazards the
-tolerance-based oracle gate can miss:
+"""Determinism harness: run every registry query twice — at the session's
+default spark.sql.shuffle.partitions (its task slots) and at 7, so
+partial-aggregation and merge orders differ — and compare results
+bitwise. Catches the two hazards the tolerance-based oracle gate can
+miss:
 
   * under-tie-broken ORDER BY ... LIMIT (row selection flips with ties),
   * round() sitting on a .00005 boundary of an order-sensitive float sum.
@@ -39,13 +40,13 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> None:
     spark = get_spark(master="local[16]")
     spark.sparkContext.setLogLevel("ERROR")
+    default = spark.conf.get("spark.sql.shuffle.partitions")
     qs = e.queries()
     bad = []
     # optional CLI args: only check the named queries
     names = sys.argv[1:] if len(sys.argv) > 1 else list(qs)
     for i, name in enumerate(names):
         try:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
             a = canon(qs[name](spark, SF).toPandas())
             spark.conf.set("spark.sql.shuffle.partitions", "7")
             b = canon(qs[name](spark, SF).toPandas())
@@ -68,7 +69,7 @@ def main() -> None:
             bad.append((name, f"ERROR {type(ex).__name__}: {str(ex)[:120]}"))
             print(f"ERROR {name}: {str(ex)[:160]}", flush=True)
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
+            spark.conf.set("spark.sql.shuffle.partitions", default)
         if (i + 1) % 25 == 0:
             print(f"... {i+1}/{len(names)} done", flush=True)
     print(f"DETERMINISM CHECK DONE: {len(names)} queries, {len(bad)} unstable")
