@@ -4,20 +4,9 @@ Data) memory-map directly.  Uses the public Arrow IPC *file* format via
 pyarrow (baked into this environment), so any Arrow implementation in
 any language consumes the shards and vice versa.
 
-Scale design mirrors :mod:`.webdataset` / :mod:`.tfrecord`:
-
-- **write**: rows are assigned contiguous global-rank shard ranges
-  decided on the keys alone (``sources/sharding.py`` — broadcast
-  boundary keys + map-side binary search, never a single task and the
-  payload never range-shuffles), ONE shuffle of the payload keyed on
-  shard_id, each task streams exactly one
-  ``part-NNNNN.arrow`` file and emits a manifest row.  Files land via
-  ``.inprogress`` + atomic rename, so a crashed task retry never leaves a
-  half-shard visible (the StreamingFileSink recipe,
-  ref: flink-streaming-java/src/main/java/org/apache/flink/streaming/api/
-  functions/sink/filesystem/StreamingFileSink.java).
-- **read**: one task per shard file; record batches stream through Arrow
-  without row-at-a-time Python.
+Shards are ``part-NNNNN.arrow``, written and read through the shard
+kernel (:mod:`.sharding`); on read, record batches stream through Arrow
+without row-at-a-time Python.
 
 Ref parity: the reference's format matrix (CSV/Avro/Parquet/Sequence,
 ref: flink-formats/) extended with the container modern data loaders
@@ -29,8 +18,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from my_flink_1_10_2_spark.sources.sharding import (
+    commit_file,
+    read_per_task,
+    shard_paths,
+    write_shards,
+)
 
 
 def write_arrow_shards(
@@ -45,55 +40,37 @@ def write_arrow_shards(
     manifest (shard_id, path, n_samples, first_key, last_key, n_bytes,
     n_batches).  ``compression`` may be ``"zstd"`` / ``"lz4"`` / None
     (pyarrow IPC body-buffer compression)."""
-    from my_flink_1_10_2_spark.sources.sharding import assign_contiguous_shards
-
     cols = cols or [c for c in df.columns]
     if key_col not in cols:
         cols = [key_col] + cols
-    os.makedirs(out_dir, exist_ok=True)
-    # keys-only shard assignment (sharding.py, guide §8): one payload
-    # exchange — the groupBy(__shard) into the write kernel
-    sharded = assign_contiguous_shards(
-        df.select(*cols), key_col, samples_per_shard
-    )
-    key_name, dest, out_cols, comp = key_col, out_dir, cols, compression
 
-    def _write_shard(pdf):
-        import pandas as pd
+    def encode(pdf, shard_id):
         import pyarrow as pa
         import pyarrow.ipc as ipc
 
-        pdf = pdf.sort_values(key_name)
-        shard_id = int(pdf["__shard"].iloc[0])
-        path = os.path.join(dest, f"part-{shard_id:05d}.arrow")
-        tmp = path + ".inprogress"
+        path = os.path.join(out_dir, f"part-{shard_id:05d}.arrow")
         table = pa.Table.from_pandas(
-            pdf[out_cols].reset_index(drop=True), preserve_index=False
+            pdf[cols].reset_index(drop=True), preserve_index=False
         )
-        options = ipc.IpcWriteOptions(compression=comp) if comp else None
-        with pa.OSFile(tmp, "wb") as fh:
-            with ipc.new_file(fh, table.schema, options=options) as writer:
-                writer.write_table(table)
-        os.replace(tmp, path)
+        options = ipc.IpcWriteOptions(compression=compression) if compression else None
+        with commit_file(path) as fh, ipc.new_file(
+            fh, table.schema, options=options
+        ) as writer:
+            writer.write_table(table)
         with pa.memory_map(path) as mm:
             n_batches = ipc.open_file(mm).num_record_batches
-        return pd.DataFrame(
-            {
-                "shard_id": [shard_id],
-                "path": [path],
-                "n_samples": [len(pdf)],
-                "first_key": [int(pdf[key_name].min())],
-                "last_key": [int(pdf[key_name].max())],
-                "n_bytes": [os.path.getsize(path)],
-                "n_batches": [n_batches],
-            }
-        )
+        return {
+            "path": path,
+            "n_samples": len(pdf),
+            "n_bytes": os.path.getsize(path),
+            "n_batches": n_batches,
+        }
 
-    schema = (
+    return write_shards(
+        df, out_dir, key_col, cols, samples_per_shard, ".arrow", encode,
         "shard_id long, path string, n_samples long, "
-        "first_key long, last_key long, n_bytes long, n_batches long"
+        "first_key long, last_key long, n_bytes long, n_batches long",
     )
-    return sharded.groupBy("__shard").applyInPandas(_write_shard, schema)
 
 
 def decode_arrow_file(source, want_schema_str: str | None = None):
@@ -147,38 +124,26 @@ def read_arrow_shards(
     verified per shard on read)."""
     import pyarrow as pa
     import pyarrow.ipc as ipc
-    from pyspark.sql.pandas.types import from_arrow_type
 
-    paths = sorted(
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.endswith(".arrow")
-    )
-    if not paths:
-        raise FileNotFoundError(f"no .arrow shards under {in_dir}")
+    paths = shard_paths(in_dir, ".arrow")
     with pa.memory_map(paths[0]) as mm:
         arrow_schema = ipc.open_file(mm).schema
-    fields = [
-        T.StructField(f.name, from_arrow_type(f.type)) for f in arrow_schema
-    ]
-    if shard_col:
-        fields.append(T.StructField(shard_col, T.LongType()))
-    out_schema = T.StructType(fields)
     want_schema_str = str(arrow_schema)
+    return read_per_task(
+        spark,
+        paths,
+        _spark_schema(arrow_schema),
+        lambda path: decode_arrow_file(path, want_schema_str),
+        shard_col,
+    )
 
-    path_rdd = spark.sparkContext.parallelize([(p,) for p in paths], len(paths))
-    path_df = spark.createDataFrame(path_rdd, "path string")
 
-    def _read(batches):
-        for pdf in batches:
-            for path in pdf["path"]:
-                out = decode_arrow_file(path, want_schema_str)
-                if shard_col:
-                    sid = int(os.path.basename(path)[len("part-"):-len(".arrow")])
-                    out[shard_col] = sid
-                yield out
+def _spark_schema(arrow_schema) -> T.StructType:
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    return path_df.mapInPandas(_read, out_schema)
+    return T.StructType(
+        [T.StructField(f.name, from_arrow_type(f.type)) for f in arrow_schema]
+    )
 
 
 def read_arrow_file_parallel(
@@ -203,44 +168,31 @@ def read_arrow_file_parallel(
     """
     import pyarrow as pa
     import pyarrow.ipc as ipc
-    from pyspark.sql.pandas.types import from_arrow_type
 
     with pa.memory_map(path) as mm:
         reader = ipc.open_file(mm)
         n_batches = reader.num_record_batches
         arrow_schema = reader.schema
-    out_schema = T.StructType(
-        [T.StructField(f.name, from_arrow_type(f.type)) for f in arrow_schema]
-    )
-    if n_batches == 0:
-        return spark.createDataFrame([], out_schema)
     ranges = [
         (path, lo, min(lo + batches_per_task, n_batches))
         for lo in range(0, n_batches, batches_per_task)
     ]
-    rdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, len(ranges)),
-        "path string, lo long, hi long",
-    )
 
-    def _read(batches):
+    def decode(f, lo, hi):
         import pyarrow as pa
         import pyarrow.ipc as ipc
 
-        for pdf in batches:
-            for f, lo, hi in zip(pdf["path"], pdf["lo"], pdf["hi"]):
-                with pa.memory_map(f) as mm:
-                    r = ipc.open_file(mm)
-                    tbl = pa.Table.from_batches(
-                        [r.get_batch(i) for i in range(int(lo), int(hi))],
-                        schema=r.schema,
-                    )
-                    try:
-                        tbl.validate(full=True)
-                    except pa.lib.ArrowInvalid as exc:
-                        raise ValueError(
-                            f"corrupt arrow batches [{lo},{hi}) in {f}: {exc}"
-                        ) from exc
-                    yield tbl.to_pandas()
+        with pa.memory_map(f) as mm:
+            r = ipc.open_file(mm)
+            tbl = pa.Table.from_batches(
+                [r.get_batch(i) for i in range(lo, hi)], schema=r.schema
+            )
+            try:
+                tbl.validate(full=True)
+            except pa.lib.ArrowInvalid as exc:
+                raise ValueError(
+                    f"corrupt arrow batches [{lo},{hi}) in {f}: {exc}"
+                ) from exc
+            return tbl.to_pandas()
 
-    return rdf.mapInPandas(_read, out_schema)
+    return read_per_task(spark, ranges, _spark_schema(arrow_schema), decode)

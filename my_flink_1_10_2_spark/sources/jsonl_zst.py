@@ -6,10 +6,8 @@ bundled zstd streams (no extra dependency); JSON encoding is stdlib
 are deterministic and any JSONL consumer (jq, datasets, duckdb's
 read_json) parses them.
 
-Scale shape matches the other export sinks: contiguous global-rank
-shard ranges decided on keys alone (``sources/sharding.py`` — never one
-task, payload never range-shuffles), one payload shuffle keyed on shard
-id to write, one task per shard to read, atomic ``.inprogress`` renames.
+Shards are ``part-NNNNN.jsonl.zst``, written and read through the shard
+kernel (:mod:`.sharding`), as is the seekable variant's frame-range read.
 """
 
 from __future__ import annotations
@@ -18,8 +16,14 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from my_flink_1_10_2_spark.sources.sharding import (
+    commit_file,
+    read_per_task,
+    shard_paths,
+    write_shards,
+)
 
 
 def write_jsonl_zst_shards(
@@ -33,61 +37,43 @@ def write_jsonl_zst_shards(
     """Write sorted contiguous ``part-NNNNN.jsonl.zst`` shards; returns
     the shard manifest (shard_id, path, n_records, first_key, last_key,
     raw_bytes, zst_bytes)."""
-    import pyarrow as pa
-
-    from my_flink_1_10_2_spark.sources.sharding import assign_contiguous_shards
-
     cols = cols or list(df.columns)
     if key_col not in cols:
         cols = [key_col] + cols
-    os.makedirs(out_dir, exist_ok=True)
-    # keys-only shard assignment (sharding.py, guide §8): one payload
-    # exchange — the groupBy(__shard) into the write kernel
-    sharded = assign_contiguous_shards(
-        df.select(*cols), key_col, samples_per_shard
-    )
-    dest, kc, out_cols = out_dir, key_col, cols
 
-    def _write_shard(pdf):
-        import pandas as pd
+    def encode(pdf, shard_id):
+        import pyarrow as pa
 
-        pdf = pdf.sort_values(kc)
-        shard_id = int(pdf["__shard"].iloc[0])
-        path = os.path.join(dest, f"part-{shard_id:05d}.jsonl.zst")
-        tmp = path + ".inprogress"
+        path = os.path.join(out_dir, f"part-{shard_id:05d}.jsonl.zst")
         raw_bytes = 0
         col_vals = {
             c: [v.item() if hasattr(v, "item") else v for v in pdf[c].tolist()]
-            for c in out_cols
+            for c in cols
         }
-        with pa.output_stream(tmp, compression="zstd") as fh:
+        with commit_file(path) as raw, pa.output_stream(
+            raw, compression="zstd"
+        ) as fh:
             for i in range(len(pdf)):
                 line = json.dumps(
-                    {c: col_vals[c][i] for c in out_cols},
+                    {c: col_vals[c][i] for c in cols},
                     sort_keys=True,
                     separators=(",", ":"),
                     ensure_ascii=False,
                 ).encode("utf-8") + b"\n"
                 raw_bytes += len(line)
                 fh.write(line)
-        os.replace(tmp, path)
-        return pd.DataFrame(
-            {
-                "shard_id": [shard_id],
-                "path": [path],
-                "n_records": [len(pdf)],
-                "first_key": [int(pdf[kc].min())],
-                "last_key": [int(pdf[kc].max())],
-                "raw_bytes": [raw_bytes],
-                "zst_bytes": [os.path.getsize(path)],
-            }
-        )
+        return {
+            "path": path,
+            "n_records": len(pdf),
+            "raw_bytes": raw_bytes,
+            "zst_bytes": os.path.getsize(path),
+        }
 
-    schema = (
+    return write_shards(
+        df, out_dir, key_col, cols, samples_per_shard, ".jsonl.zst", encode,
         "shard_id long, path string, n_records long, first_key long, "
-        "last_key long, raw_bytes long, zst_bytes long"
+        "last_key long, raw_bytes long, zst_bytes long",
     )
-    return sharded.groupBy("__shard").applyInPandas(_write_shard, schema)
 
 
 def decode_jsonl_zst(source, spec: dict) -> dict:
@@ -142,6 +128,17 @@ def _decode_jsonl_lines(text: str, spec: dict, rows: dict) -> None:
             rows[k].append(v)
 
 
+def _spark_schema(schema: dict[str, str]) -> T.StructType:
+    spark_types = {
+        "long": T.LongType(),
+        "double": T.DoubleType(),
+        "string": T.StringType(),
+    }
+    return T.StructType(
+        [T.StructField(k, spark_types[t]) for k, t in schema.items()]
+    )
+
+
 def read_jsonl_zst_shards(
     spark: SparkSession,
     in_dir: str,
@@ -150,38 +147,16 @@ def read_jsonl_zst_shards(
 ) -> DataFrame:
     """Read ``.jsonl.zst`` shards back, one task per shard; ``schema``
     maps JSON key -> ``long`` / ``double`` / ``string``."""
-    paths = sorted(
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.endswith(".jsonl.zst")
-    )
-    if not paths:
-        raise FileNotFoundError(f"no .jsonl.zst shards under {in_dir}")
-    spark_types = {
-        "long": T.LongType(),
-        "double": T.DoubleType(),
-        "string": T.StringType(),
-    }
-    fields = [T.StructField(k, spark_types[t]) for k, t in schema.items()]
-    if shard_col:
-        fields.append(T.StructField(shard_col, T.LongType()))
-    out_schema = T.StructType(fields)
+    paths = shard_paths(in_dir, ".jsonl.zst")
+    out_schema = _spark_schema(schema)
     spec = dict(schema)
-    path_rdd = spark.sparkContext.parallelize([(p,) for p in paths], len(paths))
-    path_df = spark.createDataFrame(path_rdd, "path string")
 
-    def _read(batches):
+    def decode(path):
         import pandas as pd
 
-        for pdf in batches:
-            for path in pdf["path"]:
-                out = pd.DataFrame(decode_jsonl_zst(path, spec))
-                if shard_col:
-                    base = os.path.basename(path)
-                    out[shard_col] = int(base[len("part-"):-len(".jsonl.zst")])
-                yield out
+        return pd.DataFrame(decode_jsonl_zst(path, spec))
 
-    return path_df.mapInPandas(_read, out_schema)
+    return read_per_task(spark, paths, out_schema, decode, shard_col)
 
 
 # ---------------------------------------------------------------------------
@@ -269,8 +244,7 @@ def write_jsonl_zst_seekable(
     codec = pa.Codec("zstd")
     frames = []
     raw_bytes = 0
-    tmp = path + ".inprogress"
-    with open(tmp, "wb") as fh:
+    with commit_file(path) as fh:
         buf = bytearray()
         n = 0
 
@@ -298,7 +272,6 @@ def write_jsonl_zst_seekable(
                 flush()
         flush()
         fh.write(_seek_table_frame(frames))
-    os.replace(tmp, path)
     return len(frames), raw_bytes
 
 
@@ -315,53 +288,34 @@ def read_jsonl_zst_seekable(
     state and no false-boundary hazard — the seek table is
     authoritative, like the Arrow IPC footer)."""
     table = read_zstd_seek_table(path)
-    spark_types = {
-        "long": T.LongType(),
-        "double": T.DoubleType(),
-        "string": T.StringType(),
-    }
-    out_schema = T.StructType(
-        [T.StructField(k, spark_types[t]) for k, t in schema.items()]
-    )
-    if not table:
-        return spark.createDataFrame([], out_schema)
     spec = dict(schema)
     ranges = [
         (path, lo, min(lo + frames_per_task, len(table)))
         for lo in range(0, len(table), frames_per_task)
     ]
     meta = spark.sparkContext.broadcast(table)
-    rdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(ranges, len(ranges)),
-        "path string, lo long, hi long",
-    )
 
-    def _read(batches):
+    def decode(f, lo, hi):
         import pandas as pd
         import pyarrow as pa
 
         codec = pa.Codec("zstd")
-        tbl = meta.value
-        for pdf in batches:
-            for f, lo, hi in zip(pdf["path"], pdf["lo"], pdf["hi"]):
-                rows = {k: [] for k in spec}
-                with open(f, "rb") as fh:
-                    for off, csize, dsize in tbl[int(lo) : int(hi)]:
-                        fh.seek(off)
-                        comp = fh.read(csize)
-                        if len(comp) != csize:
-                            raise ValueError(
-                                f"{f}: truncated frame at offset {off}"
-                            )
-                        try:
-                            text = codec.decompress(
-                                comp, decompressed_size=dsize, asbytes=True
-                            ).decode("utf-8")
-                        except (pa.lib.ArrowException, OSError) as exc:
-                            raise ValueError(
-                                f"{f}: corrupt zstd frame at {off}: {exc}"
-                            ) from exc
-                        _decode_jsonl_lines(text, spec, rows)
-                yield pd.DataFrame(rows)
+        rows = {k: [] for k in spec}
+        with open(f, "rb") as fh:
+            for off, csize, dsize in meta.value[lo:hi]:
+                fh.seek(off)
+                comp = fh.read(csize)
+                if len(comp) != csize:
+                    raise ValueError(f"{f}: truncated frame at offset {off}")
+                try:
+                    text = codec.decompress(
+                        comp, decompressed_size=dsize, asbytes=True
+                    ).decode("utf-8")
+                except (pa.lib.ArrowException, OSError) as exc:
+                    raise ValueError(
+                        f"{f}: corrupt zstd frame at {off}: {exc}"
+                    ) from exc
+                _decode_jsonl_lines(text, spec, rows)
+        return pd.DataFrame(rows)
 
-    return rdf.mapInPandas(_read, out_schema)
+    return read_per_task(spark, ranges, _spark_schema(schema), decode)

@@ -15,11 +15,7 @@ Each shard is a PAIR of files — ``part-NNNNN.ids.npy`` (int64 keys) and
 ``part-NNNNN.emb.npy`` (n x d float32 matrix) — the layout ANN tooling
 expects: ids and vectors aligned by row position.
 
-Scale shape matches the other export sinks (webdataset/tfrecord/arrow):
-contiguous global-rank shard ranges decided on keys alone
-(``sources/sharding.py`` — never one task, vectors never
-range-shuffle), one payload shuffle keyed on shard id, one task per
-shard on read, atomic ``.inprogress`` renames.
+Shards are written and read through the shard kernel (:mod:`.sharding`).
 """
 
 from __future__ import annotations
@@ -29,7 +25,14 @@ import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from my_flink_1_10_2_spark.sources.sharding import (
+    commit_file,
+    read_per_task,
+    shard_paths,
+    write_shards,
+)
 
 _MAGIC = b"\x93NUMPY\x01\x00"
 
@@ -111,48 +114,25 @@ def write_npy_shards(
     """Export (id, vector) rows as aligned ids/emb .npy shard pairs;
     returns the manifest (shard_id, n_vecs, dim, first_key, last_key,
     ids_bytes, emb_bytes)."""
-    from my_flink_1_10_2_spark.sources.sharding import assign_contiguous_shards
 
-    os.makedirs(out_dir, exist_ok=True)
-    # keys-only shard assignment (sharding.py, guide §8): one payload
-    # exchange — the groupBy(__shard) into the write kernel
-    sharded = assign_contiguous_shards(
-        emb.select(id_col, vec_col), id_col, samples_per_shard
-    )
-    dest, idc, vc = out_dir, id_col, vec_col
-
-    def _write_shard(pdf):
+    def encode(pdf, shard_id):
         import numpy as np
-        import pandas as pd
 
-        pdf = pdf.sort_values(idc)
-        shard_id = int(pdf["__shard"].iloc[0])
-        ids = pdf[idc].to_numpy(dtype=np.int64)
-        mat = np.stack(pdf[vc].to_numpy()).astype(np.float32)
-        ids_path = os.path.join(dest, f"part-{shard_id:05d}.ids.npy")
-        emb_path = os.path.join(dest, f"part-{shard_id:05d}.emb.npy")
-        for path, arr in ((ids_path, ids), (emb_path, mat)):
-            tmp = path + ".inprogress"
-            with open(tmp, "wb") as fh:
+        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
+        row = {"n_vecs": len(ids), "dim": int(mat.shape[1])}
+        for kind, arr in (("ids", ids), ("emb", mat)):
+            path = os.path.join(out_dir, f"part-{shard_id:05d}.{kind}.npy")
+            with commit_file(path) as fh:
                 write_npy(fh, arr)
-            os.replace(tmp, path)
-        return pd.DataFrame(
-            {
-                "shard_id": [shard_id],
-                "n_vecs": [len(ids)],
-                "dim": [int(mat.shape[1])],
-                "first_key": [int(ids.min())],
-                "last_key": [int(ids.max())],
-                "ids_bytes": [os.path.getsize(ids_path)],
-                "emb_bytes": [os.path.getsize(emb_path)],
-            }
-        )
+            row[f"{kind}_bytes"] = os.path.getsize(path)
+        return row
 
-    schema = (
+    return write_shards(
+        emb, out_dir, id_col, [id_col, vec_col], samples_per_shard, ".npy", encode,
         "shard_id long, n_vecs long, dim long, first_key long, "
-        "last_key long, ids_bytes long, emb_bytes long"
+        "last_key long, ids_bytes long, emb_bytes long",
     )
-    return sharded.groupBy("__shard").applyInPandas(_write_shard, schema)
 
 
 def read_npy_shards(
@@ -164,42 +144,21 @@ def read_npy_shards(
 ) -> DataFrame:
     """Read ids/emb .npy shard pairs back, one task per shard; row
     alignment between the two files is positional (verified by length)."""
-    ids_paths = sorted(
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.endswith(".ids.npy")
-    )
-    if not ids_paths:
-        raise FileNotFoundError(f"no .ids.npy shards under {in_dir}")
-    schema = f"{id_col} long, {vec_col} array<float>"
-    if shard_col:
-        schema += f", {shard_col} long"
+    ids_paths = shard_paths(in_dir, ".ids.npy")
 
-    path_rdd = spark.sparkContext.parallelize(
-        [(p,) for p in ids_paths], len(ids_paths)
-    )
-    path_df = spark.createDataFrame(path_rdd, "path string")
-
-    def _read(batches):
+    def decode(ids_path):
         import pandas as pd
 
-        for pdf in batches:
-            for ids_path in pdf["path"]:
-                emb_path = ids_path[: -len(".ids.npy")] + ".emb.npy"
-                with open(ids_path, "rb") as fh:
-                    ids = read_npy(fh)
-                with open(emb_path, "rb") as fh:
-                    mat = read_npy(fh)
-                if len(ids) != len(mat):
-                    raise ValueError(
-                        f"shard misalignment: {len(ids)} ids vs {len(mat)} vectors"
-                    )
-                out = pd.DataFrame(
-                    {id_col: ids, vec_col: [row for row in mat]}
-                )
-                if shard_col:
-                    base = os.path.basename(ids_path)
-                    out[shard_col] = int(base[len("part-"):-len(".ids.npy")])
-                yield out
+        emb_path = ids_path[: -len(".ids.npy")] + ".emb.npy"
+        with open(ids_path, "rb") as fh:
+            ids = read_npy(fh)
+        with open(emb_path, "rb") as fh:
+            mat = read_npy(fh)
+        if len(ids) != len(mat):
+            raise ValueError(
+                f"shard misalignment: {len(ids)} ids vs {len(mat)} vectors"
+            )
+        return pd.DataFrame({id_col: ids, vec_col: [row for row in mat]})
 
-    return path_df.mapInPandas(_read, schema)
+    schema = T.StructType.fromDDL(f"{id_col} long, {vec_col} array<float>")
+    return read_per_task(spark, ids_paths, schema, decode, shard_col)

@@ -1,27 +1,52 @@
-"""Contiguous-range shard assignment for the export writers — the
-decide-on-keys / move-payload-once split (optimization guide §8).
+"""The shard-file kernel of the six export formats (webdataset / tfrecord
+/ WET / jsonl.zst / arrow-ipc / npy): shard assignment, one write path
+and one per-task read path.  A format module keeps only its framing and
+encoding, its decode function, its file name and its manifest columns.
 
-Every shard writer (webdataset / tfrecord / wet / jsonl.zst / arrow-ipc /
-npy) packs samples into fixed-size shards by global key rank:
-``shard = (rank - 1) div samples_per_shard`` under ``ORDER BY key``.
-The original shape ran :func:`operators.rank.global_rank` over the FULL
-payload rows — a range exchange of the payload, a full-payload
-localCheckpoint pin, and the offsets machinery on wide rows — before the
+- **write** (:func:`write_shards`): shards are contiguous key ranges
+  decided on the keys alone (:func:`assign_contiguous_shards`), then ONE
+  shuffle of the payload keyed on the shard id; each task sorts its
+  shard by key and streams it to disk through :func:`commit_file`
+  (``.inprogress`` + atomic rename — the in-progress → finished
+  protocol of the reference's StreamingFileSink, so a crashed or
+  retried task never leaves a half shard visible).  Sorted contiguous
+  ranges are what loaders rely on for deterministic epoch order, and
+  they make re-exports of identical data byte-identical whatever the
+  partition count.  A directory that already holds shards of the format
+  is refused before any job runs, as Spark's default save mode does: a
+  smaller re-export would otherwise leave the old higher-numbered
+  shards in place for every reader to pick up.
+- **read** (:func:`read_per_task`): one task per input unit — a shard
+  file, or a ``(path, lo, hi)`` range of one large external file for
+  the range readers — with exactly one unit per input slice (a hash
+  repartition could put two units on one task and halve the read
+  parallelism).  The unit list is a driver-side listing
+  (metadata-scale); samples never touch the driver.
+
+Shard assignment is the decide-on-keys / move-payload-once split
+(optimization guide §8).  Packing samples into fixed-size shards by
+global key rank — ``shard = (rank - 1) div samples_per_shard`` under
+``ORDER BY key`` — once ran :func:`operators.rank.global_rank` over the
+FULL payload rows: a range exchange of the payload, a full-payload
+localCheckpoint pin, and the offsets machinery on wide rows, before the
 ``groupBy(shard)`` exchange into the write kernel moved the payload a
-second time.
-
-Every decision here depends only on the KEY column, so the payload only
-needs to travel once: rank the keys-only projection, collect the shard
-BOUNDARY keys (the keys at ranks S, 2S, ... — N/S values, metadata-scale:
-8 MB per billion samples at S=1000), broadcast them, and compute each
-row's shard map-side by vectorized binary search.  The payload then
-crosses exactly one exchange — the caller's ``groupBy(shard)``.
+second time.  Every decision depends only on the KEY column, so the
+payload only needs to travel once: rank the keys-only projection,
+collect the shard BOUNDARY keys (the keys at ranks S, 2S, ... — N/S
+values, metadata-scale: 8 MB per billion samples at S=1000), broadcast
+them, and compute each row's shard map-side by vectorized binary
+search.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import re
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 
@@ -87,3 +112,114 @@ def assign_contiguous_shards(
         )
 
     return df.withColumn(shard_col, _shard_of(F.col(key_col)))
+
+
+@contextmanager
+def commit_file(path: str):
+    """Yield a binary file handle on ``path + ".inprogress"``; when the
+    block exits cleanly the file is closed and atomically renamed onto
+    ``path``.  If the block raises, the partial file keeps its
+    in-progress name, which no reader lists."""
+    tmp = path + ".inprogress"
+    with open(tmp, "wb") as fh:
+        yield fh
+    os.replace(tmp, path)
+
+
+def shard_paths(in_dir: str, suffix: str) -> list[str]:
+    """Sorted paths of the files in ``in_dir`` ending in ``suffix``;
+    raises ``FileNotFoundError`` when there are none."""
+    paths = sorted(
+        os.path.join(in_dir, f) for f in os.listdir(in_dir) if f.endswith(suffix)
+    )
+    if not paths:
+        raise FileNotFoundError(f"no {suffix} files under {in_dir}")
+    return paths
+
+
+def write_shards(
+    df: DataFrame,
+    out_dir: str,
+    key_col: str,
+    cols: list[str],
+    samples_per_shard: int,
+    suffix: str,
+    encode,
+    schema: str,
+) -> DataFrame:
+    """Export ``df[cols]`` as contiguous key-range shards; returns the
+    lazy manifest DataFrame, one row per shard, with ``schema``.
+
+    ``encode(pdf, shard_id)`` gets one shard's rows sorted by
+    ``key_col``, writes its file(s) through :func:`commit_file` and
+    returns the format's manifest columns as a dict; ``shard_id``,
+    ``first_key`` and ``last_key`` are added here.  Raises
+    ``FileExistsError`` before any Spark job runs when ``out_dir``
+    already holds files ending in ``suffix``."""
+    os.makedirs(out_dir, exist_ok=True)
+    stale = sorted(f for f in os.listdir(out_dir) if f.endswith(suffix))
+    if stale:
+        raise FileExistsError(
+            f"{out_dir} already holds {suffix} files ({', '.join(stale)}); "
+            "export into an empty directory"
+        )
+    sharded = assign_contiguous_shards(
+        df.select(*cols), key_col, samples_per_shard
+    )
+
+    def _write(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values(key_col)
+        shard_id = int(pdf["__shard"].iloc[0])
+        keys = pdf[key_col]
+        return pd.DataFrame([{
+            "shard_id": shard_id,
+            "first_key": int(keys.iloc[0]),
+            "last_key": int(keys.iloc[-1]),
+            **encode(pdf, shard_id),
+        }])
+
+    return sharded.groupBy("__shard").applyInPandas(_write, schema)
+
+
+def read_per_task(
+    spark: SparkSession,
+    units: list,
+    schema: T.StructType,
+    decode,
+    shard_col: str | None = None,
+) -> DataFrame:
+    """Read ``units`` with one task each: a unit is a shard path, decoded
+    by ``decode(path)``, or a ``(path, lo, hi)`` range of one file,
+    decoded by ``decode(path, lo, hi)``; either returns the unit's rows
+    as a pandas DataFrame with ``schema``'s columns.  ``shard_col``
+    appends the shard id: the first run of digits in the file name
+    (``part-00007.tfrecord``, ``shard-000007.tar`` → 7)."""
+    if shard_col:
+        schema = T.StructType(
+            [*schema.fields, T.StructField(shard_col, T.LongType())]
+        )
+    if not units:
+        return spark.createDataFrame([], schema)
+    rows = [(u, None, None) if isinstance(u, str) else tuple(u) for u in units]
+    unit_df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, len(rows)),
+        "path string, lo long, hi long",
+    )
+
+    def _read(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            for path, lo, hi in zip(pdf["path"], pdf["lo"], pdf["hi"]):
+                if pd.isna(lo):
+                    out = decode(path)
+                else:
+                    out = decode(path, int(lo), int(hi))
+                if shard_col:
+                    name = os.path.basename(path)
+                    out[shard_col] = int(re.search(r"\d+", name).group())
+                yield out
+
+    return unit_df.mapInPandas(_read, schema)

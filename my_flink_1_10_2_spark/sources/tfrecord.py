@@ -8,13 +8,11 @@ the public spec only (TFRecord framing + `tf.train.Example` wire format):
 `Example` protos are hand-encoded/decoded (varint + length-delimited
 fields; BytesList/FloatList/Int64List), so no protobuf/tensorflow
 dependency — any TF reader consumes these files and vice versa.
-
-Scale design mirrors :mod:`.webdataset`: contiguous global-rank shard
-assignment, ONE shuffle keyed on shard_id to write (each task streams one
-file), one task per file to read, samples never on the driver.  The
-pure-Python CRC32C is table-driven (slice-by-1) — correct and adequate
-for shard-at-a-time streaming here; a production deployment swaps in a
-native crc32c wheel with identical outputs.
+Shards are ``part-NNNNN.tfrecord``, written and read through the shard
+kernel (:mod:`.sharding`).  The pure-Python CRC32C is table-driven
+(slice-by-1) — correct and adequate for shard-at-a-time streaming here;
+a production deployment swaps in a native crc32c wheel with identical
+outputs.
 """
 
 from __future__ import annotations
@@ -23,8 +21,14 @@ import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from my_flink_1_10_2_spark.sources.sharding import (
+    commit_file,
+    read_per_task,
+    shard_paths,
+    write_shards,
+)
 
 # --------------------------------------------------------------------------
 # CRC32C (Castagnoli, reflected poly 0x82F63B78) + TFRecord masking
@@ -210,7 +214,6 @@ def read_records(fh):
 # DataFrame sink / source
 # --------------------------------------------------------------------------
 
-
 def write_tfrecords(
     df: DataFrame,
     out_dir: str,
@@ -222,54 +225,27 @@ def write_tfrecords(
     (shard_id, path, n_samples, first_key, last_key, n_bytes).  Integer
     columns become Int64List, floats FloatList, strings/binary BytesList;
     the key column is always included as an int64 feature."""
-    from my_flink_1_10_2_spark.sources.sharding import assign_contiguous_shards
-
     feature_cols = feature_cols or ["text"]
-    os.makedirs(out_dir, exist_ok=True)
     cols = [key_col] + [c for c in feature_cols if c != key_col]
-    # keys-only shard assignment (sharding.py, guide §8): one payload
-    # exchange — the groupBy(__shard) into the write kernel
-    sharded = assign_contiguous_shards(
-        df.select(*cols), key_col, samples_per_shard
-    )
-    key_name, dest, fcols = key_col, out_dir, cols
 
-    def _write_shard(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(key_name)
-        shard_id = int(pdf["__shard"].iloc[0])
-        path = os.path.join(dest, f"part-{shard_id:05d}.tfrecord")
-        tmp = path + ".inprogress"
+    def encode(pdf, shard_id):
+        path = os.path.join(out_dir, f"part-{shard_id:05d}.tfrecord")
         # column-major access, not iterrows — per-row Series construction
         # dominates the encode loop otherwise
-        cols = {}
-        for c in fcols:
-            vals = pdf[c].tolist()
-            cols[c] = [v.item() if hasattr(v, "item") else v for v in vals]
-        n = len(pdf)
-        with open(tmp, "wb") as fh:
-            for i in range(n):
-                write_record(
-                    fh, encode_example({c: cols[c][i] for c in fcols})
-                )
-        os.replace(tmp, path)
-        return pd.DataFrame(
-            {
-                "shard_id": [shard_id],
-                "path": [path],
-                "n_samples": [len(pdf)],
-                "first_key": [int(pdf[key_name].min())],
-                "last_key": [int(pdf[key_name].max())],
-                "n_bytes": [os.path.getsize(path)],
-            }
-        )
+        vals = {
+            c: [v.item() if hasattr(v, "item") else v for v in pdf[c].tolist()]
+            for c in cols
+        }
+        with commit_file(path) as fh:
+            for i in range(len(pdf)):
+                write_record(fh, encode_example({c: vals[c][i] for c in cols}))
+        return {"path": path, "n_samples": len(pdf), "n_bytes": os.path.getsize(path)}
 
-    schema = (
+    return write_shards(
+        df, out_dir, key_col, cols, samples_per_shard, ".tfrecord", encode,
         "shard_id long, path string, n_samples long, "
-        "first_key long, last_key long, n_bytes long"
+        "first_key long, last_key long, n_bytes long",
     )
-    return sharded.groupBy("__shard").applyInPandas(_write_shard, schema)
 
 
 def read_tfrecords(
@@ -282,49 +258,35 @@ def read_tfrecords(
     ``long`` / ``double`` / ``string`` / ``binary``.  One task per shard
     file, CRCs verified on every record.  ``shard_col`` optionally adds
     the shard id (parsed from ``part-NNNNN.tfrecord``) as a column."""
-    paths = sorted(
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.endswith(".tfrecord")
-    )
-    if not paths:
-        raise FileNotFoundError(f"no .tfrecord shards under {in_dir}")
+    paths = shard_paths(in_dir, ".tfrecord")
     spark_types = {
         "long": T.LongType(),
         "double": T.DoubleType(),
         "string": T.StringType(),
         "binary": T.BinaryType(),
     }
-    fields = [T.StructField(k, spark_types[t]) for k, t in schema.items()]
-    if shard_col:
-        fields.append(T.StructField(shard_col, T.LongType()))
-    out_schema = T.StructType(fields)
+    out_schema = T.StructType(
+        [T.StructField(k, spark_types[t]) for k, t in schema.items()]
+    )
     spec = dict(schema)
-    path_rdd = spark.sparkContext.parallelize([(p,) for p in paths], len(paths))
-    path_df = spark.createDataFrame(path_rdd, "path string")
 
-    def _read(batches):
+    def decode(path):
         import pandas as pd
 
-        for pdf in batches:
-            for path in pdf["path"]:
-                rows = {k: [] for k in spec}
-                with open(path, "rb") as fh:
-                    for payload in read_records(fh):
-                        ex = decode_example(payload)
-                        for k, t in spec.items():
-                            v = ex.get(k)
-                            if v is not None:
-                                if t == "string":
-                                    v = v.decode("utf-8")
-                                elif t == "double":
-                                    v = float(v)
-                                elif t == "long":
-                                    v = int(v)
-                            rows[k].append(v)
-                if shard_col:
-                    sid = int(os.path.basename(path)[len("part-"):-len(".tfrecord")])
-                    rows[shard_col] = [sid] * len(rows[next(iter(spec))])
-                yield pd.DataFrame(rows)
+        rows = {k: [] for k in spec}
+        with open(path, "rb") as fh:
+            for payload in read_records(fh):
+                ex = decode_example(payload)
+                for k, t in spec.items():
+                    v = ex.get(k)
+                    if v is not None:
+                        if t == "string":
+                            v = v.decode("utf-8")
+                        elif t == "double":
+                            v = float(v)
+                        elif t == "long":
+                            v = int(v)
+                    rows[k].append(v)
+        return pd.DataFrame(rows)
 
-    return path_df.mapInPandas(_read, out_schema)
+    return read_per_task(spark, paths, out_schema, decode, shard_col)

@@ -18,9 +18,9 @@ text-pipeline ingests.  The reader yields one row per conversion
 record, skipping ``warcinfo``/``request``/``response`` records the way
 a WET consumer does.
 
-Scale shape matches the other export sinks: contiguous global-rank
-shard ranges (never one task), one shuffle keyed on shard id to write,
-one task per shard to read, atomic ``.inprogress`` renames.
+WET shards are ``part-NNNNN.warc.wet.gz``, written and read through the
+shard kernel (:mod:`.sharding`), as is :func:`read_warc_gz`'s byte-range
+read of external crawl files.
 """
 
 from __future__ import annotations
@@ -30,7 +30,14 @@ import io
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from my_flink_1_10_2_spark.sources.sharding import (
+    commit_file,
+    read_per_task,
+    shard_paths,
+    write_shards,
+)
 
 _CRLF = b"\r\n"
 
@@ -121,26 +128,12 @@ def write_wet_shards(
     """Write documents as WET shards (``part-NNNNN.warc.wet.gz``): a
     ``warcinfo`` record then one ``conversion`` record per row, each its
     own gzip member.  Returns the shard manifest."""
-    from my_flink_1_10_2_spark.sources.sharding import assign_contiguous_shards
-
-    os.makedirs(out_dir, exist_ok=True)
     cols = [key_col, text_col] + ([uri_col] if uri_col else [])
-    # keys-only shard assignment (sharding.py, guide §8): one payload
-    # exchange — the groupBy(__shard) into the write kernel
-    sharded = assign_contiguous_shards(
-        df.select(*cols), key_col, samples_per_shard
-    )
-    dest, kc, tc, uc = out_dir, key_col, text_col, uri_col
 
-    def _write_shard(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(kc)
-        shard_id = int(pdf["__shard"].iloc[0])
-        path = os.path.join(dest, f"part-{shard_id:05d}.warc.wet.gz")
-        tmp = path + ".inprogress"
+    def encode(pdf, shard_id):
+        path = os.path.join(out_dir, f"part-{shard_id:05d}.warc.wet.gz")
         date = "2026-01-01T00:00:00Z"  # fixed: shard bytes must be deterministic
-        with open(tmp, "wb") as fh:
+        with commit_file(path) as fh:
             info = encode_warc_record(
                 "warcinfo",
                 f"shard-{shard_id:05d}",
@@ -149,38 +142,28 @@ def write_wet_shards(
             )
             fh.write(_gzip_member(info))
             for row in pdf.itertuples():
-                key = int(getattr(row, kc))
-                extra = {"WARC-Target-URI": getattr(row, uc)} if uc else {
+                key = int(getattr(row, key_col))
+                extra = {"WARC-Target-URI": getattr(row, uri_col)} if uri_col else {
                     "WARC-Target-URI": f"urn:doc:{key}"
                 }
                 rec = encode_warc_record(
                     "conversion",
                     f"doc-{key}",
                     date,
-                    str(getattr(row, tc)).encode("utf-8"),
+                    str(getattr(row, text_col)).encode("utf-8"),
                     extra_headers={
                         "Content-Type": "text/plain",
                         **extra,
                     },
                 )
                 fh.write(_gzip_member(rec))
-        os.replace(tmp, path)
-        return pd.DataFrame(
-            {
-                "shard_id": [shard_id],
-                "path": [path],
-                "n_records": [len(pdf)],
-                "first_key": [int(pdf[kc].min())],
-                "last_key": [int(pdf[kc].max())],
-                "n_bytes": [os.path.getsize(path)],
-            }
-        )
+        return {"path": path, "n_records": len(pdf), "n_bytes": os.path.getsize(path)}
 
-    schema = (
+    return write_shards(
+        df, out_dir, key_col, cols, samples_per_shard, ".warc.wet.gz", encode,
         "shard_id long, path string, n_records long, "
-        "first_key long, last_key long, n_bytes long"
+        "first_key long, last_key long, n_bytes long",
     )
-    return sharded.groupBy("__shard").applyInPandas(_write_shard, schema)
 
 
 def read_wet_shards(
@@ -192,39 +175,23 @@ def read_wet_shards(
     ``conversion`` record — (doc_uri, text) plus optionally the shard
     id.  warcinfo/request/response records are skipped, as a WET
     consumer does."""
-    paths = sorted(
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.endswith(".warc.wet.gz")
-    )
-    if not paths:
-        raise FileNotFoundError(f"no .warc.wet.gz shards under {in_dir}")
-    schema = "doc_uri string, text string"
-    if shard_col:
-        schema += f", {shard_col} long"
-    path_rdd = spark.sparkContext.parallelize([(p,) for p in paths], len(paths))
-    path_df = spark.createDataFrame(path_rdd, "path string")
+    paths = shard_paths(in_dir, ".warc.wet.gz")
 
-    def _read(batches):
+    def decode(path):
         import pandas as pd
 
-        for pdf in batches:
-            for path in pdf["path"]:
-                with open(path, "rb") as fh:
-                    stream = _gunzip_all(fh.read())
-                uris, texts = [], []
-                for headers, payload in decode_warc_records(stream):
-                    if headers.get("WARC-Type") != "conversion":
-                        continue
-                    uris.append(headers.get("WARC-Target-URI", ""))
-                    texts.append(payload.decode("utf-8"))
-                out = pd.DataFrame({"doc_uri": uris, "text": texts})
-                if shard_col:
-                    base = os.path.basename(path)
-                    out[shard_col] = int(base[len("part-"):-len(".warc.wet.gz")])
-                yield out
+        with open(path, "rb") as fh:
+            stream = _gunzip_all(fh.read())
+        uris, texts = [], []
+        for headers, payload in decode_warc_records(stream):
+            if headers.get("WARC-Type") != "conversion":
+                continue
+            uris.append(headers.get("WARC-Target-URI", ""))
+            texts.append(payload.decode("utf-8"))
+        return pd.DataFrame({"doc_uri": uris, "text": texts})
 
-    return path_df.mapInPandas(_read, schema)
+    schema = T.StructType.fromDDL("doc_uri string, text string")
+    return read_per_task(spark, paths, schema, decode, shard_col)
 
 
 # ---------------------------------------------------------------------------
@@ -405,16 +372,7 @@ def read_warc_gz(
     128 MiB default mirrors a comfortable HDFS/S3 block; a 40 GB
     Common Crawl segment becomes ~320 independent tasks instead of 1.
     """
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".gz")
-        )
-        if not files:
-            raise FileNotFoundError(f"no .gz files under {path}")
-    else:
-        files = [path]
+    files = shard_paths(path, ".gz") if os.path.isdir(path) else [path]
     splits = []
     for f in files:
         size = os.path.getsize(f)
@@ -424,41 +382,35 @@ def read_warc_gz(
             lo += split_bytes
     if not splits:
         # zero-byte inputs produce zero splits; fail with the file list
-        # instead of Spark's opaque "positive number of slices" error
+        # instead of an empty result
         raise ValueError(
             f"read_warc_gz: no non-empty .warc.gz input among {files}"
         )
     wanted = warc_types
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, len(splits)),
-        "path string, start long, end long",
-    )
 
-    def _read(batches):
+    def decode(f, lo, hi):
         import pandas as pd
 
-        for pdf in batches:
-            for f, lo, hi in zip(pdf["path"], pdf["start"], pdf["end"]):
-                rows = []
-                for headers, payload in read_warc_gz_split(f, int(lo), int(hi)):
-                    wt = headers.get("WARC-Type", "")
-                    if wanted and wt not in wanted:
-                        continue
-                    rows.append((
-                        f, wt,
-                        headers.get("WARC-Record-ID", ""),
-                        headers.get("WARC-Date", ""),
-                        headers.get("WARC-Target-URI", ""),
-                        payload,
-                    ))
-                yield pd.DataFrame(
-                    rows,
-                    columns=["path", "warc_type", "record_id", "date",
-                             "target_uri", "payload"],
-                )
+        rows = []
+        for headers, payload in read_warc_gz_split(f, lo, hi):
+            wt = headers.get("WARC-Type", "")
+            if wanted and wt not in wanted:
+                continue
+            rows.append((
+                f, wt,
+                headers.get("WARC-Record-ID", ""),
+                headers.get("WARC-Date", ""),
+                headers.get("WARC-Target-URI", ""),
+                payload,
+            ))
+        return pd.DataFrame(
+            rows,
+            columns=["path", "warc_type", "record_id", "date",
+                     "target_uri", "payload"],
+        )
 
-    return sdf.mapInPandas(
-        _read,
+    schema = T.StructType.fromDDL(
         "path string, warc_type string, record_id string, date string, "
-        "target_uri string, payload binary",
+        "target_uri string, payload binary"
     )
+    return read_per_task(spark, splits, schema, decode)

@@ -7,20 +7,12 @@ of consecutive tar members sharing a basename key — ``000000000042.txt``,
 ``shard-%06d.tar`` files.  Sequential tar reads give near-disk-speed
 streaming I/O for training loaders; the shard is the unit of parallelism.
 
-Scale design (the 100 TB export path):
-  - **write**: shard ids are decided on the KEYS ALONE
-    (sources/sharding.py: rank the key projection, broadcast the N/S
-    boundary keys, map-side binary search — never a single-partition
-    window), then ONE shuffle of the payload keyed on ``shard_id``; each
-    task streams exactly one tar to disk.  Shards are contiguous key
-    ranges — the property loaders rely on for deterministic epoch
-    ordering.
-  - **read**: one task per shard file, no shuffle; the shard list is a
-    driver-side listing (metadata-scale), samples never touch the driver.
-  - **determinism**: tar bytes are canonical (USTAR, mtime=0, uid=gid=0,
-    fixed mode, members sorted by key), so re-exports of identical data
-    are byte-identical — content-addressable and diffable, which is how
-    a 100 TB export is validated without re-reading it.
+Shards are written and read through the shard kernel (:mod:`.sharding`):
+contiguous key ranges, one task per shard both ways.  Tar bytes are
+canonical (USTAR, mtime=0, uid=gid=0, fixed mode, members sorted by
+key), so re-exports of identical data are byte-identical —
+content-addressable and diffable, which is how a 100 TB export is
+validated without re-reading it.
 
 No external libraries: stdlib ``tarfile`` only, interoperable with any
 WebDataset reader.
@@ -33,8 +25,14 @@ import os
 import tarfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from my_flink_1_10_2_spark.sources.sharding import (
+    commit_file,
+    read_per_task,
+    shard_paths,
+    write_shards,
+)
 
 _KEY_WIDTH = 12  # zero-padded numeric sample keys, sorts lexically == numerically
 
@@ -75,32 +73,17 @@ def write_webdataset(
     Manifest: (shard_id, path, n_samples, first_key, last_key, n_bytes) —
     one row per shard, n_bytes = final tar file size.
     """
-    from my_flink_1_10_2_spark.sources.sharding import assign_contiguous_shards
+    exts = dict(columns or {"text": "txt"})  # col -> ext
 
-    columns = columns or {"text": "txt"}
-    os.makedirs(out_dir, exist_ok=True)
-    cols = [key_col, *columns.keys()]
-    # keys-only shard assignment (sharding.py, guide §8): the payload
-    # crosses ONE exchange — the groupBy(__shard) into the write kernel
-    sharded = assign_contiguous_shards(
-        df.select(*cols), key_col, samples_per_shard
-    )
-
-    exts = dict(columns)  # col -> ext, closed over by the writer
-    key_name, dest = key_col, out_dir
-
-    def _write_shard(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(key_name)
-        shard_id = int(pdf["__shard"].iloc[0])
-        path = os.path.join(dest, f"shard-{shard_id:06d}.tar")
-        tmp = path + ".inprogress"
+    def encode(pdf, shard_id):
+        path = os.path.join(out_dir, f"shard-{shard_id:06d}.tar")
         # column-major access (lists), not iterrows — the per-row Series
         # construction dominates the write loop otherwise
-        keys = pdf[key_name].tolist()
+        keys = pdf[key_col].tolist()
         cols = {col: pdf[col].tolist() for col in exts}
-        with tarfile.open(tmp, "w", format=tarfile.USTAR_FORMAT) as tar:
+        with commit_file(path) as fh, tarfile.open(
+            fileobj=fh, mode="w", format=tarfile.USTAR_FORMAT
+        ) as tar:
             for i, key in enumerate(keys):
                 for col, ext in exts.items():
                     payload = cols[col][i]
@@ -112,23 +95,13 @@ def write_webdataset(
                         payload = bytes(payload)
                     ti = _canonical_tarinfo(_member_name(key, ext), len(payload))
                     tar.addfile(ti, io.BytesIO(payload))
-        os.replace(tmp, path)
-        return pd.DataFrame(
-            {
-                "shard_id": [shard_id],
-                "path": [path],
-                "n_samples": [len(pdf)],
-                "first_key": [int(pdf[key_name].min())],
-                "last_key": [int(pdf[key_name].max())],
-                "n_bytes": [os.path.getsize(path)],
-            }
-        )
+        return {"path": path, "n_samples": len(pdf), "n_bytes": os.path.getsize(path)}
 
-    schema = (
+    return write_shards(
+        df, out_dir, key_col, [key_col, *exts], samples_per_shard, ".tar", encode,
         "shard_id long, path string, n_samples long, "
-        "first_key long, last_key long, n_bytes long"
+        "first_key long, last_key long, n_bytes long",
     )
-    return sharded.groupBy("__shard").applyInPandas(_write_shard, schema)
 
 
 def parse_tar_samples(source, exts) -> dict:
@@ -171,49 +144,31 @@ def read_webdataset(
 ) -> DataFrame:
     """Read WebDataset tar shards back as (key, shard_id, <ext> binary...).
 
-    One task per shard file (``repartition(n_shards)`` of a path list —
-    only paths shuffle); each task streams its tar sequentially and
+    One task per shard file; each task streams its tar sequentially and
     groups consecutive members by basename key, the WebDataset sample
     contract.  Unknown extensions are ignored unless listed.
     """
-    paths = sorted(
-        os.path.join(in_dir, f)
-        for f in os.listdir(in_dir)
-        if f.endswith(".tar")
-    )
-    if not paths:
-        raise FileNotFoundError(f"no .tar shards under {in_dir}")
+    paths = shard_paths(in_dir, ".tar")
     exts = extensions or ["txt"]
-    fields = [
-        T.StructField("key", T.LongType()),
-        T.StructField("shard_id", T.LongType()),
-        *[T.StructField(e, T.BinaryType()) for e in exts],
-    ]
-    schema = T.StructType(fields)
-    # exactly one path per input slice — a hash repartition could collide
-    # two shards onto one task and halve the read parallelism
-    path_rdd = spark.sparkContext.parallelize(
-        [(p,) for p in paths], len(paths)
-    )
-    path_df = spark.createDataFrame(path_rdd, "path string")
 
-    def _read_shards(batches):
+    def decode(path):
         import pandas as pd
 
-        for pdf in batches:
-            for path in pdf["path"]:
-                shard_id = int(os.path.basename(path)[len("shard-"):-len(".tar")])
-                samples = parse_tar_samples(path, exts)
-                keys = sorted(samples)
-                yield pd.DataFrame(
-                    {
-                        "key": [int(k) for k in keys],
-                        "shard_id": [shard_id] * len(keys),
-                        **{
-                            e: [samples[k].get(e) for k in keys]
-                            for e in exts
-                        },
-                    }
-                )
+        samples = parse_tar_samples(path, exts)
+        keys = sorted(samples)
+        return pd.DataFrame(
+            {
+                "key": [int(k) for k in keys],
+                **{e: [samples[k].get(e) for k in keys] for e in exts},
+            }
+        )
 
-    return path_df.mapInPandas(_read_shards, schema)
+    schema = T.StructType(
+        [
+            T.StructField("key", T.LongType()),
+            *[T.StructField(e, T.BinaryType()) for e in exts],
+        ]
+    )
+    return read_per_task(spark, paths, schema, decode, "shard_id").select(
+        "key", "shard_id", *exts
+    )

@@ -96,6 +96,23 @@ def test_dataframe_roundtrip_exact(spark, workdir):
     assert got == [(i, f"doc {i}", round(i / 4, 4)) for i in range(23)]
 
 
+def test_reexport_into_a_used_directory_is_refused(spark, workdir):
+    """A smaller export over an earlier one would leave the earlier
+    higher-numbered shards for every reader to pick up (25 rows at 10
+    per shard, then 5 rows: the reader returned 20 rows, not 5)."""
+
+    def docs(n):
+        return spark.createDataFrame(
+            [(i, f"t{i}") for i in range(n)], "doc_id long, text string"
+        )
+
+    write_tfrecords(docs(25), workdir, samples_per_shard=10).collect()
+    with pytest.raises(FileExistsError, match="part-00002.tfrecord"):
+        write_tfrecords(docs(5), workdir, samples_per_shard=10)
+    back = read_tfrecords(spark, workdir, {"doc_id": "long"})
+    assert sorted(r.doc_id for r in back.collect()) == list(range(25))
+
+
 def test_shard_files_deterministic(spark, workdir):
     import hashlib
 
