@@ -1,28 +1,19 @@
-"""Baseline COLOR JPEG (YCbCr, 4:4:4 / 4:2:2 / 4:2:0) — closes the
-multi-component gate of the grayscale codec (llm/jpeg.py; public spec
-ITU-T T.81 + the JFIF YCbCr convention).
+"""Baseline color JPEG: YCbCr planes with 4:4:4, 4:2:2 or 4:2:0 chroma.
 
-What the grayscale codec didn't have, all per spec:
+What is color's own on top of the codec core (llm/jpeg.py): the Annex
+K.2 chroma quant table and K.4/K.6 chroma Huffman tables (luma keeps
+table id 0, both chroma components use id 1), chroma subsampling by box
+average (2x2 for 4:2:0, horizontal pairs for 4:2:2) with replication
+back up on decode, and the JFIF BT.601 RGB conversions.
 
-- three components with per-component quant tables (Annex K.1 luma,
-  K.2 chroma) and Huffman table pairs (K.3/K.5 luma, K.4/K.6 chroma);
-- MCU-interleaved scans: sampling factors (2,2)+(1,1)+(1,1) for 4:2:0
-  put four Y blocks then one Cb and one Cr block in every MCU, with an
-  independent DC predictor per component;
-- chroma subsampling: 2x2 box average down, pixel replication up (the
-  reference "fancy upsampling" variants are decoder taste, not spec).
-
-The planes API keeps the exactness contract gradeable: encode/decode
-operate on Y/Cb/Cr planes directly, so constant 16x16 tiles with even
-levels are bit-exact through the lossy path per channel (DC multiples
-of each table's step: Q_luma[0,0]=16, Q_chroma[0,0]=17 — levels chosen
-per channel make dequantization exact).  BT.601 RGB conversion helpers
-are provided separately so color-space rounding never contaminates the
-graded statistics."""
+The planes API keeps the exactness contract gradeable: constant 16x16
+tiles survive the box average, and levels chosen per channel make the
+DC a multiple of each table's step (Q_luma[0,0]=16: even levels;
+Q_chroma[0,0]=17: 128 ± 17k), so they are bit-exact through the lossy
+path.  The RGB helpers stay separate so color-space rounding never
+touches the graded statistics."""
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 
@@ -32,19 +23,12 @@ from my_flink_1_10_2_spark.llm.jpeg import (
     DC_BITS,
     DC_VALS,
     STD_LUMA_QUANT,
-    ZIGZAG,
-    _ZIG_C,
-    _ZIG_R,
-    _BitReader,
-    _BitWriter,
-    _build_codes,
-    _build_decoder,
-    _build_lut,
-    _decode_block_lut,
-    _dct_matrix,
-    _extend,
-    _FastBitReader,
-    _magnitude,
+    _check_8bit,
+    _decode_sequential,
+    _encode_sequential,
+    _Frame,
+    _pad_plane,
+    _parse,
 )
 
 # ITU-T T.81 Annex K.2 — standard chrominance quantization table
@@ -86,6 +70,14 @@ AC_CHROMA_VALS = [
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
 
+# quant tables and (DC, AC) Huffman specs by table id: 0 luma, 1 chroma
+_QUANTS = [STD_LUMA_QUANT, STD_CHROMA_QUANT]
+_TABLES = [
+    (DC_BITS, DC_VALS, AC_BITS, AC_VALS),
+    (DC_CHROMA_BITS, DC_CHROMA_VALS, AC_CHROMA_BITS, AC_CHROMA_VALS),
+]
+_SUBSAMPLING = {"4:4:4": (1, 1), "4:2:2": (2, 1), "4:2:0": (2, 2)}
+
 
 def rgb_to_ycbcr(r: int, g: int, b: int) -> tuple[int, int, int]:
     """JFIF full-range BT.601, rounded to ints (one pixel)."""
@@ -104,113 +96,30 @@ def ycbcr_to_rgb(y: int, cb: int, cr: int) -> tuple[int, int, int]:
     return clamp(r), clamp(g), clamp(b)
 
 
-def _pad_plane(plane: np.ndarray, ph: int, pw: int) -> np.ndarray:
-    h, w = plane.shape
-    out = np.empty((ph, pw), dtype=np.float64)
-    out[:h, :w] = plane
-    out[h:, :w] = plane[-1:, :]
-    out[:, w:] = out[:, w - 1 : w]
-    return out
-
-
-def _idct_block(zz: list[int], q: np.ndarray) -> np.ndarray:
-    m = _dct_matrix()
-    coeffs = np.zeros((8, 8), dtype=np.float64)
-    # vectorized zigzag scatter + dequantize
-    coeffs[_ZIG_R, _ZIG_C] = np.asarray(zz, dtype=np.float64) * q[_ZIG_R, _ZIG_C]
-    return m.T @ coeffs @ m + 128.0
-
-
-def _fdct_grid(padded: np.ndarray, gh: int, gw: int, q: np.ndarray) -> list[list[int]]:
-    """Batched forward DCT over a whole padded plane: (gh*8, gw*8) →
-    per-block quantized zigzag rows in raster (row-major block) order.
-    One broadcast matmul chain replaces gh*gw small per-block calls."""
-    m = _dct_matrix()
-    blocks = (
-        padded.reshape(gh, 8, gw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-        - 128.0
-    )
-    qc = np.round((m @ blocks @ m.T) / q).astype(np.int64)
-    return qc[:, _ZIG_R, _ZIG_C].tolist()
-
-
-def _idct_grid(zz_rows: list[list[int]], gh: int, gw: int, q: np.ndarray) -> np.ndarray:
-    """Batched inverse DCT: per-block zigzag rows (raster block order) →
-    the reassembled (gh*8, gw*8) pixel plane (unclipped doubles)."""
-    m = _dct_matrix()
-    coeffs = np.zeros((len(zz_rows), 8, 8), dtype=np.float64)
-    coeffs[:, _ZIG_R, _ZIG_C] = (
-        np.asarray(zz_rows, dtype=np.float64) * q[_ZIG_R, _ZIG_C]
-    )
-    blocks = m.T @ coeffs @ m + 128.0
-    return (
-        blocks.reshape(gh, gw, 8, 8).transpose(0, 2, 1, 3).reshape(gh * 8, gw * 8)
-    )
-
-
-def _encode_block(w: _BitWriter, zz: list[int], pred: int,
-                  dc_codes: dict, ac_codes: dict) -> int:
-    write = w.write  # hot loop: ~2 fused writes per nonzero coefficient
-    diff = zz[0] - pred
-    size, bits = _magnitude(diff)
-    code, ln = dc_codes[size]
-    write((code << size) | bits, ln + size)  # symbol + magnitude in one call
-    last_nz = 0
-    for i in range(63, 0, -1):
-        if zz[i]:
-            last_nz = i
-            break
-    run = 0
-    for i in range(1, last_nz + 1):
-        v = zz[i]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_codes[0xF0]
-            write(code, ln)
-            run -= 16
-        size, bits = _magnitude(v)
-        code, ln = ac_codes[run * 16 + size]
-        write((code << size) | bits, ln + size)
-        run = 0
-    if last_nz < 63:
-        code, ln = ac_codes[0x00]
-        write(code, ln)
-    return zz[0]
-
-
-def _decode_block(r: _BitReader, pred: int, dc_table: dict, ac_table: dict
-                  ) -> tuple[list[int], int]:
-    def read_code(table: dict) -> int:
-        code, ln = 0, 0
-        while ln < 16:
-            code = (code << 1) | r.read(1)
-            ln += 1
-            if (ln, code) in table:
-                return table[(ln, code)]
-        raise ValueError("invalid Huffman code in scan")
-
-    zz = [0] * 64
-    size = read_code(dc_table)
-    diff = _extend(r.read(size), size) if size else 0
-    pred += diff
-    zz[0] = pred
-    i = 1
-    while i < 64:
-        rs = read_code(ac_table)
-        if rs == 0x00:
-            break
-        if rs == 0xF0:
-            i += 16
-            continue
-        run, size = rs >> 4, rs & 0x0F
-        i += run
-        if i > 63:
-            raise ValueError("AC run past block end")
-        zz[i] = _extend(r.read(size), size)
-        i += 1
-    return zz, pred
+def _color_frame(sof: int, width: int, height: int, y: bytes, cb: bytes,
+                 cr: bytes, subsampling: str):
+    """(frame, [Y, Cb, Cr] planes at their sampled resolution) for the
+    color encoders: luma at (sh, sv) sampling, chroma box-averaged."""
+    for name, p in (("y", y), ("cb", cb), ("cr", cr)):
+        if len(p) != width * height:
+            raise ValueError(f"plane {name}: expected {width * height} bytes")
+    if subsampling not in _SUBSAMPLING:
+        raise ValueError("subsampling must be '4:2:0', '4:2:2' or '4:4:4'")
+    sh, sv = _SUBSAMPLING[subsampling]
+    planes = [
+        np.frombuffer(raw, dtype=np.uint8).reshape(height, width).astype(np.float64)
+        for raw in (y, cb, cr)
+    ]
+    if sh == 2:
+        for i in (1, 2):
+            p = _pad_plane(planes[i], -(-height // sv) * sv, -(-width // 2) * 2)
+            if sv == 2:
+                p = (p[0::2, 0::2] + p[0::2, 1::2] + p[1::2, 0::2] + p[1::2, 1::2]) / 4.0
+            else:  # 4:2:2 — horizontal box average only
+                p = (p[:, 0::2] + p[:, 1::2]) / 2.0
+            planes[i] = p
+    frame = _Frame(sof, 8, width, height, [(1, sh, sv, 0), (2, 1, 1, 1), (3, 1, 1, 1)])
+    return frame, planes
 
 
 def jpeg_encode_color(
@@ -226,229 +135,42 @@ def jpeg_encode_color(
     row-major) as a baseline color JFIF JPEG.  4:2:0 box-averages the
     chroma planes 2x2 before encoding, 4:2:2 horizontally only; 4:4:4
     keeps them full-res."""
-    for name, p in (("y", y), ("cb", cb), ("cr", cr)):
-        if len(p) != width * height:
-            raise ValueError(f"plane {name}: expected {width * height} bytes")
-    factors = {"4:4:4": (1, 1), "4:2:2": (2, 1), "4:2:0": (2, 2)}
-    if subsampling not in factors:
-        raise ValueError("subsampling must be '4:2:0', '4:2:2' or '4:4:4'")
-    sh, sv = factors[subsampling]
-    yp = np.frombuffer(y, dtype=np.uint8).reshape(height, width).astype(np.float64)
-    planes = []
-    for raw in (cb, cr):
-        p = np.frombuffer(raw, dtype=np.uint8).reshape(height, width).astype(
-            np.float64
-        )
-        if sh == 2 or sv == 2:
-            ph, pw = -(-height // sv) * sv, -(-width // sh) * sh
-            p = _pad_plane(p, ph, pw)
-            if sh == 2 and sv == 2:
-                p = (p[0::2, 0::2] + p[0::2, 1::2]
-                     + p[1::2, 0::2] + p[1::2, 1::2]) / 4.0
-            elif sh == 2:  # 4:2:2 — horizontal box average only
-                p = (p[:, 0::2] + p[:, 1::2]) / 2.0
-        planes.append(p)
-    mcu_w, mcu_h = 8 * sh, 8 * sv
-    mcw, mch = -(-width // mcu_w), -(-height // mcu_h)
-    ypad = _pad_plane(yp, mch * mcu_h, mcw * mcu_w)
-    cpad = [_pad_plane(p, mch * 8, mcw * 8) for p in planes]
-
-    luma_dc = _build_codes(DC_BITS, DC_VALS)
-    luma_ac = _build_codes(AC_BITS, AC_VALS)
-    chroma_dc = _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    chroma_ac = _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-    # batched DCT: quantize every block of every plane up front (one
-    # broadcast matmul chain per plane), then walk MCU order emitting
-    # entropy codes.  Y raster block index for MCU (my,mx) block (by,bx)
-    # is ((my*sv+by)*mcw*sh + mx*sh + bx).
-    yzz = _fdct_grid(ypad, mch * sv, mcw * sh, STD_LUMA_QUANT)
-    czz = [_fdct_grid(p, mch, mcw, STD_CHROMA_QUANT) for p in cpad]
-    w = _BitWriter()
-    preds = [0, 0, 0]
-    yrow = mcw * sh
-    for my in range(mch):
-        for mx in range(mcw):
-            # Y blocks: sh*sv per MCU, raster order within the MCU
-            for by in range(sv):
-                base = (my * sv + by) * yrow + mx * sh
-                for bx in range(sh):
-                    preds[0] = _encode_block(
-                        w, yzz[base + bx], preds[0], luma_dc, luma_ac
-                    )
-            ci_base = my * mcw + mx
-            for ci in range(2):
-                preds[1 + ci] = _encode_block(
-                    w, czz[ci][ci_base], preds[1 + ci], chroma_dc, chroma_ac
-                )
-    scan = w.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(
-        0xFFDB, bytes([0]) + bytes(int(STD_LUMA_QUANT[r, c]) for r, c in ZIGZAG)
-    )
-    out += seg(
-        0xFFDB, bytes([1]) + bytes(int(STD_CHROMA_QUANT[r, c]) for r, c in ZIGZAG)
-    )
-    hv_y = (sh << 4) | sv
-    sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
-        [1, hv_y, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    out += seg(0xFFC0, sof)
-    out += seg(0xFFC4, bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS))
-    out += seg(0xFFC4, bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS))
-    out += seg(0xFFC4, bytes([0x01]) + bytes(DC_CHROMA_BITS) + bytes(DC_CHROMA_VALS))
-    out += seg(0xFFC4, bytes([0x11]) + bytes(AC_CHROMA_BITS) + bytes(AC_CHROMA_VALS))
-    out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    out += scan
-    out += b"\xff\xd9"
-    return bytes(out)
+    frame, planes = _color_frame(0xC0, width, height, y, cb, cr, subsampling)
+    return _encode_sequential(frame, planes, _QUANTS, _TABLES)
 
 
 def jpeg_decode_color(data: bytes) -> tuple[int, int, bytes, bytes, bytes]:
     """Decode a baseline color JPEG → (width, height, y, cb, cr) planes,
-    all at FULL resolution (subsampled chroma is replicated back up).
-    Raises NotImplementedError outside the baseline YCbCr profile."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple[tuple, tuple]] = {}  # DHT specs
-    width = height = None
-    comps: list[dict] = []
-    scan_order: list[tuple[int, int, int]] = []  # (comp idx, dc id, ac id)
-    scan_data = None
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = struct.unpack_from(">H", data, pos)[0]
-        pos += 2
-        if marker == 0xFFD9:
-            break
-        (length,) = struct.unpack_from(">H", data, pos)
-        body = data[pos + 2 : pos + length]
-        pos += length
-        if marker == 0xFFDB:
-            off = 0
-            while off < len(body):
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                tbl = np.zeros((8, 8), dtype=np.int32)
-                for i, (r, c) in enumerate(ZIGZAG):
-                    tbl[r, c] = body[off + 1 + i]
-                quant[tq] = tbl
-                off += 65
-        elif marker == 0xFFC0:
-            precision, height, width, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if precision != 8:
-                raise NotImplementedError("only 8-bit precision supported")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            comps = []
-            for i in range(ncomp):  # fixed SOF header is 6 bytes (B H H B)
-                cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]
-                comps.append(
-                    {"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq}
-                )
-        elif marker == 0xFFC2:
-            # progressive color: route to the multi-scan 3-component
-            # decoder (llm/jpeg_progressive.py)
-            from my_flink_1_10_2_spark.llm.jpeg_progressive import (
-                jpeg_decode_color_progressive,
-                jpeg_decode_gray_progressive,
-            )
+    all at FULL resolution (subsampled chroma is replicated back up);
+    a grayscale stream decodes with neutral chroma and 8-bit progressive
+    streams route to llm/jpeg_progressive.py.  Raises
+    NotImplementedError outside the baseline YCbCr profile."""
+    frame = _parse(data)
+    _check_8bit(frame)
+    if frame.sof == 0xC2:
+        from my_flink_1_10_2_spark.llm.jpeg_progressive import (
+            jpeg_decode_color_progressive,
+            jpeg_decode_gray_progressive,
+        )
 
-            if body[5] == 1:  # single component — gray progressive
-                w, h, px = jpeg_decode_gray_progressive(data)
-                return w, h, px, bytes([128] * (w * h)), bytes([128] * (w * h))
-            return jpeg_decode_color_progressive(data)
-        elif marker == 0xFFC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = tuple(body[off + 1 : off + 17])
-                n = sum(bits)
-                vals = tuple(body[off + 17 : off + 17 + n])
-                huff[(tc, th)] = (bits, vals)  # spec; LUT built at scan
-                off += 17 + n
-        elif marker == 0xFFDD:
-            raise NotImplementedError(
-                "restart intervals in color scans unsupported"
-            )
-        elif marker == 0xFFDA:
-            ns = body[0]
-            if ns != len(comps):
-                raise NotImplementedError("non-interleaved color scan unsupported")
-            for i in range(ns):
-                cid, tables = body[1 + 2 * i], body[2 + 2 * i]
-                idx = next(
-                    j for j, c in enumerate(comps) if c["id"] == cid
-                )
-                scan_order.append((idx, tables >> 4, tables & 0x0F))
-            scan_data = data[pos:]
-            break
-    if width is None or scan_data is None or not comps:
-        raise ValueError("JPEG missing SOF0 or SOS")
-
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if not all(
-        (c["h"], c["v"]) in ((1, 1), (2, 1), (2, 2)) for c in comps
-    ) or (hmax, vmax) not in ((1, 1), (2, 1), (2, 2)):
+        if len(frame.comps) == 1:
+            w, h, px = jpeg_decode_gray_progressive(data)
+            return w, h, px, bytes([128] * (w * h)), bytes([128] * (w * h))
+        return jpeg_decode_color_progressive(data)
+    if frame.sof != 0xC0:
+        raise ValueError(f"not a baseline JPEG: SOF marker 0xFF{frame.sof:02X}")
+    if len(frame.comps) not in (1, 3):
+        raise NotImplementedError(f"{len(frame.comps)}-component JPEG unsupported")
+    if not all((c.h, c.v) in _SUBSAMPLING.values() for c in frame.comps) or (
+        frame.hmax, frame.vmax) not in _SUBSAMPLING.values():
         raise NotImplementedError(
             "only 4:4:4, 4:2:2 and 4:2:0 sampling factors supported"
         )
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcw, mch = -(-width // mcu_w), -(-height // mcu_h)
-    # entropy decode: LUT Huffman over the unstuffed stream, coefficients
-    # collected per component; IDCT runs batched once per plane after.
-    r = _FastBitReader(scan_data)
-    luts = {k: _build_lut(*spec) for k, spec in huff.items()}
-    order_luts = [
-        (ci, luts[(0, dc_id)], luts[(1, ac_id)],
-         comps[ci]["h"] * comps[ci]["v"])
-        for (ci, dc_id, ac_id) in scan_order
-    ]
-    preds = [0] * len(comps)
-    comp_zz: list[list[list[int]]] = [[] for _ in comps]
-    for _ in range(mch * mcw):
-        for ci, dl, al, nb in order_luts:
-            pred = preds[ci]
-            zlist = comp_zz[ci]
-            for _b in range(nb):
-                zz = [0] * 64
-                pred = _decode_block_lut(r, pred, dl, al, zz)
-                zlist.append(zz)
-            preds[ci] = pred
-    planes = []
-    for c, zlist in zip(comps, comp_zz):
-        h_, v_ = c["h"], c["v"]
-        gh, gw = mch * v_, mcw * h_
-        if h_ == 1 and v_ == 1:
-            ordered = zlist  # MCU order IS raster order
-        else:  # appended (my, mx, by, bx) -> raster (my*v+by, mx*h+bx)
-            ordered = [None] * len(zlist)
-            t = 0
-            for my in range(mch):
-                for mx in range(mcw):
-                    for by in range(v_):
-                        row = (my * v_ + by) * gw + mx * h_
-                        for bx in range(h_):
-                            ordered[row + bx] = zlist[t]
-                            t += 1
-        planes.append(_idct_grid(ordered, gh, gw, quant[c["tq"]]))
-    out_planes = []
-    for c, p in zip(comps, planes):
-        img = np.clip(np.round(p), 0, 255).astype(np.uint8)
-        if c["h"] < hmax or c["v"] < vmax:  # replicate chroma back up
-            img = np.repeat(
-                np.repeat(img, vmax // c["v"], axis=0), hmax // c["h"], axis=1
-            )
-        out_planes.append(img[:height, :width].tobytes())
-    if len(out_planes) == 1:
-        out_planes += [bytes([128] * (width * height))] * 2
-    return width, height, out_planes[0], out_planes[1], out_planes[2]
+    if frame.restart_interval:
+        raise NotImplementedError("restart intervals in color scans unsupported")
+    if any(len(s.cis) != len(frame.comps) for s in frame.scans):
+        raise NotImplementedError("non-interleaved color scan unsupported")
+    planes = [p.astype(np.uint8).tobytes() for p in _decode_sequential(frame)]
+    if len(planes) == 1:
+        planes += [bytes([128] * (frame.width * frame.height))] * 2
+    return frame.width, frame.height, planes[0], planes[1], planes[2]

@@ -1,86 +1,61 @@
-"""Progressive JPEG (grayscale, spectral selection + successive
-approximation) — closes the SOF2 gate left by the baseline codec
-(llm/jpeg.py; ITU-T T.81 Annex G is the public spec for everything
-here).
+"""Progressive JPEG (SOF2): spectral selection + successive
+approximation, grayscale at 8 or 12 bits and 8-bit YCbCr color.
 
-Scan script written by the encoder (single component):
+What is progressive's own on top of the codec core (llm/jpeg.py) is the
+scan script and the four scan kinds of ITU-T T.81 Annex G.  The encoder
+writes, for any component set:
 
-  1. DC first        Ss=0 Se=0  Ah=0 Al=1   (DPCM over dc >> 1)
-  2. AC first        Ss=1 Se=63 Ah=0 Al=1   (band coded at half
-                                             magnitude, EOB per block)
-  3. DC refinement   Ss=0 Se=0  Ah=1 Al=0   (one raw bit per block)
-  4. AC refinement   Ss=1 Se=63 Ah=1 Al=0   (newly-nonzero ±1 runs +
-                                             correction bits)
+  1. DC first        Ss=0 Se=0  Ah=0 Al=1   interleaved, DPCM over dc >> 1
+  2. AC first        Ss=1 Se=63 Ah=0 Al=1   one scan per component, band
+                                            at half magnitude, EOB per block
+  3. DC refinement   Ss=0 Se=0  Ah=1 Al=0   interleaved, one raw bit per block
+  4. AC refinement   Ss=1 Se=63 Ah=1 Al=0   one scan per component: newly
+                                            nonzero ±1 runs + correction bits
 
-The encoder emits EOB0 only (end-of-band run of exactly one block), so
-the Annex-K AC table suffices — EOBn for n>0 needs custom Huffman
-tables, which real encoders generate per-image; the DECODER handles the
-general EOBRUN form regardless, because any stream that uses it carries
-the matching DHT.  Restart intervals reset the DC predictor AND the
-end-of-band run, exactly like T.81 §G.1.2.
+AC scans are never interleaved (§G.1.1.1.1), so they walk each
+component's own block grid.  The encoder emits EOB0 only (an end-of-band
+run of exactly one block), so the Annex K tables suffice; the decoder
+handles the general EOBRUN form, which needs the DHT tables that real
+encoders write per image.  Restarts reset the DC predictors and the
+end-of-band run (§G.1.2).
 
 Point transforms follow the spec's asymmetry: DC uses the arithmetic
 right shift (floor), AC divides with truncation toward zero; the
 refinement decoder reconstructs with the OR / ±(1<<Al) moves, which
-makes both exact for either sign.
-
-The reconstruction (dequantize + IDCT + level shift + clamp) is shared
-with the baseline path, so a progressive stream of the same quantized
-coefficients decodes to the identical pixels — the property the tests
-pin."""
+makes both exact for either sign.  The quantized coefficients equal
+the sequential encoders', so a progressive stream decodes to the same
+pixels as the sequential one — the property the tests pin."""
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 
 from my_flink_1_10_2_spark.llm.jpeg import (
-    _ZIG_C,
-    _ZIG_R,
     AC_BITS,
     AC_VALS,
     DC_BITS,
     DC_VALS,
     STD_LUMA_QUANT,
-    ZIGZAG,
-    _BitReader,
     _BitWriter,
     _build_codes,
-    _build_decoder,
-    _dct_matrix,
-    _extend,
-    _magnitude,
+    _check_8bit,
+    _encode_block,
+    _encode_scan,
+    _Frame,
+    _parse,
+    _planes,
+    _quantize,
+    _scan_units,
+    _sos,
+    _write_jpeg,
 )
-
-
-def _quantized_blocks(
-    width: int, height: int, pixels, q: np.ndarray, precision: int = 8
-) -> tuple[int, int, list[list[int]]]:
-    """Forward path shared shape with the baseline encoder: padded 8x8
-    blocks → quantized zigzag coefficient lists.  ``pixels`` is raw
-    uint8 bytes at precision 8, uint16-LE bytes or an (h, w) ndarray at
-    precision 12 (level shift 2^(P-1) per T.81 §A.3.1)."""
-    if isinstance(pixels, np.ndarray):
-        img = pixels.reshape(height, width)
-    else:
-        dtype = np.uint8 if precision == 8 else np.dtype("<u2")
-        img = np.frombuffer(bytes(pixels), dtype=dtype).reshape(height, width)
-    bh, bw = -(-height // 8) * 8, -(-width // 8) * 8
-    padded = np.empty((bh, bw), dtype=np.float64)
-    padded[:height, :width] = img
-    padded[height:, :width] = img[-1:, :]
-    padded[:, width:] = padded[:, width - 1 : width]
-    m = _dct_matrix()
-    shift = float(1 << (precision - 1))
-    blocks = []
-    for by in range(0, bh, 8):
-        for bx in range(0, bw, 8):
-            block = padded[by : by + 8, bx : bx + 8] - shift
-            coeffs = m @ block @ m.T
-            qc = np.round(coeffs / q).astype(np.int64)
-            blocks.append(qc[_ZIG_R, _ZIG_C].tolist())
-    return bh // 8, bw // 8, blocks
+from my_flink_1_10_2_spark.llm.jpeg12 import AC12_BITS, AC12_VALS, DC12_BITS, DC12_VALS
+from my_flink_1_10_2_spark.llm.jpeg_color import (
+    _QUANTS,
+    _SUBSAMPLING,
+    _TABLES,
+    _color_frame,
+)
 
 
 def _trunc_shift(v: int, al: int) -> int:
@@ -100,10 +75,10 @@ def _write_ac_refine_block(w: _BitWriter, band: list[int], codes: dict) -> None:
     libjpeg keeps the invariant by running the while-ZRL drain at EVERY
     nonzero coefficient — before buffering a history coefficient's bit —
     which guarantees each buffered bit's position precedes the zero run
-    of whichever symbol eventually flushes it.  The earlier flush-all-at-
-    ZRL shape desynced on blocks with >16 zero-history zeros before a
-    newly-nonzero coefficient and a |v|>1 coefficient after the 16th
-    zero (ADVICE r7, high)."""
+    of whichever symbol eventually flushes it.  Flushing every buffered
+    bit at a ZRL instead desyncs on blocks with >16 zero-history zeros
+    before a newly-nonzero coefficient and a |v|>1 coefficient after the
+    16th zero."""
     newly = [i for i, v in enumerate(band) if v in (1, -1)]
     eob = newly[-1] if newly else -1  # last newly-nonzero position
     run = 0  # run of zero-HISTORY positions
@@ -140,6 +115,39 @@ def _write_ac_refine_block(w: _BitWriter, band: list[int], codes: dict) -> None:
             w.write(b, 1)
 
 
+def _encode_progressive(frame: _Frame, planes, quants, tables,
+                        restart_interval: int = 0, wide: bool = False) -> bytes:
+    """Quantize like the sequential encoders, then write the four-pass
+    script above over every component of ``frame``."""
+    _quantize(frame, planes, quants)
+    codes = [(_build_codes(a, b), _build_codes(c, d)) for a, b, c, d in tables]
+
+    def dc_first(w, zz, pred, c):  # DC >> 1 as a DPCM difference
+        return _encode_block(w, [zz[0] >> 1], pred, codes[c.tq][0], None)
+
+    def ac_first(w, zz, pred, c):  # the band at half magnitude, EOB0
+        band = [0] + [_trunc_shift(v, 1) for v in zz[1:]]
+        return _encode_block(w, band, 0, None, codes[c.tq][1])
+
+    def dc_refine(w, zz, pred, c):  # the bit the first pass dropped
+        w.write(zz[0] & 1, 1)
+
+    def ac_refine(w, zz, pred, c):
+        _write_ac_refine_block(w, zz[1:], codes[c.tq][1])
+
+    every = range(len(frame.comps))
+    scans = bytearray()
+    for ah, al, dc_pass, ac_pass in ((0, 1, dc_first, ac_first),
+                                     (1, 0, dc_refine, ac_refine)):
+        scans += _sos(frame, every, 0, 0, ah, al)
+        scans += _encode_scan(frame, every, restart_interval, dc_pass)
+        for ci in every:
+            scans += _sos(frame, [ci], 1, 63, ah, al)
+            scans += _encode_scan(frame, [ci], restart_interval, ac_pass)
+    return _write_jpeg(frame, quants, tables, bytes(scans), restart_interval,
+                       wide=wide)
+
+
 def jpeg_encode_gray_progressive(
     width: int,
     height: int,
@@ -164,286 +172,70 @@ def jpeg_encode_gray_progressive(
     if isinstance(pixels, np.ndarray):
         if pixels.size != width * height:
             raise ValueError(f"expected {width * height} pixels array")
+        img = pixels.reshape(height, width)
     elif len(pixels) != width * height * (1 if precision == 8 else 2):
         raise ValueError(f"expected {width * height} pixels, got {len(pixels)}")
+    else:
+        dtype = np.uint8 if precision == 8 else np.dtype("<u2")
+        img = np.frombuffer(bytes(pixels), dtype=dtype).reshape(height, width)
     q = STD_LUMA_QUANT if quant is None else np.asarray(quant, dtype=np.int32)
-    nbh, nbw, blocks = _quantized_blocks(width, height, pixels, q, precision)
     if precision == 12:
-        from my_flink_1_10_2_spark.llm.jpeg12 import (
-            AC12_BITS,
-            AC12_VALS,
-            DC12_BITS,
-            DC12_VALS,
-        )
-
-        dc_bits, dc_vals = DC12_BITS, DC12_VALS
-        ac_bits, ac_vals = AC12_BITS, AC12_VALS
+        tables = [(DC12_BITS, DC12_VALS, AC12_BITS, AC12_VALS)]
     else:
-        dc_bits, dc_vals = DC_BITS, DC_VALS
-        ac_bits, ac_vals = AC_BITS, AC_VALS
-    dc_codes = _build_codes(dc_bits, dc_vals)
-    ac_codes = _build_codes(ac_bits, ac_vals)
+        tables = [(DC_BITS, DC_VALS, AC_BITS, AC_VALS)]
+    frame = _Frame(0xC2, precision, width, height, [(1, 1, 1, 0)])
+    return _encode_progressive(
+        frame, [img], [q], tables, restart_interval, wide=precision == 12
+    )
 
-    def restart_points(w: _BitWriter, mcu: int, state: dict) -> None:
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            w.marker(0xD0 + state["n"])
-            state["n"] = (state["n"] + 1) & 7
-            state["pred"] = 0
 
-    # -- scan 1: DC first (Al=1) ---------------------------------------
-    w = _BitWriter()
-    state = {"n": 0, "pred": 0}
-    for mcu, zz in enumerate(blocks):
-        restart_points(w, mcu, state)
-        v = zz[0] >> 1  # arithmetic shift per spec
-        diff = v - state["pred"]
-        state["pred"] = v
-        size, bits = _magnitude(diff)
-        code, ln = dc_codes[size]
-        w.write(code, ln)
-        if size:
-            w.write(bits, size)
-    scan_dc_first = w.flush()
-
-    # -- scan 2: AC first, band 1..63 (Al=1), EOB0 per block ------------
-    w = _BitWriter()
-    state = {"n": 0, "pred": 0}
-    for mcu, zz in enumerate(blocks):
-        restart_points(w, mcu, state)
-        band = [_trunc_shift(zz[k], 1) for k in range(1, 64)]
-        last_nz = max((i for i, v in enumerate(band) if v), default=-1)
-        run = 0
-        for i in range(last_nz + 1):
-            v = band[i]
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_codes[0xF0]
-                w.write(code, ln)
-                run -= 16
-            size, bits = _magnitude(v)
-            code, ln = ac_codes[run * 16 + size]
-            w.write(code, ln)
-            w.write(bits, size)
-            run = 0
-        if last_nz < 62:
-            code, ln = ac_codes[0x00]  # EOB (run of one block)
-            w.write(code, ln)
-    scan_ac_first = w.flush()
-
-    # -- scan 3: DC refinement (Ah=1 -> Al=0): raw bit per block --------
-    w = _BitWriter()
-    state = {"n": 0, "pred": 0}
-    for mcu, zz in enumerate(blocks):
-        restart_points(w, mcu, state)
-        w.write(zz[0] & 1, 1)
-    scan_dc_refine = w.flush()
-
-    # -- scan 4: AC refinement (Ah=1 -> Al=0) ----------------------------
-    w = _BitWriter()
-    state = {"n": 0, "pred": 0}
-    for mcu, zz in enumerate(blocks):
-        restart_points(w, mcu, state)
-        _write_ac_refine_block(w, zz[1:64], ac_codes)
-    scan_ac_refine = w.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-        return seg(0xFFDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    if precision == 12:  # Pq=1 (16-bit entries), mandatory at 12-bit
-        out += seg(0xFFDB, bytes([0x10]) + b"".join(
-            struct.pack(">H", int(q[r, c])) for r, c in ZIGZAG))
-    else:
-        out += seg(0xFFDB, bytes([0]) + bytes(int(q[r, c]) for r, c in ZIGZAG))
-    sof = struct.pack(">BHHB", precision, height, width, 1) + bytes([1, 0x11, 0])
-    out += seg(0xFFC2, sof)  # SOF2: progressive DCT
-    out += seg(0xFFC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    out += seg(0xFFC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
-    out += sos(0, 0, 0, 1) + scan_dc_first
-    out += sos(1, 63, 0, 1) + scan_ac_first
-    out += sos(0, 0, 1, 0) + scan_dc_refine
-    out += sos(1, 63, 1, 0) + scan_ac_refine
-    out += b"\xff\xd9"
-    return bytes(out)
+def jpeg_encode_color_progressive(
+    width: int, height: int, y: bytes, cb: bytes, cr: bytes,
+    *, subsampling: str = "4:2:0",
+) -> bytes:
+    """Progressive COLOR JPEG: interleaved DC scans + per-component AC
+    scans (four + 2x2 scans total), quantized identically to the
+    baseline color encoder."""
+    frame, planes = _color_frame(0xC2, width, height, y, cb, cr, subsampling)
+    return _encode_progressive(frame, planes, _QUANTS, _TABLES)
 
 
 # -- decoder -----------------------------------------------------------------
 
 
-def _read_code(r: _BitReader, table: dict) -> int:
-    code, ln = 0, 0
-    while ln < 16:
-        code = (code << 1) | r.read(1)
-        ln += 1
-        if (ln, code) in table:
-            return table[(ln, code)]
-    raise ValueError("invalid Huffman code in scan")
-
-
-def _scan_bits(data: bytes, pos: int) -> tuple[bytes, int]:
-    """Slice the entropy-coded segment starting at ``pos``: everything
-    up to the next non-RST marker (markers inside are RSTn or stuffed
-    zero bytes)."""
-    i = pos
-    while i + 1 < len(data):
-        if data[i] == 0xFF and data[i + 1] != 0x00 and not (
-            0xD0 <= data[i + 1] <= 0xD7
-        ):
-            break
-        i += 1
-    return data[pos:i], i
-
-
-def jpeg_decode_gray_progressive(data: bytes) -> tuple[int, int, bytes]:
-    """Decode a progressive (SOF2) grayscale JPEG: accumulate the
-    coefficient array across every scan (DC/AC, first/refinement), then
-    reconstruct once at EOI.  Precision 8 returns uint8 bytes,
-    precision 12 returns uint16-LE bytes (T.81 allows both in
-    progressive mode).  Raises NotImplementedError for multi-component
-    streams (see jpeg_decode_color_progressive for 8-bit color)."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    width = height = None
-    precision = 8
-    restart_interval = 0
-    comp_tq = 0
-    coef: list[list[int]] | None = None
-    nblocks = 0
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = struct.unpack_from(">H", data, pos)[0]
-        pos += 2
-        if marker == 0xFFD9:
-            break
-        (length,) = struct.unpack_from(">H", data, pos)
-        body = data[pos + 2 : pos + length]
-        pos += length
-        if marker == 0xFFDB:
-            off = 0
-            while off < len(body):
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                tbl = np.zeros((8, 8), dtype=np.int32)
-                if pq == 1:  # 16-bit entries (12-bit sample data)
-                    vals = struct.unpack_from(">64H", body, off + 1)
-                    off += 129
-                elif pq == 0:
-                    vals = body[off + 1 : off + 65]
-                    off += 65
-                else:
-                    raise ValueError(f"bad DQT precision {pq}")
-                for i, (r, c) in enumerate(ZIGZAG):
-                    tbl[r, c] = vals[i]
-                quant[tq] = tbl
-        elif marker == 0xFFC2:
-            precision, height, width, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if precision not in (8, 12):
-                raise NotImplementedError(
-                    f"precision {precision} (8/12 supported)"
-                )
-            if ncomp != 1:
-                raise NotImplementedError(
-                    "only single-component (grayscale) progressive JPEG"
-                )
-            comp_tq = body[8]  # component's Tq (not necessarily table 0)
-            nblocks = (-(-height // 8)) * (-(-width // 8))
-            coef = [[0] * 64 for _ in range(nblocks)]
-        elif marker == 0xFFC0:
-            raise ValueError("baseline SOF0 in progressive decoder")
-        elif marker == 0xFFC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                n = sum(bits)
-                vals = list(body[off + 17 : off + 17 + n])
-                huff[(tc, th)] = _build_decoder(bits, vals)
-                off += 17 + n
-        elif marker == 0xFFDD:
-            (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xFFDA:
-            if coef is None:
-                raise ValueError("SOS before SOF2")
-            ncomp = body[0]
-            if ncomp != 1:
-                raise NotImplementedError("multi-component scan unsupported")
-            dc_id, ac_id = body[2] >> 4, body[2] & 0x0F
-            ss, se = body[3], body[4]
-            ah, al = body[5] >> 4, body[5] & 0x0F
-            scan, pos = _scan_bits(data, pos)
-            _decode_scan(
-                coef, scan, ss, se, ah, al,
-                huff.get((0, dc_id)), huff.get((1, ac_id)),
-                restart_interval,
-            )
-    if width is None or coef is None:
-        raise ValueError("JPEG missing SOF2 or scans")
-    q = quant[comp_tq]
-    m = _dct_matrix()
-    shift = float(1 << (precision - 1))
-    maxval = (1 << precision) - 1
-    bh, bw = -(-height // 8), -(-width // 8)
-    out = np.zeros((bh * 8, bw * 8), dtype=np.float64)
-    qz = q[_ZIG_R, _ZIG_C].astype(np.float64)
-    for bi, zz in enumerate(coef):
-        by, bx = divmod(bi, bw)
-        coeffs = np.zeros((8, 8), dtype=np.float64)
-        coeffs[_ZIG_R, _ZIG_C] = np.asarray(zz, dtype=np.float64) * qz
-        out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = m.T @ coeffs @ m + shift
-    dtype = np.uint8 if precision == 8 else np.dtype("<u2")
-    pixels = np.clip(np.round(out[:height, :width]), 0, maxval).astype(dtype)
-    return width, height, pixels.tobytes()
-
-
-def _ac_first_block(r, zz, ss, se, al, ac_table, eobrun) -> int:
+def _ac_first_block(r, zz, ss, se, al, lut, eobrun) -> int:
     """One block of an AC-first scan; returns the updated EOBRUN."""
     if eobrun:
         return eobrun - 1
     k = ss
     while k <= se:
-        rs = _read_code(r, ac_table)
+        rs = r.decode(lut)
         run, size = rs >> 4, rs & 0x0F
         if size == 0:
             if run != 15:
-                eobrun = (1 << run) - 1
-                if run:
-                    eobrun += r.read(run)
-                break
+                return (1 << run) - 1 + r.read(run)
             k += 16  # ZRL
             continue
         k += run
         if k > se:
             raise ValueError("AC run past band end")
-        zz[k] = _extend(r.read(size), size) << al
+        zz[k] = r.receive(size) << al
         k += 1
-    return eobrun
+    return 0
 
 
-def _ac_refine_block(r, zz, ss, se, al, ac_table, eobrun) -> int:
+def _ac_refine_block(r, zz, ss, se, al, lut, eobrun) -> int:
     """One block of an AC-refinement scan; returns the updated EOBRUN."""
     p1, m1 = 1 << al, -1 << al
     k = ss
     if eobrun == 0:
         while k <= se:
-            rs = _read_code(r, ac_table)
+            rs = r.decode(lut)
             run, size = rs >> 4, rs & 0x0F
             newval = 0
             if size == 0:
                 if run != 15:
-                    eobrun = 1 << run
-                    if run:
-                        eobrun += r.read(run)
+                    eobrun = (1 << run) + r.read(run)
                     break
                 # ZRL: pass 16 zero-history positions
             else:
@@ -474,401 +266,70 @@ def _ac_refine_block(r, zz, ss, se, al, ac_table, eobrun) -> int:
     return eobrun
 
 
-def _decode_scan(
-    coef: list[list[int]],
-    scan: bytes,
-    ss: int, se: int, ah: int, al: int,
-    dc_table: dict | None,
-    ac_table: dict | None,
-    restart_interval: int,
-) -> None:
-    r = _BitReader(scan)
-    pred = 0
-    eobrun = 0
-    rst_n = 0
-    p1 = 1 << al
-    for mcu in range(len(coef)):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            r.restart(rst_n)
-            rst_n = (rst_n + 1) & 7
-            pred, eobrun = 0, 0
-        zz = coef[mcu]
-        if ss == 0:  # DC scan (se must be 0 per spec)
-            if ah == 0:  # first
-                size = _read_code(r, dc_table)
-                diff = _extend(r.read(size), size) if size else 0
-                pred += diff
-                zz[0] = pred << al
-            else:  # refinement: one raw bit
-                if r.read(1):
-                    zz[0] |= p1
-        elif ah == 0:
-            eobrun = _ac_first_block(r, zz, ss, se, al, ac_table, eobrun)
-        else:
-            eobrun = _ac_refine_block(r, zz, ss, se, al, ac_table, eobrun)
+def _decode_progressive(frame: _Frame) -> list:
+    """Accumulate every scan's coefficients (DC/AC, first/refinement)
+    into the frame's blocks, then reconstruct once → ``_planes``."""
+    for scan in frame.scans:
+        ss, se, ah, al = scan.ss, scan.se, scan.ah, scan.al
+        if ss and len(scan.cis) > 1:
+            raise ValueError("interleaved progressive AC scan")
+        for r, fresh, ci, zz in _scan_units(frame, scan):
+            if fresh:
+                preds, eobrun = [0] * len(frame.comps), 0
+            if ss == 0 and ah == 0:  # DC first (Se must be 0 per spec)
+                preds[ci] += r.receive(r.decode(scan.tables[ci][0]))
+                zz[0] = preds[ci] << al
+            elif ss == 0:  # DC refinement: one raw bit
+                zz[0] |= r.read(1) << al
+            elif ah == 0:
+                eobrun = _ac_first_block(r, zz, ss, se, al, scan.tables[ci][1], eobrun)
+            else:
+                eobrun = _ac_refine_block(r, zz, ss, se, al, scan.tables[ci][1], eobrun)
+    return _planes(frame)
 
 
-# ---------------------------------------------------------------------------
-# Progressive COLOR (SOF2, 3 components): T.81 requires progressive AC
-# scans to be NON-interleaved (one component per scan); DC scans may
-# interleave all components in MCU order.  Scan script: interleaved DC
-# first (Al=1), per-component AC first (Al=1), interleaved DC refine,
-# per-component AC refine.  Coefficients live on the MCU-padded per-
-# component block grids; non-interleaved scans walk each component's OWN
-# ceil(dim/8) grid (the spec's data-unit order), which can be narrower
-# than the padded grid — the decoder maps between the two.
-
-from my_flink_1_10_2_spark.llm.jpeg_color import (
-    DC_CHROMA_BITS,
-    DC_CHROMA_VALS,
-    AC_CHROMA_BITS,
-    AC_CHROMA_VALS,
-    STD_CHROMA_QUANT,
-    _pad_plane,
-)
+def _progressive_frame(data: bytes) -> _Frame:
+    frame = _parse(data)
+    if frame.sof != 0xC2:
+        raise ValueError(f"not a progressive (SOF2) JPEG: SOF marker 0xFF{frame.sof:02X}")
+    return frame
 
 
-class _Comp:
-    __slots__ = ("h", "v", "tq", "cw", "ch", "gw", "gh", "blocks", "cid")
-
-    def __init__(self, cid, h, v, tq, width, height, hmax, vmax, mcw, mch):
-        self.cid, self.h, self.v, self.tq = cid, h, v, tq
-        comp_w = -(-width * h // hmax)
-        comp_h = -(-height * v // vmax)
-        self.cw, self.ch = -(-comp_w // 8), -(-comp_h // 8)  # own grid
-        self.gw, self.gh = mcw * h, mch * v  # MCU-padded grid
-        self.blocks = [[0] * 64 for _ in range(self.gw * self.gh)]
-
-
-def _color_quantized_components(width, height, y, cb, cr, sh, sv):
-    import numpy as np
-
-    yp = np.frombuffer(y, dtype=np.uint8).reshape(height, width).astype(np.float64)
-    chroma = []
-    for raw in (cb, cr):
-        p = np.frombuffer(raw, dtype=np.uint8).reshape(height, width).astype(
-            np.float64
-        )
-        if sh == 2 and sv == 2:
-            p = _pad_plane(p, -(-height // 2) * 2, -(-width // 2) * 2)
-            p = (p[0::2, 0::2] + p[0::2, 1::2] + p[1::2, 0::2] + p[1::2, 1::2]) / 4.0
-        elif sh == 2:
-            p = _pad_plane(p, height, -(-width // 2) * 2)
-            p = (p[:, 0::2] + p[:, 1::2]) / 2.0
-        chroma.append(p)
-    mcu_w, mcu_h = 8 * sh, 8 * sv
-    mcw, mch = -(-width // mcu_w), -(-height // mcu_h)
-    comps = [
-        _Comp(1, sh, sv, 0, width, height, sh, sv, mcw, mch),
-        _Comp(2, 1, 1, 1, width, height, sh, sv, mcw, mch),
-        _Comp(3, 1, 1, 1, width, height, sh, sv, mcw, mch),
-    ]
-    m = _dct_matrix()
-    import numpy as _np
-
-    for comp, plane, q in (
-        (comps[0], yp, STD_LUMA_QUANT),
-        (comps[1], chroma[0], STD_CHROMA_QUANT),
-        (comps[2], chroma[1], STD_CHROMA_QUANT),
-    ):
-        padded = _pad_plane(plane, comp.gh * 8, comp.gw * 8)
-        for gy in range(comp.gh):
-            for gx in range(comp.gw):
-                block = padded[gy * 8 : gy * 8 + 8, gx * 8 : gx * 8 + 8] - 128.0
-                qc = _np.round((m @ block @ m.T) / q).astype(_np.int64)
-                comp.blocks[gy * comp.gw + gx] = qc[_ZIG_R, _ZIG_C].tolist()
-    return comps, mcw, mch
-
-
-def _mcu_block_seq(comps, mcw, mch):
-    """(comp index, block index) pairs in interleaved MCU order."""
-    seq = []
-    for my in range(mch):
-        for mx in range(mcw):
-            for ci, c in enumerate(comps):
-                for by in range(c.v):
-                    for bx in range(c.h):
-                        seq.append(
-                            (ci, (my * c.v + by) * c.gw + (mx * c.h + bx))
-                        )
-    return seq
-
-
-def _own_grid_seq(c):
-    """Block indexes of one component's own ceil(dim/8) grid, raster
-    order, mapped into the padded grid."""
-    return [gy * c.gw + gx for gy in range(c.ch) for gx in range(c.cw)]
-
-
-def jpeg_encode_color_progressive(
-    width: int, height: int, y: bytes, cb: bytes, cr: bytes,
-    *, subsampling: str = "4:2:0",
-) -> bytes:
-    """Progressive COLOR JPEG: interleaved DC scans + per-component AC
-    scans (four + 2x2 scans total), quantized identically to the
-    baseline color encoder."""
-    for name, p in (("y", y), ("cb", cb), ("cr", cr)):
-        if len(p) != width * height:
-            raise ValueError(f"plane {name}: expected {width * height} bytes")
-    factors = {"4:4:4": (1, 1), "4:2:2": (2, 1), "4:2:0": (2, 2)}
-    if subsampling not in factors:
-        raise ValueError("subsampling must be '4:2:0', '4:2:2' or '4:4:4'")
-    sh, sv = factors[subsampling]
-    comps, mcw, mch = _color_quantized_components(
-        width, height, y, cb, cr, sh, sv
-    )
-    luma_dc = _build_codes(DC_BITS, DC_VALS)
-    chroma_dc = _build_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    luma_ac = _build_codes(AC_BITS, AC_VALS)
-    chroma_ac = _build_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-    dc_tabs = [luma_dc, chroma_dc, chroma_dc]
-    ac_tabs = [luma_ac, chroma_ac, chroma_ac]
-    seq = _mcu_block_seq(comps, mcw, mch)
-
-    # interleaved DC first (Al=1)
-    w = _BitWriter()
-    preds = [0, 0, 0]
-    for ci, bi in seq:
-        v = comps[ci].blocks[bi][0] >> 1
-        diff = v - preds[ci]
-        preds[ci] = v
-        size, bits = _magnitude(diff)
-        code, ln = dc_tabs[ci][size]
-        w.write(code, ln)
-        if size:
-            w.write(bits, size)
-    scan_dc_first = w.flush()
-
-    # interleaved DC refine
-    w = _BitWriter()
-    for ci, bi in seq:
-        w.write(comps[ci].blocks[bi][0] & 1, 1)
-    scan_dc_refine = w.flush()
-
-    def ac_first(c, codes):
-        w = _BitWriter()
-        for bi in _own_grid_seq(c):
-            band = [_trunc_shift(v, 1) for v in c.blocks[bi][1:64]]
-            last_nz = max((i for i, v in enumerate(band) if v), default=-1)
-            run = 0
-            for i in range(last_nz + 1):
-                v = band[i]
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, ln = codes[0xF0]
-                    w.write(code, ln)
-                    run -= 16
-                size, bits = _magnitude(v)
-                code, ln = codes[run * 16 + size]
-                w.write(code, ln)
-                w.write(bits, size)
-                run = 0
-            if last_nz < 62:
-                code, ln = codes[0x00]
-                w.write(code, ln)
-        return w.flush()
-
-    def ac_refine(c, codes):
-        w = _BitWriter()
-        for bi in _own_grid_seq(c):
-            _write_ac_refine_block(w, c.blocks[bi][1:64], codes)
-        return w.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xFFDB, bytes([0]) + bytes(int(STD_LUMA_QUANT[r, c]) for r, c in ZIGZAG))
-    out += seg(0xFFDB, bytes([1]) + bytes(int(STD_CHROMA_QUANT[r, c]) for r, c in ZIGZAG))
-    sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
-        [1, (sh << 4) | sv, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    out += seg(0xFFC2, sof)
-    out += seg(0xFFC4, bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS))
-    out += seg(0xFFC4, bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS))
-    out += seg(0xFFC4, bytes([0x01]) + bytes(DC_CHROMA_BITS) + bytes(DC_CHROMA_VALS))
-    out += seg(0xFFC4, bytes([0x11]) + bytes(AC_CHROMA_BITS) + bytes(AC_CHROMA_VALS))
-    # scan 1: interleaved DC first (component tables 0/1/1)
-    out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01]))
-    out += scan_dc_first
-    # scans 2-4: per-component AC first
-    for cid, tab in ((1, 0x00), (2, 0x11), (3, 0x11)):
-        out += seg(0xFFDA, bytes([1, cid, tab, 1, 63, 0x01]))
-        out += ac_first(comps[cid - 1], ac_tabs[cid - 1])
-    # scan 5: interleaved DC refine
-    out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10]))
-    out += scan_dc_refine
-    # scans 6-8: per-component AC refine
-    for cid, tab in ((1, 0x00), (2, 0x11), (3, 0x11)):
-        out += seg(0xFFDA, bytes([1, cid, tab, 1, 63, 0x10]))
-        out += ac_refine(comps[cid - 1], ac_tabs[cid - 1])
-    out += b"\xff\xd9"
-    return bytes(out)
+def jpeg_decode_gray_progressive(data: bytes) -> tuple[int, int, bytes]:
+    """Decode a progressive (SOF2) grayscale JPEG.  Precision 8 returns
+    uint8 bytes, precision 12 returns uint16-LE bytes (T.81 allows both
+    in progressive mode).  Raises NotImplementedError for multi-component
+    streams (see jpeg_decode_color_progressive for 8-bit color)."""
+    frame = _progressive_frame(data)
+    if frame.precision not in (8, 12):
+        raise NotImplementedError(f"precision {frame.precision} (8/12 supported)")
+    if len(frame.comps) != 1:
+        raise NotImplementedError("only single-component (grayscale) progressive JPEG")
+    if any(len(s.cis) != 1 for s in frame.scans):
+        raise NotImplementedError("multi-component scan unsupported")
+    (plane,) = _decode_progressive(frame)
+    dtype = np.uint8 if frame.precision == 8 else np.dtype("<u2")
+    return frame.width, frame.height, plane.astype(dtype).tobytes()
 
 
 def jpeg_decode_color_progressive(data: bytes) -> tuple[int, int, bytes, bytes, bytes]:
     """Decode a progressive COLOR (SOF2, 3-component) JPEG →
     (width, height, y, cb, cr) full-resolution planes.  Interleaved DC
-    scans walk MCU order with per-component predictors; AC scans are
-    per-component over that component's own block grid (the spec's
-    non-interleaved data-unit order), which may be narrower than the
+    scans walk MCU order with per-component predictors; AC scans walk
+    each component's own block grid, which may be narrower than the
     MCU-padded grid the coefficients live on."""
-    import numpy as _np
-
-    from my_flink_1_10_2_spark.llm.jpeg_color import _idct_block
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    width = height = None
-    comps: list[_Comp] = []
-    mcw = mch = 0
-    while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = struct.unpack_from(">H", data, pos)[0]
-        pos += 2
-        if marker == 0xFFD9:
-            break
-        (length,) = struct.unpack_from(">H", data, pos)
-        body = data[pos + 2 : pos + length]
-        pos += length
-        if marker == 0xFFDB:
-            off = 0
-            while off < len(body):
-                pq, tq = body[off] >> 4, body[off] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                tbl = np.zeros((8, 8), dtype=np.int32)
-                for i, (rr, cc) in enumerate(ZIGZAG):
-                    tbl[rr, cc] = body[off + 1 + i]
-                quant[tq] = tbl
-                off += 65
-        elif marker == 0xFFC2:
-            precision, height, width, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if precision != 8:
-                raise NotImplementedError("only 8-bit precision supported")
-            if ncomp != 3:
-                raise NotImplementedError(
-                    "this decoder is the 3-component path; grayscale "
-                    "progressive: jpeg_decode_gray_progressive"
-                )
-            raw = [
-                (body[6 + 3 * i], body[7 + 3 * i] >> 4,
-                 body[7 + 3 * i] & 0x0F, body[8 + 3 * i])
-                for i in range(ncomp)
-            ]
-            hmax = max(h for _, h, _, _ in raw)
-            vmax = max(v for _, _, v, _ in raw)
-            if not all(
-                (h, v) in ((1, 1), (2, 1), (2, 2)) for _, h, v, _ in raw
-            ):
-                raise NotImplementedError("unsupported sampling factors")
-            mcw = -(-width // (8 * hmax))
-            mch = -(-height // (8 * vmax))
-            comps = [
-                _Comp(cid, h, v, tq, width, height, hmax, vmax, mcw, mch)
-                for cid, h, v, tq in raw
-            ]
-        elif marker == 0xFFC4:
-            off = 0
-            while off < len(body):
-                tc, th = body[off] >> 4, body[off] & 0x0F
-                bits = list(body[off + 1 : off + 17])
-                n = sum(bits)
-                vals = list(body[off + 17 : off + 17 + n])
-                huff[(tc, th)] = _build_decoder(bits, vals)
-                off += 17 + n
-        elif marker == 0xFFDD:
-            raise NotImplementedError(
-                "restart intervals in progressive color scans unsupported"
-            )
-        elif marker == 0xFFDA:
-            if not comps:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            sel = [
-                (body[1 + 2 * i], body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0x0F)
-                for i in range(ns)
-            ]
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
-            scan, pos = _scan_bits(data, pos)
-            r = _BitReader(scan)
-            if ns > 1:  # interleaved — DC scans only, per spec
-                if ss != 0 or se != 0:
-                    raise ValueError("interleaved progressive AC scan")
-                order = []
-                for cid, dc_id, _ac in sel:
-                    ci = next(
-                        i for i, c in enumerate(comps) if c.cid == cid
-                    )
-                    order.append((ci, dc_id))
-                preds = [0] * len(comps)
-                for my in range(mch):
-                    for mx in range(mcw):
-                        for ci, dc_id in order:
-                            c = comps[ci]
-                            for by in range(c.v):
-                                for bx in range(c.h):
-                                    bi = (my * c.v + by) * c.gw + (mx * c.h + bx)
-                                    zz = c.blocks[bi]
-                                    if ah == 0:
-                                        size = _read_code(r, huff[(0, dc_id)])
-                                        diff = (
-                                            _extend(r.read(size), size)
-                                            if size else 0
-                                        )
-                                        preds[ci] += diff
-                                        zz[0] = preds[ci] << al
-                                    else:
-                                        if r.read(1):
-                                            zz[0] |= 1 << al
-            else:  # single-component scan (AC, or non-interleaved DC)
-                cid, dc_id, ac_id = sel[0]
-                c = next(cc for cc in comps if cc.cid == cid)
-                eobrun = 0
-                pred = 0
-                for bi in _own_grid_seq(c):
-                    zz = c.blocks[bi]
-                    if ss == 0:
-                        if ah == 0:
-                            size = _read_code(r, huff[(0, dc_id)])
-                            diff = _extend(r.read(size), size) if size else 0
-                            pred += diff
-                            zz[0] = pred << al
-                        elif r.read(1):
-                            zz[0] |= 1 << al
-                    elif ah == 0:
-                        eobrun = _ac_first_block(
-                            r, zz, ss, se, al, huff[(1, ac_id)], eobrun
-                        )
-                    else:
-                        eobrun = _ac_refine_block(
-                            r, zz, ss, se, al, huff[(1, ac_id)], eobrun
-                        )
-    if width is None or not comps:
-        raise ValueError("JPEG missing SOF2 or scans")
-    hmax = max(c.h for c in comps)
-    vmax = max(c.v for c in comps)
-    out_planes = []
-    for c in comps:
-        q = quant[c.tq]
-        plane = _np.zeros((c.gh * 8, c.gw * 8), dtype=_np.float64)
-        for gy in range(c.gh):
-            for gx in range(c.gw):
-                plane[gy * 8 : gy * 8 + 8, gx * 8 : gx * 8 + 8] = _idct_block(
-                    c.blocks[gy * c.gw + gx], q
-                )
-        img = _np.clip(_np.round(plane), 0, 255).astype(_np.uint8)
-        if c.h < hmax or c.v < vmax:
-            img = _np.repeat(
-                _np.repeat(img, vmax // c.v, axis=0), hmax // c.h, axis=1
-            )
-        out_planes.append(img[:height, :width].tobytes())
-    return width, height, out_planes[0], out_planes[1], out_planes[2]
+    frame = _progressive_frame(data)
+    _check_8bit(frame)
+    if len(frame.comps) != 3:
+        raise NotImplementedError(
+            "this decoder is the 3-component path; grayscale "
+            "progressive: jpeg_decode_gray_progressive"
+        )
+    if not all((c.h, c.v) in _SUBSAMPLING.values() for c in frame.comps):
+        raise NotImplementedError("unsupported sampling factors")
+    if frame.restart_interval:
+        raise NotImplementedError(
+            "restart intervals in progressive color scans unsupported"
+        )
+    y, cb, cr = (p.astype(np.uint8).tobytes() for p in _decode_progressive(frame))
+    return frame.width, frame.height, y, cb, cr

@@ -32,7 +32,6 @@ def write_jsonl_zst_shards(
     key_col: str = "doc_id",
     cols: list[str] | None = None,
     samples_per_shard: int = 500,
-    level: int | None = None,
 ) -> DataFrame:
     """Write sorted contiguous ``part-NNNNN.jsonl.zst`` shards; returns
     the shard manifest (shard_id, path, n_records, first_key, last_key,

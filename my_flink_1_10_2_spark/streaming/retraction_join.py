@@ -236,28 +236,3 @@ class RetractionJoin:
     def cleanup(self) -> None:
         if self._owns_state:
             shutil.rmtree(self.state_dir, ignore_errors=True)
-
-
-def apply_changelog(rows: list[dict]) -> list[tuple]:
-    """Materialize a +I/-D changelog into the current multiset of rows
-    (what a retract-aware sink like the reference's RetractStreamTableSink
-    would hold)."""
-    from collections import Counter
-
-    acc: Counter = Counter()
-    for r in rows:
-        d = dict(r)
-        change = d.pop(CHANGE_COL)
-        key = tuple(sorted(d.items(), key=lambda kv: kv[0]))
-        if change == "+I":
-            acc[key] += 1
-        elif change == "-D":
-            acc[key] -= 1
-        else:
-            raise ValueError(f"unknown change flag {change}")
-    out: list[tuple] = []
-    for key, n in acc.items():
-        if n < 0:
-            raise AssertionError(f"negative multiplicity for {key}")
-        out.extend([key] * n)
-    return sorted(out)

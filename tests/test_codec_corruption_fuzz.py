@@ -262,6 +262,64 @@ def test_jpeg12_corruption():
         validate(out)
 
 
+def _jpeg_case(kind):
+    """(decoder, 16x16 payload, expected plane count) for one JPEG
+    decoder the corruption fuzz covers next to the baseline gray one."""
+    from my_flink_1_10_2_spark.llm import jpeg, jpeg_color, jpeg_progressive
+
+    rng = random.Random(1113)
+    y, cb, cr = (bytes(rng.randrange(256) for _ in range(256)) for _ in range(3))
+    if kind == "color":
+        return jpeg_color.jpeg_decode_color, jpeg_color.jpeg_encode_color(16, 16, y, cb, cr), 3
+    if kind == "gray_progressive":
+        return (jpeg_progressive.jpeg_decode_gray_progressive,
+                jpeg_progressive.jpeg_encode_gray_progressive(16, 16, y), 1)
+    if kind == "color_progressive":
+        return (jpeg_progressive.jpeg_decode_color_progressive,
+                jpeg_progressive.jpeg_encode_color_progressive(16, 16, y, cb, cr), 3)
+    assert kind == "gray_restart"
+    return jpeg.jpeg_decode_gray, jpeg.jpeg_encode_gray(16, 16, y, restart_interval=2), 1
+
+
+JPEG_KINDS = ("color", "gray_progressive", "color_progressive", "gray_restart")
+
+
+@pytest.mark.parametrize("kind", JPEG_KINDS)
+def test_jpeg_decoder_corruption(kind):
+    decode, payload, nplanes = _jpeg_case(kind)
+    rng = random.Random(f"jpeg-{kind}")
+
+    # a 12-bit progressive gray frame returns two bytes per sample
+    widths = (1, 2) if kind == "gray_progressive" else (1,)
+
+    def validate(out):
+        w, h, *planes = out
+        assert len(planes) == nplanes
+        assert all(len(p) in [w * h * n for n in widths] for p in planes)
+
+    for mut in _mutations(rng, payload, 150):
+        _check(decode, mut, validate)
+
+
+@pytest.mark.parametrize("kind", ["color", "color_progressive"])
+def test_jpeg_scan_naming_unknown_component_is_value_error(kind):
+    decode, payload, _ = _jpeg_case(kind)
+    data = bytearray(payload)
+    sos = data.index(b"\xff\xda")
+    data[sos + 5] = 9  # first component selector: no component 9 in the SOF
+    with pytest.raises(ValueError):
+        decode(bytes(data))
+
+
+def test_jpeg_progressive_missing_huffman_table_is_value_error():
+    decode, payload, _ = _jpeg_case("gray_progressive")
+    data = bytearray(payload)
+    dht = data.index(b"\xff\xc4")
+    data[dht + 1] = 0xC5  # the DC table segment becomes a second frame header
+    with pytest.raises(ValueError):
+        decode(bytes(data))
+
+
 def test_tfrecord_corruption():
     rng = random.Random(1109)
     import io as _io

@@ -338,10 +338,10 @@ def _refine_entropy_roundtrip(full_band):
     from my_flink_1_10_2_spark.llm.jpeg import (
         AC_BITS,
         AC_VALS,
-        _BitReader,
         _BitWriter,
         _build_codes,
-        _build_decoder,
+        _build_lut,
+        _FastBitReader,
     )
     from my_flink_1_10_2_spark.llm.jpeg_progressive import (
         _ac_refine_block,
@@ -350,11 +350,11 @@ def _refine_entropy_roundtrip(full_band):
     )
 
     codes = _build_codes(AC_BITS, AC_VALS)
-    table = _build_decoder(list(AC_BITS), list(AC_VALS))
+    table = _build_lut(tuple(AC_BITS), tuple(AC_VALS))
     w = _BitWriter()
     _write_ac_refine_block(w, list(full_band), codes)
     zz = [0] + [_trunc_shift(v, 1) << 1 for v in full_band]
-    eobrun = _ac_refine_block(_BitReader(w.flush()), zz, 1, 63, 0, table, 0)
+    eobrun = _ac_refine_block(_FastBitReader(w.flush()), zz, 1, 63, 0, table, 0)
     assert eobrun == 0
     return zz[1:]
 

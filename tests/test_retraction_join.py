@@ -20,10 +20,8 @@ from pyspark.sql.types import (
 )
 
 from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-from my_flink_1_10_2_spark.streaming.retraction_join import (
-    CHANGE_COL,
-    apply_changelog,
-)
+from my_flink_1_10_2_spark.streaming.retraction_join import CHANGE_COL
+from my_flink_1_10_2_spark.testing.changelog import apply_changelog
 
 L_SCHEMA = StructType(
     [StructField("l_key", LongType()), StructField("l_val", StringType())]

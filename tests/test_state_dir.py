@@ -11,11 +11,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from my_flink_1_10_2_spark.streaming.retraction_join import (
-    RetractionJoin,
-    apply_changelog,
-)
+from my_flink_1_10_2_spark.streaming.retraction_join import RetractionJoin
 from my_flink_1_10_2_spark.streaming.state_dir import StateDir
+from my_flink_1_10_2_spark.testing.changelog import apply_changelog
 
 
 def _batch(spark, i):

@@ -17,6 +17,13 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 os.chdir(_REPO)
 
+# Spark's console progress bar would share lines with this script's
+# progress and summary lines (it writes \r-joined bars to the same log).
+os.environ["PYSPARK_SUBMIT_ARGS"] = (
+    "--conf spark.ui.showConsoleProgress=false "
+    + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+)
+
 import duckdb
 import numpy as np, pandas as pd
 import __spark_entry__ as e
