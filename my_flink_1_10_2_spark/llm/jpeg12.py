@@ -74,7 +74,7 @@ def jpeg12_encode(
     if any(p.min() < 0 or p.max() > maxval for p in planes):
         raise ValueError(f"samples out of 0..{maxval} range")
     q = np.asarray(quant if quant is not None else STD_LUMA_QUANT,
-                   dtype=np.float64)
+                   dtype=np.int32)
     frame = _Frame(0xC1, precision, w, h, [(c + 1, 1, 1, 0) for c in range(ncomp)])
     # Adobe APP14, transform 0: components are direct CMYK
     app = _seg(0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, 0)) if ncomp == 4 else b""

@@ -1,9 +1,10 @@
 """Driver-graded queries for streaming-only operators.
 
-These run a real Structured Streaming job (availableNow file replay)
-inside the query function and return the materialized result, so the
-driver's DuckDB oracle can grade operators whose semantics are streaming
-(changelogs, retractions) against the equivalent batch SQL.
+These run a real Structured Streaming job inside the query function and
+return the materialized result, so a DuckDB oracle can grade operators
+whose semantics are streaming (changelogs, retractions) against the
+equivalent batch SQL.  Ordered replays go through
+``StreamExecutionEnvironment.from_waves``, one micro-batch per wave.
 
 Reference: StreamingJoinOperator.java:37 (unbounded join + retractions),
 RetractStreamTableSink semantics (BaseRow.java:40-47).
@@ -17,6 +18,8 @@ import tempfile
 from pyspark.sql import functions as F
 
 from my_flink_1_10_2_spark.queries import read, register
+from my_flink_1_10_2_spark.sources.streaming import memory_sink, streaming_file_sink
+from my_flink_1_10_2_spark.streaming.stream import Stream, StreamExecutionEnvironment
 
 _WEEK_US = 7 * 86_400 * 1_000_000
 
@@ -35,6 +38,68 @@ def _epoch_wave(ts_col: str = "ts"):
 
 def _distinct_waves(src) -> list[int]:
     return sorted(r[0] for r in src.select("__wave").distinct().collect())
+
+
+def _week_waves(src, weeks=None):
+    """``src`` split on its ``__wave`` column, one DataFrame per epoch
+    week of ``weeks`` (default: every week in ``src``) in event-time
+    order, ``__wave`` dropped."""
+    return [
+        src.where(F.col("__wave") == w).drop("__wave")
+        for w in (weeks if weeks is not None else _distinct_waves(src))
+    ]
+
+
+_FAR_US = 1_720_000_000_000_000  # an event time past every fixture row
+
+
+def _click_purchase_streams(spark, sf_dir, work, sentinel=False):
+    """Clicks and purchases among the first 3000 events, each side
+    replayed over the same epoch weeks (a side may get empty waves),
+    watermarked at 1 hour and its columns prefixed ``c_`` / ``p_``.
+    ``sentinel`` ends each side with a far-future row: it advances that
+    side's watermark far enough to close every pending window on the
+    OTHER side."""
+    src = (
+        read(spark, sf_dir, "events")
+        .where("event_id < 3000")
+        .where(F.col("event_type").isin("click", "purchase"))
+        .select(
+            "event_id",
+            "user_id",
+            F.col("ts").cast("timestamp").alias("ts"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("te"),
+            "event_type",
+            _epoch_wave("ts").alias("__wave"),
+        )
+    )
+    env = StreamExecutionEnvironment(spark)
+    weeks = _distinct_waves(src)
+    sides = []
+    for side in ("click", "purchase"):
+        waves = _week_waves(src.where(F.col("event_type") == side).drop("event_type"), weeks)
+        if sentinel:
+            waves.append(
+                spark.createDataFrame(
+                    [(-1, -1, _FAR_US)], "event_id long, user_id long, te long"
+                ).withColumn("ts", F.timestamp_micros("te"))
+            )
+        s = env.from_waves(waves, f"{work}/replay_{side}").with_watermark("ts", "1 hour")
+        sides.append(
+            s.df.select(*[F.col(c).alias(f"{side[0]}_{c}") for c in ("event_id", "user_id", "ts", "te")])
+        )
+    return sides
+
+
+_TS_BOUNDS = ["2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2024-02-01"]
+
+
+def _ts_waves(src):
+    """``src`` split into the four fixed ``ts`` ranges of ``_TS_BOUNDS``."""
+    return [
+        src.where((F.col("ts") >= lo) & (F.col("ts") < hi))
+        for lo, hi in zip(_TS_BOUNDS, _TS_BOUNDS[1:])
+    ]
 
 
 @register(
@@ -60,7 +125,6 @@ def q_retract_join_materialized(spark, sf_dir):
     table is groupBy(all columns).sum(weight) with the multiset expanded
     back by explode(sequence(1, n)) — one hash shuffle on the output
     key, never a byte through the driver."""
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
     from my_flink_1_10_2_spark.streaming.retraction_join import CHANGE_COL
 
     left = (
@@ -160,8 +224,6 @@ def q_stream_iterate(spark, sf_dir):
     bitwise.  All loop work is distributed DataFrame ops; exits append to
     parquet, never the driver.
     """
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     src = (
         read(spark, sf_dir, "events")
         .filter(F.col("event_id") % 200 == 0)
@@ -217,8 +279,6 @@ def q_lookup_join_stream(spark, sf_dir):
     shuffle join instead of an executor OOM.  Batch exits append to
     parquet — nothing through the driver.
     """
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     probe = (
         read(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 100 < 2)
@@ -283,8 +343,6 @@ def q_side_output_split(spark, sf_dir):
     one-pass guarantee).  Values aggregate in integer 1e-4 units so the
     final rollup is exact under any partial-agg order.
     """
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     src = (
         read(spark, sf_dir, "events")
         .filter(F.col("event_id") % 20 == 0)
@@ -353,8 +411,6 @@ def q_connected_streams_comap(spark, sf_dir):
     The Spark spelling tags each side, unions by name, and applies the
     per-side expression in one pass — a single streaming DAG, one sink,
     no state (integer cents keep the oracle exact)."""
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     credits = (
         read(spark, sf_dir, "events")
         .filter(F.col("event_id") % 40 == 0)
@@ -412,9 +468,6 @@ def q_streaming_file_sink(spark, sf_dir):
     downstream Spark job would use, so a torn/uncommitted part file can
     never leak into the result — the reference's exactly-once file
     guarantee, graded by the oracle."""
-    from my_flink_1_10_2_spark.sources.streaming import streaming_file_sink
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     src = (
         read(spark, sf_dir, "events")
         .filter(F.col("event_id") % 10 == 0)
@@ -473,8 +526,6 @@ def q_broadcast_state_threshold(spark, sf_dir):
 
     The control side stays O(#event_types) — broadcast-small by
     contract; the data side never shuffles (per-batch filter only)."""
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     events = read(spark, sf_dir, "events")
     control = (
         events.groupBy("event_type")
@@ -543,8 +594,6 @@ def q_queryable_state(spark, sf_dir):
 
     The snapshot read is the whole state table (complete-mode sink);
     point lookups against it are tested in tests/test_streaming.py."""
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     src = (
         read(spark, sf_dir, "events")
         .filter(F.col("event_id") % 5 == 0)
@@ -705,7 +754,6 @@ def q_upsert_stream_materialized(spark, sf_dir):
         apply_upsert_batch,
         collapse_batch,
     )
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     log = (
         read(spark, sf_dir, "orders")
@@ -723,40 +771,12 @@ def q_upsert_stream_materialized(spark, sf_dir):
     try:
         # split by version so replay order == version order
         bounds = [0, 3000, 6000, 9000, 12000, 10**9]
-        for i in range(len(bounds) - 1):
-            (
-                log.where(
-                    (F.col("version") >= bounds[i])
-                    & (F.col("version") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{work}/log/b{i:03d}")
-            )
-        # one flat dir of one file per range, named in replay order
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-
-        _os.makedirs(f"{work}/replay")
-        import time as _time
-
-        base_ts = _time.time() - 3600
-        seq = 0
-        for i in range(len(bounds) - 1):
-            parts = _glob.glob(f"{work}/log/b{i:03d}/part-*.parquet")
-            for j, p in enumerate(sorted(parts)):
-                dst = f"{work}/replay/part-{i:03d}-{j}.parquet"
-                _shutil.copy(p, dst)
-                # strictly increasing mtimes: the file source orders
-                # micro-batches by modification time, and copy mtimes can
-                # collide within one clock tick
-                seq += 1
-                _os.utime(dst, (base_ts + seq, base_ts + seq))
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(
-            f"{work}/replay", log.schema, max_files_per_trigger=1
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            [
+                log.where((F.col("version") >= lo) & (F.col("version") < hi))
+                for lo, hi in zip(bounds, bounds[1:])
+            ],
+            f"{work}/replay",
         )
         snap_dirs = [f"{work}/snap_a", f"{work}/snap_b"]
         state = {"cur": None, "flip": 0}
@@ -776,12 +796,7 @@ def q_upsert_stream_materialized(spark, sf_dir):
             new_snap.write.mode("overwrite").parquet(target)
             state["cur"], state["flip"] = target, 1 - state["flip"]
 
-        q = stream.df.writeStream.foreachBatch(sink).trigger(
-            availableNow=True
-        ).option(
-            "checkpointLocation", f"{work}/ckpt"
-        ).start()
-        q.awaitTermination()
+        stream.for_each_batch(sink, f"{work}/ckpt")
         result = spark.read.parquet(state["cur"])
         return result.select("cust", "version", "price").localCheckpoint(
             eager=True
@@ -813,8 +828,6 @@ def q_topn_stream_materialized(spark, sf_dir):
     last emission) must equal the batch row_number top-3.  The order
     key folds the value and the unique event id into one bigint, so the
     top-3 set is replay-order-independent and tie-free."""
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     src = (
         read(spark, sf_dir, "events")
         .where(F.col("user_id") % 7 == 0)
@@ -845,10 +858,7 @@ def q_topn_stream_materialized(spark, sf_dir):
                 .parquet(out_dir)
             )
 
-        q = stream.df.writeStream.foreachBatch(sink).trigger(
-            availableNow=True
-        ).option("checkpointLocation", f"{work}/ckpt").start()
-        q.awaitTermination()
+        stream.for_each_batch(sink, f"{work}/ckpt")
         em = spark.read.parquet(out_dir)
         from pyspark.sql import Window
 
@@ -880,7 +890,6 @@ def q_broadcast_state_filter(spark, sf_dir):
     data micro-batch filters against the state and appends survivors to
     a distributed sink.  The materialized union of batches must equal
     the static filter."""
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
     from my_flink_1_10_2_spark.streaming.stream import BroadcastConnectedStream
 
     data = (
@@ -941,45 +950,14 @@ def q_late_side_output(spark, sf_dir):
     the late side sink instead of silently dropping.  The materialized
     side output must equal the closed-form rule (straggler AND ts <
     max-on-time-ts - 1h)."""
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     src = read(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     straggler = F.col("event_id") % 13 == 0
     work = tempfile.mkdtemp(prefix="fl_late_q_")
     try:
-        import os as _os
-        import time as _time
-
-        bounds = ["2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2024-02-01"]
-        _os.makedirs(f"{work}/replay")
-        base_ts = _time.time() - 3600
-        for i in range(len(bounds) - 1):
-            (
-                src.where(
-                    ~straggler
-                    & (F.col("ts") >= bounds[i])
-                    & (F.col("ts") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{work}/b{i}")
-            )
-        src.where(straggler).coalesce(1).write.mode("overwrite").parquet(
-            f"{work}/b{len(bounds) - 1}"
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            _ts_waves(src.where(~straggler)) + [src.where(straggler)],
+            f"{work}/replay",
         )
-        import glob as _glob
-        import shutil as _shutil
-
-        seq = 0
-        for i in range(len(bounds)):
-            for p in sorted(_glob.glob(f"{work}/b{i}/part-*.parquet")):
-                seq += 1
-                dst = f"{work}/replay/part-{seq:03d}.parquet"
-                _shutil.copy(p, dst)
-                _os.utime(dst, (base_ts + seq, base_ts + seq))
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(f"{work}/replay", src.schema, max_files_per_trigger=1)
         late_dir, main_dir = f"{work}/late", f"{work}/main"
 
         def on_time(batch_df, _bid):
@@ -1018,53 +996,19 @@ def q_punctuated_watermark_split(spark, sf_dir):
     rows at or before the highest announced watermark route to the late
     side.  Materialized late side == closed-form rule (straggler AND
     ts <= max marker ts among on-time rows)."""
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
     src = read(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
     straggler = F.col("event_id") % 17 == 0
     work = tempfile.mkdtemp(prefix="fl_punct_q_")
     try:
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-        import time as _time
-
-        bounds = ["2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2024-02-01"]
-        _os.makedirs(f"{work}/replay")
-        base_ts = _time.time() - 3600
-        for i in range(len(bounds) - 1):
-            (
-                src.where(
-                    ~straggler
-                    & (F.col("ts") >= bounds[i])
-                    & (F.col("ts") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{work}/b{i}")
-            )
-        src.where(straggler).coalesce(1).write.mode("overwrite").parquet(
-            f"{work}/b{len(bounds) - 1}"
-        )
-        seq = 0
-        for i in range(len(bounds)):
-            for p in sorted(_glob.glob(f"{work}/b{i}/part-*.parquet")):
-                seq += 1
-                dst = f"{work}/replay/part-{seq:03d}.parquet"
-                _shutil.copy(p, dst)
-                _os.utime(dst, (base_ts + seq, base_ts + seq))
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(
-            f"{work}/replay", src.schema, max_files_per_trigger=1
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            _ts_waves(src.where(~straggler)) + [src.where(straggler)],
+            f"{work}/replay",
         )
         marked = stream.df.withColumn(
             "__wm", F.when(F.col("event_type") == "purchase", F.col("ts"))
         )
-        from my_flink_1_10_2_spark.streaming.stream import Stream as _Stream
-
         late_dir, main_dir = f"{work}/late", f"{work}/main"
 
         def on_time(batch_df, _bid):
@@ -1074,7 +1018,7 @@ def q_punctuated_watermark_split(spark, sf_dir):
             if not batch_df.isEmpty():
                 batch_df.write.mode("append").parquet(late_dir)
 
-        _Stream(marked).for_each_batch_with_punctuated_watermarks(
+        Stream(marked).for_each_batch_with_punctuated_watermarks(
             "__wm", "ts", on_time, late, checkpoint=f"{work}/ckpt"
         )
         out = spark.read.parquet(late_dir)
@@ -1100,39 +1044,15 @@ def q_rowtime_sort_order(spark, sf_dir):
     emission sequence (within-emission row_number + running offset) must
     equal the batch row_number over the full sorted relation."""
     from pyspark.sql import Window
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     src = read(spark, sf_dir, "events").where(F.col("user_id") % 11 == 0).select(
         "event_id", "user_id", "ts"
     )
     work = tempfile.mkdtemp(prefix="fl_rtsort_q_")
     try:
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-        import time as _time
-
-        bounds = ["2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2024-02-01"]
-        _os.makedirs(f"{work}/replay")
-        base_ts = _time.time() - 3600
-        seq_file = 0
-        for i in range(len(bounds) - 1):
-            (
-                src.where(
-                    (F.col("ts") >= bounds[i]) & (F.col("ts") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{work}/b{i}")
-            )
-            for p in sorted(_glob.glob(f"{work}/b{i}/part-*.parquet")):
-                seq_file += 1
-                dst = f"{work}/replay/part-{seq_file:03d}.parquet"
-                _shutil.copy(p, dst)
-                _os.utime(dst, (base_ts + seq_file, base_ts + seq_file))
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(f"{work}/replay", src.schema, max_files_per_trigger=1)
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            _ts_waves(src), f"{work}/replay"
+        )
         out_dir = f"{work}/out"
         offset = {"n": 0}
 
@@ -1179,7 +1099,6 @@ def q_coprocess_shared_state(spark, sf_dir):
     change the answer — exactly the property shared state must have."""
     import pandas as _pd
 
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
     from my_flink_1_10_2_spark.streaming.stream import ConnectedStreams
 
     base = read(spark, sf_dir, "events").where(F.col("user_id") % 5 == 0)
@@ -1304,7 +1223,6 @@ def q_txn_sink_roundtrip(spark, sf_dir):
     from my_flink_1_10_2_spark.sources.streaming import (
         TransactionalForeachBatchSink,
     )
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     src = (
         read(spark, sf_dir, "events")
@@ -1327,13 +1245,7 @@ def q_txn_sink_roundtrip(spark, sf_dir):
             sink(batch_df, bid)
             sink(batch_df, bid)  # replayed transaction — must be a no-op
 
-        q = (
-            stream.df.writeStream.foreachBatch(deliver_twice)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .start()
-        )
-        q.awaitTermination()
+        stream.for_each_batch(deliver_twice, f"{work}/ckpt")
         return spark.read.parquet(f"{out_dir}/b*").localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -1405,12 +1317,6 @@ def q_process_timer_alerts(spark, sf_dir):
     timer FIRES its onTimer branch (hasTimedOut → final alert).  Output:
     one 'gap' row per >1-day silence between consecutive events, one
     'final' row per key from the timer path."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
     src = (
         read(spark, sf_dir, "events")
         .where("event_id < 3000")
@@ -1424,40 +1330,18 @@ def q_process_timer_alerts(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_ptimer_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        waves = _distinct_waves(src)
-        n_waves = len(waves)
-        for i, w in enumerate(waves):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
         # two sentinel batches: the first jumps the watermark past every
         # possible (last_ts + GAP) timer, the second gives Spark a batch
         # in which those now-expired timers fire
-        for i, far_us in enumerate(
-            (1_720_000_000_000_000, 1_720_000_001_000_000), start=n_waves
-        ):
-            sent = spark.createDataFrame(
+        sentinels = [
+            spark.createDataFrame(
                 [(-1, -1, far_us)], "user_id long, event_id long, __te long"
-            ).select(
-                "user_id",
-                "event_id",
-                F.timestamp_micros(F.col("__te")).alias("ts"),
-                "__te",
-            )
-            stage = f"{work}/stage/b{i}"
-            sent.coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
+            ).withColumn("ts", F.timestamp_micros("__te"))
+            for far_us in (_FAR_US, _FAR_US + 1_000_000_000)
+        ]
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            _week_waves(src) + sentinels, f"{work}/replay"
+        )
         gap_us = _PT_GAP_US
 
         def fn(key, pdfs, state):
@@ -1487,14 +1371,6 @@ def q_process_timer_alerts(spark, sf_dir):
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
-        from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(
-            f"{work}/replay",
-            "user_id long, event_id long, ts timestamp, __te long",
-            max_files_per_trigger=1,
-        )
         keyed = stream.assign_timestamps_and_watermarks("ts", "1 hour").key_by(
             "user_id"
         )
@@ -1505,15 +1381,9 @@ def q_process_timer_alerts(spark, sf_dir):
             timeout="EventTimeTimeout",
         )
         sink_dir = f"{work}/out"
-        q = (
-            out.df.writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        streaming_file_sink(
+            out.df, sink_dir, f"{work}/ckpt", available_now=True
+        ).awaitTermination()
         res = (
             spark.read.parquet(sink_dir)
             .where("user_id >= 0")
@@ -1521,7 +1391,7 @@ def q_process_timer_alerts(spark, sf_dir):
         )
         return res.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1544,56 +1414,27 @@ def q_stream_dedup_materialized(spark, sf_dir):
     a duplicate arriving waves later must be suppressed by state, not
     by within-batch logic.  The materialized survivor set must equal
     the batch keep-first formulation exactly."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
     docs = read(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("digest")
     )
     work = tempfile.mkdtemp(prefix="fl_sdedup_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
         bounds = [0, 100, 200, 300, 400, 10**9]
-        for i in range(len(bounds) - 1):
-            stage = f"{work}/stage/b{i}"
-            (
-                docs.where(
-                    (F.col("doc_id") >= bounds[i])
-                    & (F.col("doc_id") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
-        stream = (
-            spark.readStream.schema("doc_id long, digest string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{work}/replay")
-            .dropDuplicates(["digest"])  # keyed state across micro-batches
-        )
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            [
+                docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+                for lo, hi in zip(bounds, bounds[1:])
+            ],
+            f"{work}/replay",
+        ).drop_duplicates(["digest"])  # keyed state across micro-batches
         sink = f"{work}/out"
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        streaming_file_sink(
+            stream.df, sink, f"{work}/ckpt", available_now=True
+        ).awaitTermination()
         res = spark.read.parquet(sink).select("doc_id", "digest")
         return res.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1678,8 +1519,6 @@ def q_window_fold_path(spark, sf_dir):
     just its final aggregate.  The fold runs per (key, window) group in
     an Arrow batch; ordering uses a zero-padded (ts, event_id) sort key
     so ties are impossible."""
-    from my_flink_1_10_2_spark.streaming.stream import Stream
-
     src = (
         read(spark, sf_dir, "events")
         .where("event_id < 4000")
@@ -1849,12 +1688,6 @@ def q_stream_cep_materialized(spark, sf_dir):
     only because the buffer carries partial matches across
     micro-batches — and the materialized match set must equal the
     batch lead-based formulation exactly."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
     from my_flink_1_10_2_spark.operators.cep import (
         Pattern,
         match_recognize_stream,
@@ -1877,18 +1710,6 @@ def q_stream_cep_materialized(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_scep_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        for i, w in enumerate(_distinct_waves(src)):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
         pattern = (
             Pattern.begin("a", lambda r, c: True)
             .next("b", lambda r, c: r["v"] < c["a"][-1]["v"])
@@ -1899,11 +1720,11 @@ def q_stream_cep_materialized(spark, sf_dir):
             "start_id": lambda m: int(m["a"][0]["event_id"]),
             "a_val_e4": lambda m: int(m["a"][0]["v"]),
         }
-        stream = spark.readStream.schema(
-            "user_id long, event_id long, v long, __ord string"
-        ).option("maxFilesPerTrigger", 1).parquet(f"{work}/replay")
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            _week_waves(src), f"{work}/replay"
+        )
         result = match_recognize_stream(
-            stream,
+            stream.df,
             partition_by=["user_id"],
             ts_col="__ord",
             pattern=pattern,
@@ -1913,19 +1734,13 @@ def q_stream_cep_materialized(spark, sf_dir):
             after_match="skip_to_next_row",
         )
         sink = f"{work}/out"
-        q = (
-            result.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        streaming_file_sink(
+            result, sink, f"{work}/ckpt", available_now=True
+        ).awaitTermination()
         res = spark.read.parquet(sink).select("user_id", "start_id", "a_val_e4")
         return res.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1946,8 +1761,6 @@ def q_socket_stream_rollup(spark, sf_dir):
     import threading
     import time
     import uuid
-
-    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     lines = [
         r.event_type
@@ -1978,12 +1791,7 @@ def q_socket_stream_rollup(spark, sf_dir):
     env = StreamExecutionEnvironment(spark)
     stream = env.socket_text_stream("127.0.0.1", port)
     name = f"sockq_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
+    q = memory_sink(stream.df, name)
     try:
         deadline = time.monotonic() + 120
         while time.monotonic() < deadline:
@@ -2050,12 +1858,6 @@ def q_state_ttl_counter(spark, sf_dir):
     post-access counter and whether this access found its state
     expired — the full state-lifecycle history, not just final
     values."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
     src = (
         read(spark, sf_dir, "events")
         .where("event_id < 3000")
@@ -2069,18 +1871,9 @@ def q_state_ttl_counter(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_ttl_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        for i, w in enumerate(_distinct_waves(src)):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            _week_waves(src), f"{work}/replay"
+        )
         ttl_us = _TTL_US
 
         def fn(key, pdfs, state):
@@ -2111,14 +1904,6 @@ def q_state_ttl_counter(spark, sf_dir):
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
-        from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(
-            f"{work}/replay",
-            "user_id long, event_id long, ts timestamp, __te long",
-            max_files_per_trigger=1,
-        )
         keyed = stream.assign_timestamps_and_watermarks("ts", "1 hour").key_by(
             "user_id"
         )
@@ -2128,21 +1913,15 @@ def q_state_ttl_counter(spark, sf_dir):
             "user_id long, event_id long, te long, count_after long, was_reset int",
         )
         sink_dir = f"{work}/out"
-        q = (
-            out.df.writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        streaming_file_sink(
+            out.df, sink_dir, f"{work}/ckpt", available_now=True
+        ).awaitTermination()
         res = spark.read.parquet(sink_dir).select(
             "user_id", "event_id", "te", "count_after", "was_reset"
         )
         return res.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2176,75 +1955,11 @@ def q_stream_semi_anti_materialized(spark, sf_dir):
     arrive — a far-future sentinel wave flushes the tail, exactly the
     reference's watermark-driven state cleanup.  The materialized sets
     must equal the batch EXISTS / NOT EXISTS formulations."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
-    src = (
-        read(spark, sf_dir, "events")
-        .where("event_id < 3000")
-        .where(F.col("event_type").isin("click", "purchase"))
-        .select(
-            "event_id",
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("te"),
-            "event_type",
-            _epoch_wave("ts").alias("__wave"),
-        )
-    )
     work = tempfile.mkdtemp(prefix="fl_semianti_")
     try:
-        base = _time.time() - 3600
-        far_us = 1_720_000_000_000_000
-        waves = _distinct_waves(src)
-        n_waves = len(waves)
-        for side in ("click", "purchase"):
-            _os.makedirs(f"{work}/replay_{side}")
-            for i, w in enumerate(waves):
-                stage = f"{work}/stage/{side}{i}"
-                (
-                    src.where(
-                        (F.col("event_type") == side) & (F.col("__wave") == w)
-                    )
-                    .drop("__wave", "event_type")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage)
-                )
-                (part,) = _glob.glob(f"{stage}/part-*.parquet")
-                dst = f"{work}/replay_{side}/part-{i:03d}.parquet"
-                _shutil.copy(part, dst)
-                _os.utime(dst, (base + i, base + i))
-            # sentinel wave: advances this side's watermark far enough to
-            # close every pending anti-join window on the OTHER side
-            sent = spark.createDataFrame(
-                [(-1, -1, far_us)], "event_id long, user_id long, te long"
-            ).select("event_id", "user_id", F.timestamp_micros("te").alias("ts"), "te")
-            stage = f"{work}/stage/{side}_sent"
-            sent.coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay_{side}/part-{n_waves:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + n_waves, base + n_waves))
-
-        schema = "event_id long, user_id long, ts timestamp, te long"
-
-        def mk(side, alias):
-            s = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{work}/replay_{side}")
-                .withWatermark("ts", "1 hour")
-            )
-            return s.select(*[F.col(c).alias(f"{alias}_{c}") for c in
-                              ("event_id", "user_id", "ts", "te")])
-
+        left, right = _click_purchase_streams(spark, sf_dir, work, sentinel=True)
         results = {}
         for kind, how in (("semi", "leftSemi"), ("anti", "leftOuter")):
-            left, right = mk("click", "c"), mk("purchase", "p")
             joined = left.join(
                 right,
                 F.expr(
@@ -2263,15 +1978,9 @@ def q_stream_semi_anti_materialized(spark, sf_dir):
                     "c_event_id", "c_user_id", "c_ts", "c_te"
                 )
             sink = f"{work}/out_{kind}"
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", f"{work}/ckpt_{kind}")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            streaming_file_sink(
+                joined, sink, f"{work}/ckpt_{kind}", available_now=True
+            ).awaitTermination()
             results[kind] = (
                 spark.read.parquet(sink)
                 .where("c_event_id >= 0")
@@ -2285,7 +1994,7 @@ def q_stream_semi_anti_materialized(spark, sf_dir):
         out = results["semi"].unionAll(results["anti"])
         return out.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2315,12 +2024,6 @@ def q_stream_kmv_merged(spark, sf_dir):
     definition), and the final merged estimate must equal the one-shot
     batch sketch over all events BITWISE — merge order cannot matter.
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
     from my_flink_1_10_2_spark.operators.sketch import _norm_hash
 
     K = 64
@@ -2331,18 +2034,6 @@ def q_stream_kmv_merged(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_skmv_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        for i, w in enumerate(_distinct_waves(src)):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
         sketch: list[float] = []  # the carried k-minimum values
 
         def merge_batch(batch_df, batch_id):
@@ -2357,18 +2048,9 @@ def q_stream_kmv_merged(spark, sf_dir):
             ]
             sketch = sorted(set(sketch) | set(part))[:K]
 
-        stream = (
-            spark.readStream.schema("event_id long, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{work}/replay")
-        )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        StreamExecutionEnvironment(spark).from_waves(
+            _week_waves(src), f"{work}/replay"
+        ).for_each_batch(merge_batch, f"{work}/ckpt")
         if len(sketch) < K:
             est = float(len(sketch))
         else:
@@ -2377,7 +2059,7 @@ def q_stream_kmv_merged(spark, sf_dir):
             [(est, len(sketch))], "estimate double, sketch_size bigint"
         )
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2412,63 +2094,11 @@ def q_stream_interval_join_pairs(spark, sf_dir):
     necessarily PAST the join bound — eviction only discards state whose
     matches are provably impossible, which is exactly the reference's
     cleanup-timer argument."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
-    src = (
-        read(spark, sf_dir, "events")
-        .where("event_id < 3000")
-        .where(F.col("event_type").isin("click", "purchase"))
-        .select(
-            "event_id",
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("te"),
-            "event_type",
-            _epoch_wave("ts").alias("__wave"),
-        )
-    )
     work = tempfile.mkdtemp(prefix="fl_ivjoin_")
     try:
-        base = _time.time() - 3600
-        waves = _distinct_waves(src)
-        for side in ("click", "purchase"):
-            _os.makedirs(f"{work}/replay_{side}")
-            for i, w in enumerate(waves):
-                stage = f"{work}/stage/{side}{i}"
-                (
-                    src.where(
-                        (F.col("event_type") == side) & (F.col("__wave") == w)
-                    )
-                    .drop("__wave", "event_type")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage)
-                )
-                (part,) = _glob.glob(f"{stage}/part-*.parquet")
-                dst = f"{work}/replay_{side}/part-{i:03d}.parquet"
-                _shutil.copy(part, dst)
-                _os.utime(dst, (base + i, base + i))
-
-        schema = "event_id long, user_id long, ts timestamp, te long"
-
-        def mk(side, alias):
-            s = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{work}/replay_{side}")
-                .withWatermark("ts", "1 hour")
-            )
-            return s.select(
-                *[F.col(c).alias(f"{alias}_{c}") for c in
-                  ("event_id", "user_id", "ts", "te")]
-            )
-
-        joined = mk("click", "c").join(
-            mk("purchase", "p"),
+        clicks, purchases = _click_purchase_streams(spark, sf_dir, work)
+        joined = clicks.join(
+            purchases,
             F.expr(
                 "c_user_id = p_user_id AND "
                 "p_ts >= c_ts AND p_te - c_te <= 86400000000"
@@ -2476,15 +2106,9 @@ def q_stream_interval_join_pairs(spark, sf_dir):
             "inner",
         )
         sink = f"{work}/out"
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        streaming_file_sink(
+            joined, sink, f"{work}/ckpt", available_now=True
+        ).awaitTermination()
         out = (
             spark.read.parquet(sink)
             .select(
@@ -2497,7 +2121,7 @@ def q_stream_interval_join_pairs(spark, sf_dir):
         )
         return out.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2548,12 +2172,6 @@ def q_stream_session_windows(spark, sf_dir):
     Losslessness: waves are event-time ordered, so no row is ever behind
     the 1-hour watermark and a session only finalizes when every event
     that could merge into it is provably seen."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
     src = (
         read(spark, sf_dir, "events")
         .where("event_id < 3000")
@@ -2567,38 +2185,15 @@ def q_stream_session_windows(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_sesswin_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        waves = _distinct_waves(src)
-        for i, w in enumerate(waves):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
         # sentinel: watermark past every possible session end
-        far_us = 1_720_000_000_000_000
         sent = spark.createDataFrame(
-            [(-1, far_us, 0)], "user_id long, te long, v_e4 long"
-        ).select("user_id", F.timestamp_micros("te").alias("ts"), "te", "v_e4")
-        stage = f"{work}/stage/sent"
-        sent.coalesce(1).write.mode("overwrite").parquet(stage)
-        (part,) = _glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{work}/replay/part-{len(waves):03d}.parquet"
-        _shutil.copy(part, dst)
-        _os.utime(dst, (base + len(waves), base + len(waves)))
-
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp, te long, v_e4 long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{work}/replay")
-            .withWatermark("ts", "1 hour")
-        )
+            [(-1, _FAR_US, 0)], "user_id long, te long, v_e4 long"
+        ).withColumn("ts", F.timestamp_micros("te"))
+        stream = StreamExecutionEnvironment(spark).from_waves(
+            _week_waves(src) + [sent], f"{work}/replay"
+        ).with_watermark("ts", "1 hour")
         agg = (
-            stream.groupBy("user_id", F.session_window("ts", "6 hours"))
+            stream.df.groupBy("user_id", F.session_window("ts", "6 hours"))
             .agg(
                 F.min("te").alias("start_te"),
                 F.max("te").alias("end_te"),
@@ -2607,15 +2202,9 @@ def q_stream_session_windows(spark, sf_dir):
             )
         )
         sink = f"{work}/out"
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        streaming_file_sink(
+            agg, sink, f"{work}/ckpt", available_now=True
+        ).awaitTermination()
         out = (
             spark.read.parquet(sink)
             .where("user_id >= 0")
@@ -2634,4 +2223,4 @@ def q_stream_session_windows(spark, sf_dir):
         )
         return out.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)

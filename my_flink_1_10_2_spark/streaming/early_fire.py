@@ -40,14 +40,20 @@ double-appending (the round-4 driver-environment failure mode).
 
 from __future__ import annotations
 
-import glob
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from my_flink_1_10_2_spark.streaming.stream import StreamExecutionEnvironment
+
 END_OF_INPUT_WM = 9_000_000_000_000_000_000  # +inf watermark (bounded drain)
+
+
+def _replay(spark: SparkSession, src: DataFrame, batch_col: str, batches, work: str):
+    """One micro-batch per ``batch_col`` value, in ``batches`` order."""
+    waves = [src.where(F.col(batch_col) == b) for b in batches]
+    return StreamExecutionEnvironment(spark).from_waves(waves, f"{work}/replay")
 
 
 def continuous_early_fire_log(
@@ -99,21 +105,7 @@ def continuous_early_fire_log(
     n_batches = len(batches)
     batch_index = {b: i for i, b in enumerate(batches)}
 
-    # one flat file per batch, strictly increasing mtimes — the file
-    # source orders micro-batches by modification time
-    import shutil
-
-    os.makedirs(f"{work}/replay", exist_ok=True)
-    base_ts = time.time() - 3600
-    for i, b in enumerate(batches):
-        stage = f"{work}/stage/b{i:03d}"
-        src.where(F.col(batch_col) == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        (part,) = glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{work}/replay/part-{i:03d}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (base_ts + i, base_ts + i))
+    stream = _replay(spark, src, batch_col, batches, work)
 
     acc_dir, log_dir = f"{work}/acc", f"{work}/log"
     from my_flink_1_10_2_spark.streaming.state_dir import StateDir
@@ -226,16 +218,7 @@ def continuous_early_fire_log(
                 open(marker, "w").close()
                 raise RuntimeError("injected mid-stream crash (test)")
 
-    q = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/replay")
-        .writeStream.foreachBatch(handler)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    stream.for_each_batch(handler, f"{work}/ckpt")
 
     from pyspark.sql import Window
 
@@ -279,21 +262,7 @@ def allowed_lateness_update_log(
     batches = sorted(r[0] for r in src.select(batch_col).distinct().collect())
     n_batches = len(batches)
     batch_index = {b: i for i, b in enumerate(batches)}
-
-    import glob
-    import shutil
-
-    os.makedirs(f"{work}/replay", exist_ok=True)
-    base_ts = time.time() - 3600
-    for i, b in enumerate(batches):
-        stage = f"{work}/stage/b{i:03d}"
-        src.where(F.col(batch_col) == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        (part,) = glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{work}/replay/part-{i:03d}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (base_ts + i, base_ts + i))
+    stream = _replay(spark, src, batch_col, batches, work)
 
     acc_dir, log_dir = f"{work}/acc", f"{work}/log"
     win_end = F.col(ts_col) - F.col(ts_col) % size_us + size_us
@@ -378,16 +347,7 @@ def allowed_lateness_update_log(
         if _test_retry:  # simulate at-least-once redelivery of every batch
             on_batch(batch_df, bid)
 
-    q = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/replay")
-        .writeStream.foreachBatch(handler)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    stream.for_each_batch(handler, f"{work}/ckpt")
 
     from pyspark.sql import Window
 

@@ -42,6 +42,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from my_flink_1_10_2_spark.streaming.stream import Stream
+
 CHANGE_COL = "__change"
 _SIDE_COL = "__side"
 
@@ -221,17 +223,7 @@ class RetractionJoin:
             finally:
                 changelog.unpersist()
 
-        writer = (
-            union.writeStream.foreachBatch(handle).trigger(availableNow=True)
-        )
-        ckpt = checkpoint or tempfile.mkdtemp(prefix="fl_join_ckpt_")
-        try:
-            q = writer.option("checkpointLocation", ckpt).start()
-            q.awaitTermination()
-        finally:
-            if checkpoint is None:
-                shutil.rmtree(ckpt, ignore_errors=True)
-        return q
+        return Stream(union).for_each_batch(handle, checkpoint)
 
     def cleanup(self) -> None:
         if self._owns_state:

@@ -3,6 +3,8 @@
 Reference surface → Spark mapping (SURVEY §2):
   - env.addSource / readTextFile / socketTextStream
       (StreamExecutionEnvironment.java:1517,1062,1396) → ``readStream``
+  - env.fromCollection / fromElements (bounded, ordered)
+      → ``from_waves``: one file per wave, one wave per micro-batch
   - DataStream.map/flatMap/filter (DataStream.java:588,632,731)
       → select/where (declarative, codegen'd)
   - assignTimestampsAndWatermarks (BoundedOutOfOrdernessTimestampExtractor.java:32)
@@ -25,14 +27,18 @@ deltas (SURVEY §7.2 step 6).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
+import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from my_flink_1_10_2_spark.sources import streaming as _sources
 
 
 def _col(e):
@@ -46,30 +52,47 @@ class StreamExecutionEnvironment:
         self.spark = spark
 
     def from_rate(self, rows_per_second: int = 100) -> "Stream":
-        return Stream(
-            self.spark.readStream.format("rate")
-            .option("rowsPerSecond", rows_per_second)
-            .load()
-        )
+        return Stream(_sources.rate_source(self.spark, rows_per_second))
 
     def from_files(self, path: str, schema, fmt: str = "parquet", max_files_per_trigger: int = 1) -> "Stream":
         """File-based source with per-trigger pacing — the test harness's
         deterministic replacement for a Kafka source."""
-        reader = (
-            self.spark.readStream.format(fmt)
-            .schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-        )
-        return Stream(reader.load(path))
+        return Stream(_sources.file_stream_source(self.spark, path, schema, fmt, max_files_per_trigger))
+
+    def from_waves(self, waves: list[DataFrame], replay_dir: str) -> "Stream":
+        """Bounded, ordered replay (ref: StreamExecutionEnvironment
+        .fromCollection/fromElements): each DataFrame of ``waves`` arrives
+        as one micro-batch, in list order, so the order of the waves — not
+        the event times in them — fixes how the watermark advances.
+
+        Wave ``i`` is staged outside ``replay_dir`` and moved in as the one
+        file ``part-{i:05d}.parquet`` with mtime ``base + i``: the file
+        source orders micro-batches by modification time, and copy mtimes
+        can collide within one clock tick, so they are set strictly
+        increasing; ``maxFilesPerTrigger=1`` then hands one file to each
+        trigger.  Staging again into the same ``replay_dir`` overwrites the
+        same names, so a restart from a checkpoint sees no new files.  The
+        stream takes the schema of ``waves[0]``; a wave that does not write
+        exactly one file raises ValueError."""
+        os.makedirs(replay_dir, exist_ok=True)
+        stage = tempfile.mkdtemp(prefix="fl_waves_")
+        base = time.time() - 3600
+        try:
+            for i, wave in enumerate(waves):
+                wave.coalesce(1).write.parquet(f"{stage}/{i}")
+                parts = glob.glob(f"{stage}/{i}/part-*.parquet")
+                if len(parts) != 1:
+                    raise ValueError(f"wave {i} wrote {len(parts)} files, not one")
+                dst = os.path.join(replay_dir, f"part-{i:05d}.parquet")
+                shutil.move(parts[0], dst)
+                os.utime(dst, (base + i, base + i))
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        return self.from_files(replay_dir, waves[0].schema, max_files_per_trigger=1)
 
     def socket_text_stream(self, host: str, port: int) -> "Stream":
         """(ref: StreamExecutionEnvironment.socketTextStream:1396)"""
-        return Stream(
-            self.spark.readStream.format("socket")
-            .option("host", host)
-            .option("port", port)
-            .load()
-        )
+        return Stream(_sources.socket_text_stream(self.spark, host, port))
 
 
 class Stream:
@@ -305,6 +328,33 @@ class Stream:
                 shutil.rmtree(checkpoint, ignore_errors=True)
         return q
 
+    def _for_each_batch_split(self, is_late, mark_col, on_time_fn, late_fn, checkpoint):
+        """The one late-split loop: per micro-batch, rows for which
+        ``is_late(mark)`` holds go to ``late_fn``, the rest to
+        ``on_time_fn``; then the mark rises to the batch's max
+        ``mark_col``.  Before the first mark nothing is late.  The mark is
+        one value in the foreachBatch closure (driver-side, O(1) state)."""
+        mark = None
+
+        def handle(batch_df: DataFrame, batch_id: int) -> None:
+            nonlocal mark
+            batch_df = batch_df.persist()
+            try:
+                if mark is not None:
+                    late = is_late(mark)
+                    late_fn(batch_df.filter(late), batch_id)
+                    on_time_fn(batch_df.filter(~late), batch_id)
+                else:
+                    late_fn(batch_df.limit(0), batch_id)
+                    on_time_fn(batch_df, batch_id)
+                mx = batch_df.agg(F.max(mark_col).alias("m")).first()["m"]
+                if mx is not None and (mark is None or mx > mark):
+                    mark = mx
+            finally:
+                batch_df.unpersist()
+
+        return self.for_each_batch(handle, checkpoint)
+
     def for_each_batch_with_late_split(
         self,
         ts_col: str,
@@ -320,34 +370,15 @@ class Stream:
         dropping; everything else flows to ``on_time_fn``.
 
         The high-water mark is the running max event time across batches
-        — the same quantity Spark's watermark tracks — held in the
-        foreachBatch closure (driver-side, one timestamp: O(1) state).
+        — the same quantity Spark's watermark tracks.
         """
         import datetime as _dt
 
-        hwm: dict[str, object] = {"max_ts": None}
         delta = _dt.timedelta(seconds=allowed_lateness_seconds)
-
-        def handle(batch_df: DataFrame, batch_id: int) -> None:
-            prev = hwm["max_ts"]
-            batch_df = batch_df.persist()
-            try:
-                if prev is not None:
-                    threshold = prev - delta
-                    late = batch_df.filter(F.col(ts_col) < F.lit(threshold))
-                    on_time = batch_df.filter(F.col(ts_col) >= F.lit(threshold))
-                else:
-                    late = batch_df.limit(0)
-                    on_time = batch_df
-                late_fn(late, batch_id)
-                on_time_fn(on_time, batch_id)
-                mx = batch_df.agg(F.max(ts_col).alias("m")).first()["m"]
-                if mx is not None and (prev is None or mx > prev):
-                    hwm["max_ts"] = mx
-            finally:
-                batch_df.unpersist()
-
-        return self.for_each_batch(handle, checkpoint)
+        return self._for_each_batch_split(
+            lambda hwm: F.col(ts_col) < F.lit(hwm - delta),
+            ts_col, on_time_fn, late_fn, checkpoint,
+        )
 
     def assign_punctuated(
         self,
@@ -391,31 +422,11 @@ class Stream:
         batch route to ``late_fn`` (side output); then the high-water
         mark absorbs this batch's markers.  Like the reference, a stream
         with no markers never advances event time and nothing is late.
-
-        State is one timestamp in the foreachBatch closure — O(1), the
-        same footprint as the bounded-delay variant above.
         """
-        hwm: dict[str, object] = {"wm": None}
-
-        def handle(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df = batch_df.persist()
-            try:
-                wm = hwm["wm"]
-                if wm is not None:
-                    late = batch_df.filter(F.col(ts_col) <= F.lit(wm))
-                    on_time = batch_df.filter(F.col(ts_col) > F.lit(wm))
-                else:
-                    late = batch_df.limit(0)
-                    on_time = batch_df
-                late_fn(late, batch_id)
-                on_time_fn(on_time, batch_id)
-                mx = batch_df.agg(F.max(wm_col).alias("m")).first()["m"]
-                if mx is not None and (wm is None or mx > wm):
-                    hwm["wm"] = mx
-            finally:
-                batch_df.unpersist()
-
-        return self.for_each_batch(handle, checkpoint)
+        return self._for_each_batch_split(
+            lambda wm: F.col(ts_col) <= F.lit(wm),
+            wm_col, on_time_fn, late_fn, checkpoint,
+        )
 
     def rowtime_sort(
         self,

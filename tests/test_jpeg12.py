@@ -152,9 +152,25 @@ def test_named_gates_raise():
         jpeg12_decode(bytes(data))
     data = bytearray(jpeg12_encode([p, p]))
     sof = data.find(b"\xff\xc1")
-    data[sof + 9] = 0x22  # first component sampling (2,2)
-    with pytest.raises(NotImplementedError):
+    data[sof + 11] = 0x22  # first component sampling (2,2)
+    with pytest.raises(NotImplementedError, match="subsampled"):
         jpeg12_decode(bytes(data))
+    data = bytearray(jpeg12_encode([p, p]))
+    data[sof + 9] = 0x22  # component count Nf = 34
+    with pytest.raises(NotImplementedError, match="34-component"):
+        jpeg12_decode(bytes(data))
+
+
+def test_fractional_quant_table_encodes_as_its_truncated_table():
+    """DQT entries are integers, so a fractional table must quantize
+    with the same integer steps it writes: both tiles decode exactly."""
+    img = np.kron(np.array([[1024, 3000]]), np.ones((8, 8), dtype=np.int64))
+    q = np.full((8, 8), 16.0)
+    q[0, 0] = 16.6
+    data = jpeg12_encode([img], quant=q)
+    assert data == jpeg12_encode([img], quant=np.trunc(q))
+    _, _, _, (dec,) = jpeg12_decode(data)
+    assert np.array_equal(dec, img)
 
 
 def test_odd_dimensions_pad_and_crop():

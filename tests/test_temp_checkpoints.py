@@ -50,5 +50,6 @@ def test_retraction_join_removes_its_temporary_checkpoint(spark, events, tmp_pat
     try:
         join.run(lambda df, bid: df.count())
         assert _leftover(scratch, "fl_join_ckpt_") == []
+        assert _leftover(scratch, "fl_ckpt_") == []
     finally:
         join.cleanup()
