@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from my_flink_1_10_2_spark.operators.iterate import checkpoint_tracked, free_checkpoints
+
 SEP = "\x1f"  # unit separator: frames every symbol
 EOW = "</w>"  # end-of-word marker symbol (classic BPE)
 
@@ -69,49 +71,58 @@ def train_bpe(
     # flatten lineage once per step: the word table is vocabulary-sized,
     # so the checkpoint is small, and each step then reads ONE relation
     # instead of replaying the whole replace chain
-    cur = cur.localCheckpoint(eager=False)
+    cur, cur_ids = checkpoint_tracked(cur, eager=False)
+    prev_ids: set[int] = set()
 
     merges: list[tuple[int, str, str, str, int]] = []
-    for step in range(1, num_merges + 1):
-        syms = F.split(
-            F.expr("substring(seq, 2, length(seq) - 2)"), SEP + SEP
-        )
-        pair = F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size(syms) - 1),
-                lambda i: F.struct(
-                    F.element_at(syms, i).alias("l_sym"),
-                    F.element_at(syms, i + 1).alias("r_sym"),
-                ),
+    try:
+        for step in range(1, num_merges + 1):
+            syms = F.split(
+                F.expr("substring(seq, 2, length(seq) - 2)"), SEP + SEP
             )
-        )
-        # Round-12 note: a one-job-per-merge variant (JVM explode feeding
-        # a mapInPandas partial-count kernel, driver merge/argmax —
-        # 27 -> 15 jobs for 12 merges) was implemented and MEASURED
-        # SLOWER: interleaved A/B medians 2.76 s (this shape) vs 4.47 s
-        # (kernel shape) at sf0.1 — the Arrow transfer of the exploded
-        # pair stream plus per-task pandas groupby costs far more than
-        # the AQE query-stage round-trip it saves.  The JVM hash
-        # aggregate below keeps the pair counting codegen'd; the shuffle
-        # it plans is tiny (distinct symbol pairs).
-        best = (
-            cur.where(F.size(syms) > 1)
-            .select("freq", pair.alias("p"))
-            .groupBy("p.l_sym", "p.r_sym")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), "l_sym", "r_sym")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        b = best[0]
-        merges.append((step, b["l_sym"], b["r_sym"], b["l_sym"] + b["r_sym"], int(b["cnt"])))
-        pat = SEP + b["l_sym"] + SEP + SEP + b["r_sym"] + SEP
-        rep = SEP + b["l_sym"] + b["r_sym"] + SEP
-        cur = cur.withColumn(
-            "seq", F.replace("seq", F.lit(pat), F.lit(rep))
-        ).localCheckpoint(eager=False)
+            pair = F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size(syms) - 1),
+                    lambda i: F.struct(
+                        F.element_at(syms, i).alias("l_sym"),
+                        F.element_at(syms, i + 1).alias("r_sym"),
+                    ),
+                )
+            )
+            # Round-12 note: a one-job-per-merge variant (JVM explode feeding
+            # a mapInPandas partial-count kernel, driver merge/argmax —
+            # 27 -> 15 jobs for 12 merges) was implemented and MEASURED
+            # SLOWER: interleaved A/B medians 2.76 s (this shape) vs 4.47 s
+            # (kernel shape) at sf0.1 — the Arrow transfer of the exploded
+            # pair stream plus per-task pandas groupby costs far more than
+            # the AQE query-stage round-trip it saves.  The JVM hash
+            # aggregate below keeps the pair counting codegen'd; the shuffle
+            # it plans is tiny (distinct symbol pairs).
+            best = (
+                cur.where(F.size(syms) > 1)
+                .select("freq", pair.alias("p"))
+                .groupBy("p.l_sym", "p.r_sym")
+                .agg(F.sum("freq").alias("cnt"))
+                .orderBy(F.desc("cnt"), "l_sym", "r_sym")
+                .limit(1)
+                .collect()
+            )
+            # the collect materialized `cur`, so the checkpoint it
+            # superseded has no unmaterialized reader left
+            free_checkpoints(spark, prev_ids)
+            if not best:
+                break
+            b = best[0]
+            merges.append((step, b["l_sym"], b["r_sym"], b["l_sym"] + b["r_sym"], int(b["cnt"])))
+            pat = SEP + b["l_sym"] + SEP + SEP + b["r_sym"] + SEP
+            rep = SEP + b["l_sym"] + b["r_sym"] + SEP
+            prev_ids = cur_ids
+            cur, cur_ids = checkpoint_tracked(
+                cur.withColumn("seq", F.replace("seq", F.lit(pat), F.lit(rep))),
+                eager=False,
+            )
+    finally:
+        free_checkpoints(spark, prev_ids | cur_ids)
 
     return spark.createDataFrame(
         merges, "step int, l_sym string, r_sym string, merged string, pair_count bigint"

@@ -21,6 +21,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from my_flink_1_10_2_spark.operators.iterate import checkpoint_tracked, free_checkpoints
 from my_flink_1_10_2_spark.operators.rank import top_n
 
 
@@ -594,11 +595,7 @@ def kmeans_centroids_int(
         # re-quantizing the source (released after training)
         # lazy: the init collect below is the job that materializes it
         # (one scheduler round-trip instead of two)
-        before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-        ci = ci.localCheckpoint(eager=False)
-        new_ids = (
-            set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
-        )
+        ci, new_ids = checkpoint_tracked(ci, eager=False)
     try:
         cents = [
             (i, [int(x) for x in r["__vi"]])
@@ -656,10 +653,7 @@ def kmeans_centroids_int(
             cents = [(c, acc.get(c, v)) for c, v in cents]
         return cents
     finally:
-        if new_ids:
-            from my_flink_1_10_2_spark.operators.iterate import free_checkpoints
-
-            free_checkpoints(spark, new_ids)
+        free_checkpoints(spark, new_ids)
 
 
 def cosine_topk_ivf_int(

@@ -20,8 +20,10 @@ from pyspark.sql import functions as F
 
 from my_flink_1_10_2_spark.operators.iterate import (
     checkpoint_tracked,
+    fixpoint,
     free_checkpoints,
     iterate,
+    row_count,
 )
 
 
@@ -94,18 +96,11 @@ def label_propagation(
     most frequent label among its neighbors' current labels, ties broken
     by the smallest label; isolated vertices keep their label. Labels
     start as the vertex id. Returns (node, label)."""
-    sym, sym_ids = checkpoint_tracked(
-        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
-        .union(edges.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst")))
-        .filter(F.col("e_src") != F.col("e_dst"))
-        .distinct()
-    )
-    init = _nodes(sym, "e_src", "e_dst").withColumn("label", F.col("node"))
+    sym, sym_ids = checkpoint_tracked(_sym(edges, src, dst))
+    init = _nodes(sym, "u", "v").withColumn("label", F.col("node"))
 
     def step(lbl: DataFrame, i: int) -> DataFrame:
-        msgs = sym.join(lbl, sym.e_src == lbl.node).select(
-            F.col("e_dst").alias("node"), "label"
-        )
+        msgs = sym.join(lbl, sym.u == lbl.node).select(F.col("v").alias("node"), "label")
         counts = msgs.groupBy("node", "label").agg(F.count("*").alias("cnt"))
         w = Window.partitionBy("node").orderBy(F.col("cnt").desc(), F.col("label"))
         best = (
@@ -228,6 +223,19 @@ def _sym(edges: DataFrame, src: str, dst: str) -> DataFrame:
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected edge set: each edge once as (a, b), a < b;
+    self-loops dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") < F.col("b"))
         .distinct()
     )
 
@@ -437,11 +445,7 @@ def triangle_enumerate(
     Returns (v1, v2, v3) with v1 < v2 < v3, each triangle once. Both
     joins are key-equi (shuffle on vertex id) — no nested loop; the
     reference's same two-join shape."""
-    e = (
-        edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    e = _canonical(edges, src, dst)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     return (
         e1.join(e2, F.col("e1.b") == F.col("e2.a"))
@@ -486,22 +490,17 @@ def community_detection(
     Scale shape: one |E| shuffle join + one (node,label) hash agg per
     superstep; vertex state stays |V|-sized. Returns (node, label).
     """
-    sym, sym_ids = checkpoint_tracked(
-        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
-        .union(edges.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst")))
-        .filter(F.col("e_src") != F.col("e_dst"))
-        .distinct()
-    )
+    sym, sym_ids = checkpoint_tracked(_sym(edges, src, dst))
     init = (
-        _nodes(sym, "e_src", "e_dst")
+        _nodes(sym, "u", "v")
         .withColumn("label", F.col("node"))
         .withColumn("score", F.lit(1_000_000).cast("bigint"))
     )
 
     def step(st: DataFrame, i: int) -> DataFrame:
         att = int(round(delta * 1_000_000 / (i + 1)))  # superstep is 1-based
-        msgs = sym.join(st, sym.e_src == st.node).select(
-            F.col("e_dst").alias("node"), "label", "score"
+        msgs = sym.join(st, sym.u == st.node).select(
+            F.col("v").alias("node"), "label", "score"
         )
         agg = msgs.groupBy("node", "label").agg(
             F.sum("score").alias("__tot"), F.max("score").alias("__best")
@@ -575,7 +574,6 @@ def k_core(
     max_rounds: int = 20,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly drop
     vertices with (undirected) degree < k until a fixpoint — the
@@ -590,54 +588,31 @@ def k_core(
     the only shuffle per round is the degree aggregation itself.  The
     edge relation shrinks monotonically, so at 100 TB the rounds get
     cheaper as the periphery peels away.  Converges in <= max_rounds
-    (the convergence check runs at checkpoint rounds; an extra
-    already-converged peel round is a no-op, so checking every
-    ``checkpoint_every`` rounds stays exact).
-
-    ``checkpoint_every``: localCheckpoint+count cadence — each
-    materialization is a full Spark action, and letting two peel rounds
-    ride one lineage before truncating cut the measured per-round fixed
-    cost ~20% (lineage stays shallow: 2 joins per un-checkpointed
-    round).
+    (the edge-count fixpoint is checked every second round; an extra
+    already-converged peel round is a no-op, so that stays exact).
 
     Returns the k-core's (node, degree) with degrees measured in the
     core subgraph.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    cur, cur_ids = checkpoint_tracked(sym, eager=False)
-    spark = edges.sparkSession
-    prev_edges = cur.count()  # also materializes the symmetrized base
-    for r in range(1, max_rounds + 1):
+
+    def peel(cur: DataFrame, i: int) -> DataFrame:
         removed = (
-            cur.groupBy("a")
+            cur.groupBy("u")
             .agg(F.count("*").alias("__deg"))
             .where(F.col("__deg") < k)
-            .select("a")
+            .select("u")
         )
-        nxt = cur.join(removed, "a", "left_anti").join(
-            removed.select(F.col("a").alias("b")), "b", "left_anti"
+        return cur.join(removed, "u", "left_anti").join(
+            removed.select(F.col("u").alias("v")), "v", "left_anti"
         )
-        if r % checkpoint_every == 0 or r == max_rounds:
-            # lazy checkpoint + count: the count job IS the
-            # materialization (one action per checkpoint round, not two)
-            nxt, nxt_ids = checkpoint_tracked(nxt, eager=False)
-            n_edges = nxt.count()  # materializes the round's checkpoint
-            free_checkpoints(spark, cur_ids)
-            cur, cur_ids = nxt, nxt_ids
-            if n_edges == prev_edges:  # nothing peeled -> fixpoint
-                break
-            prev_edges = n_edges
-        else:
-            cur = nxt
-    out = cur.groupBy(F.col("a").alias("node")).agg(
-        F.count("*").alias("degree")
+
+    # two peel rounds per checkpoint: lineage stays shallow (two joins
+    # per unchecked round) and half the rounds pay no Spark action
+    core = iterate(
+        _sym(edges, src, dst), peel, max_rounds, fixpoint(row_count),
+        steps_per_checkpoint=2,
     )
-    return out
+    return core.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("degree"))
 
 
 def scatter_gather(
@@ -675,12 +650,6 @@ def scatter_gather(
     superstep, vertex state |V|-sized, superseded checkpoints freed
     eagerly.
     """
-    from my_flink_1_10_2_spark.operators.iterate import (
-        checkpoint_tracked,
-        free_checkpoints,
-        iterate,
-    )
-
     e, e_ids = checkpoint_tracked(edges)
 
     def step(verts: DataFrame, _i: int) -> DataFrame:
@@ -711,14 +680,7 @@ def edge_metrics(
     candidate-shape as Jaccard/Adamic-Adar: edges shuffle on their
     endpoint keys, never a cartesian.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _canonical(edges, src, dst)
     sym = e.select("a", "b").union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy("a").agg(F.count("*").alias("degree"))
     # common neighbours of (a, b): wedges a—w—b
@@ -777,25 +739,19 @@ def closeness_centrality(
     sources = nodes.orderBy("node").limit(n_sources).select(
         F.col("node").alias("source")
     )
-    dist = sources.select(
-        "source", F.col("source").alias("node"), F.lit(0).alias("d")
-    ).localCheckpoint(eager=True)
-    prev_n = dist.count()
-    for _ in range(max_iters):
-        expand = (
-            dist.join(sym, dist["node"] == sym["u"])
-            .select("source", F.col("v").alias("node"), (F.col("d") + 1).alias("d"))
+
+    def expand(dist: DataFrame, i: int) -> DataFrame:
+        reached = dist.join(sym, dist["node"] == sym["u"]).select(
+            "source", F.col("v").alias("node"), (F.col("d") + 1).alias("d")
         )
-        dist = (
-            dist.unionByName(expand)
+        return (
+            dist.unionByName(reached)
             .groupBy("source", "node")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
         )
-        n = dist.count()
-        if n == prev_n:
-            break
-        prev_n = n
+
+    init = sources.select("source", F.col("source").alias("node"), F.lit(0).alias("d"))
+    dist = iterate(init, expand, max_iters, fixpoint(row_count))
     per_d = dist.where(F.col("d") > 0)
     return (
         per_d.groupBy("source")
@@ -851,31 +807,27 @@ def stress_centrality(
     sources = nodes.orderBy("node").limit(n_sources).select(
         F.col("node").alias("source")
     )
-    settled = sources.select(
-        "source",
-        F.col("source").alias("node"),
-        F.lit(0).alias("d"),
-        F.lit(1).cast("bigint").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    frontier = settled
-    for t in range(1, max_iters + 1):
+
+    def level(settled: DataFrame, i: int) -> DataFrame:
+        frontier = settled.where(F.col("d") == i)
         nxt = (
             frontier.join(sym, frontier["node"] == sym["u"])
             .select("source", F.col("v").alias("node"), "sigma")
             .join(settled.select("source", "node"), ["source", "node"], "left_anti")
             .groupBy("source", "node")
             .agg(F.sum("sigma").cast("bigint").alias("sigma"))
-            .select("source", "node", F.lit(t).alias("d"), "sigma")
-            .localCheckpoint(eager=False)
+            .select("source", "node", F.lit(i + 1).alias("d"), "sigma")
         )
-        # one action per BFS level: the count materializes the lazy
-        # frontier checkpoint (and, as an upstream dependency, last
-        # round's settled checkpoint); nothing is ever freed here, so
-        # lazy settled checkpoints stay recomputable in the worst case
-        if nxt.count() == 0:
-            break
-        settled = settled.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
+        return settled.unionByName(nxt)
+
+    init = sources.select(
+        "source",
+        F.col("source").alias("node"),
+        F.lit(0).alias("d"),
+        F.lit(1).cast("bigint").alias("sigma"),
+    )
+    # one BFS level per superstep; no new level is the fixpoint
+    settled = iterate(init, level, max_iters, fixpoint(row_count))
     src_nodes = sources.select(F.col("source").alias("node"))
     pairs = (
         settled.join(src_nodes, "node")
@@ -941,25 +893,13 @@ def k_truss(
     Returns the truss's canonical edges with their in-truss support:
     (a, b, support), a < b.
     """
-    from my_flink_1_10_2_spark.operators.iterate import (
-        checkpoint_tracked,
-        free_checkpoints,
-    )
-
+    if max_rounds < 1:
+        raise ValueError(f"k_truss needs max_rounds >= 1, got {max_rounds}")
     need = k - 2
-    ed = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    cur, cur_ids = checkpoint_tracked(ed, eager=False)
-    n_edges = cur.count()  # materializes the lazy checkpoint
-    spark = edges.sparkSession
-    for _ in range(max_rounds):
-        sym = cur.select("a", "b").union(
+
+    def peel(state: DataFrame, i: int) -> DataFrame:
+        cur = state.select("a", "b")
+        sym = cur.union(
             cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
         s1 = sym.select(F.col("a").alias("u"), F.col("b").alias("w"))
@@ -970,17 +910,9 @@ def k_truss(
             .groupBy(cur.a, cur.b)
             .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
         )
-        nxt = sup.where(F.col("support") >= need).select("a", "b", "support")
-        nxt, nxt_ids = checkpoint_tracked(nxt, eager=False)
-        n_next = nxt.count()  # materializes the lazy checkpoint
-        free_checkpoints(spark, cur_ids)
-        cur, cur_ids = nxt.select("a", "b"), nxt_ids
-        if n_next == n_edges:
-            out = nxt
-            break
-        n_edges = n_next
-    else:
-        out = nxt
-    result = out.localCheckpoint(eager=True)
-    free_checkpoints(spark, cur_ids)
-    return result
+        return sup.where(F.col("support") >= need).select("a", "b", "support")
+
+    # the fixpoint state is always a peel's output, so its support is
+    # measured in the truss itself
+    init = _canonical(edges, src, dst).withColumn("support", F.lit(None).cast("bigint"))
+    return iterate(init, peel, max_rounds, fixpoint(row_count))

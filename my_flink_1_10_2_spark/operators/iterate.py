@@ -6,7 +6,7 @@ src/main/java/org/apache/flink/graph/Graph.java, library/
 ConnectedComponents.java).
 
 Spark has no native iteration operator; the idiomatic equivalent is a
-driver-side loop over DataFrames. Two things make that correct at scale:
+driver-side loop over DataFrames. Three things make that correct at scale:
 
   - **Lineage truncation**: each superstep's result is
     ``localCheckpoint``-ed, otherwise the plan grows linearly with the
@@ -23,6 +23,13 @@ driver-side loop over DataFrames. Two things make that correct at scale:
     from the block manager long before the loop converges.  The helpers
     below track the RDD ids each checkpoint persists and free them the
     moment the next superstep is materialized.
+
+:func:`iterate` is the one superstep loop of the graph operators: the
+Gelly library's pagerank, sssp, hits, label propagation, community
+detection, scatter-gather, k-core, k-truss, closeness and stress
+centrality (``operators/gelly.py``) and :func:`connected_components`
+all run on it, so the supersteps per Spark job are chosen in one place
+(``steps_per_checkpoint``).  :func:`iterate_delta` is the workset loop.
 """
 
 from __future__ import annotations
@@ -79,6 +86,35 @@ def free_checkpoints(spark, ids: set[int]) -> None:
             r.unpersist()
 
 
+def row_count(df: DataFrame) -> int:
+    """Row count in ONE Spark job: counts the executed plan's rows
+    directly.  ``DataFrame.count`` plans a global aggregate, which
+    adaptive execution runs as two jobs (partial counts, then their
+    merge) — per superstep, that second job is pure scheduler cost."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def fixpoint(
+    measure: Callable[[DataFrame], object],
+) -> Callable[[DataFrame, DataFrame], bool]:
+    """Convergence criterion for :func:`iterate`: converged once
+    ``measure`` (an action, e.g. :func:`row_count`) gives the same value
+    for the new state as for the previous one.  The last value is
+    cached, so every check after the first measures the new state
+    only."""
+    last: list = []
+
+    def converged(prev: DataFrame, new: DataFrame) -> bool:
+        if not last:
+            last.append(measure(prev))
+        value = measure(new)
+        done = value == last[0]
+        last[0] = value
+        return done
+
+    return converged
+
+
 def iterate(
     initial: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
@@ -95,41 +131,54 @@ def iterate(
     Job-count discipline (each Spark action is a full scheduler
     round-trip, the fixed cost that dominates iterative workloads):
 
-    - with ``converged``, the checkpoint is LAZY and the convergence
-      measurement is the job that materializes it — one job per
-      checkpoint instead of checkpoint + measure;
+    - with ``converged``, the checkpoints (the initial one too) are
+      LAZY and the convergence measurement is the job that materializes
+      them — one job per checkpoint instead of checkpoint + measure;
     - ``steps_per_checkpoint`` fuses that many steps into one checkpoint
       (exactly ``max_iterations`` steps still run — the tail chunk is
       shorter).  With a convergence criterion the check then runs every
       k-th step, which is exact for fixpoint algorithms (extra steps
       past the fixpoint are no-ops) — keep it at 1 for steps where an
       overshoot changes the result.
+
+    If a step or the criterion raises, every checkpoint this call made
+    is freed before the exception propagates.
     """
     spark = initial.sparkSession
-    current, cur_ids = checkpoint_tracked(initial)
+    # with a criterion the first check materializes the initial state
+    # too; with no step to run, the initial state is the result and must
+    # not depend on blocks the caller frees
+    current, cur_ids = checkpoint_tracked(
+        initial, eager=converged is None or max_iterations < 1
+    )
+    new_ids = cur_ids
     done_steps = 0
-    while done_steps < max_iterations:
-        chunk = min(steps_per_checkpoint, max_iterations - done_steps)
-        new = current
-        for j in range(chunk):
-            new = step(new, done_steps + j)
-        if converged is None:
-            new, new_ids = checkpoint_tracked(new)
-            done = False
-        else:
-            new, new_ids = checkpoint_tracked(new, eager=False)
-            # the convergence measurement is an action over `new`: its
-            # job materializes the lazy checkpoint as a side effect
-            done = converged(current, new)
-            if not _materialized(spark, new_ids):
-                # a custom criterion that never touched `new` — force
-                # the blocks before the previous state is freed
-                new.count()
-        free_checkpoints(spark, cur_ids)
-        current, cur_ids = new, new_ids
-        done_steps += chunk
-        if done:
-            break
+    try:
+        while done_steps < max_iterations:
+            chunk = min(steps_per_checkpoint, max_iterations - done_steps)
+            new = current
+            for j in range(chunk):
+                new = step(new, done_steps + j)
+            if converged is None:
+                new, new_ids = checkpoint_tracked(new)
+                done = False
+            else:
+                new, new_ids = checkpoint_tracked(new, eager=False)
+                # the convergence measurement is an action over `new`: its
+                # job materializes the lazy checkpoint as a side effect
+                done = converged(current, new)
+                if not _materialized(spark, new_ids):
+                    # a custom criterion that never touched `new` — force
+                    # the blocks before the previous state is freed
+                    row_count(new)
+            free_checkpoints(spark, cur_ids)
+            current, cur_ids = new, new_ids
+            done_steps += chunk
+            if done:
+                break
+    except BaseException:
+        free_checkpoints(spark, cur_ids | new_ids)
+        raise
     return current
 
 
@@ -227,6 +276,27 @@ def iterate_delta(
     return solution
 
 
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Symmetric closure (e_src, e_dst) of an edge list.  Self-loops
+    stay: a vertex whose only edge is a self-loop is still a node."""
+    return (
+        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
+        .union(edges.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst")))
+        .distinct()
+    )
+
+
+def _initial_labels(sym: DataFrame, vertices: DataFrame | None) -> DataFrame:
+    """(node, component = node) over the closure's nodes plus any
+    isolated ``vertices`` (first column)."""
+    nodes = sym.select(F.col("e_src").alias("node")).distinct()
+    if vertices is not None:
+        nodes = nodes.union(
+            vertices.select(F.col(vertices.columns[0]).alias("node"))
+        ).distinct()
+    return nodes.withColumn("component", F.col("node"))
+
+
 def connected_components_delta(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -243,17 +313,8 @@ def connected_components_delta(
     Same (node, component) contract and fixpoint as
     :func:`connected_components`.
     """
-    sym, sym_ids = checkpoint_tracked(
-        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
-        .union(edges.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst")))
-        .distinct()
-    )
-    nodes = sym.select(F.col("e_src").alias("node")).distinct()
-    if vertices is not None:
-        nodes = nodes.union(
-            vertices.select(F.col(vertices.columns[0]).alias("node"))
-        ).distinct()
-    labels = nodes.withColumn("component", F.col("node"))
+    sym, sym_ids = checkpoint_tracked(_symmetric(edges, src, dst))
+    labels = _initial_labels(sym, vertices)
 
     def step(solution: DataFrame, workset: DataFrame, i: int):
         # scatter: only frontier labels travel to neighbors
@@ -299,15 +360,8 @@ def connected_components(
     Convergence is the `changed == 0` fixpoint, detected with a count on
     the checkpointed labels.
     """
-    sym = edges.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
-    ).union(edges.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst"))).distinct()
-    sym, sym_ids = checkpoint_tracked(sym)
-
-    nodes = sym.select(F.col("e_src").alias("node")).distinct()
-    if vertices is not None:
-        nodes = nodes.union(vertices.select(F.col(vertices.columns[0]).alias("node"))).distinct()
-    labels = nodes.withColumn("component", F.col("node"))
+    sym, sym_ids = checkpoint_tracked(_symmetric(edges, src, dst))
+    labels = _initial_labels(sym, vertices)
 
     def step(lbl: DataFrame, i: int) -> DataFrame:
         neighbor = sym.join(lbl, sym.e_src == lbl.node).select(
@@ -343,20 +397,10 @@ def connected_components(
     # into a map-side aggregate (one row crosses the wire), which at
     # 100 TB removes a full shuffle per superstep.  decimal(38,0)
     # accumulation keeps the sum exact at any node-id magnitude.
-    state = {"prev_sum": None}
-
-    def _label_sum(df: DataFrame):
+    def label_sum(df: DataFrame):
         return df.agg(F.sum(F.col("component").cast("decimal(38,0)"))).first()[0]
 
-    def converged(prev: DataFrame, new: DataFrame) -> bool:
-        prev_sum = state["prev_sum"]
-        if prev_sum is None:
-            prev_sum = _label_sum(prev)
-        new_sum = _label_sum(new)
-        state["prev_sum"] = new_sum
-        return new_sum == prev_sum
-
-    out = iterate(labels, step, max_iterations, converged)
+    out = iterate(labels, step, max_iterations, fixpoint(label_sum))
     # the result checkpoint is self-contained — the edge relation's
     # blocks can go
     free_checkpoints(edges.sparkSession, sym_ids)

@@ -843,12 +843,7 @@ class KeyedStream:
         local-mode analog, per SURVEY §2.10.)
         """
         agg = self.df.groupBy(*self.keys).agg(*[_col(e) for e in agg_exprs])
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
+        query = _sources.memory_sink(agg, name, "complete")
         return QueryableStateHandle(self.df.sparkSession, name, self.keys, query)
 
     def top_n(self, n: int, order_col: str, desc: bool = True) -> Stream:

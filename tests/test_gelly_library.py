@@ -317,3 +317,13 @@ def test_k_truss_textbook_and_containment(spark):
     assert {v for e in truss for v in e} <= core_nodes
     # k high enough empties the truss
     assert k_truss(edges, k=5).count() == 0
+
+
+def test_k_truss_zero_rounds_is_value_error(spark):
+    import pytest
+
+    from my_flink_1_10_2_spark.operators.gelly import k_truss
+
+    edges = _edges(spark, [(0, 1), (1, 2), (0, 2)])
+    with pytest.raises(ValueError, match="max_rounds"):
+        k_truss(edges, k=3, max_rounds=0)

@@ -224,3 +224,47 @@ def test_iterate_delta_frees_blocks_on_step_exception(spark):
         raise AssertionError("step exception must propagate")
     resident = len(sc._jsc.getPersistentRDDs())
     assert resident == 0, f"{resident} persisted RDDs leaked on the exception path"
+
+
+def test_iterate_frees_checkpoints_on_step_exception(spark):
+    """Bulk iterate frees the checkpoints it made when a step raises,
+    as iterate_delta does — with and without a convergence criterion."""
+    sc = spark.sparkContext
+    init = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
+
+    def bad_step(df, i):
+        if i >= 2:
+            raise RuntimeError("boom")
+        return df.select("k", (F.col("v") + 1).alias("v"))
+
+    for converged in (None, lambda prev, new: new.count() < 0):
+        for r in list(sc._jsc.getPersistentRDDs().values()):
+            r.unpersist()
+        try:
+            mod.iterate(init, bad_step, 5, converged)
+        except RuntimeError:
+            pass
+        else:
+            raise AssertionError("step exception must propagate")
+        resident = len(sc._jsc.getPersistentRDDs())
+        assert resident == 0, f"{resident} persisted RDDs leaked on the exception path"
+
+
+def test_fixpoint_measures_each_state_once(spark):
+    """fixpoint caches the last measure: the first check measures both
+    states, every later check only the new one."""
+    seen = []
+
+    def measure(df):
+        seen.append(df)
+        return df.first().x
+
+    init = spark.range(1).withColumn("x", F.lit(0))
+
+    def step(df, i):
+        return df.withColumn("x", F.least(df.x + 1, F.lit(2)))
+
+    out = mod.iterate(init, step, 10, mod.fixpoint(measure))
+    assert out.first().x == 2
+    # x = 0 and 1 on the first check, then 2, then 2 again (fixpoint)
+    assert len(seen) == 4

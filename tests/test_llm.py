@@ -257,6 +257,23 @@ def test_bpe_train_and_segment_textbook(spark):
     assert seg["slow"] == ["s", "low", "</w>"]
 
 
+def test_train_bpe_releases_its_checkpoints(spark):
+    """train_bpe's per-merge word-table checkpoints are all released by
+    the time it returns — also when the corpus runs out of pairs before
+    ``num_merges``."""
+    from my_flink_1_10_2_spark.llm.bpe import train_bpe
+
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(
+        [(1, "low lower lowest newer"), (2, "ab ab")], "doc_id int, text string"
+    )
+    for num_merges in (3, 40):
+        before = len(sc._jsc.getPersistentRDDs())
+        merges = train_bpe(docs, num_merges=num_merges).collect()
+        assert 0 < len(merges) <= num_merges
+        assert len(sc._jsc.getPersistentRDDs()) == before
+
+
 def test_semantic_neardup_ivf_recall_and_exactness(spark):
     """IVF-blocked near-dup must (a) only emit genuine >=threshold
     pairs, (b) recover a decent share of the exact all-pairs result,
