@@ -26,9 +26,10 @@ carry one match each. At 100 TB the shuffle is one hash partition by
 key — the same data movement the reference's keyBy requires — and no
 state is held beyond a single group.
 
-The streaming variant keeps a bounded per-key tail buffer in
-``applyInPandasWithState`` so matches spanning micro-batch boundaries
-are found; rows are processed in event-time order within the buffer.
+The streaming variant keeps a bounded per-key tail buffer as keyed
+fold state (``KeyedStream._fold``) so matches spanning micro-batch
+boundaries are found; rows are processed in event-time order within
+the buffer.
 """
 
 from __future__ import annotations
@@ -694,49 +695,29 @@ def match_recognize_stream(
     max_pattern_rows: int,
     after_match: str = "skip_past_last_row",
 ):
-    """Streaming CEP on `applyInPandasWithState`: a bounded tail buffer
-    (max_pattern_rows − 1 rows) per key carries partial matches across
-    micro-batches (the role of the reference's per-key NFA SharedBuffer,
-    nfa/sharedbuffer/SharedBuffer.java). The buffer is pickled into a
-    single binary state column, so arbitrary row dtypes (timestamps,
-    arrays) survive the state store round-trip. Rows must arrive in
-    event-time order per key (use a watermark + sort in foreachBatch
-    upstream for out-of-order streams — documented gap vs the
-    reference's full event-time CEP)."""
-    import pickle
+    """Streaming CEP on the keyed fold (``KeyedStream._fold``): a bounded
+    tail buffer (max_pattern_rows − 1 rows) per key carries partial
+    matches across micro-batches (the role of the reference's per-key NFA
+    SharedBuffer, nfa/sharedbuffer/SharedBuffer.java).  Each micro-batch
+    runs the NFA over the tail plus its rows in ``ts_col`` order and
+    emits the matches found; the tail is frame state, so arbitrary row
+    dtypes (timestamps, arrays) survive the state store round-trip."""
+    from my_flink_1_10_2_spark.streaming.stream import KeyedStream
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    steps = pattern.steps
-
-    def fn(key, pdf_iter, state):
-        import pandas as _pd
-
-        buffered = (
-            pickle.loads(bytes(state.get[0]))
-            if state.exists and state.get[0] is not None
-            else None
-        )
-        new = _pd.concat(list(pdf_iter), ignore_index=True)
+    def fold(key, tail, rows):
         full = (
-            _pd.concat([buffered, new], ignore_index=True) if buffered is not None else new
+            rows
+            if tail is None
+            else pd.concat([tail, rows], ignore_index=True).sort_values(
+                ts_col, kind="mergesort", ignore_index=True
+            )
         )
-        full = full.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
         matches = _run_nfa(
-            full, steps, measures, after_match, ts_col=ts_col, within=pattern.within_td
+            full, pattern.steps, measures, after_match, ts_col=ts_col, within=pattern.within_td
         )
-        tail = full.tail(max(0, max_pattern_rows - 1))
-        state.update((pickle.dumps(tail),))
-        if len(matches):
-            yield matches
+        return full.tail(max(0, max_pattern_rows - 1)), matches
 
-    return df.groupBy(*partition_by).applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType="buffer binary",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return KeyedStream(df, list(partition_by))._fold(fold, ts_col, output_schema).df
 
 
 class PatternStream:

@@ -62,16 +62,17 @@ def socket_text_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
     )
 
 
-def memory_sink(df: DataFrame, query_name: str, output_mode: str = "append"):
+def memory_sink(
+    df: DataFrame, query_name: str, output_mode: str = "append", available_now: bool = False
+):
     """In-memory queryable sink for tests (ref analog: the reference's
     test harness collect sinks; also its queryable-state substitute,
-    SURVEY §2.10)."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .start()
-    )
+    SURVEY §2.10).  ``available_now`` drains the source then stops;
+    without it the query runs until stopped."""
+    writer = df.writeStream.format("memory").queryName(query_name).outputMode(output_mode)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def streaming_file_sink(

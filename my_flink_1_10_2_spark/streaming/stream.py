@@ -27,6 +27,7 @@ deltas (SURVEY §7.2 step 6).
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 import shutil
@@ -39,6 +40,24 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from my_flink_1_10_2_spark.sources import streaming as _sources
+
+
+def _encode_frame(pdf) -> bytes:
+    """Frame-valued keyed state as one Arrow IPC stream."""
+    import pyarrow as pa
+
+    table = pa.Table.from_pandas(pdf, preserve_index=False)
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as writer:
+        writer.write_table(table)
+    return sink.getvalue().to_pybytes()
+
+
+def _decode_frame(data):
+    """Inverse of :func:`_encode_frame`."""
+    import pyarrow as pa
+
+    return pa.ipc.open_stream(bytes(data)).read_all().to_pandas()
 
 
 def _col(e):
@@ -300,13 +319,7 @@ class Stream:
         substitute, SURVEY §2.10) using availableNow (process everything,
         then stop).  Returns (query, table_name)."""
         name = name or f"sink_{uuid.uuid4().hex[:8]}"
-        q = (
-            self.df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = _sources.memory_sink(self.df, name, output_mode, available_now=True)
         if await_termination:
             q.awaitTermination()
         return q, name
@@ -675,6 +688,52 @@ class KeyedStream:
     def session(self, ts_col: str, gap: str) -> "WindowedStream":
         return WindowedStream(self.df, self.keys, F.session_window(ts_col, gap), ts_col)
 
+    def _fold(
+        self, fold, order_col: str, output_schema: str, state_schema: str | None = None, initial=None
+    ) -> Stream:
+        """The one keyed fold under the stateful stream operators, on
+        :meth:`process` (ref: KeyedProcessOperator.java; State Management
+        in Apache Flink, VLDB 2017).  Per key and micro-batch: read the
+        state (``initial`` when the key has none), concatenate the batch's
+        chunks once, stable-sort the rows by ``order_col``, call
+        ``fold(key, state, rows) -> (state, out)``, write the state back
+        and emit ``out`` when it has rows.
+
+        Without a ``state_schema`` the state is a pandas DataFrame, stored
+        as one Arrow IPC stream in a binary column, so a checkpoint does
+        not depend on the pandas version that wrote it.  With one it is
+        Spark struct state and the fold sees its tuple.
+
+        Rows are sorted within a micro-batch only; across micro-batches
+        they are folded in arrival order, not event-time order (the
+        reference's rowtime operators hold rows until the watermark passes
+        them).  Feed ordered input (``from_waves``, an ordered file
+        replay) when the fold needs event-time order."""
+        import pandas as pd
+
+        def fn(key, chunks, state):
+            if not state.exists:
+                acc = initial
+            else:
+                acc = state.get if state_schema else _decode_frame(state.get[0])
+            rows = pd.concat(list(chunks), ignore_index=True).sort_values(
+                order_col, kind="mergesort", ignore_index=True
+            )
+            acc, out = fold(key, acc, rows)
+            state.update(acc if state_schema else (_encode_frame(acc),))
+            if len(out):
+                yield out
+
+        return self.process(fn, state_schema or "buffer binary", output_schema)
+
+    def _schema(self, *cols: str) -> str:
+        """DDL of the input columns ``cols`` (all of them when empty), in
+        that order."""
+        return ", ".join(
+            f"{c} {self.df.schema[c].dataType.simpleString()}"
+            for c in cols or self.df.columns
+        )
+
     def running_agg(
         self, value_col: str, ts_col: str, how: str = "sum"
     ) -> Stream:
@@ -683,52 +742,31 @@ class KeyedStream:
         StreamExecOverAggregate.scala:56,
         AbstractRowTimeUnboundedPrecedingOver.java:265).
 
-        State = the accumulator (O(1) per key); each micro-batch sorts
-        its rows by `ts_col`, folds them into the accumulator and emits
-        every input row extended with `running_<how>`. Rows must arrive
-        in event-time order across batches (watermark + ordered replay —
-        same caveat as the reference's rowtime over-window, which also
-        buffers per timestamp)."""
-        import pandas as _pd
+        State = the accumulator (O(1) per key); emits every input row
+        extended with `running_<how>`, in ``ts_col`` order (see
+        :meth:`_fold` for the order across micro-batches)."""
+        import pandas as pd
 
         if how not in ("sum", "count", "min", "max"):
             raise ValueError(f"unsupported running aggregate: {how}")
-        keys = self.keys
         out_col = f"running_{how}"
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in self.df.schema.fields
-        ) + f", {out_col} double"
 
-        def fn(key, pdf_iter, state):
-            acc = state.get[0] if state.exists else None
-            new = _pd.concat(list(pdf_iter), ignore_index=True)
-            new = new.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-            vals = new[value_col].astype("float64")
+        def fold(key, state, rows):
+            (acc,) = state
+            vals = rows[value_col].astype("float64")
             if how == "sum":
                 run = vals.cumsum() + (acc or 0.0)
-                acc = float(run.iloc[-1]) if len(run) else acc
             elif how == "count":
-                run = _pd.Series(range(1, len(vals) + 1), dtype="float64") + (acc or 0.0)
-                acc = float(run.iloc[-1]) if len(run) else acc
+                run = pd.Series(range(1, len(vals) + 1), dtype="float64") + (acc or 0.0)
             elif how == "min":
-                run = vals.cummin()
-                if acc is not None:
-                    run = run.clip(upper=acc)
-                acc = float(run.iloc[-1]) if len(run) else acc
+                run = vals.cummin() if acc is None else vals.cummin().clip(upper=acc)
             else:
-                run = vals.cummax()
-                if acc is not None:
-                    run = run.clip(lower=acc)
-                acc = float(run.iloc[-1]) if len(run) else acc
-            state.update((acc,))
-            out = new.copy()
-            out[out_col] = run
-            yield out
+                run = vals.cummax() if acc is None else vals.cummax().clip(lower=acc)
+            rows[out_col] = run
+            return (float(run.iloc[-1]),), rows
 
-        return Stream(
-            self.df.groupBy(*keys).applyInPandasWithState(
-                fn, out_schema, "acc double", "append", "NoTimeout"
-            )
+        return self._fold(
+            fold, ts_col, f"{self._schema()}, {out_col} double", "acc double", (None,)
         )
 
     def count_window(self, n: int, value_col: str, ts_col: str) -> Stream:
@@ -736,26 +774,16 @@ class KeyedStream:
         KeyedStream.countWindow:643 — GlobalWindows + CountTrigger).
 
         Emits (keys..., w_id, cnt, sum_value) once a key accumulates `n`
-        rows; the in-flight window (cnt, partial sum, window index) is
-        the only state — O(1) per key, exactly the reference's
-        count-trigger accumulator. Rows are folded in event-time order
-        within each batch; cross-batch order follows arrival (same
-        caveat as the reference's processing-order count windows).
+        rows, counted in ``ts_col`` order; the in-flight window (cnt,
+        partial sum, window index) is the only state — O(1) per key,
+        exactly the reference's count-trigger accumulator.
         """
-        import pandas as _pd
+        import pandas as pd
 
-        keys = self.keys
-        # iterate `keys` (not schema field order): emitted tuples are in
-        # key order, so the schema must be too or columns misalign
-        key_fields = ", ".join(
-            f"{k} {self.df.schema[k].dataType.simpleString()}" for k in keys
-        )
-        out_schema = f"{key_fields}, w_id long, cnt long, sum_value double"
+        cols = [*self.keys, "w_id", "cnt", "sum_value"]
 
-        def fn(key, pdf_iter, state):
-            w_id, cnt, acc = state.get if state.exists else (0, 0, 0.0)
-            rows = _pd.concat(list(pdf_iter), ignore_index=True)
-            rows = rows.sort_values(ts_col, kind="mergesort")
+        def fold(key, state, rows):
+            w_id, cnt, acc = state
             out = []
             for v in rows[value_col].astype("float64"):
                 cnt += 1
@@ -763,20 +791,14 @@ class KeyedStream:
                 if cnt == n:
                     out.append((*key, w_id, cnt, acc))
                     w_id, cnt, acc = w_id + 1, 0, 0.0
-            state.update((w_id, cnt, acc))
-            if out:
-                yield _pd.DataFrame(
-                    out, columns=[*keys, "w_id", "cnt", "sum_value"]
-                )
+            return (w_id, cnt, acc), pd.DataFrame(out, columns=cols)
 
-        return Stream(
-            self.df.groupBy(*keys).applyInPandasWithState(
-                fn,
-                out_schema,
-                "w_id long, cnt long, sum_value double",
-                "append",
-                "NoTimeout",
-            )
+        return self._fold(
+            fold,
+            ts_col,
+            f"{self._schema(*self.keys)}, w_id long, cnt long, sum_value double",
+            "w_id long, cnt long, sum_value double",
+            (0, 0, 0.0),
         )
 
     def count_window_slide(
@@ -784,27 +806,22 @@ class KeyedStream:
     ) -> Stream:
         """Sliding count window (ref: KeyedStream.countWindow(size,
         slide) KeyedStream.java:653 — GlobalWindows + CountEvictor(size)
-        + CountTrigger(slide)): every ``slide`` records per key, emit an
-        aggregate over the last ``size`` records.
+        + CountTrigger(slide)): every ``slide`` records per key, counted
+        in ``ts_col`` order, emit an aggregate over the last ``size``
+        records.
 
-        State per key is the ring buffer of the newest ``size-1`` values
+        State per key is the ring buffer of the newest ``size`` values
         plus the record counter — O(size), the same bound as the
         reference's CountEvictor.  Emits (keys..., fire_seq, cnt,
         sum_value); early windows with < size rows fire too.
         """
-        import pandas as _pd
+        import pandas as pd
 
-        keys = self.keys
-        key_fields = ", ".join(
-            f"{k} {self.df.schema[k].dataType.simpleString()}" for k in keys
-        )
-        out_schema = f"{key_fields}, fire_seq long, cnt long, sum_value double"
+        cols = [*self.keys, "fire_seq", "cnt", "sum_value"]
 
-        def fn(key, pdf_iter, state):
-            pos, buf = state.get if state.exists else (0, [])
-            buf = list(buf or [])
-            rows = _pd.concat(list(pdf_iter), ignore_index=True)
-            rows = rows.sort_values(ts_col, kind="mergesort")
+        def fold(key, state, rows):
+            pos, buf = state
+            buf = list(buf)
             out = []
             for v in rows[value_col].astype("float64"):
                 buf.append(float(v))
@@ -813,20 +830,14 @@ class KeyedStream:
                 pos += 1
                 if pos % slide == 0:
                     out.append((*key, pos, len(buf), sum(buf)))
-            state.update((pos, buf))
-            if out:
-                yield _pd.DataFrame(
-                    out, columns=[*keys, "fire_seq", "cnt", "sum_value"]
-                )
+            return (pos, buf), pd.DataFrame(out, columns=cols)
 
-        return Stream(
-            self.df.groupBy(*keys).applyInPandasWithState(
-                fn,
-                out_schema,
-                "pos long, buf array<double>",
-                "append",
-                "NoTimeout",
-            )
+        return self._fold(
+            fold,
+            ts_col,
+            f"{self._schema(*self.keys)}, fire_seq long, cnt long, sum_value double",
+            "pos long, buf array<double>",
+            (0, []),
         )
 
     def as_queryable_state(
@@ -851,8 +862,8 @@ class KeyedStream:
         AppendFast strategy — AppendOnlyTopNFunction.java:222: append-only
         input, keep a per-key n-element buffer, re-emit on change).
 
-        State = the current top-n rows (pickled buffer, like streaming
-        CEP); each micro-batch merges its rows and emits the key's full
+        State = the current top-n rows (a frame, like streaming CEP's
+        tail); each micro-batch merges its rows and emits the key's full
         refreshed top-n snapshot with a `rank` column (the reference
         emits retract+insert pairs; consumers here take the latest
         snapshot per key — changelog semantics via `__change`-style
@@ -862,37 +873,16 @@ class KeyedStream:
         reference's AppendFast strategy cheap — and only changed keys
         emit.
         """
-        import pickle
+        import pandas as pd
 
-        import pandas as _pd
+        def fold(key, buf, rows):
+            full = rows if buf is None else pd.concat([buf, rows], ignore_index=True)
+            top = full.sort_values(
+                order_col, ascending=not desc, kind="mergesort", ignore_index=True
+            ).head(n)
+            return top, top.assign(rank=range(1, len(top) + 1))
 
-        keys = self.keys
-        schema_src = self.df.schema
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in schema_src.fields
-        ) + ", rank int"
-
-        def fn(key, pdf_iter, state):
-            buf = (
-                pickle.loads(bytes(state.get[0]))
-                if state.exists and state.get[0] is not None
-                else None
-            )
-            new = _pd.concat(list(pdf_iter), ignore_index=True)
-            full = _pd.concat([buf, new], ignore_index=True) if buf is not None else new
-            full = full.sort_values(
-                order_col, ascending=not desc, kind="mergesort"
-            ).head(n).reset_index(drop=True)
-            state.update((pickle.dumps(full),))
-            out = full.copy()
-            out["rank"] = range(1, len(out) + 1)
-            yield out
-
-        return Stream(
-            self.df.groupBy(*keys).applyInPandasWithState(
-                fn, out_schema, "buffer binary", "append", "NoTimeout"
-            )
-        )
+        return self._fold(fold, order_col, f"{self._schema()}, rank int")
 
     def process(self, func, state_schema, output_schema, timeout: str = "NoTimeout") -> Stream:
         """Keyed stateful ProcessFunction (ref: KeyedProcessOperator.java,
@@ -960,6 +950,24 @@ class WindowedStream:
     def _grouped(self):
         return self.df.withColumn("w", self.window_col).groupBy("w", *self.keys)
 
+    def _fold_rows(self, fold_rows, schema: str) -> Stream:
+        """One row per (key, window): ``fold_rows(rows)`` of the window's
+        rows as dicts, in `ts_col` order (all columns when there is no
+        `ts_col`), plus window_start/window_end."""
+        data_cols = self.df.columns
+        ts = self.ts_col
+
+        def run(key, pdf):
+            import pandas as pd
+
+            pdf = pdf.sort_values(ts) if ts else pdf.sort_values(data_cols)
+            acc = fold_rows(pdf[data_cols].to_dict("records"))
+            w = pdf["w"].iloc[0]
+            return pd.DataFrame([{"window_start": w["start"], "window_end": w["end"], **acc}])
+
+        out_schema = f"window_start timestamp, window_end timestamp, {schema}"
+        return Stream(self._grouped().applyInPandas(run, out_schema))
+
     def reduce(self, fn) -> Stream:
         """ReduceFunction over the window's rows (ref: WindowedStream.java
         reduce — pairwise fold in arrival order; here event-time order by
@@ -970,47 +978,14 @@ class WindowedStream:
         Scale: applyInPandas per (key, window) group — groups are bounded
         by the window size, shuffled once on their natural grouping key.
         """
-        import functools
-
-        data_cols = self.df.columns
-        ts = self.ts_col
-        out_schema = ", ".join(
-            ["window_start timestamp", "window_end timestamp"]
-            + [f"{c} {t}" for c, t in self.df.dtypes]
-        )
-
-        def run(key, pdf):
-            import pandas as pd
-
-            pdf = pdf.sort_values(ts) if ts else pdf.sort_values(data_cols)
-            rows = pdf[data_cols].to_dict("records")
-            acc = functools.reduce(fn, rows)
-            acc = {"window_start": pdf["w"].iloc[0]["start"],
-                   "window_end": pdf["w"].iloc[0]["end"], **acc}
-            return pd.DataFrame([acc])
-
-        return Stream(self._grouped().applyInPandas(run, out_schema))
+        schema = ", ".join(f"{c} {t}" for c, t in self.df.dtypes)
+        return self._fold_rows(lambda rows: functools.reduce(fn, rows), schema)
 
     def fold(self, initial: dict, fn, schema: str) -> Stream:
         """Deprecated-in-reference fold (WindowedStream.java fold):
         ``fn(acc, row) -> acc`` starting from ``initial``; output columns
         = ``schema`` plus window bounds."""
-        data_cols = self.df.columns
-        ts = self.ts_col
-
-        def run(key, pdf):
-            import pandas as pd
-
-            pdf = pdf.sort_values(ts) if ts else pdf.sort_values(data_cols)
-            acc = dict(initial)
-            for row in pdf[data_cols].to_dict("records"):
-                acc = fn(acc, row)
-            acc = {"window_start": pdf["w"].iloc[0]["start"],
-                   "window_end": pdf["w"].iloc[0]["end"], **acc}
-            return pd.DataFrame([acc])
-
-        out_schema = f"window_start timestamp, window_end timestamp, {schema}"
-        return Stream(self._grouped().applyInPandas(run, out_schema))
+        return self._fold_rows(lambda rows: functools.reduce(fn, rows, dict(initial)), schema)
 
     def process(self, fn, schema: str) -> Stream:
         """ProcessWindowFunction (ref: WindowedStream.java process,
@@ -1062,18 +1037,22 @@ class JoinedStreams:
         self._win = (left_ts, right_ts, size, slide)
         return self
 
-    def apply(self, *select_exprs) -> Stream:
+    def _windows(self, op: str) -> tuple[Column, Column]:
+        """Check the keys and the window of ``op`` (join or co_group) and
+        build the left and right window columns."""
         if not self.left_keys or len(self.left_keys) != len(self.right_keys):
-            raise ValueError("join needs where(...) and equal_to(...) of equal arity")
+            raise ValueError(f"{op} needs where(...) and equal_to(...) of equal arity")
         if self._win is None:
-            raise ValueError("join needs window(left_ts, right_ts, size)")
+            raise ValueError(f"{op} needs window(left_ts, right_ts, size)")
         lts, rts, size, slide = self._win
+        return F.window(lts, size, slide), F.window(rts, size, slide)
+
+    def apply(self, *select_exprs) -> Stream:
         # window assignment happens as a projection on each side (the
         # reference assigns windows before the join too); the join is
         # then a plain equi-join on (keys..., window struct), which
         # Catalyst plans as an ordinary hash join.
-        wl = F.window(lts, size, slide) if slide else F.window(lts, size)
-        wr = F.window(rts, size, slide) if slide else F.window(rts, size)
+        wl, wr = self._windows("join")
         a = self.left.df.withColumn("__wa", wl).alias("a")
         b = self.right.df.withColumn("__wb", wr).alias("b")
         cond = F.col("a.__wa") == F.col("b.__wb")
@@ -1119,13 +1098,7 @@ class CoGroupedStreams:
         """``fn(key: tuple, left_pdf, right_pdf) -> pdf`` per (key,
         window) pair; `key` ends with the window Row (start/end)."""
         j = self._j
-        if not j.left_keys or len(j.left_keys) != len(j.right_keys):
-            raise ValueError("co_group needs where(...) and equal_to(...) of equal arity")
-        if j._win is None:
-            raise ValueError("co_group needs window(left_ts, right_ts, size)")
-        lts, rts, size, slide = j._win
-        wl = F.window(lts, size, slide) if slide else F.window(lts, size)
-        wr = F.window(rts, size, slide) if slide else F.window(rts, size)
+        wl, wr = j._windows("co_group")
         lg = j.left.df.withColumn("__w", wl).groupBy(*j.left_keys, "__w")
         rg = j.right.df.withColumn("__w", wr).groupBy(*j.right_keys, "__w")
 
