@@ -1,16 +1,14 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints TWO JSON lines on stdout (everything else goes to stderr):
-  last-but-one: {"metric": "per_query_sec", "unit": "sec", "sf": ...,
-                 "values": {name: sec, ...}}      (compact, 2 dp)
-  last:         {"metric": "headline_query_wall_sec", "value": total_sec,
-                 "unit": "sec", "sf": ..., "n_queries": N,
-                 "calibration_sec": ..., "value_normalized": ...}
-The scalars line is LAST and tiny so a bounded stdout tail always holds
-a complete parseable final line; the per-query line right before it
-carries the same query names as the historical "queries" dict (entries
-are only ever added, never removed or renamed).
+Each query is sampled through ``my_flink_1_10_2_spark.observe``.
+Prints ONE compact JSON line on stdout (everything else goes to stderr):
+  {"metric": "headline_query_wall_sec", "value": total_sec, "unit": "sec",
+   "sf": ..., "n_queries": N, "calibration_sec": ..., "value_normalized": ...,
+   "cpus": defaultParallelism, "values": {name: sec, ...}}   (values 2 dp)
+The query names are those of the historical "queries" dict (entries are
+only ever added, never removed or renamed); bench_detail.json holds the
+full-precision and calibration-normalized times.
 """
 
 from __future__ import annotations
@@ -140,20 +138,14 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from my_flink_1_10_2_spark import observe
     from my_flink_1_10_2_spark.queries import all_queries
     from my_flink_1_10_2_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
     reg = all_queries()
-
-    # Warm the JVM + parquet footers with one tiny action, and spawn the
-    # Python UDF workers (reused across queries) so applyInPandas-path
-    # timings measure the operator, not the one-time worker fork.
-    reg["q_full_sort"].spark_fn(spark, sf_dir).count()
-    spark.range(1000).repartition(64).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    observe.warm_up(spark, sf_dir)
 
     # Fixed calibration workload (pure Spark, no engine code): hash-agg +
     # sort over lineitem.  Round-over-round query deltas should be read
@@ -197,24 +189,8 @@ def main() -> None:
     for name in HEADLINE:
         q = reg[name]
 
-        def _cleanup() -> None:
-            # Drop any blocks the query left persisted (iterative
-            # operators free superseded checkpoints themselves, but the
-            # final state and lazily-consumed graph kernels keep theirs)
-            # so queries are measured in isolation, not under the
-            # previous queries' block-manager pressure.
-            for r in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-                r.unpersist()
-            spark.catalog.clearCache()
-
         def _sample() -> float:
-            t0 = time.perf_counter()
-            # noop sink: forces full computation of every output column
-            # (count() would let Catalyst prune projection-only work)
-            q.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - t0
-            _cleanup()
-            return elapsed
+            return observe.sample(spark, q, sf_dir)["wall_s"]
 
         samples = sorted(_sample() for _ in range(runs))
         # Sub-0.5s queries have a ±2x run-to-run noise floor: widen to 5
@@ -240,11 +216,6 @@ def main() -> None:
     print(f"# calibration (median of {len(cal_all)}): {calibration}s", file=sys.stderr)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # The driver stores only a TAIL of stdout and parses the LAST JSON
-    # line — rounds 4 AND 5 both outgrew that buffer with the per-query
-    # dict on the final line ("parsed": null twice).  The final stdout
-    # line is now SCALARS ONLY (~170 bytes); the full per-query timings
-    # and normalized ratios live in bench_detail.json + stderr.
     result = {
         "metric": "headline_query_wall_sec",
         "value": round(sum(timings.values()), 3),
@@ -264,28 +235,21 @@ def main() -> None:
             n: round(t / calibration, 2) for n, t in timings.items()
         },
     }
-    print("# detail: " + json.dumps(detail), file=sys.stderr)
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "bench_detail.json"), "w") as f:
             json.dump(detail, f, indent=1)
     except OSError:
         pass
-    # Per-query timings for the driver's round-over-round comparator and
-    # scaling table (round-11 verdict item 1): ONE compact JSON line on
-    # stdout, LAST-BUT-ONE — 2-decimal values with no spaces (~2.2 KB for
-    # 85 queries).  The headline scalars line stays LAST and tiny so the
-    # driver's 2000-char stdout tail always holds a complete parseable
-    # final line (rounds 4/5 broke exactly this by putting the full-
-    # precision dict on the final line).
-    per_query = {
-        "metric": "per_query_sec",
-        "unit": "sec",
-        "sf": result["sf"],
+    # The final line carries the per-query times at 2 dp, compact (~2.5 KB
+    # for 85 queries), after the scalars: a reader that keeps only a
+    # bounded tail of stdout still gets the whole line.
+    final = {
+        **result,
+        "cpus": spark.sparkContext.defaultParallelism,
         "values": {n: round(t, 2) for n, t in timings.items()},
     }
-    print(json.dumps(per_query, separators=(",", ":")))
-    print(json.dumps(result))
+    print(json.dumps(final, separators=(",", ":")))
 
 
 if __name__ == "__main__":

@@ -734,7 +734,7 @@ def closeness_centrality(
     ``(n_reached-1)/total_dist`` (one IEEE division of exact ints) and
     ``harmonic_e9`` = Σ_d count_d·round(1e9/d) — the harmonic sum in
     exact integer 1e-9 units, immune to float ordering."""
-    sym = _sym(edges, src, dst)
+    sym, sym_ids = checkpoint_tracked(_sym(edges, src, dst))
     nodes = _nodes(sym, "u", "v")
     sources = nodes.orderBy("node").limit(n_sources).select(
         F.col("node").alias("source")
@@ -752,6 +752,7 @@ def closeness_centrality(
 
     init = sources.select("source", F.col("source").alias("node"), F.lit(0).alias("d"))
     dist = iterate(init, expand, max_iters, fixpoint(row_count))
+    free_checkpoints(edges.sparkSession, sym_ids)
     per_d = dist.where(F.col("d") > 0)
     return (
         per_d.groupBy("source")

@@ -863,11 +863,11 @@ class KeyedStream:
         input, keep a per-key n-element buffer, re-emit on change).
 
         State = the current top-n rows (a frame, like streaming CEP's
-        tail); each micro-batch merges its rows and emits the key's full
-        refreshed top-n snapshot with a `rank` column (the reference
-        emits retract+insert pairs; consumers here take the latest
-        snapshot per key — changelog semantics via `__change`-style
-        convention documented in SURVEY §2.10).
+        tail); each micro-batch merges its rows and, when the key's top-n
+        changed, emits the full refreshed snapshot with a `rank` column
+        (the reference emits retract+insert pairs; consumers here take
+        the latest snapshot per key — changelog semantics via
+        `__change`-style convention documented in SURVEY §2.10).
 
         Scale: state is O(n) per key — the exact property that makes the
         reference's AppendFast strategy cheap — and only changed keys
@@ -880,6 +880,8 @@ class KeyedStream:
             top = full.sort_values(
                 order_col, ascending=not desc, kind="mergesort", ignore_index=True
             ).head(n)
+            if buf is not None and top.equals(buf):
+                return buf, top.head(0)
             return top, top.assign(rank=range(1, len(top) + 1))
 
         return self._fold(fold, order_col, f"{self._schema()}, rank int")
@@ -960,7 +962,7 @@ class WindowedStream:
         def run(key, pdf):
             import pandas as pd
 
-            pdf = pdf.sort_values(ts) if ts else pdf.sort_values(data_cols)
+            pdf = pdf.sort_values(ts or data_cols, kind="mergesort")
             acc = fold_rows(pdf[data_cols].to_dict("records"))
             w = pdf["w"].iloc[0]
             return pd.DataFrame([{"window_start": w["start"], "window_end": w["end"], **acc}])

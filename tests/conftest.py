@@ -16,19 +16,6 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -42,8 +29,10 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
+    from my_flink_1_10_2_spark.catalog import TABLE_NAMES
+
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         path = os.path.join(SF_DIR, f"{t}.parquet")
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")

@@ -34,9 +34,9 @@ ROW_ORDER = [("a", 1), ("a", 3), ("a", 5), ("a", 6), ("a", 9),
 VALUE = {(k, ts): v for wave in WAVES for k, ts, v in wave}
 
 COUNT_WINDOW = [("a", 0, 2, 8.0), ("a", 1, 2, 7.0), ("b", 0, 2, 8.0), ("b", 1, 2, 8.0)]
+# wave 2 leaves key a's top-2 as it was, so a emits nothing there
 TOP_N = [
     ("a", 1, 5.0, 1),
-    ("a", 5, 6.0, 1), ("a", 1, 5.0, 2),
     ("a", 5, 6.0, 1), ("a", 1, 5.0, 2),
     ("b", 2, 2.0, 1),
     ("b", 4, 6.0, 1), ("b", 2, 2.0, 2),

@@ -5,6 +5,7 @@ shape (one aggregate pass for all scalar constraints)."""
 import pytest
 from pyspark.sql import functions as F
 
+from my_flink_1_10_2_spark.observe import job_group
 from my_flink_1_10_2_spark.operators.quality import PPM, Check
 
 
@@ -76,14 +77,10 @@ def test_scalar_metrics_are_one_aggregate_pass(spark, df):
     passes — 7 scalar constraints run the same number of Spark jobs as
     2 (AQE may split the one aggregation into a few stages, but the
     count cannot scale with the constraint count)."""
-    sc = spark.sparkContext
-
     def jobs_for(check, group):
-        sc.setJobGroup(group, group)
-        check.run().collect()
-        n = len(sc.statusTracker().getJobIdsForGroup(group))
-        sc.setJobGroup(None, None)
-        return n
+        with job_group(spark, group) as record:
+            check.run().collect()
+        return record["jobs"]
 
     small = Check(df).has_size(1).is_complete("id")
     big = (

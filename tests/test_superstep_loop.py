@@ -14,6 +14,7 @@ import pathlib
 
 import pytest
 
+from my_flink_1_10_2_spark.observe import job_group
 from my_flink_1_10_2_spark.operators import gelly
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "my_flink_1_10_2_spark"
@@ -83,14 +84,7 @@ _RUNS = {
 
 @pytest.mark.parametrize("name", sorted(_RUNS))
 def test_jobs_per_call_do_not_rise(spark, name):
-    sc = spark.sparkContext
     edges = spark.createDataFrame(_EDGES, "src long, dst long")
-    group = f"superstep_jobs_{name}"
-    sc.setJobGroup(group, name)
-    try:
+    with job_group(spark, name) as record:
         _RUNS[name](edges).write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= _LOOP_JOBS[name], f"{name}: {jobs} jobs"
+    assert record["jobs"] <= _LOOP_JOBS[name], f"{name}: {record['jobs']} jobs"

@@ -48,6 +48,21 @@ def test_window_fold_with_initial(spark):
     got = {(r.n, r.total) for r in out.df.collect()}
     assert got == {(2, 103.0), (1, 110.0), (1, 105.0), (2, 110.0)}
 
+    # rows with equal ts fold in arrival order: 40 rows at ts 1, then 40
+    # at ts 0, v = arrival position, so a stable ts sort folds
+    # v = 40..79, 0..39 — one descent, last v 39
+    base = datetime.datetime(2021, 1, 1)
+    rows = [("a", base + datetime.timedelta(seconds=int(i < 40)), float(i)) for i in range(80)]
+    ties = spark.createDataFrame(rows, "k string, ts timestamp, v double").coalesce(1)
+
+    def descents_and_last(acc, row):
+        return {"n": acc["n"] + (row["v"] < acc["total"]), "total": row["v"]}
+
+    out = Stream(ties).key_by("k").tumble("ts", "1 minute").fold(
+        {"n": 0, "total": -1.0}, descents_and_last, "n int, total double"
+    )
+    assert [(r.n, r.total) for r in out.df.collect()] == [(1, 39.0)]
+
 
 def test_process_window_function_emits_many(spark):
     df = _events(spark)

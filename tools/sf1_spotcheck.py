@@ -4,6 +4,10 @@ time, peak executor memory pressure signals (spill bytes), and plan-shape
 diffs vs sf0.1 — the size-dependent plan flips (broadcast-threshold
 crossings, AQE skew splits) the driver's sf0.1 bench can't see.
 
+Each query is timed by one ``observe.sample`` (construction and noop
+write, as bench.py times it); the plan shapes come from separate,
+untimed builds at both scales.
+
 Usage: python tools/sf1_spotcheck.py [--sf1 .sfscale/sf1] [--top 20]
 Prints one JSON line per query + a summary; exit 0 unless a query dies.
 """
@@ -11,13 +15,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 os.chdir(_REPO)
 
-from my_flink_1_10_2_spark import plans  # noqa: E402
+from my_flink_1_10_2_spark import observe, plans  # noqa: E402
 from my_flink_1_10_2_spark.queries import all_queries  # noqa: E402
 from my_flink_1_10_2_spark.session import get_spark  # noqa: E402
 
@@ -44,6 +47,7 @@ def main() -> None:
     spark = get_spark(app_name="sf1-spotcheck")
     spark.sparkContext.setLogLevel("ERROR")
     reg = all_queries()
+    observe.warm_up(spark, args.sf01)
 
     if args.names:
         names = args.names
@@ -53,23 +57,14 @@ def main() -> None:
         q = d.get("queries_normalized") or d["queries"]
         names = [k for k, _ in sorted(q.items(), key=lambda kv: -kv[1])[: args.top]]
 
-    sc = spark.sparkContext
     results, failed = {}, []
     for i, name in enumerate(names):
         try:
-            shape01 = _plan_shape(reg[name].spark_fn(spark, args.sf01))
-            # time construction + execution together: iterative operators
-            # (k-core, CC, SSSP, PageRank) run their loops eagerly during
-            # query CONSTRUCTION, so wrapping only the write would miss
-            # nearly all their work
-            t0 = time.perf_counter()
-            df = reg[name].spark_fn(spark, args.sf1)
-            shape1 = _plan_shape(df)
-            df.write.format("noop").mode("overwrite").save()
-            wall = round(time.perf_counter() - t0, 2)
-            for r in list(sc._jsc.getPersistentRDDs().values()):
-                r.unpersist()
-            spark.catalog.clearCache()
+            query = reg[name]
+            shape01 = _plan_shape(query.spark_fn(spark, args.sf01))
+            shape1 = _plan_shape(query.spark_fn(spark, args.sf1))
+            observe.release(spark)
+            wall = round(observe.sample(spark, query, args.sf1)["wall_s"], 2)
             diffs = {
                 k: (shape01[k], shape1[k])
                 for k in shape1
