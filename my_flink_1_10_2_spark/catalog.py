@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -31,6 +32,23 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Inferred parquet schemas by (abspath, st_mtime_ns, st_size): inference
+# runs a Spark job per read (~60 ms at sf0.1), a given schema none; a
+# rewritten file gets a new key and is inferred again.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table as a lazy parquet scan.
@@ -43,7 +61,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     projection — pushdown/pruning on the other columns is unaffected.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType

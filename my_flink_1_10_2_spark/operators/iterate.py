@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -357,8 +357,8 @@ def connected_components(
     one hash aggregation — the same data movement as the reference's
     scatter-gather. Labels shrink to distinct nodes; the edge relation is
     re-used every step (cache-friendly; Spark keeps the shuffle files).
-    Convergence is the `changed == 0` fixpoint, detected with a count on
-    the checkpointed labels.
+    Convergence is the `changed == 0` fixpoint, detected by the label
+    sum of the checkpointed labels (one job per check).
     """
     sym, sym_ids = checkpoint_tracked(_symmetric(edges, src, dst))
     labels = _initial_labels(sym, vertices)
@@ -396,9 +396,15 @@ def connected_components(
     # the per-superstep convergence test from a |V|-row shuffle join
     # into a map-side aggregate (one row crosses the wire), which at
     # 100 TB removes a full shuffle per superstep.  decimal(38,0)
-    # accumulation keeps the sum exact at any node-id magnitude.
+    # accumulation keeps the sum exact at any node-id magnitude.  The sum
+    # is an observed metric of a noop write: ONE job, where a global
+    # aggregate is two under adaptive execution.
     def label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("component").cast("decimal(38,0)"))).first()[0]
+        obs = Observation()
+        df.observe(
+            obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+        ).write.format("noop").mode("overwrite").save()
+        return obs.get["s"]
 
     out = iterate(labels, step, max_iterations, fixpoint(label_sum))
     # the result checkpoint is self-contained — the edge relation's

@@ -78,7 +78,7 @@ def q_sql_ddl_partitioned(spark, sf_dir):
         ).df
         # materialize before the tempdir vanishes (same pattern as the
         # streaming registry queries)
-        out = spark.createDataFrame(result.collect(), result.schema)
+        out = spark.createDataFrame(result.toArrow(), result.schema)
         return out
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -134,7 +134,7 @@ def q_sql_insert_select(spark, sf_dir):
         result = env.sql_query(
             "SELECT prio, n_orders, revenue_cents FROM prio_rollup ORDER BY prio"
         ).df
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

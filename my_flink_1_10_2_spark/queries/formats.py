@@ -63,7 +63,7 @@ def q_avro_documents_roundtrip(spark, sf_dir):
             )
             .orderBy("source")
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1466,7 +1466,7 @@ def q_webdataset_roundtrip(spark, sf_dir):
                 F.col("total_txt_bytes").cast("bigint").alias("total_txt_bytes"),
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1531,7 +1531,7 @@ def q_tfrecord_roundtrip(spark, sf_dir):
                 "total_n_chars", "total_txt_bytes",
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1742,7 +1742,7 @@ def q_arrow_ipc_roundtrip(spark, sf_dir):
                 "n_langs", "total_n_chars", "total_txt_bytes",
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1805,7 +1805,7 @@ def q_npy_shard_roundtrip(spark, sf_dir):
                 F.sum("__q").cast("bigint").alias("q_sum"),
             )
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1869,7 +1869,7 @@ def q_wet_shard_roundtrip(spark, sf_dir):
             F.sum("txt_chars").cast("bigint").alias("total_chars"),
             F.sum("txt_bytes").cast("bigint").alias("total_bytes"),
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1929,7 +1929,7 @@ def q_jsonl_zst_roundtrip(spark, sf_dir):
             F.sum("n_chars").cast("bigint").alias("total_n_chars"),
             F.sum(F.length("text")).cast("bigint").alias("total_txt_chars"),
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -382,7 +382,7 @@ def q_side_output_split(spark, sf_dir):
             )
 
         result = rollup(main_dir, "main").unionAll(rollup(side_dir, "side")).orderBy("tag")
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -496,7 +496,7 @@ def q_streaming_file_sink(spark, sf_dir):
             )
             .orderBy("event_type")
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -567,7 +567,7 @@ def q_broadcast_state_threshold(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy("event_type")
         )
-        return spark.createDataFrame(result.collect(), result.schema)
+        return spark.createDataFrame(result.toArrow(), result.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -614,7 +614,7 @@ def q_queryable_state(spark, sf_dir):
         try:
             handle.query.processAllAvailable()
             snap = handle.snapshot().orderBy("user_id")
-            return spark.createDataFrame(snap.collect(), snap.schema)
+            return spark.createDataFrame(snap.toArrow(), snap.schema)
         finally:
             handle.stop()
     finally:
@@ -1152,7 +1152,7 @@ def q_coprocess_shared_state(spark, sf_dir):
             .where(F.col("__rn") == 1)
             .drop("__rn")
         )
-        return spark.createDataFrame(final.collect(), final.schema)
+        return spark.createDataFrame(final.toArrow(), final.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 # Without an explicit master the session runs on local[SPARK_GRAFT_CPUS]
 # (32 when unset); on a real cluster the submitter passes the master.
 _LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _apply_engine_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
@@ -45,6 +46,11 @@ def _apply_engine_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that skips re-reading unchanged
+        # zip archives on every task (worker_daemon.py); the package root
+        # on the workers' path lets it start whatever the working directory.
+        .config("spark.python.daemon.module", "my_flink_1_10_2_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
 
 

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def assign_contiguous_shards(
@@ -201,11 +202,24 @@ def read_per_task(
             [*schema.fields, T.StructField(shard_col, T.LongType())]
         )
     if not units:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+    # The unit list stays in the JVM: a range of len(units) slices, one
+    # unit per slice and in order, picks its unit out of a literal array
+    # (a path unit has null lo/hi); shipping the list from the driver
+    # would run a Python task per slice.
     rows = [(u, None, None) if isinstance(u, str) else tuple(u) for u in units]
-    unit_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, len(rows)),
-        "path string, lo long, hi long",
+    table = F.array(*[
+        F.struct(
+            F.lit(path).alias("path"),
+            F.lit(lo).cast("long").alias("lo"),
+            F.lit(hi).cast("long").alias("hi"),
+        )
+        for path, lo, hi in rows
+    ])
+    unit_df = (
+        spark.range(0, len(rows), 1, len(rows))
+        .select(F.element_at(table, F.col("id").cast("int") + 1).alias("u"))
+        .select("u.path", "u.lo", "u.hi")
     )
 
     def _read(batches):

@@ -5,7 +5,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from my_flink_1_10_2_spark.sources.sharding import assign_contiguous_shards
+from my_flink_1_10_2_spark.sources.sharding import (
+    assign_contiguous_shards,
+    read_per_task,
+)
 
 
 def _expected(keys, s):
@@ -61,3 +64,33 @@ def test_no_checkpoint_blocks_leak(spark):
     df = spark.createDataFrame([(k,) for k in range(37)], "k long")
     assign_contiguous_shards(df, "k", 10).collect()
     assert len(sc._jsc.getPersistentRDDs()) == 0
+
+
+def test_read_per_task_decodes_each_unit_in_its_own_task(spark):
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    def decode(path, lo=None, hi=None):
+        return pd.DataFrame({"path": [path], "lo": [lo], "hi": [hi]})
+
+    schema = T.StructType([
+        T.StructField("path", T.StringType()),
+        T.StructField("lo", T.LongType()),
+        T.StructField("hi", T.LongType()),
+    ])
+    paths = ["/d/shard-000007.x", "/d/shard-000002.x"]
+    out = read_per_task(spark, paths, schema, decode, shard_col="shard")
+    assert [tuple(r) for r in out.withColumn("pid", F.spark_partition_id()).collect()] == [
+        ("/d/shard-000007.x", None, None, 7, 0),
+        ("/d/shard-000002.x", None, None, 2, 1),
+    ]
+    units = ["/d/a.x", ("/d/w.x", 0, 1 << 40), ("/d/w.x", None, None), "/d/b.x"]
+    out = read_per_task(spark, units, schema, decode)
+    assert out.rdd.getNumPartitions() == len(units)
+    assert [tuple(r) for r in out.withColumn("pid", F.spark_partition_id()).collect()] == [
+        ("/d/a.x", None, None, 0),
+        ("/d/w.x", 0, 1 << 40, 1),
+        ("/d/w.x", None, None, 2),
+        ("/d/b.x", None, None, 3),
+    ]
+    assert read_per_task(spark, [], schema, decode).collect() == []

@@ -1,8 +1,8 @@
-"""sf1 memory-shape spot-check: run the N heaviest bench queries once at
+"""sf1 spot-check: run the N heaviest bench queries once at
 a 10x-bench scale directory (see tools/make_sf_scale.py) and record wall
-time, peak executor memory pressure signals (spill bytes), and plan-shape
-diffs vs sf0.1 — the size-dependent plan flips (broadcast-threshold
-crossings, AQE skew splits) the driver's sf0.1 bench can't see.
+time and plan-shape diffs vs sf0.1 — the size-dependent plan flips
+(broadcast-threshold crossings, AQE skew splits) the driver's sf0.1
+bench can't see.  It records no memory or spill figure.
 
 Each query is timed by one ``observe.sample`` (construction and noop
 write, as bench.py times it); the plan shapes come from separate,
