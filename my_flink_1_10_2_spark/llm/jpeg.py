@@ -17,8 +17,10 @@ predictors and the progressive end-of-band run (§B.2.4.4, §E.1.4).
 - Frame (SOFn, §B.2.2): precision P (8 or 12), height, width and per
   component an id, sampling factors h×v and a quant table.  Samples are
   level-shifted by 2^(P-1), split into 8×8 blocks, forward-DCT'd,
-  divided by the quant table and rounded; coefficients travel in
-  zigzag order.  DQT entries are 8-bit (Pq=0) or 16-bit (Pq=1).
+  divided by the quant table and rounded to the nearest integer, ties
+  half to even on the exact quotient whatever the BLAS kernel (§A.3.4
+  leaves ties open; see ``_fdct_grid``); coefficients travel in zigzag
+  order.  DQT entries are 8-bit (Pq=0) or 16-bit (Pq=1).
 - Scan order (§A.2): a single-component scan walks that component's
   own block grid, ceil(ceil(dim·h/hmax)/8) blocks across; an interleaved
   scan walks MCUs holding h×v blocks of each of its components, over
@@ -371,13 +373,26 @@ def _fdct_grid(padded: np.ndarray, gh: int, gw: int, q: np.ndarray,
                shift: float) -> list[list[int]]:
     """Level shift, forward DCT and quantize a whole (gh*8, gw*8) plane
     in one broadcast matmul chain → quantized zigzag rows, raster block
-    order."""
+    order.
+
+    Each coefficient is S/Q rounded to the nearest integer (T.81
+    §A.3.4), ties half to even.  T.81 leaves ties open; half to even is
+    ``np.round``'s rule.  Ties are real: DC and the (0,4), (4,0), (4,4)
+    coefficients are integer sums over 8, so S/Q can be exactly k+1/2.
+    The matmul chain lands such a quotient a few ulp to either side,
+    and which side depends on the BLAS kernel, so a quotient within
+    5e-10 of a half-integer is snapped onto it before rounding.  The
+    chain's error at |S/Q| ≤ 2^14 stays under ~64 ulp ≈ 2.3e-10, while a
+    rational quotient that is not a tie lies at least 1/(8·Q) ≥ 1.9e-6
+    from one (1/(32·Q) for 2×2-averaged chroma samples), so among them
+    the snap moves only ties and one input gives one stream on every
+    machine."""
     m = _dct_matrix()
     blocks = (
         padded.reshape(gh, 8, gw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
         - shift
     )
-    qc = np.round((m @ blocks @ m.T) / q).astype(np.int64)
+    qc = np.round(np.round((m @ blocks @ m.T) / q, 9)).astype(np.int64)
     return qc[:, _ZIG_R, _ZIG_C].tolist()
 
 
