@@ -37,6 +37,7 @@ import contextlib
 import struct
 from dataclasses import dataclass
 
+from my_flink_1_10_2_spark.sources.sharding import read_per_task, row_chunks
 from my_flink_1_10_2_spark.sources.sink_core import PartitionSink
 
 FRAME_METHOD = 1
@@ -453,7 +454,7 @@ def rmq_drain_source(
     dedup = uses_correlation_id
     crash = crash_before_ack
 
-    def drain(_idx_iter):
+    def deliveries():
         client = AmqpClient(cfg, connect_factory=cf)
         try:
             client.queue_declare(q)
@@ -474,14 +475,16 @@ def rmq_drain_source(
                     )
                 if ack and not crash:
                     client.basic_ack(tag)
-                yield (corr, bytearray(body))
+                yield (corr, bytes(body))
         finally:
             client.close()
 
-    rdd = spark.sparkContext.parallelize(range(consumers), consumers).mapPartitions(
-        drain
+    df = read_per_task(
+        spark,
+        [(i,) for i in range(consumers)],
+        "correlation_id string, body binary",
+        lambda _consumer: row_chunks(deliveries()),
     )
-    df = spark.createDataFrame(rdd, "correlation_id string, body binary")
     # The drain is SIDE-EFFECTING (messages are acked and dequeued): pin
     # the rows executor-side NOW so Spark recomputation — a task retry, a
     # second action, an AQE re-plan — can never re-consume the broker.

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from my_flink_1_10_2_spark.sources.sharding import (
     commit_file,
+    range_units,
     read_per_task,
     shard_paths,
     write_shards,
@@ -131,7 +132,7 @@ def read_arrow_shards(
     want_schema_str = str(arrow_schema)
     return read_per_task(
         spark,
-        paths,
+        [(p,) for p in paths],
         _spark_schema(arrow_schema),
         lambda path: decode_arrow_file(path, want_schema_str),
         shard_col,
@@ -173,10 +174,7 @@ def read_arrow_file_parallel(
         reader = ipc.open_file(mm)
         n_batches = reader.num_record_batches
         arrow_schema = reader.schema
-    ranges = [
-        (path, lo, min(lo + batches_per_task, n_batches))
-        for lo in range(0, n_batches, batches_per_task)
-    ]
+    ranges = range_units(path, n_batches, batches_per_task)
 
     def decode(f, lo, hi):
         import pyarrow as pa

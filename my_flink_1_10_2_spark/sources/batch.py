@@ -88,45 +88,49 @@ def read_avro(
     blocks via the sync-marker protocol (`avro_py.read_container_split`),
     one task per split, so a single multi-GB container still scans with
     full cluster parallelism.  Small files get one task each."""
-    try:
+    if _native_avro(spark):
         return spark.read.format("avro").load(path)
-    except Exception as exc:
-        if not _is_missing_avro_datasource(exc):
-            raise  # real read error from the native path — surface it
-    from . import avro_py
-
-    import glob as _glob
     import os as _os
 
-    if _os.path.isdir(path):
-        files = sorted(_glob.glob(_os.path.join(path, "*.avro")))
-        if not files:
-            raise FileNotFoundError(f"no .avro files under {path}")
-    else:
-        files = [path]
+    from . import avro_py
+    from .sharding import range_units, read_per_task, shard_paths
+
+    files = shard_paths(path, ".avro") if _os.path.isdir(path) else [path]
     avro_schema, _codec, _sync, _hl = avro_py.read_header(files[0])
     spark_schema = avro_py.avro_to_spark_schema(avro_schema)
     cols = [f.name for f in spark_schema.fields]
     # driver-side split planning is metadata-scale: one (path, lo, hi)
-    # triple per split_bytes of file
-    splits: list[tuple[str, int, int]] = []
-    for f in files:
-        size = _os.path.getsize(f)
-        lo = 0
-        while True:
-            hi = lo + split_bytes
-            if hi >= size:
-                splits.append((f, lo, size))
-                break
-            splits.append((f, lo, hi))
-            lo = hi
+    # unit per split_bytes of file
+    splits = [
+        u for f in files for u in range_units(f, _os.path.getsize(f), split_bytes)
+    ]
 
-    def _read_split(t):
-        _, rows = avro_py.read_container_split(t[0], t[1], t[2])
+    def _read_split(f, lo, hi):
+        _, rows = avro_py.read_container_split(f, lo, hi)
         return [tuple(d[c] for c in cols) for d in rows]
 
-    rdd = spark.sparkContext.parallelize(splits, len(splits)).flatMap(_read_split)
-    return spark.createDataFrame(rdd, schema=spark_schema)
+    return read_per_task(spark, splits, spark_schema, _read_split)
+
+
+# applicationId -> spark-avro is on the classpath (fixed for the app)
+_NATIVE_AVRO: dict[str, bool] = {}
+
+
+def _native_avro(spark: SparkSession) -> bool:
+    """Whether Spark's native ``format("avro")`` is available, probed
+    once per application: planning it where the jar is missing fails
+    analysis and, once the session has used ``DataFrame.observe``, logs
+    an ExecutionListenerBus error on each failed write."""
+    app = spark.sparkContext.applicationId
+    if app not in _NATIVE_AVRO:
+        try:
+            spark.read.format("avro").schema("probe int").load()
+            _NATIVE_AVRO[app] = True
+        except Exception as exc:
+            # any other error means the data source was found; real read
+            # and write errors then surface from the native calls
+            _NATIVE_AVRO[app] = not _is_missing_avro_datasource(exc)
+    return _NATIVE_AVRO[app]
 
 
 def _is_missing_avro_datasource(exc: Exception) -> bool:
@@ -148,16 +152,13 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite", codec: str = "
     Native `format("avro")` when the jar is present; otherwise the
     pure-Python fallback writes one container file per partition from
     executors (posix-visible paths — object stores need the jar path)."""
-    try:
+    if _native_avro(df.sparkSession):
         # spark-avro spells the spec's "null" codec "uncompressed"
         native_codec = "uncompressed" if codec == "null" else codec
         df.write.mode(mode).format("avro").option(
             "compression", native_codec
         ).save(path)
         return
-    except Exception as exc:
-        if not _is_missing_avro_datasource(exc):
-            raise  # real write error from the native path — surface it
     import os as _os
     import shutil as _shutil
 
@@ -175,7 +176,7 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite", codec: str = "
     avro_schema = avro_py.spark_to_avro_schema(df.schema)
 
     def _write_part(idx, it):
-        rows = [r.asDict(recursive=True) for r in it]
+        rows = [_utc_instants(r.asDict(recursive=True)) for r in it]
         if rows:
             avro_py.write_container(
                 _os.path.join(path, f"part-{offset + idx:05d}.avro"), avro_schema, rows, codec=codec
@@ -189,6 +190,21 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite", codec: str = "
         avro_py.write_container(
             _os.path.join(path, "part-00000.avro"), avro_schema, [], codec=codec
         )
+
+
+def _utc_instants(value):
+    """``value`` with each naive datetime — a Spark timestamp as Python
+    sees it, in the worker's local zone — made the aware UTC instant
+    that Avro stores, whatever the host's zone."""
+    import datetime
+
+    if isinstance(value, datetime.datetime):
+        return value.astimezone(datetime.timezone.utc)
+    if isinstance(value, dict):
+        return {k: _utc_instants(v) for k, v in value.items()}
+    if isinstance(value, list):
+        return [_utc_instants(v) for v in value]
+    return value
 
 
 def _write(df: DataFrame, mode: str, partition_by):

@@ -326,7 +326,10 @@ def cassandra_sink_options(
 # their PUBLIC protocols (the CQL/OffsetFetch/REST discipline): AMQP
 # 0-9-1 for RabbitMQ, REST for Pub/Sub, Site-to-Site-over-HTTP for
 # NiFi, streaming HTTP for Twitter.  Each shim below delegates to the
-# protocol module; the graded roundtrips run against the in-process
+# protocol module, whose drain reads one consumer (or stream) per task
+# through ``sharding.read_per_task`` and pins the drained rows with an
+# eager localCheckpoint, so a recompute never consumes the live feed a
+# second time.  The graded roundtrips run against the in-process
 # emulators in ``my_flink_1_10_2_spark.testing``.
 # ---------------------------------------------------------------------------
 

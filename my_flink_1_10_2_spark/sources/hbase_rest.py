@@ -37,6 +37,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from my_flink_1_10_2_spark.sources.sharding import read_per_task, row_chunks
 from my_flink_1_10_2_spark.sources.sink_core import PartitionSink, Rejected, http_request
 
 # Flink type name → (spark DDL type, encoder, decoder). Encodings match
@@ -135,7 +136,8 @@ def _scan_range(
     batch: int,
     transport,
 ):
-    """Drive one REST scanner over [start, stop); yield decoded row dicts."""
+    """Drive one REST scanner over [start, stop); yield decoded rows as
+    tuples in ``schema.spark_ddl()`` order."""
     model: dict = {"batch": batch, "caching": batch}
     if start_b64:
         model["startRow"] = start_b64
@@ -155,6 +157,7 @@ def _scan_range(
     if not loc:
         raise RuntimeError("HBase REST scanner response missing Location header")
     cells = schema.cell_map()
+    fields = [schema.rowkey_field] + [f for f, *_ in schema.columns]
     try:
         while True:
             status, _, body = transport(
@@ -167,7 +170,7 @@ def _scan_range(
                     f"HBase REST scanner read failed (status={status}): {body[:300]!r}"
                 )
             for row in json.loads(body).get("Row", []):
-                out = {f: None for f, *_ in schema.columns}
+                out = dict.fromkeys(fields)
                 out[schema.rowkey_field] = hbase_decode(
                     _unb64(row["key"]), schema.rowkey_type
                 )
@@ -176,7 +179,7 @@ def _scan_range(
                     if col in cells:
                         field, ftype = cells[col]
                         out[field] = hbase_decode(_unb64(cell["$"]), ftype)
-                yield out
+                yield tuple(out.values())
     finally:
         transport("DELETE", loc, {}, None)
 
@@ -195,46 +198,18 @@ def hbase_rest_source(
     HBaseTableSource.java → TableInputFormat region splits).
 
     ``split_keys`` (typed rowkey values, typically the table's region
-    start keys) partition the scan: each executor partition drives its
-    own scanner over one [start, stop) range — the analog of one input
-    split per region.  Without splits the table is read as a single
+    start keys) partition the scan: each [start, stop) range is one task
+    driving its own scanner — the analog of one input split per
+    region.  Without splits the table is read as a single
     range (fine for dimension tables; pass splits for anything big)."""
     transport = transport or http_request
-    bounds: list[bytes | None] = [None]
-    for k in split_keys or []:
-        bounds.append(hbase_encode(k, schema.rowkey_type))
-    bounds.append(None)
-    ranges = [
-        (
-            i,
-            _b64(bounds[i]) if bounds[i] is not None else None,
-            _b64(bounds[i + 1]) if bounds[i + 1] is not None else None,
-        )
-        for i in range(len(bounds) - 1)
-    ]
-    ddl = schema.spark_ddl()
-    field_order = [schema.rowkey_field] + [f for f, *_ in schema.columns]
+    keys = [_b64(hbase_encode(k, schema.rowkey_type)) for k in split_keys or []]
+    bounds = [None, *keys, None]
 
-    def fetch(iterator):
-        import pandas as pd
+    def fetch(start, stop):
+        return row_chunks(_scan_range(base_url, table, schema, start, stop, batch, transport))
 
-        for pdf in iterator:
-            for _, r in pdf.iterrows():
-                rows = list(
-                    _scan_range(
-                        base_url, table, schema,
-                        r["start"], r["stop"], batch, transport,
-                    )
-                )
-                yield pd.DataFrame(
-                    {f: [row[f] for row in rows] for f in field_order},
-                    dtype=object,
-                )
-
-    ranges_df = spark.createDataFrame(
-        ranges, "range_id int, start string, stop string"
-    ).repartition(len(ranges), "range_id")
-    return ranges_df.mapInPandas(fetch, schema=ddl)
+    return read_per_task(spark, list(zip(bounds, bounds[1:])), schema.spark_ddl(), fetch)
 
 
 # -- write path ---------------------------------------------------------------

@@ -18,6 +18,8 @@ backfill).  Rows surface executor-side; the driver never sees bodies.
 
 from __future__ import annotations
 
+from my_flink_1_10_2_spark.sources.sharding import read_per_task, row_chunks
+
 
 def _iter_lines(url: str, headers: dict | None, max_lines: int | None):
     import urllib.request
@@ -63,18 +65,16 @@ def http_line_stream_source(
     urls = list(urls)
     hdrs, cap = dict(headers or {}), max_lines
 
-    def drain(idx_iter):
-        for idx in idx_iter:
-            for line in _iter_lines(urls[idx], hdrs, cap):
-                yield (idx, line)
+    def drain(idx, url):
+        return row_chunks((idx, line) for line in _iter_lines(url, hdrs, cap))
 
-    rdd = spark.sparkContext.parallelize(range(len(urls)), len(urls)).mapPartitions(
-        drain
-    )
     # A live stream read is not replayable: pin the rows executor-side
     # NOW so recomputation never re-opens the endpoint.
-    return spark.createDataFrame(
-        rdd, "stream_id int, line string"
+    return read_per_task(
+        spark,
+        list(enumerate(urls)),
+        "stream_id int, line string",
+        drain,
     ).localCheckpoint(eager=True)
 
 

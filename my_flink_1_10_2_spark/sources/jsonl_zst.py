@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from my_flink_1_10_2_spark.sources.sharding import (
     commit_file,
+    range_units,
     read_per_task,
     shard_paths,
     write_shards,
@@ -155,7 +156,7 @@ def read_jsonl_zst_shards(
 
         return pd.DataFrame(decode_jsonl_zst(path, spec))
 
-    return read_per_task(spark, paths, out_schema, decode, shard_col)
+    return read_per_task(spark, [(p,) for p in paths], out_schema, decode, shard_col)
 
 
 # ---------------------------------------------------------------------------
@@ -288,10 +289,7 @@ def read_jsonl_zst_seekable(
     authoritative, like the Arrow IPC footer)."""
     table = read_zstd_seek_table(path)
     spec = dict(schema)
-    ranges = [
-        (path, lo, min(lo + frames_per_task, len(table)))
-        for lo in range(0, len(table), frames_per_task)
-    ]
+    ranges = range_units(path, len(table), frames_per_task)
     meta = spark.sparkContext.broadcast(table)
 
     def decode(f, lo, hi):

@@ -32,6 +32,7 @@ from __future__ import annotations
 import struct
 import zlib
 
+from my_flink_1_10_2_spark.sources.sharding import read_per_task
 from my_flink_1_10_2_spark.sources.sink_core import PartitionSink, http_request
 
 
@@ -189,7 +190,7 @@ def nifi_s2s_source(
     transactional receive)."""
     base, pid = base_url, port_id
 
-    def drain(_idx_iter):
+    def drain(_consumer):
         import json as _json
 
         while True:
@@ -211,15 +212,14 @@ def nifi_s2s_source(
                 _confirm(base, "output-ports", pid, tx, 0)
                 return
             _confirm(base, "output-ports", pid, tx, zlib.crc32(stream))
-            for attrs, content in decode_data_packets(stream):
-                yield (attrs, bytearray(content))
+            yield list(decode_data_packets(stream))
 
-    rdd = spark.sparkContext.parallelize(range(consumers), consumers).mapPartitions(
-        drain
-    )
     # Transactions CONFIRM (dequeue server-side) inside the drain: pin
     # the rows executor-side NOW so recomputation never re-drains an
     # already-confirmed (empty) port.
-    return spark.createDataFrame(
-        rdd, "attributes map<string,string>, content binary"
+    return read_per_task(
+        spark,
+        [(i,) for i in range(consumers)],
+        "attributes map<string,string>, content binary",
+        drain,
     ).localCheckpoint(eager=True)

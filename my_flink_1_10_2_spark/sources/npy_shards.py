@@ -161,4 +161,4 @@ def read_npy_shards(
         return pd.DataFrame({id_col: ids, vec_col: [row for row in mat]})
 
     schema = T.StructType.fromDDL(f"{id_col} long, {vec_col} array<float>")
-    return read_per_task(spark, ids_paths, schema, decode, shard_col)
+    return read_per_task(spark, [(p,) for p in ids_paths], schema, decode, shard_col)

@@ -38,6 +38,7 @@ from __future__ import annotations
 import base64
 import json
 
+from my_flink_1_10_2_spark.sources.sharding import read_per_task
 from my_flink_1_10_2_spark.sources.sink_core import PartitionSink, http_request
 
 
@@ -132,7 +133,7 @@ def pubsub_pull_source(
     sub_url = f"{base_url.rstrip('/')}/v1/projects/{project}/subscriptions/{subscription}"
     n, tok, cap = max_messages, token, max_pulls
 
-    def drain(_idx_iter):
+    def drain(_consumer):
         pulls = 0
         while cap is None or pulls < cap:
             pulls += 1
@@ -140,13 +141,11 @@ def pubsub_pull_source(
             received = out.get("receivedMessages", [])
             if not received:
                 return
-            for rm in received:
-                msg = rm["message"]
-                yield (
-                    msg.get("messageId"),
-                    dict(msg.get("attributes") or {}),
-                    bytearray(base64.b64decode(msg.get("data", ""))),
-                )
+            yield [
+                (m.get("messageId"), dict(m.get("attributes") or {}),
+                 base64.b64decode(m.get("data", "")))
+                for m in (rm["message"] for rm in received)
+            ]
             if ack:
                 _http_post_json(
                     f"{sub_url}:acknowledge",
@@ -154,11 +153,11 @@ def pubsub_pull_source(
                     tok,
                 )
 
-    rdd = spark.sparkContext.parallelize(range(consumers), consumers).mapPartitions(
-        drain
-    )
-    df = spark.createDataFrame(
-        rdd, "message_id string, attributes map<string,string>, body binary"
+    df = read_per_task(
+        spark,
+        [(i,) for i in range(consumers)],
+        "message_id string, attributes map<string,string>, body binary",
+        drain,
     )
     # The pull loop is SIDE-EFFECTING (leases taken, acks sent): pin the
     # rows executor-side NOW so recomputation never re-pulls.

@@ -1,6 +1,6 @@
 """The shard-file kernel of the six export formats (webdataset / tfrecord
-/ WET / jsonl.zst / arrow-ipc / npy): shard assignment, one write path
-and one per-task read path.  A format module keeps only its framing and
+/ WET / jsonl.zst / arrow-ipc / npy) and the one per-task read path of
+every executor-side source.  A format module keeps only its framing and
 encoding, its decode function, its file name and its manifest columns.
 
 - **write** (:func:`write_shards`): shards are contiguous key ranges
@@ -16,12 +16,14 @@ encoding, its decode function, its file name and its manifest columns.
   is refused before any job runs, as Spark's default save mode does: a
   smaller re-export would otherwise leave the old higher-numbered
   shards in place for every reader to pick up.
-- **read** (:func:`read_per_task`): one task per input unit — a shard
-  file, or a ``(path, lo, hi)`` range of one large external file for
-  the range readers — with exactly one unit per input slice (a hash
-  repartition could put two units on one task and halve the read
-  parallelism).  The unit list is a driver-side listing
-  (metadata-scale); samples never touch the driver.
+- **read** (:func:`read_per_task`): one task per input unit, one unit
+  per input slice (a hash repartition could put two units on one task).
+  A unit is a tuple of literals the reader gets as ``decode(*unit)``:
+  ``(path,)`` for a shard file; ``(path, lo, hi)`` from
+  :func:`range_units` for the WARC and Avro byte ranges, Arrow IPC
+  batches and jsonl.zst frames; ``(start, stop)`` for an HBase REST
+  scan; a consumer index for the live drains (Pub/Sub, RabbitMQ, NiFi,
+  streaming HTTP, Wikipedia IRC), which stream their rows in chunks.
 
 Shard assignment is the decide-on-keys / move-payload-once split
 (optimization guide §8).  Packing samples into fixed-size shards by
@@ -40,6 +42,7 @@ search.
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 from contextlib import contextmanager
@@ -184,19 +187,45 @@ def write_shards(
     return sharded.groupBy("__shard").applyInPandas(_write, schema)
 
 
+def range_units(path: str, n: int, step: int) -> list[tuple[str, int, int]]:
+    """The ``(path, lo, hi)`` units that cut ``[0, n)`` of one file —
+    bytes, record batches or frames — into runs of ``step``; the last
+    run ends at ``n``, and ``n == 0`` gives no unit."""
+    return [(path, lo, min(lo + step, n)) for lo in range(0, n, step)]
+
+
+_ROW_CHUNK = 1024
+
+
+def row_chunks(rows):
+    """Group an iterable of row tuples into lists of at most
+    ``_ROW_CHUNK``: the parts a streaming :func:`read_per_task` reader
+    yields."""
+    rows = iter(rows)
+    while chunk := list(itertools.islice(rows, _ROW_CHUNK)):
+        yield chunk
+
+
 def read_per_task(
     spark: SparkSession,
     units: list,
-    schema: T.StructType,
+    schema: T.StructType | str,
     decode,
     shard_col: str | None = None,
 ) -> DataFrame:
-    """Read ``units`` with one task each: a unit is a shard path, decoded
-    by ``decode(path)``, or a ``(path, lo, hi)`` range of one file,
-    decoded by ``decode(path, lo, hi)``; either returns the unit's rows
-    as a pandas DataFrame with ``schema``'s columns.  ``shard_col``
-    appends the shard id: the first run of digits in the file name
+    """Read ``units`` with one task each, as ``schema`` (a StructType or
+    a DDL string).  A unit is a tuple of literals; its task calls
+    ``decode(*unit)``, which returns the unit's rows — a pandas
+    DataFrame, or a list of row tuples in ``schema``'s order, which
+    converts exactly (a NaN stays NaN) — or yields several of them, so a
+    drain streams its rows.  ``shard_col`` appends the shard id: the
+    first run of digits in the file name ``unit[0]``
     (``part-00007.tfrecord``, ``shard-000007.tar`` → 7)."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    row_schema = to_arrow_schema(schema)
     if shard_col:
         schema = T.StructType(
             [*schema.fields, T.StructField(shard_col, T.LongType())]
@@ -204,36 +233,41 @@ def read_per_task(
     if not units:
         return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
     # The unit list stays in the JVM: a range of len(units) slices, one
-    # unit per slice and in order, picks its unit out of a literal array
-    # (a path unit has null lo/hi); shipping the list from the driver
-    # would run a Python task per slice.
-    rows = [(u, None, None) if isinstance(u, str) else tuple(u) for u in units]
+    # unit per slice and in order, picks its unit out of a literal array;
+    # shipping the list from the driver would run a Python task per
+    # slice, and a hash repartition could put two units on one task.
     table = F.array(*[
-        F.struct(
-            F.lit(path).alias("path"),
-            F.lit(lo).cast("long").alias("lo"),
-            F.lit(hi).cast("long").alias("hi"),
-        )
-        for path, lo, hi in rows
+        F.struct(*[F.lit(v).alias(f"_{i}") for i, v in enumerate(u)])
+        for u in units
     ])
     unit_df = (
-        spark.range(0, len(rows), 1, len(rows))
+        spark.range(0, len(units), 1, len(units))
         .select(F.element_at(table, F.col("id").cast("int") + 1).alias("u"))
-        .select("u.path", "u.lo", "u.hi")
+        .select("u.*")
     )
 
     def _read(batches):
         import pandas as pd
 
-        for pdf in batches:
-            for path, lo, hi in zip(pdf["path"], pdf["lo"], pdf["hi"]):
-                if pd.isna(lo):
-                    out = decode(path)
-                else:
-                    out = decode(path, int(lo), int(hi))
+        for batch in batches:
+            for unit in zip(*(c.to_pylist() for c in batch.columns)):
                 if shard_col:
-                    name = os.path.basename(path)
-                    out[shard_col] = int(re.search(r"\d+", name).group())
-                yield out
+                    name = os.path.basename(unit[0])
+                    shard = int(re.search(r"\d+", name).group())
+                out = decode(*unit)
+                for part in [out] if isinstance(out, (pd.DataFrame, list)) else out:
+                    if isinstance(part, list):
+                        rb = pa.RecordBatch.from_struct_array(
+                            pa.array(part, pa.struct(row_schema))
+                        )
+                    else:
+                        rb = pa.RecordBatch.from_pandas(
+                            part, schema=row_schema, preserve_index=False
+                        )
+                    if shard_col:
+                        rb = rb.append_column(
+                            shard_col, pa.array([shard] * rb.num_rows, pa.int64())
+                        )
+                    yield rb
 
-    return unit_df.mapInPandas(_read, schema)
+    return unit_df.mapInArrow(_read, schema)

@@ -289,4 +289,4 @@ def read_tfrecords(
                     rows[k].append(v)
         return pd.DataFrame(rows)
 
-    return read_per_task(spark, paths, out_schema, decode, shard_col)
+    return read_per_task(spark, [(p,) for p in paths], out_schema, decode, shard_col)

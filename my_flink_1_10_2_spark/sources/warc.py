@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from my_flink_1_10_2_spark.sources.sharding import (
     commit_file,
+    range_units,
     read_per_task,
     shard_paths,
     write_shards,
@@ -191,7 +192,7 @@ def read_wet_shards(
         return pd.DataFrame({"doc_uri": uris, "text": texts})
 
     schema = T.StructType.fromDDL("doc_uri string, text string")
-    return read_per_task(spark, paths, schema, decode, shard_col)
+    return read_per_task(spark, [(p,) for p in paths], schema, decode, shard_col)
 
 
 # ---------------------------------------------------------------------------
@@ -373,13 +374,9 @@ def read_warc_gz(
     Common Crawl segment becomes ~320 independent tasks instead of 1.
     """
     files = shard_paths(path, ".gz") if os.path.isdir(path) else [path]
-    splits = []
-    for f in files:
-        size = os.path.getsize(f)
-        lo = 0
-        while lo < size:
-            splits.append((f, lo, min(lo + split_bytes, size)))
-            lo += split_bytes
+    splits = [
+        u for f in files for u in range_units(f, os.path.getsize(f), split_bytes)
+    ]
     if not splits:
         # zero-byte inputs produce zero splits; fail with the file list
         # instead of an empty result
@@ -389,8 +386,6 @@ def read_warc_gz(
     wanted = warc_types
 
     def decode(f, lo, hi):
-        import pandas as pd
-
         rows = []
         for headers, payload in read_warc_gz_split(f, lo, hi):
             wt = headers.get("WARC-Type", "")
@@ -403,11 +398,7 @@ def read_warc_gz(
                 headers.get("WARC-Target-URI", ""),
                 payload,
             ))
-        return pd.DataFrame(
-            rows,
-            columns=["path", "warc_type", "record_id", "date",
-                     "target_uri", "payload"],
-        )
+        return rows
 
     schema = T.StructType.fromDDL(
         "path string, warc_type string, record_id string, date string, "

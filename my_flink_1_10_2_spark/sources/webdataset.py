@@ -169,6 +169,6 @@ def read_webdataset(
             *[T.StructField(e, T.BinaryType()) for e in exts],
         ]
     )
-    return read_per_task(spark, paths, schema, decode, "shard_id").select(
+    return read_per_task(spark, [(p,) for p in paths], schema, decode, "shard_id").select(
         "key", "shard_id", *exts
     )

@@ -23,6 +23,8 @@ import re
 import socket
 from dataclasses import dataclass
 
+from my_flink_1_10_2_spark.sources.sharding import read_per_task, row_chunks
+
 DEFAULT_HOST = "irc.wikimedia.org"  # ref WikipediaEditsSource.DEFAULT_HOST
 DEFAULT_PORT = 6667
 DEFAULT_CHANNEL = "#en.wikipedia"
@@ -188,7 +190,7 @@ def wikipedia_edits_source(
     """
     h, p, ch, nk, cap, ts = host, port, channel, nick, max_events, timestamp
 
-    def drain(_it):
+    def edits():
         client = IrcClient(h, p, nick=nk)
         n = 0
         try:
@@ -207,10 +209,10 @@ def wikipedia_edits_source(
         finally:
             client.close()
 
-    rdd = spark.sparkContext.parallelize([0], 1).mapPartitions(drain)
-    df = spark.createDataFrame(
-        rdd,
+    return read_per_task(
+        spark,
+        [(0,)],
         "timestamp long, channel string, title string, diff_url string, "
         "user string, byte_diff int, summary string, flags int",
-    )
-    return df.localCheckpoint(eager=True)
+        lambda _unit: row_chunks(edits()),
+    ).localCheckpoint(eager=True)

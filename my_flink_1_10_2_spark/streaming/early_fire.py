@@ -40,8 +40,6 @@ double-appending (the round-4 driver-environment failure mode).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,8 +68,6 @@ def continuous_early_fire_log(
     delay_us: int,
     slide_us: int | None = None,
     compact_every: int = 8,
-    _test_retry: bool = False,
-    _test_fail_once_at: int | None = None,
 ) -> DataFrame:
     """Replay ``src`` (micro-units: ``ts_col``/boundaries in epoch
     MICROSECONDS so every comparison is exact integer arithmetic) one
@@ -89,10 +85,8 @@ def continuous_early_fire_log(
     for tumbling — ``slide_us`` must also be a multiple of
     ``interval_us`` so window ends stay boundary-aligned.
 
-    ``_test_retry=True`` redelivers every micro-batch to the foreachBatch
-    handler twice (at-least-once simulation); the emission log must be
-    byte-identical to a clean run — pinned by
-    tests/test_early_fire_retry.py."""
+    A micro-batch redelivered to the foreachBatch handler (at-least-once)
+    leaves the emission log byte-identical to a clean run."""
     if size_us % interval_us != 0:
         raise ValueError("interval must divide the window size")
     if slide_us is not None and slide_us % interval_us != 0:
@@ -207,18 +201,7 @@ def continuous_early_fire_log(
         )
         log.write.mode("overwrite").parquet(f"{log_dir}/b{i:03d}")
 
-    def handler(batch_df: DataFrame, bid: int) -> None:
-        on_batch(batch_df, bid)
-        if _test_retry:  # simulate at-least-once redelivery of every batch
-            on_batch(batch_df, bid)
-        if _test_fail_once_at is not None and not batch_df.isEmpty():
-            b = int(batch_df.agg(F.max(batch_col)).first()[0])
-            marker = f"{work}/crashed"
-            if batch_index[b] == _test_fail_once_at and not os.path.exists(marker):
-                open(marker, "w").close()
-                raise RuntimeError("injected mid-stream crash (test)")
-
-    stream.for_each_batch(handler, f"{work}/ckpt")
+    stream.for_each_batch(on_batch, f"{work}/ckpt")
 
     from pyspark.sql import Window
 
@@ -240,7 +223,6 @@ def allowed_lateness_update_log(
     delay_us: int,
     lateness_us: int,
     compact_every: int = 8,
-    _test_retry: bool = False,
 ) -> DataFrame:
     """allowedLateness UPDATE re-emissions on a live micro-batch stream
     (ref: flink-streaming-java .../windowing/WindowOperator.java:98
@@ -342,12 +324,7 @@ def allowed_lateness_update_log(
         )
         log.write.mode("overwrite").parquet(f"{log_dir}/b{i:03d}")
 
-    def handler(batch_df: DataFrame, bid: int) -> None:
-        on_batch(batch_df, bid)
-        if _test_retry:  # simulate at-least-once redelivery of every batch
-            on_batch(batch_df, bid)
-
-    stream.for_each_batch(handler, f"{work}/ckpt")
+    stream.for_each_batch(on_batch, f"{work}/ckpt")
 
     from pyspark.sql import Window
 

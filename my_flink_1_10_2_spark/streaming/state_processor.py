@@ -128,9 +128,6 @@ def bootstrap_operator_state(
     ``applied = -1``: the state is LIVE (reads see it) but no stream
     batch is marked consumed, so the resumed job's batch 0 proceeds
     normally on top of the seeded rows."""
-    import json
-    import os
-
     from my_flink_1_10_2_spark.streaming.state_dir import StateDir
 
     state = StateDir(
@@ -145,10 +142,7 @@ def bootstrap_operator_state(
     # the source partitioning carries through; the StateDir's periodic
     # compaction re-sizes files as batches accrue on top
     df.write.mode("overwrite").parquet(f"{state.path}/{snap}")
-    tmp = state._manifest + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"dirs": [snap], "applied": -1}, f)
-    os.replace(tmp, state._manifest)
+    state._write_manifest([snap], -1)
 
 
 def transform_operator_state(

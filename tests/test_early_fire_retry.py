@@ -5,20 +5,25 @@ semantics come from Structured Streaming's foreachBatch guarantee).
 
 Round 4's driver environment redelivered micro-batches; the then
 append-based accumulator double-counted panes and double-logged fires
-(hash_match=false on q_early_fire_sequence/_hop).  ``_test_retry=True``
-forces every micro-batch through the handler twice — the emission log
-must equal the clean-run log exactly.  This test FAILS on the r4
-append-based implementation and passes on the overwrite-per-batch one.
+(hash_match=false on q_early_fire_sequence/_hop).  The tests wrap the
+handler the replay passes to ``Stream.for_each_batch``: one wrapper
+forces every micro-batch through the handler twice, the other crashes
+the query once after a chosen batch — the emission log must equal the
+clean-run log exactly.  This test FAILS on the r4 append-based
+implementation and passes on the overwrite-per-batch one.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from my_flink_1_10_2_spark.streaming.early_fire import continuous_early_fire_log
+from my_flink_1_10_2_spark.streaming.stream import Stream
 
 S = 1_000_000  # 1 second in micros
 
@@ -34,24 +39,70 @@ ROWS = [
 ]
 
 
-def _run(spark, *, retry: bool, slide_us: int | None = None):
+def _wrap_handler(monkeypatch, wrap):
+    """Make every ``Stream.for_each_batch`` run ``wrap(fn)`` instead of
+    the handler ``fn`` it is given."""
+    orig = Stream.for_each_batch
+
+    def for_each_batch(self, fn, checkpoint=None):
+        return orig(self, wrap(fn), checkpoint)
+
+    monkeypatch.setattr(Stream, "for_each_batch", for_each_batch)
+
+
+def _redeliver(monkeypatch):
+    """At-least-once simulation: every micro-batch reaches the handler
+    twice."""
+
+    def wrap(fn):
+        def twice(batch_df, bid):
+            fn(batch_df, bid)
+            fn(batch_df, bid)
+
+        return twice
+
+    _wrap_handler(monkeypatch, wrap)
+
+
+def _crash_once_after(monkeypatch, batch: int, marker: str):
+    """Fail the query right after the handler has processed the
+    micro-batch carrying ``batch``, the first time only (``marker``
+    records that the crash happened)."""
+
+    def wrap(fn):
+        def crashing(batch_df, bid):
+            fn(batch_df, bid)
+            if batch_df.isEmpty() or os.path.exists(marker):
+                return
+            if batch_df.agg(F.max("batch")).first()[0] == batch:
+                open(marker, "w").close()
+                raise RuntimeError("injected mid-stream crash (test)")
+
+        return crashing
+
+    _wrap_handler(monkeypatch, wrap)
+
+
+def _run(spark, monkeypatch, *, retry: bool, slide_us: int | None = None):
     src = spark.createDataFrame(ROWS, "k string, te long, batch long, v long")
     work = tempfile.mkdtemp(prefix="fl_ef_retry_")
     try:
-        log = continuous_early_fire_log(
-            spark,
-            src,
-            work,
-            ts_col="te",
-            batch_col="batch",
-            keys=["k"],
-            value_col="v",
-            size_us=60 * S,
-            interval_us=20 * S,
-            delay_us=10 * S,
-            slide_us=slide_us,
-            _test_retry=retry,
-        )
+        with monkeypatch.context() as m:
+            if retry:
+                _redeliver(m)
+            log = continuous_early_fire_log(
+                spark,
+                src,
+                work,
+                ts_col="te",
+                batch_col="batch",
+                keys=["k"],
+                value_col="v",
+                size_us=60 * S,
+                interval_us=20 * S,
+                delay_us=10 * S,
+                slide_us=slide_us,
+            )
         return sorted(
             (r.k, r.window_start, r.fire_ts, r.fire_batch, r.fire_seq, r.cnt, r.v_sum)
             for r in log.collect()
@@ -61,15 +112,15 @@ def _run(spark, *, retry: bool, slide_us: int | None = None):
 
 
 @pytest.mark.parametrize("slide_s", [None, 20], ids=["tumbling", "sliding"])
-def test_retried_batches_leave_log_unchanged(spark, slide_s):
+def test_retried_batches_leave_log_unchanged(spark, monkeypatch, slide_s):
     slide_us = slide_s * S if slide_s else None
-    clean = _run(spark, retry=False, slide_us=slide_us)
-    retried = _run(spark, retry=True, slide_us=slide_us)
+    clean = _run(spark, monkeypatch, retry=False, slide_us=slide_us)
+    retried = _run(spark, monkeypatch, retry=True, slide_us=slide_us)
     assert clean  # fixture actually fires
     assert retried == clean
 
 
-def test_lateness_update_log_idempotent_under_retry(spark):
+def test_lateness_update_log_idempotent_under_retry(spark, monkeypatch):
     """Same at-least-once pin for the allowedLateness re-emission log:
     forced double delivery must leave the (on_time + update) log
     byte-identical."""
@@ -99,19 +150,21 @@ def test_lateness_update_log_idempotent_under_retry(spark):
         )
         work = tempfile.mkdtemp(prefix="fl_late_retry_")
         try:
-            log = allowed_lateness_update_log(
-                spark,
-                src,
-                work,
-                ts_col="te",
-                batch_col="batch",
-                keys=["k"],
-                value_col="v",
-                size_us=60 * S,
-                delay_us=10 * S,
-                lateness_us=600 * S,
-                _test_retry=retry,
-            )
+            with monkeypatch.context() as m:
+                if retry:
+                    _redeliver(m)
+                log = allowed_lateness_update_log(
+                    spark,
+                    src,
+                    work,
+                    ts_col="te",
+                    batch_col="batch",
+                    keys=["k"],
+                    value_col="v",
+                    size_us=60 * S,
+                    delay_us=10 * S,
+                    lateness_us=600 * S,
+                )
             return sorted(
                 (r.k, r.window_start, r.fire_batch, r.kind, r.fire_seq,
                  r.cnt, r.v_sum)
@@ -130,7 +183,7 @@ def test_lateness_update_log_idempotent_under_retry(spark):
     assert [(r[2], r[3], r[5]) for r in a120] == [(2, "on_time", 1)]
 
 
-def test_crash_restart_resumes_from_checkpoint(spark):
+def test_crash_restart_resumes_from_checkpoint(spark, monkeypatch):
     """Kill the replay mid-stream (injected failure after a batch
     commits its state), restart against the SAME work dir: Structured
     Streaming resumes from the checkpoint (possibly redelivering the
@@ -147,19 +200,21 @@ def test_crash_restart_resumes_from_checkpoint(spark):
         src = spark.createDataFrame(
             ROWS, "k string, te long, batch long, v long"
         )
-        log = continuous_early_fire_log(
-            spark,
-            src,
-            work,
-            ts_col="te",
-            batch_col="batch",
-            keys=["k"],
-            value_col="v",
-            size_us=60 * S,
-            interval_us=20 * S,
-            delay_us=10 * S,
-            _test_fail_once_at=fail_at,
-        )
+        with monkeypatch.context() as m:
+            if fail_at is not None:
+                _crash_once_after(m, fail_at, f"{work}/crashed")
+            log = continuous_early_fire_log(
+                spark,
+                src,
+                work,
+                ts_col="te",
+                batch_col="batch",
+                keys=["k"],
+                value_col="v",
+                size_us=60 * S,
+                interval_us=20 * S,
+                delay_us=10 * S,
+            )
         return sorted(
             (r.k, r.window_start, r.fire_ts, r.fire_batch, r.fire_seq,
              r.cnt, r.v_sum)

@@ -103,6 +103,29 @@ def test_sink_then_source_roundtrip_distributed(spark):
         fake.close()
 
 
+def test_each_scan_range_gets_its_own_task(spark):
+    """split_keys=[2, 4] cut the table into three ranges; each is read by
+    its own task, in range order (a hash repartition on the range id put
+    ranges 0 and 2 on one task)."""
+    from pyspark.sql import functions as F
+
+    fake = FakeHBaseRest()
+    try:
+        df = spark.createDataFrame(
+            [(k, f"u{k}", float(k), k % 2 == 0, k) for k in range(1, 6)],
+            SCHEMA.spark_ddl(),
+        )
+        HBaseTypedRestSink(fake.url, "users", SCHEMA)(df)
+        out = hbase_rest_source(spark, fake.url, "users", SCHEMA, split_keys=[2, 4])
+        pids = {
+            r.user_id: r.pid
+            for r in out.select("user_id", F.spark_partition_id().alias("pid")).collect()
+        }
+        assert pids == {1: 0, 2: 1, 3: 1, 4: 2, 5: 2}
+    finally:
+        fake.close()
+
+
 def test_source_single_range_and_empty_table(spark):
     fake = FakeHBaseRest()
     try:

@@ -70,7 +70,7 @@ def test_read_per_task_decodes_each_unit_in_its_own_task(spark):
     import pandas as pd
     from pyspark.sql import types as T
 
-    def decode(path, lo=None, hi=None):
+    def decode(path, lo, hi):
         return pd.DataFrame({"path": [path], "lo": [lo], "hi": [hi]})
 
     schema = T.StructType([
@@ -78,19 +78,38 @@ def test_read_per_task_decodes_each_unit_in_its_own_task(spark):
         T.StructField("lo", T.LongType()),
         T.StructField("hi", T.LongType()),
     ])
-    paths = ["/d/shard-000007.x", "/d/shard-000002.x"]
-    out = read_per_task(spark, paths, schema, decode, shard_col="shard")
+    units = [("/d/shard-000007.x", 1, 2), ("/d/shard-000002.x", 3, 4)]
+    out = read_per_task(spark, units, schema, decode, shard_col="shard")
     assert [tuple(r) for r in out.withColumn("pid", F.spark_partition_id()).collect()] == [
-        ("/d/shard-000007.x", None, None, 7, 0),
-        ("/d/shard-000002.x", None, None, 2, 1),
+        ("/d/shard-000007.x", 1, 2, 7, 0),
+        ("/d/shard-000002.x", 3, 4, 2, 1),
     ]
-    units = ["/d/a.x", ("/d/w.x", 0, 1 << 40), ("/d/w.x", None, None), "/d/b.x"]
+    units = [("/d/a.x", None, None), ("/d/w.x", 0, 1 << 40), ("/d/w.x", None, None), ("/d/b.x", 5, 6)]
     out = read_per_task(spark, units, schema, decode)
     assert out.rdd.getNumPartitions() == len(units)
     assert [tuple(r) for r in out.withColumn("pid", F.spark_partition_id()).collect()] == [
         ("/d/a.x", None, None, 0),
         ("/d/w.x", 0, 1 << 40, 1),
         ("/d/w.x", None, None, 2),
-        ("/d/b.x", None, None, 3),
+        ("/d/b.x", 5, 6, 3),
     ]
     assert read_per_task(spark, [], schema, decode).collect() == []
+
+
+def test_read_per_task_streams_row_lists_exactly(spark):
+    from pyspark.sql import types as T
+
+    from my_flink_1_10_2_spark.sources.sharding import row_chunks
+
+    def drain(n):
+        return row_chunks((i, float("nan") if i % 2 else i / 4) for i in range(n))
+
+    # 2500 rows stream through the kernel as three row lists
+    n = 2500
+    schema = T.StructType.fromDDL("i long, x double")
+    out = read_per_task(spark, [(n,), (0,)], schema, drain)
+    rows = out.withColumn("pid", F.spark_partition_id()).collect()
+    assert [(r.i, r.pid) for r in rows] == [(i, 0) for i in range(n)]
+    # a NaN stays NaN (not NULL) on the row-tuple path
+    assert [r.x for r in rows][0::2] == [i / 4 for i in range(0, n, 2)]
+    assert all(r.x != r.x for r in rows[1::2])
